@@ -1,0 +1,4 @@
+"""End-to-end and per-layer benchmark of the remap-and-route engine.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``run.py``."""
