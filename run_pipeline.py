@@ -7,10 +7,27 @@
         [--resume] [--verify] [--master local[32]]
 
 Runs the flagship parse->enrich->route pipeline partitioned by hour,
-through the checkpoint manager: each hour partition commits a
-manifest row (rows, wall time) after its data lands; `--resume`
-re-runs only uncommitted partitions. Aggregates land beside the
-routed sinks. Exit code 0 only if all partitions committed.
+through the checkpoint manager, one pass per phase:
+
+- the hours are listed from a column-pruned scan of the pages (routed
+  rows map 1:1 to pages, so the set of hours is the same);
+- the pending hours land in ONE ``partitionBy(part)`` write under
+  ``<output>/routed/part=<yyyyMMddHH>``, with dynamic partition
+  overwrite set on the write itself: ``routed/_manifest`` lives under
+  the same directory, and a static overwrite would delete it along
+  with every committed hour;
+- ONE read-back aggregation over the landed hours commits a manifest
+  row (rows, payload bytes, content fingerprint, and ``wall_sec``, the
+  wall time of the pass that committed the row) per hour, each after
+  its data has landed; ``--resume`` re-runs only uncommitted hours and
+  ``--verify`` re-certifies every committed hour in one aggregation;
+- the aggregates are computed from the landed sink, read back for this
+  input's hours, and land beside it.
+
+Sink layout: ``part`` comes from the directory name (not a column in
+the files) and the files carry ``url_host`` for the aggregates. An
+output written by an earlier layout cannot be resumed; run it fresh.
+Exit code 0 only if all partitions committed.
 """
 
 from __future__ import annotations
@@ -40,7 +57,7 @@ def main() -> int:
                          "written")
     args = ap.parse_args()
 
-    from vrl_spark.operators.checkpoint import CheckpointedRun
+    from vrl_spark.operators.checkpoint import CheckpointedRun, read_output
     from vrl_spark.plans import weblog
     from vrl_spark.session import get_spark
 
@@ -53,10 +70,11 @@ def main() -> int:
     df = weblog.parse_stage(pages)
     df = weblog.enrich_stage(spark, df)
     df = weblog.route_stage(df)
+    hour = F.date_format("warc_ts", "yyyyMMddHH").alias("part")
     routed = df.select(
-        "doc_id", "url", "warc_ts", "route", "status_int", "bytes_int",
-        "method", "level", "lang_norm", "lang_family", "error",
-        F.date_format("warc_ts", "yyyyMMddHH").alias("part"),
+        "doc_id", "url", "url_host", "warc_ts", "route", "status_int",
+        "bytes_int", "method", "level", "lang_norm", "lang_family", "error",
+        hour,
     )
 
     run = CheckpointedRun(os.path.join(args.output, "routed"))
@@ -78,18 +96,23 @@ def main() -> int:
         import shutil
 
         shutil.rmtree(run.manifest_dir, ignore_errors=True)
-    hours = [r["part"] for r in routed.select("part").distinct().collect()]
+    # listed from a column-pruned scan of the pages, not the routed
+    # frame: its parse cannot be pruned away (routed rows are 1:1 with
+    # pages, so the hours are the same)
+    hours = sorted(
+        r["part"] for r in pages.select(hour).distinct().collect()
+    )
     # manifest rows carry bytes + the order-independent xxh64 content
     # fingerprint: a resumed run re-certifies identical partitions
     summary = run.run(
-        spark, routed, sorted(hours),
+        spark, routed, hours,
         payload_col="url",
         fp_cols=["doc_id", "url", "route", "status_int", "bytes_int",
                  "error"],
     )
 
-    # per-sink aggregates (idempotent overwrite)
-    agg = weblog.aggregate_stage(df)
+    # per-sink aggregates over what landed (idempotent overwrite)
+    agg = weblog.aggregate_stage(read_output(spark, run.out_dir, hours))
     agg.write.mode("overwrite").parquet(os.path.join(args.output, "aggregates"))
 
     summary["aggregate_rows"] = spark.read.parquet(

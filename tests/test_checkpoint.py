@@ -33,8 +33,7 @@ def test_crash_resume_reprocesses_only_missing(spark, tmp_path):
     df = make_df(spark)
     run = CheckpointedRun(str(tmp_path / "out"))
     # simulate a run that died after 2 partitions
-    run.run_partition(spark, df, 0)
-    run.run_partition(spark, df, 1)
+    run.run_partition(spark, df, [0, 1])
     # a crashed partition: data written but manifest missing
     df.where(F.col("part") == 2).write.mode("overwrite").parquet(
         os.path.join(run.out_dir, "part=2")
@@ -65,7 +64,7 @@ def test_empty_manifest_dir_resumes_cleanly(spark, tmp_path):
 def test_manifest_metrics(spark, tmp_path):
     df = make_df(spark)
     run = CheckpointedRun(str(tmp_path / "out"))
-    m = run.run_partition(spark, df, 0)
+    [m] = run.run_partition(spark, df, [0])
     assert m["rows"] == 25
     committed = run.committed_keys(spark)
     assert committed == {"0"}
@@ -79,8 +78,8 @@ def test_manifest_lineage_fingerprint(spark, tmp_path):
 
     df = make_df(spark).withColumn("txt", F.concat(F.lit("row-"), F.col("id")))
     run = CheckpointedRun(str(tmp_path / "out"))
-    m = run.run_partition(
-        spark, df, 0, payload_col="txt", fp_cols=["id", "v", "txt"]
+    [m] = run.run_partition(
+        spark, df, [0], payload_col="txt", fp_cols=["id", "v", "txt"]
     )
     assert m["rows"] == 25
     # payload bytes: ids 0,4,...,96 → 'row-0'..'row-96' (5 or 6 chars)
@@ -95,17 +94,17 @@ def test_manifest_lineage_fingerprint(spark, tmp_path):
     assert lm["fingerprint"] == m["fingerprint"]
     assert lm["n_bytes"] == m["bytes"]
     # order-independence: shuffled input, same partition content
-    m2 = CheckpointedRun(str(tmp_path / "out2")).run_partition(
+    [m2] = CheckpointedRun(str(tmp_path / "out2")).run_partition(
         spark, df.repartition(7).sortWithinPartitions(F.col("v").desc()),
-        0, payload_col="txt", fp_cols=["id", "v", "txt"],
+        [0], payload_col="txt", fp_cols=["id", "v", "txt"],
     )
     assert m2["fingerprint"] == m["fingerprint"]
     # sensitivity: a single changed row flips the fingerprint
     df3 = df.withColumn(
         "v", F.when(F.col("id") == 4, F.lit(999)).otherwise(F.col("v"))
     )
-    m3 = CheckpointedRun(str(tmp_path / "out3")).run_partition(
-        spark, df3, 0, payload_col="txt", fp_cols=["id", "v", "txt"]
+    [m3] = CheckpointedRun(str(tmp_path / "out3")).run_partition(
+        spark, df3, [0], payload_col="txt", fp_cols=["id", "v", "txt"]
     )
     assert m3["fingerprint"] != m["fingerprint"]
     # duplicate-pair sensitivity (the reason the fold is a modular
@@ -113,8 +112,8 @@ def test_manifest_lineage_fingerprint(spark, tmp_path):
     # identical copies of a row must change the fingerprint
     dup_rows = df.where(F.col("id") == 4)
     df4 = df.union(dup_rows).union(dup_rows)
-    m4 = CheckpointedRun(str(tmp_path / "out4")).run_partition(
-        spark, df4, 0, payload_col="txt", fp_cols=["id", "v", "txt"]
+    [m4] = CheckpointedRun(str(tmp_path / "out4")).run_partition(
+        spark, df4, [0], payload_col="txt", fp_cols=["id", "v", "txt"]
     )
     assert m4["rows"] == 27
     assert m4["fingerprint"] != m["fingerprint"]
@@ -161,3 +160,74 @@ def test_verify_recertifies_partitions(spark, tmp_path):
     v3 = run3.verify(spark, payload_col="txt", fp_cols=["id"])[0]
     assert v3["ok"] is False
     assert v3["bytes_actual"] != v3["bytes_expected"]
+
+
+def test_one_pass_manifest_matches_per_key_lineage(spark, tmp_path, monkeypatch):
+    """One write + one read-back commits, for every key, exactly the
+    manifest row lineage_metrics() gives over that key's landed rows.
+    Zero-padded keys round-trip as strings (no partition type
+    inference), a key with no rows commits rows 0, and a resume with
+    nothing pending issues no write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from vrl_spark.operators.checkpoint import lineage_metrics
+
+    df = spark.range(90).select(
+        F.col("id"),
+        F.lpad((F.col("id") % 3).cast("string"), 3, "0").alias("part"),
+        F.concat(F.lit("row-"), F.col("id")).alias("txt"),
+    )
+    keys = ["000", "001", "002", "007"]
+    run = CheckpointedRun(str(tmp_path / "out"))
+    lineage = dict(payload_col="txt", fp_cols=["id", "txt"])
+    committed = {m["part_key"]: m for m in run.run_partition(spark, df, keys, **lineage)}
+    assert sorted(os.listdir(run.manifest_dir)) == [f"{k}.json" for k in keys]
+    assert run.committed_keys(spark) == set(keys)
+    out = read_output(spark, run.out_dir)
+    assert sorted(r["part"] for r in out.select("part").distinct().collect()) == keys[:3]
+    for k in keys[:3]:
+        [lm] = lineage_metrics(
+            out.where(F.col("part") == k), [F.col("part")], F.col("txt"),
+            [F.col("id"), F.col("txt")],
+        ).collect()
+        m = committed[k]
+        assert lm["part"] == k
+        assert (m["rows"], m["bytes"], m["fingerprint"]) == (
+            lm["n_rows"], lm["n_bytes"], lm["fingerprint"])
+        assert m["rows"] == 30
+    assert committed["007"]["rows"] == 0
+    assert all(r["ok"] for r in run.verify(spark, **lineage))
+
+    def no_write(*args, **kwargs):
+        raise AssertionError("a resume with nothing pending wrote data")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", no_write)
+    summary = run.run(spark, df, keys, **lineage)
+    assert summary["partitions_ran"] == 0 and summary["partitions_skipped"] == 4
+
+
+def test_resume_overwrites_only_pending_partitions(spark, tmp_path):
+    """The resume's write is a dynamic partition overwrite set on the
+    write itself: committed partition directories and their manifest
+    rows are left as they were, and the session conf is not touched."""
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(conf_key)
+    df = make_df(spark)
+    run = CheckpointedRun(str(tmp_path / "out"))
+    run.run(spark, df, [0, 1, 2, 3])
+    os.remove(os.path.join(run.manifest_dir, "2.json"))  # crashed partition
+
+    def snapshot(d):
+        return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+    kept = {k: snapshot(os.path.join(run.out_dir, f"part={k}")) for k in (0, 1, 3)}
+    manifest = snapshot(run.manifest_dir)
+    summary = run.run(spark, df, [0, 1, 2, 3])
+    assert summary["partitions_ran"] == 1 and summary["rows_written"] == 25
+    assert {k: snapshot(os.path.join(run.out_dir, f"part={k}"))
+            for k in (0, 1, 3)} == kept
+    after = snapshot(run.manifest_dir)
+    assert sorted(after) == sorted([*manifest, "2.json"])
+    assert {f: after[f] for f in manifest} == manifest
+    assert spark.conf.get(conf_key) == conf_before
+    assert read_output(spark, run.out_dir).count() == 100

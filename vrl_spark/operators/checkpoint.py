@@ -6,19 +6,34 @@ Model (Iceberg-shaped, parquet-backed here):
 - Work is chunked by a PARTITION KEY (for the weblog pipeline: the
   hour of warc_ts — the same key the sinks window on). A "run"
   processes a set of partitions.
-- Each completed partition writes (a) its output under
-  ``out/part=<k>`` and (b) one MANIFEST row: partition key, row/byte
-  counts, stage metrics, content fingerprint. The manifest write
-  happens AFTER the data write — a crashed run leaves data without a
-  manifest row and the partition simply re-runs (data overwrite is
-  idempotent: full re-write of that partition directory, the
-  dynamic-partition-overwrite analogue of Iceberg's
-  overwrite-by-filter).
 - Resume = anti-join pending partitions against committed manifest
   keys: only unfinished partitions re-run.
+- All pending partitions land in ONE pass: the frame is filtered to
+  the pending keys and written once with ``partitionBy(part)`` under
+  ``out/part=<k>``. The write uses DYNAMIC partition overwrite, set
+  per write (never in the session conf): a re-run replaces exactly
+  the directories it writes rows into. A static overwrite would
+  delete the whole output directory, committed partitions and the
+  ``out/_manifest`` directory included.
+- ONE read-back aggregation over the landed pending directories,
+  grouped by ``part``, yields every MANIFEST row: partition key,
+  row/byte counts, content fingerprint, and ``wall_sec``, the wall
+  time of the pass (write + read-back) that committed the row. Each
+  row commits by an atomic rename AFTER the data has landed — a
+  crashed run leaves data without a manifest row and the partition
+  simply re-runs (the dynamic overwrite makes that idempotent, the
+  analogue of Iceberg's overwrite-by-filter).
+- ``verify`` recomputes the same aggregation, in one pass, over the
+  committed directories and diffs it against the manifest.
 
-At cluster scale the manifest is an Iceberg table and data writes are
-``overwriteByFilter(part = k)``; the control flow is identical."""
+Sink layout: ``part`` lives only in the directory name, not in the
+data files, and is read back as the exact directory string (no
+partition type inference: key ``"007"`` stays ``"007"``). Outputs
+written by the earlier one-write-per-partition layout (``part`` also
+a file column) are not resumed: start those runs fresh.
+
+At cluster scale the manifest is an Iceberg table and the data write
+is one ``overwritePartitions()``; the control flow is identical."""
 
 from __future__ import annotations
 
@@ -30,6 +45,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def lineage_fingerprint(*cols: Column, engine: str = "xxh64") -> Column:
@@ -53,6 +69,10 @@ def lineage_fingerprint(*cols: Column, engine: str = "xxh64") -> Column:
         .cast("long")
     )
 
+
+# the manifest metrics of a partition with no rows (SQL sums over no
+# rows are NULL)
+_NO_ROWS = {"n_rows": 0, "n_bytes": None, "fingerprint": None}
 
 # largest prime below 2^63: the modulus of the multiset fingerprint
 _FP_PRIME = 9223372036854775783
@@ -151,42 +171,63 @@ class CheckpointedRun:
         return [k for k in all_keys if str(k) not in done]
 
     def run_partition(
-        self, spark: SparkSession, df: DataFrame, key,
+        self, spark: SparkSession, df: DataFrame, keys: list,
         payload_col: str | None = None,
         fp_cols: list[str] | None = None,
         fp_engine: str = "xxh64",
-    ) -> dict:
-        """Process one partition idempotently: overwrite its data dir,
-        then commit the manifest row with lineage metrics.
+    ) -> list[dict]:
+        """Process the partitions ``keys`` idempotently in one pass:
+        one partitioned write of their rows, then one read-back
+        aggregation that commits a manifest row per key. A single
+        non-list key is taken as a one-key list. Returns the committed
+        manifest rows.
 
         ``payload_col``/``fp_cols`` opt into byte counts and the
-        order-independent content fingerprint (one extra aggregation
-        over the partition just written — reading back what landed on
-        disk, not what the plan intended, is the point: the manifest
-        certifies the output)."""
-        part_df = df.where(F.col(self.partition_col) == key)
-        data_dir = os.path.join(self.out_dir, f"{self.partition_col}={key}")
+        order-independent content fingerprint. The manifest is
+        computed from what landed on disk, not from what the plan
+        intended — that is the point: the manifest certifies the
+        output. A key with no rows commits ``rows: 0``."""
+        if not isinstance(keys, (list, tuple)):
+            keys = [keys]
+        if not keys:
+            return []
         t0 = time.time()
-        part_df.write.mode("overwrite").parquet(data_dir)
-        written = spark.read.parquet(data_dir)
-        if payload_col is not None or fp_cols:
-            aggs = _manifest_aggs(payload_col, fp_cols, fp_engine)
-        else:
-            aggs = [F.count(F.lit(1)).alias("n_rows")]
-        stats = written.agg(*aggs).collect()[0].asDict()
-        metrics = {
-            "part_key": str(key),
-            "rows": stats["n_rows"],
-            "wall_sec": round(time.time() - t0, 3),
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        if "n_bytes" in stats:
-            metrics["bytes"] = stats["n_bytes"]
-        if "fingerprint" in stats:
-            metrics["fingerprint"] = stats["fingerprint"]
+        (
+            df.where(F.col(self.partition_col).isin(list(keys)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(self.partition_col)
+            .parquet(self.out_dir)
+        )
+        landed = self._landed_stats(
+            spark, [str(k) for k in keys], payload_col, fp_cols, fp_engine
+        )
+        wall_sec = round(time.time() - t0, 3)
+        results = []
+        for key in keys:
+            stats = landed.get(str(key), _NO_ROWS)
+            metrics = {
+                "part_key": str(key),
+                "rows": stats["n_rows"],
+                "wall_sec": wall_sec,
+                "committed_at": time.strftime(
+                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
+                ),
+            }
+            if payload_col is not None:
+                metrics["bytes"] = stats["n_bytes"]
+            if fp_cols:
+                metrics["fingerprint"] = stats["fingerprint"]
+            self._commit(metrics)
+            results.append(metrics)
+        return results
+
+    def _commit(self, metrics: dict) -> None:
+        """Commit one manifest row: one json file per partition, made
+        visible by the atomic rename the filesystem gives us (Iceberg
+        swaps this for a snapshot commit)."""
         os.makedirs(self.manifest_dir, exist_ok=True)
-        # one json file per partition: commit is the atomic rename the
-        # filesystem gives us; Iceberg swaps this for a snapshot commit
+        key = metrics["part_key"]
         path = os.path.join(self.manifest_dir, f"{key}.json")
         # dot-prefixed tmp: Spark's file index ignores hidden files, so
         # a crash between write and rename can never read as committed
@@ -194,7 +235,27 @@ class CheckpointedRun:
         with open(tmp, "w") as f:
             json.dump(metrics, f)
         os.replace(tmp, path)
-        return metrics
+
+    def _data_dir(self, key) -> str:
+        return os.path.join(self.out_dir, f"{self.partition_col}={key}")
+
+    def _landed_stats(
+        self, spark: SparkSession, keys: list[str],
+        payload_col: str | None, fp_cols: list[str] | None, fp_engine: str,
+    ) -> dict[str, dict]:
+        """The manifest metrics of ``keys`` as they exist on disk NOW,
+        from one aggregation grouped by the partition column. Keys
+        whose directory is missing or holds no rows are absent."""
+        present = [k for k in keys if os.path.isdir(self._data_dir(k))]
+        if not present:
+            return {}
+        rows = (
+            read_output(spark, self.out_dir, present, self.partition_col)
+            .groupBy(self.partition_col)
+            .agg(*_manifest_aggs(payload_col, fp_cols, fp_engine))
+            .collect()
+        )
+        return {r[self.partition_col]: r.asDict() for r in rows}
 
     def run(
         self, spark: SparkSession, df: DataFrame, all_keys: list,
@@ -202,19 +263,18 @@ class CheckpointedRun:
         fp_cols: list[str] | None = None,
         fp_engine: str = "xxh64",
     ) -> dict:
-        """Process all pending partitions; returns run summary."""
+        """Process all pending partitions in one pass; returns the run
+        summary."""
         todo = self.pending(all_keys, spark)
-        results = [
-            self.run_partition(spark, df, k, payload_col, fp_cols, fp_engine)
-            for k in todo
-        ]
+        results = self.run_partition(
+            spark, df, todo, payload_col, fp_cols, fp_engine
+        )
         return {
             "partitions_total": len(all_keys),
             "partitions_ran": len(todo),
             "partitions_skipped": len(all_keys) - len(todo),
             "rows_written": sum(r["rows"] for r in results),
         }
-
 
     def verify(
         self, spark: SparkSession,
@@ -223,50 +283,63 @@ class CheckpointedRun:
         fp_engine: str = "xxh64",
     ) -> list[dict]:
         """Re-certify every committed partition: recompute the lineage
-        metrics from the data directories as they exist NOW and diff
-        them against the committed manifest rows. Returns one dict per
-        committed partition with ``ok`` plus the expected/actual
-        values — the audit a resumed run (or a suspicious operator)
-        uses to prove untouched partitions still hold the exact row
-        multiset their manifest certified."""
-        from pyspark.errors import AnalysisException
-
-        results = []
+        metrics from the data directories as they exist NOW (one
+        aggregation over all of them) and diff them against the
+        committed manifest rows. Returns one dict per committed
+        partition with ``ok`` plus the expected/actual values — the
+        audit a resumed run (or a suspicious operator) uses to prove
+        untouched partitions still hold the exact row multiset their
+        manifest certified."""
+        committed = {}
         for key in sorted(self.committed_keys(spark)):
             with open(os.path.join(self.manifest_dir, f"{key}.json")) as f:
-                committed = json.load(f)
-            data_dir = os.path.join(
-                self.out_dir, f"{self.partition_col}={key}"
-            )
-            row = {"part_key": key, "rows_expected": committed["rows"]}
-            try:
-                written = spark.read.parquet(data_dir)
-                stats = written.agg(
-                    *_manifest_aggs(payload_col, fp_cols, fp_engine)
-                ).collect()[0].asDict()
-            except AnalysisException as e:
-                # a committed partition with no readable data dir IS
-                # the tamper verify() exists to catch — report it,
-                # keep auditing the rest
-                row.update({"ok": False, "error": str(e)[:200]})
+                committed[key] = json.load(f)
+        landed = self._landed_stats(
+            spark, list(committed), payload_col, fp_cols, fp_engine
+        )
+        results = []
+        for key, manifest in committed.items():
+            row = {"part_key": key, "rows_expected": manifest["rows"]}
+            stats = landed.get(key, _NO_ROWS)
+            if stats is _NO_ROWS and manifest["rows"]:
+                # a committed partition whose rows are gone IS the
+                # tamper verify() exists to catch — report it, keep
+                # auditing the rest
+                row.update({"ok": False,
+                            "error": f"no rows under {self._data_dir(key)}"})
                 results.append(row)
                 continue
             row["rows_actual"] = stats["n_rows"]
-            ok = stats["n_rows"] == committed["rows"]
-            if payload_col is not None and "bytes" in committed:
-                row["bytes_expected"] = committed["bytes"]
+            ok = stats["n_rows"] == manifest["rows"]
+            if payload_col is not None and "bytes" in manifest:
+                row["bytes_expected"] = manifest["bytes"]
                 row["bytes_actual"] = stats["n_bytes"]
-                ok = ok and stats["n_bytes"] == committed["bytes"]
-            if fp_cols and "fingerprint" in committed:
-                row["fingerprint_expected"] = committed["fingerprint"]
+                ok = ok and stats["n_bytes"] == manifest["bytes"]
+            if fp_cols and "fingerprint" in manifest:
+                row["fingerprint_expected"] = manifest["fingerprint"]
                 row["fingerprint_actual"] = stats["fingerprint"]
-                ok = ok and stats["fingerprint"] == committed["fingerprint"]
+                ok = ok and stats["fingerprint"] == manifest["fingerprint"]
             row["ok"] = ok
             results.append(row)
         return results
 
 
-def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.option("basePath", out_dir).parquet(
-        os.path.join(out_dir, "part=*")
-    )
+def read_output(
+    spark: SparkSession, out_dir: str, keys: list | None = None,
+    partition_col: str = "part",
+) -> DataFrame:
+    """The landed sink: every ``<partition_col>=<k>`` directory under
+    ``out_dir``, or only those of ``keys`` (which must exist). The
+    partition column is read back as the exact directory string —
+    a user-given type bypasses partition type inference, which would
+    turn key ``"007"`` into the integer 7."""
+    if keys is None:
+        paths = [os.path.join(out_dir, f"{partition_col}=*")]
+    else:
+        paths = [os.path.join(out_dir, f"{partition_col}={k}") for k in keys]
+    reader = spark.read.option("basePath", out_dir)
+    schema = StructType([
+        StructField(f.name, StringType()) if f.name == partition_col else f
+        for f in reader.parquet(*paths).schema.fields
+    ])
+    return reader.schema(schema).parquet(*paths)
