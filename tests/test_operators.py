@@ -47,6 +47,34 @@ def test_word_shingles(spark):
     assert row["empty"] == []
 
 
+@pytest.mark.parametrize("num_hashes", [6, 16])
+def test_minhash_md5_batched_equals_jvm_fold(spark, num_hashes):
+    """The Arrow-batched md5 signature is value-identical to the JVM
+    fold, including NULL for empty and None shingle arrays and a
+    hash count that is not a multiple of the 4 pieces per md5."""
+    rows = [
+        (1, ["a b c", "b c d", "c d e"]),
+        (2, ["only"]),
+        (3, []),
+        (4, None),
+        (5, ["x", "x", "dup shingle", "\u00e9t\u00e9 \u4e2d\u6587"]),
+        (6, [f"s{i}" for i in range(40)]),
+    ]
+    df = spark.createDataFrame(rows, "id long, sh array<string>")
+    got = df.select(
+        "id",
+        dedup.minhash_signature(F.col("sh"), num_hashes).alias("fold"),
+        dedup.minhash_signature_md5_batched(F.col("sh"), num_hashes).alias("batched"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert r["fold"] == r["batched"], r
+        if r["id"] in (3, 4):
+            assert r["fold"] is None
+        else:
+            assert len(r["fold"]) == num_hashes
+
+
 def test_minhash_finds_near_dups(docs):
     pairs = dedup.minhash_dedup_pairs(docs, threshold=0.5).collect()
     found = {(r["id_a"], r["id_b"]) for r in pairs}

@@ -65,3 +65,43 @@ def test_multi_sink_write(spark, sf_dir, tmp_path):
     assert back.count() == df.count()
     routes = {r["route"] for r in back.select("route").distinct().collect()}
     assert "dead_letter" in routes and "ok" in routes
+
+
+def test_enrich_stage_semantics(spark):
+    """Nullish langs (NULL, '', '-', blank) map to 'und'; a known lang
+    gets its dim row; an unknown lang keeps its row with NULL name and
+    family. The left join neither drops nor fans out rows."""
+    from vrl_spark.plans import weblog
+
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "-"), (4, "  "), (5, "en"), (6, "xx")],
+        "id long, lang string",
+    )
+    out = weblog.enrich_stage(spark, df)
+    assert out.columns == df.columns + ["lang_norm", "lang_name", "lang_family"]
+    rows = {r["id"]: r for r in out.collect()}
+    assert len(rows) == df.count() == out.count() == 6
+    got = {
+        i: (r["lang_norm"], r["lang_name"], r["lang_family"])
+        for i, r in rows.items()
+    }
+    for i in (1, 2, 3, 4):
+        assert got[i] == ("und", "Unknown", "unknown"), (i, got[i])
+    assert got[5] == ("en", "English", "germanic")
+    assert got[6] == ("xx", None, None)
+    assert rows[4]["lang"] == "  " and rows[6]["lang"] == "xx"
+
+
+def test_literal_table_types_and_escaping(spark):
+    """The literal dims keep createDataFrame's types (str -> string,
+    int -> bigint) and round-trip quotes and backslashes exactly."""
+    from vrl_spark.sources import literal_table
+
+    rows = [("it's", 1), ("back\\slash", -2), ("", 3)]
+    df = literal_table(spark, rows, ["s", "n"])
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("s", "string"), ("n", "bigint")
+    ]
+    assert [tuple(r) for r in df.collect()] == rows
+    with pytest.raises(TypeError):
+        literal_table(spark, [(1.5,)], ["x"])

@@ -1,7 +1,8 @@
 """Physical-plan assertions: the plans we'd want at 100 TB, checked
 mechanically so regressions fail CI.
 
-- enrichment join is BROADCAST (no fact-stream shuffle)
+- enrichment join is BROADCAST (no fact-stream shuffle), its dim a
+  JVM literal relation (no Python worker)
 - flagship has exactly the aggregate exchanges (no accidental ones)
 - parquet scans PUSH filters and PRUNE columns
 - hour-partitioned layout prunes partitions on time predicates
@@ -9,6 +10,8 @@ mechanically so regressions fail CI.
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,15 +21,60 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+# a plan line: tree markers, then the node (an optional "*(n) " codegen
+# stage id, then its name); the node's column gives its depth
+_NODE = re.compile(r"^[\s:+|-]*((?:\*\(\d+\) )?(\w+))")
+
+
+def broadcast_build_leaves(plan: str) -> list[str]:
+    """Leaf operator names under every BroadcastExchange in a plan
+    string (the broadcast build sides, through AQE query stages)."""
+    nodes = [
+        (m.start(1), m.group(2))
+        for m in map(_NODE.match, plan.splitlines()) if m
+    ]
+    leaves = []
+    for i, (col, name) in enumerate(nodes):
+        if name != "BroadcastExchange":
+            continue
+        sub = []
+        for c, n in nodes[i + 1:]:
+            if c <= col:
+                break
+            sub.append((c, n))
+        leaves += [
+            n for j, (c, n) in enumerate(sub)
+            if j + 1 == len(sub) or sub[j + 1][0] <= c
+        ]
+    return leaves
+
+
+def assert_dims_built_in_jvm(df) -> None:
+    """No Python on the plan: no PythonRDD scan, no Python UDF node,
+    and every broadcast build side reads a JVM literal relation."""
+    df.collect()
+    plan = plan_of(df)
+    assert "ExistingRDD" not in plan, plan
+    assert "EvalPython" not in plan, plan
+    leaves = broadcast_build_leaves(plan)
+    assert leaves and set(leaves) == {"LocalTableScan"}, (leaves, plan)
+
+
 def test_enrich_is_broadcast_and_single_agg_shuffle(spark, sf_dir):
     from vrl_spark.plans import weblog
+    from vrl_spark.plans.queries_functions import vrl_math_ip_enrich
 
-    plan = plan_of(weblog.full_pipeline(spark, sf_dir))
+    df = weblog.full_pipeline(spark, sf_dir)
+    plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     # exchanges: broadcast (dim) + the two-phase distinct-agg pair; no more
     shuffle_exchanges = plan.count("Exchange hashpartitioning")
     assert shuffle_exchanges <= 2, plan
+    # the dims are literal relations: building the broadcasts starts no
+    # Python worker (a Python-list createDataFrame is an ExistingRDD scan)
+    assert_dims_built_in_jvm(df)
+    assert_dims_built_in_jvm(vrl_math_ip_enrich(spark, sf_dir))
 
 
 def test_parquet_filter_pushdown_and_column_pruning(spark, sf_dir):

@@ -190,7 +190,7 @@ def vrl_parse_url_etld(spark, sf_dir):
 # ---------------------------------------------------------------------
 
 from vrl_spark.sources.pages import derive_pages_sql  # noqa: E402
-from vrl_spark.sources import read_table
+from vrl_spark.sources import literal_table, read_table
 
 _KV_ORACLE = f"""
 WITH pages AS ({derive_pages_sql()})
@@ -674,12 +674,8 @@ def vrl_math_ip_enrich(spark, sf_dir):
     facts = ev.select(
         "event_id", *_math_ip_cols(), "event_type", "ts"
     )
-    dim = spark.createDataFrame(
-        [
-            (k, f, t, l, o)
-            for k, f, t, l, o in _ENRICH_DIM
-        ],
-        ["k", "vf", "vt", "label", "ord"],
+    dim = literal_table(
+        spark, _ENRICH_DIM, ["k", "vf", "vt", "label", "ord"]
     ).select(
         "k",
         F.to_timestamp("vf").alias("vf"),

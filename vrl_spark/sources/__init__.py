@@ -1,6 +1,7 @@
-"""Sources: parquet/Iceberg-style readers + deterministic synthetic
-pages generation (Common-Crawl-style input per BASELINE.json
-input_hint: url, warc_ts, html, text, lang)."""
+"""Sources: parquet/Iceberg-style readers, small in-plan literal
+tables, and deterministic synthetic pages generation
+(Common-Crawl-style input per BASELINE.json input_hint: url,
+warc_ts, html, text, lang)."""
 
 from __future__ import annotations
 
@@ -48,3 +49,31 @@ def read_table(
     which."""
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     return spread_scan(df) if spread else df
+
+
+def _sql_literal(v) -> str:
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, int) and not isinstance(v, bool):
+        return f"{v}L"
+    raise TypeError(f"literal_table supports str and int values, got {v!r}")
+
+
+def literal_table(
+    spark: SparkSession, rows: list[tuple], columns: list[str]
+) -> DataFrame:
+    """A small constant table (a lookup dim) as an inline ``VALUES``
+    relation, built entirely in the JVM.
+
+    Spark plans it as a LocalRelation and runs it as a
+    ``LocalTableScan``. ``spark.createDataFrame`` over a Python list
+    instead goes through a PythonRDD: every build of a broadcast over
+    it runs a job on Python workers. Types follow
+    ``createDataFrame``'s inference: ``str`` -> string, ``int`` ->
+    bigint."""
+    values = ", ".join(
+        "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
+    )
+    return spark.sql(
+        f"SELECT * FROM (VALUES {values}) AS t({', '.join(columns)})"
+    )
