@@ -67,11 +67,8 @@ def main() -> int:
         pages = spark.read.parquet(args.pages)
     else:
         pages = weblog.load_pages(spark, args.input)
-    df = weblog.parse_stage(pages)
-    df = weblog.enrich_stage(spark, df)
-    df = weblog.route_stage(df)
     hour = F.date_format("warc_ts", "yyyyMMddHH").alias("part")
-    routed = df.select(
+    routed = weblog.routed_stage(spark, pages).select(
         "doc_id", "url", "url_host", "warc_ts", "route", "status_int",
         "bytes_int", "method", "level", "lang_norm", "lang_family", "error",
         hour,

@@ -116,3 +116,86 @@ def test_oracle_dtype_parity(spark, sf_dir):
                         f"{sparkt[col].simpleString()} ({sc})"
                     )
     assert not problems, "\n".join(problems)
+
+
+# Reachability: engine code that no registry query, no flagship plan
+# and neither driver entry point imports is deleted, not maintained.
+# Modules kept while unreachable are listed with their ROADMAP reason.
+_KEPT_UNREACHABLE = {
+    "vrl_spark.functions.grok_filters":
+        "carries VRL parse_groks filter semantics",
+    "vrl_spark.operators.extract":
+        "carries the byte-identical extracted-text invariant",
+    "vrl_spark.operators.htmlx":
+        "carries the byte-identical extracted-text invariant",
+    "vrl_spark.streaming":
+        "kept until it gets a measured lane, else deleted",
+    "vrl_spark.streaming.pipeline":
+        "kept until it gets a measured lane, else deleted",
+}
+
+
+def _module_files(root):
+    """Dotted name -> path for every module of the vrl_spark package."""
+    import os
+
+    out = {}
+    for dirpath, _, files in os.walk(os.path.join(root, "vrl_spark")):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(dirpath, f), root)
+            parts = rel[:-3].split(os.sep)
+            if parts[-1] == "__init__":
+                parts.pop()
+            out[".".join(parts)] = os.path.join(dirpath, f)
+    return out
+
+
+def _imported_modules(path, known):
+    """Every known module an import statement in ``path`` names, at any
+    nesting depth (function-level imports included). The engine uses
+    absolute imports only."""
+    import ast
+
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    targets = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            targets += [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            targets.append(node.module)
+            targets += [f"{node.module}.{a.name}" for a in node.names]
+    return set(targets) & set(known)
+
+
+def test_every_engine_module_is_reachable():
+    """Static import walk (ast only, no Spark) from the registry, every
+    flagship plan module and both driver entry points: every vrl_spark
+    module must be reached or be on the kept list, and no kept module
+    may be reached (the list cannot go stale)."""
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    engine = _module_files(root)
+    files = dict(engine)
+    for script in ("run_pipeline", "__spark_entry__"):
+        files[script] = os.path.join(root, script + ".py")
+    seeds = ["run_pipeline", "__spark_entry__", "vrl_spark.registry"]
+    seeds += [m for m in engine if m.startswith("vrl_spark.plans")]
+    reached, frontier = set(), seeds
+    while frontier:
+        m = frontier.pop()
+        if m in reached:
+            continue
+        reached.add(m)
+        frontier += _imported_modules(files[m], files)
+        # importing a module also runs its parent package's __init__
+        if "." in m:
+            frontier.append(m.rpartition(".")[0])
+
+    dead = sorted(set(engine) - reached - set(_KEPT_UNREACHABLE))
+    assert not dead, f"unreachable engine modules (delete them): {dead}"
+    stale = sorted(reached & set(_KEPT_UNREACHABLE))
+    assert not stale, f"kept-list modules are now reached (unlist): {stale}"

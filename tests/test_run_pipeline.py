@@ -92,7 +92,7 @@ def test_crash_before_manifest_then_resume_and_verify(
         for out in (clean, crashed)
     }
     # aggregates read back from the sink equal the in-memory flagship
-    direct = weblog.aggregate_stage(weblog.route_stage(weblog.enrich_stage(
-        spark, weblog.parse_stage(spark.read.parquet(pages)))))
+    direct = weblog.aggregate_stage(
+        weblog.routed_stage(spark, spark.read.parquet(pages)))
     want = sorted(map(tuple, direct.collect()))
     assert aggregates[clean] == aggregates[crashed] == want

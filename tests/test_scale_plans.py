@@ -350,11 +350,7 @@ def test_lineage_metrics_plan_shape(spark, sf_dir):
         spark.conf.unset("spark.sql.debug.maxToStringFields")
     assert "pmod" in full
     # production engine: xxhash64 directly over typed columns
-    df = weblog.route_stage(
-        weblog.enrich_stage(
-            spark, weblog.parse_stage(weblog.load_pages(spark, sf_dir))
-        )
-    )
+    df = weblog.routed_stage(spark, weblog.load_pages(spark, sf_dir))
     from pyspark.sql import functions as F
 
     prod = lineage_metrics(
@@ -440,64 +436,6 @@ def test_bigram_lm_final_plan_shape(spark, sf_dir):
     # post-checkpoint: the token-join chain is gone from this plan
     assert "Scan parquet" not in plan
     assert plan.count("SinglePartition") == 1
-
-
-def test_pq_encode_plan_is_map_only(spark):
-    """PQ encode: the corpus side has no Exchange at all — codebooks
-    fold to one broadcast row and every argmin runs in place."""
-    from vrl_spark.operators import pq
-
-    corpus = spark.range(100).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(16)),
-            lambda i: (i * F.col("id") % 7).cast("double"),
-        ).alias("embedding"),
-    )
-    books = pq.pq_train(corpus, 16, m=4, k=4, iterations=1)
-    plan = plan_of(pq.pq_encode(corpus, books, 16, m=4, k=4))
-    assert "EvalPython" not in plan
-    # the only exchanges live on the tiny codebook side: the
-    # groupBy(sub_id) index build (m*k rows), the 1-row fold, and its
-    # broadcast. Any hash shuffle must be on the codebook grain —
-    # a corpus-side shuffle would partition on vec_id/embedding.
-    import re
-
-    hash_cols = re.findall(r"Exchange hashpartitioning\((\w+)", plan)
-    assert all(c == "sub_id" for c in hash_cols), hash_cols
-    assert "Exchange rangepartitioning" not in plan
-    assert plan.count("Exchange") <= 3
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_ivfpq_encode_plan_is_map_only(spark):
-    """Residual encode (ivfpq_encode with in-plan assignment): still
-    zero corpus-side exchanges — the coarse assignment is the
-    broadcast argmax fold, the centroid gather is a 1-row broadcast
-    map, and the residual argmins run in place. Every hash exchange
-    must live on the tiny codebook/centroid grain."""
-    from vrl_spark.operators import pq, similarity
-
-    corpus = spark.range(100).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(16)),
-            lambda i: (i * F.col("id") % 7).cast("double"),
-        ).alias("embedding"),
-    )
-    cents = similarity.ivf_centroids(corpus, 4).localCheckpoint()
-    books = pq.ivfpq_train(corpus, cents, 16, m=4, k=4, iterations=1)
-    plan = plan_of(
-        pq.ivfpq_encode(corpus, cents, books, 16, m=4, k=4,
-                        validate=False)
-    )
-    assert "EvalPython" not in plan
-    import re
-
-    hash_cols = re.findall(r"Exchange hashpartitioning\((\w+)", plan)
-    assert all(c == "sub_id" for c in hash_cols), hash_cols
-    assert "Exchange rangepartitioning" not in plan
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_html_main_text_map_only(spark):

@@ -28,9 +28,7 @@ def test_stream_matches_batch(spark, sf_dir, tmp_path):
     # batch reference
     from vrl_spark.plans import weblog
 
-    batch = weblog.route_stage(
-        weblog.enrich_stage(spark, weblog.parse_stage(spark.read.parquet(pages_path)))
-    )
+    batch = weblog.routed_stage(spark, spark.read.parquet(pages_path))
     batch_counts = {
         (r["route"], r["hour"]): (r["page_count"], r["total_bytes"])
         for r in batch.groupBy(

@@ -219,10 +219,6 @@ class Pipeline:
             df = df.withColumn("route", route.otherwise(self.default_route))
         return df
 
-    def sinks(self, df: DataFrame, out_dir: str) -> None:
-        """Single-pass partitioned fan-out write."""
-        self.apply(df).write.mode("overwrite").partitionBy("route").parquet(out_dir)
-
     def explain(self) -> str:
         lines = [f"Pipeline {self.name!r}:"]
         for i, s in enumerate(self.stages):

@@ -28,10 +28,7 @@ def pipeline_routed_rows(spark, sf_dir):
 )
 def pipeline_route_counts(spark, sf_dir):
     """Per-sink counts (the north rule's per-sink aggregate equality)."""
-    df = weblog.load_pages(spark, sf_dir)
-    df = weblog.parse_stage(df)
-    df = weblog.enrich_stage(spark, df)
-    df = weblog.route_stage(df)
+    df = weblog.routed_stage(spark, weblog.load_pages(spark, sf_dir))
     return df.groupBy("route").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -149,10 +146,7 @@ def pipeline_lineage_metrics(spark, sf_dir):
     verification (operators/checkpoint.py:lineage_metrics)."""
     from vrl_spark.operators.checkpoint import lineage_metrics
 
-    df = weblog.load_pages(spark, sf_dir)
-    df = weblog.parse_stage(df)
-    df = weblog.enrich_stage(spark, df)
-    df = weblog.route_stage(df)
+    df = weblog.routed_stage(spark, weblog.load_pages(spark, sf_dir))
     return lineage_metrics(
         df,
         [F.col("route"), F.date_trunc("hour", F.col("warc_ts")).alias("hour")],

@@ -183,22 +183,19 @@ def aggregate_stage(df: DataFrame) -> DataFrame:
     )
 
 
+def routed_stage(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    """parse -> enrich -> route: the one flagship stage chain."""
+    return route_stage(enrich_stage(spark, parse_stage(pages)))
+
+
 def full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load_pages(spark, sf_dir)
-    df = parse_stage(df)
-    df = enrich_stage(spark, df)
-    df = route_stage(df)
-    return aggregate_stage(df)
+    return aggregate_stage(routed_stage(spark, load_pages(spark, sf_dir)))
 
 
 def routed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-aggregate routed rows (for routed-row equality checks and
     the multi-sink write)."""
-    df = load_pages(spark, sf_dir)
-    df = parse_stage(df)
-    df = enrich_stage(spark, df)
-    df = route_stage(df)
-    return df.select(
+    return routed_stage(spark, load_pages(spark, sf_dir)).select(
         "doc_id", "url", "route", "status_int", "bytes_int",
         "method", "client_ip", "level", "lang_norm", "lang_family", "error",
     )

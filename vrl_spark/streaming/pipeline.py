@@ -1,8 +1,8 @@
 """Streaming parse->enrich->route->aggregate.
 
 Identical stage functions as the batch plan (vrl_spark.plans.weblog):
-Spark's unified API means the SAME ``parse_stage``/``enrich_stage``/
-``route_stage`` Column logic runs over an unbounded source. The
+Spark's unified API means the SAME ``routed_stage`` chain
+(parse -> enrich -> route) runs over an unbounded source. The
 aggregate differs only by watermark + window.
 
 Sinks: ``foreachBatch`` fan-out keeps the single-pass multi-sink
@@ -37,9 +37,7 @@ def stream_pipeline(spark: SparkSession, pages_stream: DataFrame) -> DataFrame:
     """parse -> enrich -> route on an unbounded pages stream."""
     from vrl_spark.plans import weblog
 
-    df = weblog.parse_stage(pages_stream)
-    df = weblog.enrich_stage(spark, df)
-    return weblog.route_stage(df)
+    return weblog.routed_stage(spark, pages_stream)
 
 
 def windowed_counts(
