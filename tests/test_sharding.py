@@ -306,3 +306,47 @@ def test_shard_and_pack_budgets_in_bpe_units(spark):
     assert plan.count("Exchange SinglePartition") == 1, plan
     assert plan.count("Exchange hashpartitioning") == 3, plan
     assert "EvalPython" not in plan, plan
+
+
+def test_shard_budgets_in_unigram_units(spark):
+    """Budgets in unigram (whitespace word) units from the JVM
+    ``textstats.token_count`` column under a non-default ``token_col``.
+    NULL and blank documents count 0 words: they are placed like any
+    other doc but add no mass, so the sequential reference and the
+    budget + one-doc overhang bound hold with them in the corpus."""
+    from vrl_spark.operators import textstats
+
+    vocab = ["lowest", "lower", "newest", "widest", "newer", "low",
+             "wide", "new", "est", "tokenization"]
+    texts = [
+        None if i % 11 == 0 else "   " if i % 13 == 0 else
+        "  ".join(vocab[(i + j) % len(vocab)] for j in range(i % 7 + 3))
+        for i in range(60)
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    counted = docs.select(
+        "doc_id", textstats.token_count(F.col("text")).alias("uni_tokens"),
+    ).localCheckpoint()
+    rows = {r["doc_id"]: r["uni_tokens"] for r in counted.collect()}
+    for i, t in enumerate(texts):
+        assert rows[i] == (len(t.split()) if t else 0), (i, t)
+    assert 0 in rows.values()
+
+    budget = 40
+    placed = sharding.shard_assign(
+        counted, budget=budget, token_col="uni_tokens", seed="uni",
+        n_buckets=8,
+    ).collect()
+    assert len(placed) == len(texts)
+    ordered = sorted(placed, key=lambda r: (r["perm_key"], r["doc_id"]))
+    start = 0
+    for r in ordered:
+        assert r["shard_id"] == start // budget, r
+        start += r["uni_tokens"]
+    mass = {}
+    for r in placed:
+        mass[r["shard_id"]] = mass.get(r["shard_id"], 0) + r["uni_tokens"]
+    biggest = max(r["uni_tokens"] for r in placed)
+    assert all(m < budget + biggest for m in mass.values())
