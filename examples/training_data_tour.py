@@ -1,5 +1,5 @@
 """Runnable tour of the training-data operators: the dedup family,
-similarity search, crypto anonymization, and stateful streaming.
+similarity search and crypto anonymization.
 Run: python examples/training_data_tour.py
 """
 

@@ -1390,6 +1390,12 @@ def test_span_dedup_plan_shape(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
+def test_span_dedup_keep_cols_clash(spark):
+    df = spark.createDataFrame([(1, "a b", "x")], ["doc_id", "text", "n_removed"])
+    with pytest.raises(ValueError):
+        textstats.span_dedup(df, "text", "doc_id", keep_cols=["n_removed"])
+
+
 def test_cosine_dedup_quantized_matches_exact(spark, sf_dir):
     """quantized=True candidate generation + exact verify returns the
     SAME pair set as the exact path (the shuffle just gets 4x

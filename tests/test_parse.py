@@ -26,14 +26,13 @@ def col_of(spark, values):
 GROK = "%{TIMESTAMP_ISO8601:timestamp} %{LOGLEVEL:level} %{GREEDYDATA:message}"
 
 
-@pytest.mark.parametrize("mode", ["native", "vectorized"])
-def test_parse_grok_both_lowerings(spark, mode):
+def test_parse_grok_onepass(spark):
     df = col_of(spark, [
         "2020-10-02T23:22:12.223222Z info Hello world",
         "an ungrokkable message",
         None,
     ])
-    out = df.select(P.parse_grok(F.col("s"), GROK, mode=mode).alias("o")).collect()
+    out = df.select(P.parse_grok(F.col("s"), GROK).alias("o")).collect()
     ok = out[0]["o"]
     assert ok["timestamp"] == "2020-10-02T23:22:12.223222Z"
     assert ok["level"] == "info"

@@ -128,10 +128,6 @@ _KEPT_UNREACHABLE = {
         "carries the byte-identical extracted-text invariant",
     "vrl_spark.operators.htmlx":
         "carries the byte-identical extracted-text invariant",
-    "vrl_spark.streaming":
-        "kept until it gets a measured lane, else deleted",
-    "vrl_spark.streaming.pipeline":
-        "kept until it gets a measured lane, else deleted",
 }
 
 

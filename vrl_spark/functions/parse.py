@@ -1,14 +1,14 @@
 """Parse functions — the heart of the north star.
 
-Two lowerings per extraction function, chosen by the pipeline builder:
+Regex extraction lowerings, all in the JVM (no Python on the hot path):
 
-- ``native``      one JVM ``regexp_extract`` per field. Zero Python on
-  the hot path, fully inside whole-stage codegen. Best when the field
-  count is small (Catalyst does not CSE the repeated regex match, so
-  cost is fields x match).
-- ``vectorized``  one Arrow-batched pandas UDF emitting a struct of
-  all captures via ``pd.Series.str.extract`` — a single regex pass
-  per row regardless of field count, C-speed inside pandas.
+- ``parse_regex_native``   one ``regexp_extract`` per field, gated on
+  an ``rlike`` match flag; cost is fields x match.
+- ``parse_regex_onepass``  one ``regexp_replace`` rewrite of the whole
+  line, split into fields; the Column form of the one-pass trick.
+- ``onepass_stage``        the same trick as a DataFrame stage with
+  Generate barriers, so the regex runs exactly once per row; every
+  grok rule list goes through ``grok_chain`` on top of it.
 
 Reference semantics:
 - parse_regex: first match -> object of named captures, all values
@@ -16,14 +16,14 @@ Reference semantics:
 - parse_grok: pattern compiled once at compile time
   (src/stdlib/parse_grok.rs:148-169), no-match = error
   "unable to parse input with grok pattern" (parse_grok.rs:11-25).
+- parse_groks: ordered rule list, first match wins
+  (src/stdlib/parse_groks.rs).
 - parse_key_value: logfmt-style, standalone key -> "true"-like,
   quoted values, duplicate keys -> array (src/stdlib/parse_key_value.rs:52-98).
 - parse_timestamp: strptime with chrono tokens (src/stdlib/parse_timestamp.rs).
 """
 
 from __future__ import annotations
-
-from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import Column
@@ -52,35 +52,6 @@ def parse_regex_native(col: Column, compiled: CompiledGrok) -> Column:
         for name in compiled.fields
     ]
     return F.when(matched, F.struct(*fields))
-
-
-def parse_regex_vectorized(col: Column, compiled: CompiledGrok) -> Column:
-    """Struct of string captures via ONE Arrow-batched pandas UDF.
-
-    The compiled regex string is captured in the closure (compiled
-    driver-side once — mirroring VRL's compile-time pattern
-    compilation), recompiled once per executor, then applied with
-    pandas' vectorized ``str.extract``. No-match rows -> NULL struct.
-    """
-    regex = compiled.regex
-    names = list(compiled.fields)
-    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
-
-    @pandas_udf(schema)
-    def extract(s: pd.Series) -> pd.DataFrame:
-        import re as _re
-
-        pat = _re.compile(regex)
-        df = s.str.extract(pat, expand=True)
-        df.columns = names[: len(df.columns)]
-        # str.extract gives NaN per group on no-match; VRL's error is
-        # whole-object — null out entire rows where nothing matched.
-        return df
-
-    out = extract(col)
-    # whole-struct null when no field matched (no-match = error)
-    any_hit = F.coalesce(*[out.getField(n) for n in names]).isNotNull() if names else F.lit(False)
-    return F.when(any_hit, out)
 
 
 _SENTINEL = "\x02"
@@ -218,15 +189,71 @@ def onepass_stage(
     return df.withColumn(out, struct).drop("_op_marked", "_op_parts")
 
 
-def parse_grok(col: Column, pattern: str, mode: str = "onepass") -> Column:
-    """Compile grok -> regex on the driver, lower per ``mode``
-    (onepass | native | vectorized)."""
-    compiled = compile_grok(pattern)
-    if mode == "native":
-        return parse_regex_native(col, compiled)
-    if mode == "onepass":
-        return parse_regex_onepass(col, compiled, anchored=False)
-    return parse_regex_vectorized(col, compiled)
+def parse_grok(col: Column, pattern: str) -> Column:
+    """Compile grok -> regex on the driver; search-anywhere one-pass
+    Column lowering (``parse_regex_onepass``)."""
+    return parse_regex_onepass(col, compile_grok(pattern), anchored=False)
+
+
+def compile_groks(
+    patterns: list[str],
+    aliases: dict[str, str] | None = None,
+    alias_sources: list[str] | None = None,
+) -> list[CompiledGrok]:
+    """Compile a grok rule list at plan build (bad patterns raise
+    here, like VRL compile). ``alias_sources`` JSON files are read
+    once, like the reference's compile-time file read; ``aliases``
+    override them."""
+    import json
+
+    vocab: dict[str, str] = {}
+    for src in alias_sources or []:
+        with open(src) as f:
+            vocab.update(json.load(f))
+    vocab.update(aliases or {})
+    return [compile_grok(p, extra_patterns=vocab) for p in patterns]
+
+
+def chain_hit(outs: list[str]) -> Column:
+    """True on rows where any of the chain columns ``outs`` matched."""
+    hit = F.col(outs[0]).isNotNull()
+    for out in outs[1:]:
+        hit = hit | F.col(out).isNotNull()
+    return hit
+
+
+def grok_chain(
+    df,
+    outs: list[str],
+    col: Column,
+    compiled: list[CompiledGrok],
+    anchored: bool = True,
+):
+    """First-match-wins grok rule list (src/stdlib/parse_groks.rs) as
+    one ``onepass_stage`` per pattern.
+
+    Adds column ``outs[i]``: pattern i's capture struct, non-NULL only
+    on rows where pattern i is the FIRST to match. Pattern i's input
+    is NULL on rows an earlier pattern matched, so its regex
+    short-circuits there: regex work per row is 1 + sum(miss_rates),
+    and at most one chain column is non-NULL per row."""
+    for i, (out, c) in enumerate(zip(outs, compiled)):
+        gate = col if i == 0 else F.when(~chain_hit(outs[:i]), col)
+        df = onepass_stage(df, out, gate, c, anchored=anchored)
+    return df
+
+
+def chain_fields(outs: list[str], compiled: list[CompiledGrok]) -> dict[str, Column]:
+    """Field name -> its value from whichever chain column matched,
+    over the UNION of the patterns' fields in first-seen order. A
+    field is NULL on rows whose matching pattern does not define it
+    (at most one chain column is non-NULL per row, so a coalesce over
+    the defining patterns is the first-match value)."""
+    vals: dict[str, list[Column]] = {}
+    for out, c in zip(outs, compiled):
+        for name in c.fields:
+            vals.setdefault(name, []).append(F.col(out).getField(name))
+    return {k: v[0] if len(v) == 1 else F.coalesce(*v) for k, v in vals.items()}
 
 
 def parse_groks_stage(
@@ -239,56 +266,18 @@ def parse_groks_stage(
     anchored: bool = True,
 ):
     """src/stdlib/parse_groks.rs — the rule-LIST API: try each grok
-    pattern in order, first match wins; ``aliases`` (and
-    ``alias_sources`` JSON files, loaded at plan build like the
-    reference's compile-time file read) extend the pattern vocabulary.
+    pattern in order, first match wins; ``aliases`` and
+    ``alias_sources`` extend the pattern vocabulary (``compile_groks``).
 
-    Output: struct over the UNION of all patterns' fields; fields a
-    non-matching pattern doesn't define are NULL; no pattern matching
-    at all -> NULL struct (the error branch). Each pattern's regex is
-    gated on "no earlier pattern matched", so regex work per row is
-    1 + sum(miss_rates) — the lazy-fallback property of the
-    single-pattern stage, generalized."""
-    import json as _json
-
-    vocab: dict[str, str] = {}
-    for src in alias_sources or []:
-        with open(src) as f:
-            vocab.update(_json.load(f))
-    vocab.update(aliases or {})
-    compiled = [compile_grok(p, extra_patterns=vocab) for p in patterns]
-
-    all_fields: list[str] = []
-    for c in compiled:
-        for fld in c.fields:
-            if fld not in all_fields:
-                all_fields.append(fld)
-
-    prev_hit = None
-    for i, c in enumerate(compiled):
-        gate = col if prev_hit is None else F.when(~prev_hit, col)
-        df = onepass_stage(df, f"_gk{i}", gate, c, anchored=anchored)
-        hit = F.col(f"_gk{i}").isNotNull()
-        prev_hit = hit if prev_hit is None else (prev_hit | hit)
-
-    def field_val(fld: str) -> Column:
-        expr = None
-        for i, c in enumerate(compiled):
-            v = (
-                F.col(f"_gk{i}").getField(fld)
-                if fld in c.fields
-                else F.lit(None).cast("string")
-            )
-            cond = F.col(f"_gk{i}").isNotNull()
-            expr = F.when(cond, v) if expr is None else expr.when(cond, v)
-        return expr
-
-    struct = F.when(
-        prev_hit, F.struct(*[field_val(f).alias(f) for f in all_fields])
-    )
-    return df.withColumn(out, struct).drop(
-        *[f"_gk{i}" for i in range(len(compiled))]
-    )
+    Output: struct over the UNION of all patterns' fields; fields the
+    matching pattern doesn't define are NULL; no pattern matching at
+    all -> NULL struct (the error branch)."""
+    compiled = compile_groks(patterns, aliases, alias_sources)
+    outs = [f"_gk{i}" for i in range(len(compiled))]
+    df = grok_chain(df, outs, col, compiled, anchored=anchored)
+    fields = chain_fields(outs, compiled)
+    struct = F.when(chain_hit(outs), F.struct(*[v.alias(k) for k, v in fields.items()]))
+    return df.withColumn(out, struct).drop(*outs)
 
 
 # ---------------------------------------------------------------------

@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from vrl_spark.grok import compile_grok
-from vrl_spark.functions.parse import parse_regex_onepass
+from vrl_spark.functions.parse import grok_chain, parse_regex_onepass
 
 # --- web server logs -------------------------------------------------
 
@@ -62,6 +62,21 @@ SYSLOG_5424 = compile_grok(
 )
 
 
+def _syslog_shape(s: Column) -> Column:
+    """parse_syslog output struct from one syslog capture struct, with
+    facility/severity derived from PRI (pri = facility*8 + severity)."""
+    pri = s.getField("pri").try_cast("long")
+    return F.struct(
+        s.getField("timestamp").alias("timestamp"),
+        s.getField("hostname").alias("hostname"),
+        s.getField("appname").alias("appname"),
+        s.getField("procid").alias("procid"),
+        s.getField("message").alias("message"),
+        (pri / 8).cast("long").alias("facility_code"),
+        (pri % 8).alias("severity_code"),
+    )
+
+
 def parse_syslog(col: Column) -> Column:
     """src/stdlib/parse_syslog.rs — 5424 first, 3164 fallback (the
     reference's syslog_loose behavior). Adds derived facility/severity
@@ -70,23 +85,10 @@ def parse_syslog(col: Column) -> Column:
     The fallback regex only runs on rows the 5424 pattern rejects
     (CaseWhen branches evaluate lazily): regex work per row is
     1 + miss_rate, like the weblog parse stage."""
-
-    def shape(s: Column) -> Column:
-        pri = s.getField("pri").try_cast("long")
-        return F.struct(
-            s.getField("timestamp").alias("timestamp"),
-            s.getField("hostname").alias("hostname"),
-            s.getField("appname").alias("appname"),
-            s.getField("procid").alias("procid"),
-            s.getField("message").alias("message"),
-            (pri / 8).cast("long").alias("facility_code"),
-            (pri % 8).alias("severity_code"),
-        )
-
     s5 = parse_regex_onepass(col, SYSLOG_5424, anchored=True)
     s3 = parse_regex_onepass(col, SYSLOG_3164, anchored=True)
-    return F.when(s5.isNotNull(), shape(s5)).otherwise(
-        F.when(s3.isNotNull(), shape(s3))
+    return F.when(s5.isNotNull(), _syslog_shape(s5)).otherwise(
+        F.when(s3.isNotNull(), _syslog_shape(s3))
     )
 
 
@@ -96,33 +98,15 @@ def parse_syslog_stage(df, col: Column, out: str = "syslog"):
     The Column form above embeds BOTH regexes inside one expression;
     projecting k fields from it re-evaluates them k times (Catalyst
     inlines struct extraction — see functions/parse.materialize). This
-    variant runs each regex through a Generate barrier so the total
-    regex work is 1 + 5424_miss_rate passes per row, then shapes the
-    result from cheap attribute reads. Same output schema as
-    ``parse_syslog``.
+    variant is a ``grok_chain``: each regex runs through a Generate
+    barrier, so the total regex work is 1 + 5424_miss_rate passes per
+    row, then the result is shaped from cheap attribute reads. Same
+    output schema as ``parse_syslog``.
     """
-    from vrl_spark.functions.parse import onepass_stage
-
-    step = onepass_stage(df, "_s5", col, SYSLOG_5424, anchored=True)
-    step = onepass_stage(
-        step, "_s3", F.when(F.col("_s5").isNull(), col), SYSLOG_3164, anchored=True
-    )
-
-    def shape(s: Column) -> Column:
-        pri = s.getField("pri").try_cast("long")
-        return F.struct(
-            s.getField("timestamp").alias("timestamp"),
-            s.getField("hostname").alias("hostname"),
-            s.getField("appname").alias("appname"),
-            s.getField("procid").alias("procid"),
-            s.getField("message").alias("message"),
-            (pri / 8).cast("long").alias("facility_code"),
-            (pri % 8).alias("severity_code"),
-        )
-
+    step = grok_chain(df, ["_s5", "_s3"], col, [SYSLOG_5424, SYSLOG_3164])
     s5, s3 = F.col("_s5"), F.col("_s3")
-    parsed = F.when(s5.isNotNull(), shape(s5)).otherwise(
-        F.when(s3.isNotNull(), shape(s3))
+    parsed = F.when(s5.isNotNull(), _syslog_shape(s5)).otherwise(
+        F.when(s3.isNotNull(), _syslog_shape(s3))
     )
     return step.withColumn(out, parsed).drop("_s5", "_s3")
 

@@ -80,8 +80,8 @@ _FP_PRIME = 9223372036854775783
 
 def _lineage_aggs(payload: Column, fp_cols: list[Column], engine: str):
     """The ONE definition of the manifest metrics (shared by
-    ``lineage_metrics``, ``CheckpointedRun.run_partition``, and the
-    streaming fan-out — keep them from drifting).
+    ``lineage_metrics`` and ``CheckpointedRun.run_partition`` — keep
+    them from drifting).
 
     The fingerprint is a MODULAR SUM of per-row hashes (AdHash-style
     multiset hash): commutative, so partitioning/order never matter,

@@ -24,10 +24,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vrl_spark.grok import compile_grok
+from vrl_spark.functions.parse import chain_fields, chain_hit, compile_groks, grok_chain
 
 
 @dataclass
@@ -65,24 +65,8 @@ class Pipeline:
         """Grok-extract ``src`` into columns (compiled NOW — bad
         patterns fail at build, like VRL compile). Fallible: no-match
         rows get ``error`` set."""
-        compiled = compile_grok(pattern)  # compile-time, raises here
-        from vrl_spark.functions.parse import onepass_stage
-
-        def fn(df: DataFrame) -> DataFrame:
-            tmp = f"_g_{prefix or src}"
-            # Generate-barrier extraction: one regex pass per row
-            # regardless of projected field count (parse.onepass_stage).
-            df = onepass_stage(df, tmp, F.col(src), compiled, anchored=anchored)
-            out = df.select(
-                "*",
-                *[
-                    F.col(tmp).getField(f).alias(prefix + f)
-                    for f in compiled.fields
-                ],
-            )
-            return _merge_error(out, F.col(tmp).isNull(), error).drop(tmp)
-
-        return self._add(f"parse_grok({src})", fn, fallible=True)
+        compiled = compile_groks([pattern])  # compile-time, raises here
+        return self._grok(f"parse_grok({src})", src, compiled, prefix, anchored, error)
 
     def parse_groks(
         self, src: str, patterns: list[str], prefix: str = "",
@@ -94,40 +78,25 @@ class Pipeline:
         """Ordered rule-LIST extraction (parse_groks.rs): patterns are
         tried first-match-wins, output is the union of all patterns'
         fields. Compile-time: bad patterns/aliases raise here."""
-        from vrl_spark.functions.parse import parse_groks_stage
+        compiled = compile_groks(patterns, aliases, alias_sources)  # raises here
+        return self._grok(f"parse_groks({src})", src, compiled, prefix, anchored, error)
 
-        # compile eagerly so bad patterns fail at BUILD, like parse_grok
-        from vrl_spark.grok import compile_grok
-
-        import json as _json
-
-        vocab: dict[str, str] = {}
-        for s_ in alias_sources or []:
-            with open(s_) as fh:
-                vocab.update(_json.load(fh))
-        vocab.update(aliases or {})
-        probe_fields: list[str] = []
-        for p in patterns:
-            for f_ in compile_grok(p, extra_patterns=vocab).fields:
-                if f_ not in probe_fields:
-                    probe_fields.append(f_)
+    def _grok(self, name, src, compiled, prefix, anchored, error) -> "Pipeline":
+        """One fallible stage over a grok rule list: project the
+        first-match fields as ``prefix + field``; no match sets
+        ``error``."""
+        base = prefix or src
+        outs = [f"_g_{base}"] + [f"_g{i}_{base}" for i in range(1, len(compiled))]
 
         def fn(df: DataFrame) -> DataFrame:
-            tmp = f"_gs_{prefix or src}"
-            df = parse_groks_stage(
-                df, tmp, F.col(src), patterns,
-                aliases=aliases, alias_sources=alias_sources, anchored=anchored,
-            )
-            out = df.select(
-                "*",
-                *[
-                    F.col(tmp).getField(f_).alias(prefix + f_)
-                    for f_ in probe_fields
-                ],
-            )
-            return _merge_error(out, F.col(tmp).isNull(), error).drop(tmp)
+            # Generate-barrier extraction: one regex pass per row per
+            # pattern tried, regardless of projected field count.
+            df = grok_chain(df, outs, F.col(src), compiled, anchored=anchored)
+            fields = chain_fields(outs, compiled)
+            out = df.select("*", *[v.alias(prefix + k) for k, v in fields.items()])
+            return _merge_error(out, ~chain_hit(outs), error).drop(*outs)
 
-        return self._add(f"parse_groks({src})", fn, fallible=True)
+        return self._add(name, fn, fallible=True)
 
     def parse_key_value(self, src: str, dest: str = "kv") -> "Pipeline":
         from vrl_spark.functions.parse import parse_key_value_native
@@ -213,10 +182,7 @@ class Pipeline:
         for stage in self.stages:
             df = stage.fn(df)
         if self.routes is not None:
-            route = F.when(F.col("error").isNotNull(), "dead_letter")
-            for name, pred in self.routes:
-                route = route.when(pred, name)
-            df = df.withColumn("route", route.otherwise(self.default_route))
+            df = df.withColumn("route", route_column(self.routes, self.default_route))
         return df
 
     def explain(self) -> str:
@@ -228,6 +194,18 @@ class Pipeline:
             names = ["dead_letter"] + [n for n, _ in self.routes] + [self.default_route]
             lines.append(f"  routes: {names}")
         return "\n".join(lines)
+
+
+def route_column(routes: list[tuple[str, Column]], otherwise: str) -> Column:
+    """First-match-wins route cascade (Vector route transform / VRL
+    if-else chain): rows with a pending ``error`` go to
+    ``dead_letter`` before any predicate (abort semantics), then the
+    first matching ``(name, predicate)``, else ``otherwise``. A name
+    may appear more than once."""
+    route = F.when(F.col("error").isNotNull(), "dead_letter")
+    for name, pred in routes:
+        route = route.when(pred, name)
+    return route.otherwise(otherwise)
 
 
 def _merge_error(df: DataFrame, failed: Column, message: str) -> DataFrame:

@@ -36,7 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vrl_spark.functions.parse import grok_chain
 from vrl_spark.grok import compile_grok
+from vrl_spark.pipeline import route_column
 from vrl_spark.sources.pages import derive_pages, derive_pages_sql
 from vrl_spark.sources import literal_table, read_table
 
@@ -93,21 +95,14 @@ def parse_stage(pages: DataFrame) -> DataFrame:
     primary pattern; only rows it rejects pay a second pass for the
     fallback (regex work per row is 1 + miss_rate instead of
     fields + 2 — the parse stage is the pipeline's hot loop)."""
-    from vrl_spark.functions.parse import onepass_stage
-
-    txt = F.col("text")
-    # onepass_stage = Generate-barrier extraction: each regex runs ONCE
-    # per row no matter how many fields are projected below (a bare
-    # Column one-pass embeds the regex once per field). The fallback's
-    # input is gated to NULL on primary-hit rows, so its regex
-    # short-circuits: total regex work = 1 + miss_rate per row.
-    step1 = onepass_stage(pages, "_ap", txt, ACCESS, anchored=True)
-    step2 = onepass_stage(
-        step1, "_lf", F.when(F.col("_ap").isNull(), txt), LOGFMT, anchored=True
-    )
+    # grok_chain = one Generate-barrier extraction per pattern: each
+    # regex runs ONCE per row no matter how many fields are projected
+    # below. The fallback's input is NULL on primary-hit rows, so its
+    # regex short-circuits: total regex work = 1 + miss_rate per row.
+    df = grok_chain(pages, ["_ap", "_lf"], F.col("text"), [ACCESS, LOGFMT])
     ap, lf = F.col("_ap"), F.col("_lf")
     matched, logfmt_hit = ap.isNotNull(), lf.isNotNull()
-    df = step2.select(
+    df = df.select(
         "*",
         matched.alias("_grok_ok"),
         logfmt_hit.alias("_logfmt_ok"),
@@ -155,17 +150,15 @@ def enrich_stage(spark: SparkSession, df: DataFrame) -> DataFrame:
 def route_stage(df: DataFrame) -> DataFrame:
     """First-match-wins when-cascade (VRL if/else chain -> Return
     semantics, reference src/compiler/expression/return.rs:42-48)."""
-    status = F.col("status_int")
-    route = (
-        F.when(F.col("error").isNotNull(), "dead_letter")
-        .when(F.col("_grok_ok") & (status >= 500), "server_error")
-        .when(F.col("_grok_ok") & (status >= 400), "client_error")
-        .when(F.col("_grok_ok") & F.col("method").isin("POST", "PUT", "DELETE"), "writes")
-        .when(F.col("_grok_ok"), "ok")
-        .when(F.col("level").isin("error", "fatal"), "server_error")
-        .otherwise("app_logs")
-    )
-    return df.withColumn("route", route)
+    ok, status = F.col("_grok_ok"), F.col("status_int")
+    routes = [
+        ("server_error", ok & (status >= 500)),
+        ("client_error", ok & (status >= 400)),
+        ("writes", ok & F.col("method").isin("POST", "PUT", "DELETE")),
+        ("ok", ok),
+        ("server_error", F.col("level").isin("error", "fatal")),
+    ]
+    return df.withColumn("route", route_column(routes, "app_logs"))
 
 
 def aggregate_stage(df: DataFrame) -> DataFrame:
