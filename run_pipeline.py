@@ -63,19 +63,9 @@ def main() -> int:
 
     spark = get_spark("vrl_spark_pipeline", master=args.master)
 
-    if args.pages:
-        pages = spark.read.parquet(args.pages)
-    else:
-        pages = weblog.load_pages(spark, args.input)
-    hour = F.date_format("warc_ts", "yyyyMMddHH").alias("part")
-    routed = weblog.routed_stage(spark, pages).select(
-        "doc_id", "url", "url_host", "warc_ts", "route", "status_int",
-        "bytes_int", "method", "level", "lang_norm", "lang_family", "error",
-        hour,
-    )
-
     run = CheckpointedRun(os.path.join(args.output, "routed"))
     if args.verify:
+        # reads only the landed sink and its manifest: no input, no plan
         results = run.verify(
             spark, payload_col="url",
             fp_cols=["doc_id", "url", "route", "status_int",
@@ -93,6 +83,16 @@ def main() -> int:
         import shutil
 
         shutil.rmtree(run.manifest_dir, ignore_errors=True)
+    if args.pages:
+        pages = spark.read.parquet(args.pages)
+    else:
+        pages = weblog.load_pages(spark, args.input)
+    hour = F.date_format("warc_ts", "yyyyMMddHH").alias("part")
+    routed = weblog.routed_stage(spark, pages).select(
+        "doc_id", "url", "url_host", "warc_ts", "route", "status_int",
+        "bytes_int", "method", "level", "lang_norm", "lang_family", "error",
+        hour,
+    )
     # listed from a column-pruned scan of the pages, not the routed
     # frame: its parse cannot be pruned away (routed rows are 1:1 with
     # pages, so the hours are the same)

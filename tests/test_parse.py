@@ -185,7 +185,7 @@ def test_parse_groks_rule_list(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, ["i", "line"])
     out = parse_groks_stage(
-        df, "g", F.col("line"),
+        df, "g", "line",
         patterns=[
             "%{COMMONAPACHELOG}",
             "%{KVPAIR} %{KVPAIR2}",

@@ -198,11 +198,13 @@ def test_lineage_fingerprint_matches_hashlib(spark, rows):
 # exercised on rows two patterns accept.
 _TS_REST = "ts=%{NOTSPACE:log_ts} %{GREEDYDATA:rest}"
 
-# One log line holds no control characters or line separators: the
-# one-pass rewrite reserves U+0001/U+0002 as its separator/marker, and
-# an anchored ``$`` matches before a final line terminator (both are
-# recorded faults of the lowering, pinned by the xfail test below).
-_printable = st.characters(blacklist_categories=("Cc", "Cs", "Zl", "Zp"))
+# Lines carry the one-pass rewrite's reserved bytes U+0001/U+0002 and
+# line terminators: a row with either byte takes the chain's native
+# branch, and an anchored pattern ends in ``\\z``, so a trailing
+# ``\\n`` is not a match.
+_printable = st.characters(blacklist_categories=("Cc", "Cs", "Zl", "Zp")) | st.sampled_from(
+    "\x01\x02\n\r\u2028"
+)
 _token = st.text(alphabet=_printable, min_size=1, max_size=10)
 _word = st.text(alphabet="abcdefghijXYZ0123456789_", min_size=1, max_size=8)
 _garbage = st.text(alphabet=_printable, max_size=40)
@@ -233,27 +235,27 @@ _line = st.one_of(
     st.builds("{}{}".format, _garbage, _access | _logfmt),  # unanchored-only hits
     st.builds("{}{}".format, _access | _logfmt, _garbage),
     st.builds("\x01garbled {}".format, _garbage),  # the corpus's garbage form
+    st.builds("\x02{}".format, _access | _logfmt | _garbage),  # leads with the marker
+    st.builds("{}\n".format, _access | _logfmt),
     st.sampled_from(_GOLDEN),
     st.none(),
 )
 
 
-@settings(max_examples=25, deadline=None)
-@given(st.lists(_line, min_size=1, max_size=12), st.booleans())
-def test_grok_chain_matches_native_first_match(spark, lines, anchored):
-    """Pattern i's chain struct == its ``parse_regex_native`` struct
-    (rlike + per-field regexp_extract) when i is the first pattern
-    whose rlike matches, else NULL."""
+def _assert_chain_is_native_first_match(spark, lines, anchored):
+    """Pattern i's chain captures == its ``parse_regex_native`` struct
+    (rlike + per-field regexp_extract, anchored with ``\\z``) when i is
+    the first pattern whose rlike matches, else NULL."""
     from vrl_spark.grok import compile_grok
     from vrl_spark.plans.weblog import ACCESS, LOGFMT
 
     compiled = [ACCESS, LOGFMT, compile_grok(_TS_REST)]
-    natives = [replace(c, regex=f"^(?:{c.regex})$") if anchored else c for c in compiled]
+    natives = [replace(c, regex=f"^(?:{c.regex})\\z") if anchored else c for c in compiled]
     outs = [f"g{i}" for i in range(len(compiled))]
     df = spark.createDataFrame(list(enumerate(lines)), "i int, s string")
     s = F.col("s")
     rows = (
-        P.grok_chain(df, outs, s, compiled, anchored=anchored)
+        P.grok_chain(df, outs, "s", compiled, anchored=anchored)
         .select(
             "i", *outs,
             *[s.rlike(n.regex).alias(f"m{k}") for k, n in enumerate(natives)],
@@ -265,18 +267,77 @@ def test_grok_chain_matches_native_first_match(spark, lines, anchored):
     for r in rows:
         first = next((k for k in range(len(compiled)) if r[f"m{k}"]), None)
         for k in range(len(compiled)):
-            want = r[f"n{k}"] if k == first else None
+            want = list(r[f"n{k}"]) if k == first else None
             assert r[f"g{k}"] == want, (lines[r["i"]], anchored, k)
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="one-pass lowering reads a line that starts with its U+0002 "
-    "marker as a match and fails the job in element_at",
-)
-def test_grok_chain_marker_byte_line(spark):
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_line, min_size=1, max_size=12), st.booleans())
+def test_grok_chain_matches_native_first_match(spark, lines, anchored):
+    _assert_chain_is_native_first_match(spark, lines, anchored)
+
+
+@pytest.mark.parametrize("anchored", [True, False])
+def test_grok_chain_marker_byte_line(spark, anchored):
+    """The lines the one-pass rewrite could misread: a leading U+0002
+    on a miss (once failed the job in ``element_at``), U+0001 inside a
+    capture (once shifted the later fields), a miss whose U+0001 count
+    fakes a full split, and a trailing line terminator (once matched
+    before it, with the terminator in the last field)."""
+    access = '1.2.3.4 - u [10/Oct/2020:13:55:36 +0000] "GET /x HTTP/1.1" 200 5120'
+    lines = [
+        "\x02not a log line",
+        "\x02" + access,
+        "\x02a\x01b\x01c\x01d\x01e\x01f\x01g\x01h",
+        "ts=1 level=info host=h bytes=2 msg=x\x01y",
+        "ts=1\x01z level=info host=h bytes=2 msg=x",
+        "\x02ts=1 level=info host=h bytes=2 msg=x\x01y",
+        access + "\n",
+        access + "\x01",
+        "ts=1 level=info host=h bytes=2 msg=x\n",
+        access,
+    ]
+    _assert_chain_is_native_first_match(spark, lines, anchored)
+
+
+# --- the SQL string-literal escaper -----------------------------------
+
+# Every grok regex and replacement reaches SQL text through
+# ``sources._sql_literal``; Spark's lexer unescapes what it reads.
+_sql_text = st.lists(
+    st.characters(blacklist_categories=("Cs",))
+    | st.sampled_from([
+        "\\", "'", '"', "$", "\x01", "\x02", "\n", "\U0001F600", "\U00010348",
+        "\\u0041", "\\U0001F600", "\\0", "\\%", "\\_", "\\'", "''", "$1",
+    ]),
+    max_size=16,
+).map("".join)
+
+
+def _sql_round_trip(spark, texts: list[str]) -> list[str]:
+    """``texts`` through one ``VALUES`` query of ``_sql_literal``s."""
+    from vrl_spark.sources import literal_table
+
+    df = literal_table(spark, list(enumerate(texts)), ["i", "s"])
+    return [r["s"] for r in df.orderBy("i").collect()]
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(_sql_text, min_size=1, max_size=12))
+def test_sql_literal_round_trips_through_spark(spark, texts):
+    assert _sql_round_trip(spark, texts) == texts
+
+
+def test_sql_literal_round_trips_every_engine_pattern(spark):
+    """Each one-pass regex, replacement and native regex the engine
+    writes into SQL text reads back exactly."""
+    from vrl_spark.functions.presets import SYSLOG_3164, SYSLOG_5424
     from vrl_spark.plans.weblog import ACCESS, LOGFMT
 
-    df = spark.createDataFrame([("\x02not a log line",)], "s string")
-    row = P.grok_chain(df, ["g0", "g1"], F.col("s"), [ACCESS, LOGFMT]).collect()[0]
-    assert row["g0"] is None and row["g1"] is None
+    texts = [
+        t
+        for c in (ACCESS, LOGFMT, SYSLOG_5424, SYSLOG_3164)
+        for anchored in (True, False)
+        for t in (*P._onepass_pattern(c, anchored), P._native(c, anchored).regex)
+    ]
+    assert _sql_round_trip(spark, texts) == texts

@@ -190,6 +190,49 @@ def test_onepass_parse_runs_regex_once(spark, sf_dir):
     assert sys_plan.count("regexp_replace") == 2, sys_plan
 
 
+# py4j commands that building the flagship aggregate over a pages
+# frame sends, leaving out py4j's releases of dropped JVM objects
+# (their timing depends on earlier work): 118 with SQL-text stages,
+# ~2,160 when every stage was a chain of Column constructors.
+_FLAGSHIP_BUILD_COMMANDS = 118
+
+
+def test_flagship_build_cost_and_plan_shape(spark, sf_dir):
+    """The flagship build stays a few py4j round trips (every stage is
+    SQL text), and its executed plan keeps one Generate barrier pair
+    and one regexp_replace per pattern, the two aggregate Exchanges
+    and the one broadcast join."""
+    import gc
+
+    from vrl_spark.plans import weblog
+
+    pages = weblog.load_pages(spark, sf_dir)
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(cmd, *args, **kwargs):
+        sent.append(cmd)
+        return send(cmd, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
+    try:
+        df = weblog.aggregate_stage(weblog.routed_stage(spark, pages))
+    finally:
+        del client.send_command
+        gc.enable()
+    built = [c for c in sent if not c.startswith("m\nd\n")]
+    assert len(built) <= 1.5 * _FLAGSHIP_BUILD_COMMANDS, len(built)
+
+    plan = plan_of(df)
+    nodes = [m.group(2) for m in map(_NODE.match, plan.splitlines()) if m]
+    assert nodes.count("Generate") == 4, plan
+    assert plan.count("regexp_replace") == 2, plan
+    assert nodes.count("Exchange") == 2, plan
+    assert nodes.count("BroadcastHashJoin") == 1, plan
+
+
 def test_find_table_row_no_fact_shuffle(spark, sf_dir):
     """Round-1 regression: first-match-wins used a window over fact_id,
     shuffling the entire fact stream. Now first-match resolves inside

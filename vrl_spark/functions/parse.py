@@ -6,9 +6,18 @@ Regex extraction lowerings, all in the JVM (no Python on the hot path):
   an ``rlike`` match flag; cost is fields x match.
 - ``parse_regex_onepass``  one ``regexp_replace`` rewrite of the whole
   line, split into fields; the Column form of the one-pass trick.
-- ``onepass_stage``        the same trick as a DataFrame stage with
-  Generate barriers, so the regex runs exactly once per row; every
-  grok rule list goes through ``grok_chain`` on top of it.
+- ``grok_chain``           the same trick for a first-match rule list
+  as SQL text: two ``selectExpr`` Generate barriers per pattern, so
+  each regex runs exactly once per row it is tried on, and a whole
+  chain costs a few py4j calls to build. Every grok rule list (the
+  flagship parse, syslog, ``parse_groks``, the builder) runs on it.
+
+The one-pass rewrite reserves U+0002 (leads a matched line) and
+U+0001 (separates captures). A row whose source starts with U+0002 or
+holds U+0001 is ambiguous after the rewrite and takes a per-field
+``regexp_extract`` branch that no other row reaches. Anchored
+patterns end in ``\\z``: a trailing line terminator is not a match,
+as with VRL's Rust ``$``.
 
 Reference semantics:
 - parse_regex: first match -> object of named captures, all values
@@ -25,6 +34,8 @@ Reference semantics:
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -32,6 +43,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from vrl_spark.grok import CompiledGrok, compile_grok
+from vrl_spark.sources import _sql_literal
 
 # ---------------------------------------------------------------------
 # parse_regex / parse_grok
@@ -54,52 +66,66 @@ def parse_regex_native(col: Column, compiled: CompiledGrok) -> Column:
     return F.when(matched, F.struct(*fields))
 
 
-_SENTINEL = "\x02"
-_SEP = "\x01"
+_MARK = "\x02"  # leads a line the one-pass rewrite matched
+_SEP = "\x01"  # separates its captures
+
+
+def _native(compiled: CompiledGrok, anchored: bool) -> CompiledGrok:
+    """``compiled`` with the regex a per-field native match uses: the
+    whole line (``\\z``, so a trailing line terminator is not a match,
+    as VRL/Rust ``$``) or a search anywhere."""
+    return replace(compiled, regex=f"^(?:{compiled.regex})\\z") if anchored else compiled
 
 
 def _onepass_pattern(compiled: CompiledGrok, anchored: bool) -> tuple[str, str]:
-    """(regex, replacement) for the sentinel-rewrite one-pass trick."""
+    """(regex, replacement) for the marker-rewrite one-pass trick."""
     n = len(compiled.fields)
     if anchored:
-        pat = f"^(?:{compiled.regex})$"
-        repl = _SENTINEL + _SEP.join(f"${i}" for i in range(1, n + 1))
+        pat, first = _native(compiled, True).regex, 1
     else:
         # capture prefix/suffix so the whole line is consumed in one pass
-        pat = f"^((?s:.*?))(?:{compiled.regex})((?s:.*))$"
-        repl = _SENTINEL + _SEP.join(f"${i}" for i in range(2, n + 2))
-    return pat, repl
+        pat, first = f"^((?s:.*?))(?:{compiled.regex})((?s:.*))\\z", 2
+    return pat, _MARK + _SEP.join(f"${i}" for i in range(first, first + n))
 
 
 def parse_regex_onepass(col: Column, compiled: CompiledGrok, anchored: bool = True) -> Column:
     """Struct of string captures with ONE JVM regex pass.
 
     Lowering trick: ``regexp_replace`` rewrites a matching line to
-    SENTINEL + group1 SEP group2 ... in a single match; non-matching
-    lines pass through unchanged (detected via the sentinel, which is
-    a control byte that never begins a text line). One regex
-    execution per row versus fields+1 for the per-field lowering —
-    the difference is the whole parse-stage bill at 100 TB.
+    MARK + group1 SEP group2 ... in a single match; non-matching lines
+    pass through unchanged. One regex execution per row versus
+    fields+1 for the per-field lowering — the difference is the whole
+    parse-stage bill at 100 TB.
 
-    ``anchored`` wraps the pattern in ^...$ (exact-line formats);
+    The rewrite is unambiguous on a line that neither starts with MARK
+    (U+0002) nor holds SEP (U+0001) anywhere: a MARK-led result is
+    then a match with exactly one part per field. Any other MARK-led
+    result takes the per-field native branch (``parse_regex_native``),
+    which no other row reaches.
+
+    ``anchored`` matches the whole line (^...\\z, exact-line formats);
     pass False for search-anywhere grok semantics (costs prefix/suffix
     capture groups instead).
 
     CAUTION (scale): as a Column this expression embeds the
     ``regexp_replace`` once per extracted field (Catalyst trees are
     trees, not DAGs), so projecting k fields from it re-runs the regex
-    ~2k times. For multi-field projections use ``onepass_stage`` —
-    the DataFrame form with Generate barriers that guarantees ONE
-    regex execution per row."""
+    ~2k times. For multi-field projections use ``grok_chain`` — the
+    DataFrame form with Generate barriers that guarantees ONE regex
+    execution per row."""
     pat, repl = _onepass_pattern(compiled, anchored)
     marked = F.regexp_replace(col, pat, repl)
-    ok = marked.startswith(_SENTINEL)
     parts = F.split(F.substr(marked, F.lit(2), F.length(marked)), _SEP, -1)
     fields = [
         F.element_at(parts, i + 1).alias(name)
         for i, name in enumerate(compiled.fields)
     ]
-    return F.when(ok, F.struct(*fields))
+    ambiguous = col.startswith(_MARK) | col.contains(_SEP)
+    return F.when(
+        marked.startswith(_MARK),
+        F.when(ambiguous, parse_regex_native(col, _native(compiled, anchored)))
+        .otherwise(F.struct(*fields)),
+    )
 
 
 def bind(col: Column, fn) -> Column:
@@ -147,48 +173,6 @@ def materialize(df, **cols: Column):
     ).drop(tmp)
 
 
-def onepass_stage(
-    df,
-    out: str,
-    col: Column,
-    compiled: CompiledGrok,
-    anchored: bool = True,
-):
-    """One-pass extraction as a DataFrame stage: exactly ONE regex
-    execution and ONE split per row, regardless of field count.
-
-    Why the Column form isn't enough: Catalyst expression trees are
-    trees, not DAGs — every ``element_at(parts, i)`` carries its own
-    copy of the ``regexp_replace`` subtree, so a 7-field struct
-    evaluates the regex ~15 times per row (measured: 30 regex nodes /
-    5.8 s per 100 k rows in the syslog plan). Here the marked string
-    and the parts array each pass through a Generate barrier
-    (``materialize``), becoming bound attributes; the output struct is
-    built from cheap attribute reads, and downstream ``getField``
-    pushdown lands on ``element_at(attr, i)`` — no regex re-entry.
-    Matches the reference's compile-once / match-once contract
-    (src/stdlib/parse_grok.rs:148-169). NULL input rows short-circuit
-    (regexp on NULL is NULL) -> NULL struct, the error branch.
-    """
-    pat, repl = _onepass_pattern(compiled, anchored)
-    df = materialize(df, _op_marked=F.regexp_replace(col, pat, repl))
-    m = F.col("_op_marked")
-    ok = m.startswith(_SENTINEL)
-    parts = F.split(F.substr(m, F.lit(2), F.length(m)), _SEP, -1)
-    df = materialize(df, _op_parts=F.when(ok, parts))
-    p = F.col("_op_parts")
-    struct = F.when(
-        p.isNotNull(),
-        F.struct(
-            *[
-                F.element_at(p, i + 1).alias(name)
-                for i, name in enumerate(compiled.fields)
-            ]
-        ),
-    )
-    return df.withColumn(out, struct).drop("_op_marked", "_op_parts")
-
-
 def parse_grok(col: Column, pattern: str) -> Column:
     """Compile grok -> regex on the driver; search-anywhere one-pass
     Column lowering (``parse_regex_onepass``)."""
@@ -214,70 +198,108 @@ def compile_groks(
     return [compile_grok(p, extra_patterns=vocab) for p in patterns]
 
 
-def chain_hit(outs: list[str]) -> Column:
-    """True on rows where any of the chain columns ``outs`` matched."""
-    hit = F.col(outs[0]).isNotNull()
-    for out in outs[1:]:
-        hit = hit | F.col(out).isNotNull()
-    return hit
+def _q(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def chain_hit(outs: list[str]) -> str:
+    """SQL: true on rows where any of the chain columns ``outs`` matched."""
+    return "(" + " OR ".join(f"{_q(o)} IS NOT NULL" for o in outs) + ")"
 
 
 def grok_chain(
     df,
     outs: list[str],
-    col: Column,
+    src: str,
     compiled: list[CompiledGrok],
     anchored: bool = True,
 ):
-    """First-match-wins grok rule list (src/stdlib/parse_groks.rs) as
-    one ``onepass_stage`` per pattern.
+    """First-match-wins grok rule list (src/stdlib/parse_groks.rs) over
+    the string column named ``src``, as SQL text: two ``selectExpr``
+    projections per pattern, each a Generate barrier
+    (``explode(array(...))``, see ``materialize``).
 
-    Adds column ``outs[i]``: pattern i's capture struct, non-NULL only
-    on rows where pattern i is the FIRST to match. Pattern i's input
-    is NULL on rows an earlier pattern matched, so its regex
-    short-circuits there: regex work per row is 1 + sum(miss_rates),
-    and at most one chain column is non-NULL per row."""
+    - The first binds the marked line: ``regexp_replace`` of the
+      GATED source (``CASE WHEN <earlier outs> IS NULL THEN src END``)
+      by the one-pass pattern. Pattern i's input is NULL on rows an
+      earlier pattern matched, so its regex short-circuits there:
+      regex work per row is 1 + sum(miss_rates).
+    - The second binds column ``outs[i]``: pattern i's captures as an
+      array with one string per field (read them with
+      ``chain_fields``), non-NULL only on rows where pattern i is the
+      FIRST to match. A MARK-led line on a row whose source starts
+      with MARK or holds SEP is ambiguous and takes the per-field
+      native branch (``RLIKE`` + ``regexp_extract``); no other row
+      reaches it, so a row with neither byte runs each tried regex
+      exactly once.
+
+    Regexes reach the SQL text only through ``sources._sql_literal``,
+    so the session's literal-escaping setting is never touched and the
+    plan is built in a handful of py4j calls instead of one per Column
+    constructor."""
+    s = _q(src)
     for i, (out, c) in enumerate(zip(outs, compiled)):
-        gate = col if i == 0 else F.when(~chain_hit(outs[:i]), col)
-        df = onepass_stage(df, out, gate, c, anchored=anchored)
+        pat, repl = _onepass_pattern(c, anchored)
+        earlier = " AND ".join(f"{_q(o)} IS NULL" for o in outs[:i])
+        gated = f"CASE WHEN {earlier} THEN {s} END" if i else s
+        m = _q(out + "_marked")
+        df = df.selectExpr(
+            "*",
+            f"explode(array(regexp_replace({gated}, {_sql_literal(pat)}, "
+            f"{_sql_literal(repl)}))) AS {m}",
+        )
+        nat = _sql_literal(_native(c, anchored).regex)
+        extract = ", ".join(f"regexp_extract({s}, {nat}, {k})" for k in range(1, len(c.fields) + 1))
+        mark, sep = _sql_literal(_MARK), _sql_literal(_SEP)
+        parts = (
+            f"CASE WHEN startswith({m}, {mark}) THEN "
+            f"CASE WHEN startswith({s}, {mark}) OR contains({s}, {sep}) "
+            f"THEN CASE WHEN {s} RLIKE {nat} THEN array({extract}) END "
+            f"ELSE split(substr({m}, 2), {sep}, -1) END END"
+        )
+        df = df.selectExpr(f"* EXCEPT ({m})", f"explode(array({parts})) AS {_q(out)}")
     return df
 
 
-def chain_fields(outs: list[str], compiled: list[CompiledGrok]) -> dict[str, Column]:
-    """Field name -> its value from whichever chain column matched,
-    over the UNION of the patterns' fields in first-seen order. A
-    field is NULL on rows whose matching pattern does not define it
-    (at most one chain column is non-NULL per row, so a coalesce over
-    the defining patterns is the first-match value)."""
-    vals: dict[str, list[Column]] = {}
+def chain_fields(outs: list[str], compiled: list[CompiledGrok]) -> dict[str, str]:
+    """Field name -> SQL for its value from whichever chain column
+    matched, over the UNION of the patterns' fields in first-seen
+    order. A field is NULL on rows whose matching pattern does not
+    define it (at most one chain column is non-NULL per row, so a
+    coalesce over the defining patterns is the first-match value)."""
+    vals: dict[str, list[str]] = {}
     for out, c in zip(outs, compiled):
         for name in c.fields:
-            vals.setdefault(name, []).append(F.col(out).getField(name))
-    return {k: v[0] if len(v) == 1 else F.coalesce(*v) for k, v in vals.items()}
+            vals.setdefault(name, []).append(f"element_at({_q(out)}, {c.group_index(name)})")
+    return {k: v[0] if len(v) == 1 else f"coalesce({', '.join(v)})" for k, v in vals.items()}
 
 
 def parse_groks_stage(
     df,
     out: str,
-    col: Column,
+    src: str,
     patterns: list[str],
     aliases: dict[str, str] | None = None,
     alias_sources: list[str] | None = None,
     anchored: bool = True,
 ):
-    """src/stdlib/parse_groks.rs — the rule-LIST API: try each grok
-    pattern in order, first match wins; ``aliases`` and
-    ``alias_sources`` extend the pattern vocabulary (``compile_groks``).
+    """src/stdlib/parse_groks.rs — the rule-LIST API over the string
+    column named ``src``: try each grok pattern in order, first match
+    wins; ``aliases`` and ``alias_sources`` extend the pattern
+    vocabulary (``compile_groks``).
 
     Output: struct over the UNION of all patterns' fields; fields the
     matching pattern doesn't define are NULL; no pattern matching at
     all -> NULL struct (the error branch)."""
     compiled = compile_groks(patterns, aliases, alias_sources)
     outs = [f"_gk{i}" for i in range(len(compiled))]
-    df = grok_chain(df, outs, col, compiled, anchored=anchored)
-    fields = chain_fields(outs, compiled)
-    struct = F.when(chain_hit(outs), F.struct(*[v.alias(k) for k, v in fields.items()]))
-    return df.withColumn(out, struct).drop(*outs)
+    df = grok_chain(df, outs, src, compiled, anchored=anchored)
+    fields = ", ".join(f"{_sql_literal(k)}, {v}" for k, v in chain_fields(outs, compiled).items())
+    return df.selectExpr(
+        f"* EXCEPT ({', '.join(map(_q, outs))})",
+        f"CASE WHEN {chain_hit(outs)} THEN named_struct({fields}) END AS {_q(out)}",
+    )
 
 
 # ---------------------------------------------------------------------

@@ -62,16 +62,13 @@ SYSLOG_5424 = compile_grok(
 )
 
 
-def _syslog_shape(s: Column) -> Column:
-    """parse_syslog output struct from one syslog capture struct, with
-    facility/severity derived from PRI (pri = facility*8 + severity)."""
-    pri = s.getField("pri").try_cast("long")
+def _syslog_shape(get) -> Column:
+    """parse_syslog output struct from one syslog capture (``get(name)``
+    is the Column of capture ``name``), with facility/severity derived
+    from PRI (pri = facility*8 + severity)."""
+    pri = get("pri").try_cast("long")
     return F.struct(
-        s.getField("timestamp").alias("timestamp"),
-        s.getField("hostname").alias("hostname"),
-        s.getField("appname").alias("appname"),
-        s.getField("procid").alias("procid"),
-        s.getField("message").alias("message"),
+        *[get(n).alias(n) for n in ("timestamp", "hostname", "appname", "procid", "message")],
         (pri / 8).cast("long").alias("facility_code"),
         (pri % 8).alias("severity_code"),
     )
@@ -87,26 +84,30 @@ def parse_syslog(col: Column) -> Column:
     1 + miss_rate, like the weblog parse stage."""
     s5 = parse_regex_onepass(col, SYSLOG_5424, anchored=True)
     s3 = parse_regex_onepass(col, SYSLOG_3164, anchored=True)
-    return F.when(s5.isNotNull(), _syslog_shape(s5)).otherwise(
-        F.when(s3.isNotNull(), _syslog_shape(s3))
+    return F.when(s5.isNotNull(), _syslog_shape(s5.getField)).otherwise(
+        F.when(s3.isNotNull(), _syslog_shape(s3.getField))
     )
 
 
-def parse_syslog_stage(df, col: Column, out: str = "syslog"):
-    """DataFrame-level parse_syslog for wide projections.
+def parse_syslog_stage(df, src: str, out: str = "syslog"):
+    """DataFrame-level parse_syslog of the string column named ``src``,
+    for wide projections.
 
     The Column form above embeds BOTH regexes inside one expression;
     projecting k fields from it re-evaluates them k times (Catalyst
     inlines struct extraction — see functions/parse.materialize). This
     variant is a ``grok_chain``: each regex runs through a Generate
     barrier, so the total regex work is 1 + 5424_miss_rate passes per
-    row, then the result is shaped from cheap attribute reads. Same
+    row, then the result is shaped from cheap array reads. Same
     output schema as ``parse_syslog``.
     """
-    step = grok_chain(df, ["_s5", "_s3"], col, [SYSLOG_5424, SYSLOG_3164])
-    s5, s3 = F.col("_s5"), F.col("_s3")
-    parsed = F.when(s5.isNotNull(), _syslog_shape(s5)).otherwise(
-        F.when(s3.isNotNull(), _syslog_shape(s3))
+    step = grok_chain(df, ["_s5", "_s3"], src, [SYSLOG_5424, SYSLOG_3164])
+
+    def shape(out: str, c):
+        return _syslog_shape(lambda n: F.element_at(out, c.group_index(n)))
+
+    parsed = F.when(F.col("_s5").isNotNull(), shape("_s5", SYSLOG_5424)).otherwise(
+        F.when(F.col("_s3").isNotNull(), shape("_s3", SYSLOG_3164))
     )
     return step.withColumn(out, parsed).drop("_s5", "_s3")
 

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vrl_spark.functions.parse import chain_fields, chain_hit, compile_groks, grok_chain
+from vrl_spark.sources import _sql_literal
 
 
 @dataclass
@@ -91,10 +92,10 @@ class Pipeline:
         def fn(df: DataFrame) -> DataFrame:
             # Generate-barrier extraction: one regex pass per row per
             # pattern tried, regardless of projected field count.
-            df = grok_chain(df, outs, F.col(src), compiled, anchored=anchored)
+            df = grok_chain(df, outs, src, compiled, anchored=anchored)
             fields = chain_fields(outs, compiled)
-            out = df.select("*", *[v.alias(prefix + k) for k, v in fields.items()])
-            return _merge_error(out, ~chain_hit(outs), error).drop(*outs)
+            out = df.selectExpr("*", *[f"{v} AS `{prefix}{k}`" for k, v in fields.items()])
+            return _merge_error(out, F.expr(f"NOT {chain_hit(outs)}"), error).drop(*outs)
 
         return self._add(name, fn, fallible=True)
 
@@ -206,6 +207,13 @@ def route_column(routes: list[tuple[str, Column]], otherwise: str) -> Column:
     for name, pred in routes:
         route = route.when(pred, name)
     return route.otherwise(otherwise)
+
+
+def route_sql(routes: list[tuple[str, str]], otherwise: str) -> str:
+    """``route_column`` as SQL text, over SQL predicates: one CASE
+    expression, built without a py4j call."""
+    whens = "".join(f" WHEN ({pred}) THEN {_sql_literal(name)}" for name, pred in routes)
+    return f"CASE WHEN error IS NOT NULL THEN 'dead_letter'{whens} ELSE {_sql_literal(otherwise)} END"
 
 
 def _merge_error(df: DataFrame, failed: Column, message: str) -> DataFrame:

@@ -508,7 +508,7 @@ def vrl_syslog_suite(spark, sf_dir):
     # Generate-barrier parse: each syslog regex runs at most once per
     # row no matter how many fields are projected below.
     step = presets.parse_syslog_stage(
-        ev.select(e.alias("event_id"), line.alias("_line")), F.col("_line"), out="_p"
+        ev.select(e.alias("event_id"), line.alias("_line")), "_line", out="_p"
     )
     p = F.col("_p")
     return step.select(

@@ -3,22 +3,29 @@
 This is the north-star pipeline (BASELINE.json.north_rule) built
 Spark-first:
 
-- parse   : grok (compiled once, driver-side -> JVM regexp_extract,
-            zero Python) with a logfmt fallback — first-match-wins,
-            VRL if/else chain semantics; un-parseable rows carry an
-            ``error`` column instead of throwing (fallibility-as-data,
-            reference src/compiler/expression/assignment.rs:531-548).
+- parse   : grok (compiled once, driver-side -> one JVM
+            ``regexp_replace`` per pattern tried, zero Python) with a
+            logfmt fallback — first-match-wins, VRL if/else chain
+            semantics; un-parseable rows carry an ``error`` column
+            instead of throwing (fallibility-as-data, reference
+            src/compiler/expression/assignment.rs:531-548).
 - enrich  : broadcast hash join against a small lang lookup table
             (VRL enrichment-table semantics: first-match key equality,
             miss -> nulls). The dim is an inline literal relation
             (``LocalTableScan``, built in the JVM): a Python-list
             ``createDataFrame`` dim would run a Python-worker job on
             every broadcast build.
-- route   : one ``F.when`` cascade -> ``route`` column (VRL route/abort
+- route   : one CASE cascade -> ``route`` column (VRL route/abort
             as filter + multi-sink: reference src/test/mod.rs:268-277
             abort semantics), then a SINGLE pass partitioned write.
 - aggregate: tumbling 1h windows on warc_ts per route
             (F.window/date_trunc — map-side partial agg native).
+
+Every stage is written as SQL text (``selectExpr`` / ``F.expr``):
+building the whole chain is a few hundred py4j calls and a few
+analysed projections, where one ``Column`` object per function call
+cost thousands (the build is paid on every call, before any row is
+read).
 
 Scale notes (100 TB design point):
 - The parse stage is pure column expressions -> whole-stage codegen;
@@ -38,7 +45,7 @@ from pyspark.sql import functions as F
 
 from vrl_spark.functions.parse import grok_chain
 from vrl_spark.grok import compile_grok
-from vrl_spark.pipeline import route_column
+from vrl_spark.pipeline import route_sql
 from vrl_spark.sources.pages import derive_pages, derive_pages_sql
 from vrl_spark.sources import literal_table, read_table
 
@@ -91,45 +98,39 @@ def load_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 def parse_stage(pages: DataFrame) -> DataFrame:
     """Grok-parse ``text`` with logfmt fallback; errors become data.
 
-    One-pass lowering: ONE anchored regex execution per row for the
-    primary pattern; only rows it rejects pay a second pass for the
-    fallback (regex work per row is 1 + miss_rate instead of
-    fields + 2 — the parse stage is the pipeline's hot loop)."""
-    # grok_chain = one Generate-barrier extraction per pattern: each
-    # regex runs ONCE per row no matter how many fields are projected
-    # below. The fallback's input is NULL on primary-hit rows, so its
-    # regex short-circuits: total regex work = 1 + miss_rate per row.
-    df = grok_chain(pages, ["_ap", "_lf"], F.col("text"), [ACCESS, LOGFMT])
-    ap, lf = F.col("_ap"), F.col("_lf")
-    matched, logfmt_hit = ap.isNotNull(), lf.isNotNull()
-    df = df.select(
-        "*",
-        matched.alias("_grok_ok"),
-        logfmt_hit.alias("_logfmt_ok"),
-        *[ap.getField(n).alias(n) for n in ACCESS.fields],
-        *[lf.getField(n).alias(n) for n in ("level", "log_bytes", "log_ts")],
+    ``grok_chain`` runs ACCESS, then LOGFMT on the rows ACCESS
+    rejects, each through two SQL-text Generate barriers: ONE anchored
+    regex execution per row for the primary pattern, a second only for
+    its misses (regex work per row is 1 + miss_rate instead of
+    fields + 2 — the parse stage is the pipeline's hot loop). The
+    fields, coercions and error column below are one more SQL-text
+    projection that reads the capture arrays by index."""
+    df = grok_chain(pages, ["_ap", "_lf"], "text", [ACCESS, LOGFMT])
+    ap = {n: f"element_at(_ap, {ACCESS.group_index(n)})" for n in ACCESS.fields}
+    lf = {n: f"element_at(_lf, {LOGFMT.group_index(n)})" for n in LOGFMT.fields}
+    return df.selectExpr(
+        "* EXCEPT (_ap, _lf)",
+        "_ap IS NOT NULL AS _grok_ok",
+        "_lf IS NOT NULL AS _logfmt_ok",
+        *[f"{ap[n]} AS {n}" for n in ACCESS.fields],
+        *[f"{lf[n]} AS {n}" for n in ("level", "log_bytes", "log_ts")],
+        # coercions with VRL semantics: status/bytes strings -> long
+        # (captures are all strings pre-coercion, parse_regex.rs:83-86)
+        f"try_cast({ap['status']} AS BIGINT) AS status_int",
+        f"coalesce(try_cast({ap['bytes']} AS BIGINT), "
+        f"try_cast({lf['log_bytes']} AS BIGINT)) AS bytes_int",
+        "CASE WHEN _ap IS NULL AND _lf IS NULL "
+        "THEN 'unable to parse input with grok pattern' END AS error",
+        "substring_index(substring_index(url, '/', 3), '/', -1) AS url_host",
     )
-    # coercions with VRL semantics: status/bytes strings -> long.
-    # (captures are all strings pre-coercion, parse_regex.rs:83-86)
-    return df.select(
-        "*",
-        F.col("status").try_cast("long").alias("status_int"),
-        F.coalesce(
-            F.col("bytes").try_cast("long"), F.col("log_bytes").try_cast("long")
-        ).alias("bytes_int"),
-        F.when(~matched & ~logfmt_hit, F.lit("unable to parse input with grok pattern"))
-        .alias("error"),
-        F.substring_index(F.substring_index(F.col("url"), "/", 3), "/", -1).alias(
-            "url_host"
-        ),
-    ).drop("_ap", "_lf")
 
 
 def enrich_stage(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Broadcast-join the lang dim. Nullish lang ('', '-', all
     spaces, null) is normalized to 'und' first (is_nullish semantics,
     reference src/stdlib/is_nullish.rs); an unknown lang keeps its row
-    with NULL name and family.
+    with NULL name and family. The normalization, join key and column
+    drop are SQL text.
 
     The dim is an inline literal relation over ``LANG_ROWS``, so the
     broadcast is built from a ``LocalTableScan`` inside the JVM. A
@@ -137,43 +138,44 @@ def enrich_stage(spark: SparkSession, df: DataFrame) -> DataFrame:
     broadcast build (once per flagship call) ran a Python-worker job,
     most of the enrich stage's CPU."""
     dim = literal_table(spark, LANG_ROWS, ["lang_key", "lang_name", "lang_family"])
-    norm = F.when(
-        F.col("lang").isNull() | F.trim(F.col("lang")).isin("", "-"), F.lit("und")
-    ).otherwise(F.col("lang"))
     return (
-        df.withColumn("lang_norm", norm)
-        .join(F.broadcast(dim), F.col("lang_norm") == F.col("lang_key"), "left")
-        .drop("lang_key")
+        df.selectExpr(
+            "*",
+            "CASE WHEN lang IS NULL OR trim(lang) IN ('', '-') THEN 'und' "
+            "ELSE lang END AS lang_norm",
+        )
+        .join(dim.hint("broadcast"), F.expr("lang_norm = lang_key"), "left")
+        .selectExpr("* EXCEPT (lang_key)")
     )
+
+
+# (route, SQL predicate), first match wins after dead_letter
+ROUTES = [
+    ("server_error", "_grok_ok AND status_int >= 500"),
+    ("client_error", "_grok_ok AND status_int >= 400"),
+    ("writes", "_grok_ok AND method IN ('POST', 'PUT', 'DELETE')"),
+    ("ok", "_grok_ok"),
+    ("server_error", "level IN ('error', 'fatal')"),
+]
 
 
 def route_stage(df: DataFrame) -> DataFrame:
-    """First-match-wins when-cascade (VRL if/else chain -> Return
-    semantics, reference src/compiler/expression/return.rs:42-48)."""
-    ok, status = F.col("_grok_ok"), F.col("status_int")
-    routes = [
-        ("server_error", ok & (status >= 500)),
-        ("client_error", ok & (status >= 400)),
-        ("writes", ok & F.col("method").isin("POST", "PUT", "DELETE")),
-        ("ok", ok),
-        ("server_error", F.col("level").isin("error", "fatal")),
-    ]
-    return df.withColumn("route", route_column(routes, "app_logs"))
+    """First-match-wins CASE cascade as SQL text (VRL if/else chain ->
+    Return semantics, reference src/compiler/expression/return.rs:42-48)."""
+    return df.selectExpr("*", f"{route_sql(ROUTES, 'app_logs')} AS route")
 
 
 def aggregate_stage(df: DataFrame) -> DataFrame:
-    """Per-route tumbling 1h windows keyed by warc_ts."""
-    return (
-        df.groupBy(
-            F.col("route"), F.date_trunc("hour", F.col("warc_ts")).alias("hour")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("page_count"),
-            F.sum(F.coalesce(F.col("bytes_int"), F.lit(0))).alias("total_bytes"),
-            F.countDistinct(F.col("url_host")).alias("distinct_hosts"),
-            F.countDistinct(F.col("lang_family")).alias("distinct_families"),
-        )
-    )
+    """Per-route tumbling 1h windows keyed by warc_ts; keys and
+    aggregates are SQL text."""
+    keys = ["route", "date_trunc('hour', warc_ts) AS hour"]
+    aggs = [
+        "count(1) AS page_count",
+        "sum(coalesce(bytes_int, 0)) AS total_bytes",
+        "count(DISTINCT url_host) AS distinct_hosts",
+        "count(DISTINCT lang_family) AS distinct_families",
+    ]
+    return df.groupBy(*map(F.expr, keys)).agg(*map(F.expr, aggs))
 
 
 def routed_stage(spark: SparkSession, pages: DataFrame) -> DataFrame:
