@@ -409,3 +409,22 @@ def test_rvid_roundtrip_and_guards():
     assert _decode_rvid(b"\x00" * 40) is None   # wrong magic
     with pytest.raises(ValueError):
         encode_rvid(np.zeros((1, 2, 2, 4), dtype=np.uint8))  # RGBA
+
+
+def test_grok_nested_source_and_quoted_prefix(spark):
+    """A dotted ``src`` reads a nested field, as ``F.col`` does; the
+    output names take any prefix, a backtick included."""
+    line = '10.0.0.1 - u1 [10/Oct/2020:13:55:36 +0000] "GET /a HTTP/1.1" 200 123'
+    df = spark.createDataFrame([((line,),), (("nope",),)], "rec struct<line: string>")
+    out = (
+        Pipeline("nested", on_error="keep")
+        .parse_grok("rec.line", ACCESS, prefix="p`")
+        .apply(df)
+    )
+    assert out.columns == ["rec", "error"] + [f"p`{f}" for f in
+                                              ("ip", "user", "ts", "method", "path", "ver",
+                                               "status", "bytes")]
+    rows = out.collect()
+    assert rows[0]["p`status"] == "200" and rows[0]["error"] is None
+    assert rows[1]["p`status"] is None
+    assert rows[1]["error"] == "unable to parse input with grok pattern"

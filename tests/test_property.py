@@ -341,3 +341,19 @@ def test_sql_literal_round_trips_every_engine_pattern(spark):
         for t in (*P._onepass_pattern(c, anchored), P._native(c, anchored).regex)
     ]
     assert _sql_round_trip(spark, texts) == texts
+
+
+def test_literal_sql_refuses_verbatim_escape_session(spark):
+    """A session that keeps backslashes in SQL literals verbatim would
+    misread every escaped regex, so the chain refuses to build there."""
+    from vrl_spark.plans.weblog import ACCESS
+
+    df = spark.createDataFrame([("x",)], ["line"])
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            P.grok_chain(df, ["_g"], "line", [ACCESS])
+    finally:
+        spark.conf.unset(key)
+    assert P.grok_chain(df, ["_g"], "line", [ACCESS]).columns == ["line", "_g"]

@@ -192,9 +192,9 @@ def test_onepass_parse_runs_regex_once(spark, sf_dir):
 
 # py4j commands that building the flagship aggregate over a pages
 # frame sends, leaving out py4j's releases of dropped JVM objects
-# (their timing depends on earlier work): 118 with SQL-text stages,
+# (their timing depends on earlier work): 117 with SQL-text stages,
 # ~2,160 when every stage was a chain of Column constructors.
-_FLAGSHIP_BUILD_COMMANDS = 118
+_FLAGSHIP_BUILD_COMMANDS = 117
 
 
 def test_flagship_build_cost_and_plan_shape(spark, sf_dir):

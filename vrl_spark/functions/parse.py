@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from vrl_spark.grok import CompiledGrok, compile_grok
-from vrl_spark.sources import _sql_literal
+from vrl_spark.sources import _require_literal_escapes, _sql_literal
 
 # ---------------------------------------------------------------------
 # parse_regex / parse_grok
@@ -203,6 +203,12 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _qpath(name: str) -> str:
+    """``name`` as a SQL column reference, quoted part by part: a
+    dotted name reads a nested field, as ``F.col`` does."""
+    return ".".join(map(_q, name.split(".")))
+
+
 def chain_hit(outs: list[str]) -> str:
     """SQL: true on rows where any of the chain columns ``outs`` matched."""
     return "(" + " OR ".join(f"{_q(o)} IS NOT NULL" for o in outs) + ")"
@@ -216,7 +222,8 @@ def grok_chain(
     anchored: bool = True,
 ):
     """First-match-wins grok rule list (src/stdlib/parse_groks.rs) over
-    the string column named ``src``, as SQL text: two ``selectExpr``
+    the string column named ``src`` (a dotted name reads a nested
+    field), as SQL text: two ``selectExpr``
     projections per pattern, each a Generate barrier
     (``explode(array(...))``, see ``materialize``).
 
@@ -234,11 +241,12 @@ def grok_chain(
       reaches it, so a row with neither byte runs each tried regex
       exactly once.
 
-    Regexes reach the SQL text only through ``sources._sql_literal``,
-    so the session's literal-escaping setting is never touched and the
+    Regexes reach the SQL text only through ``sources._sql_literal``;
+    a session that would read its escapes verbatim raises here. The
     plan is built in a handful of py4j calls instead of one per Column
     constructor."""
-    s = _q(src)
+    _require_literal_escapes(df.sparkSession)
+    s = _qpath(src)
     for i, (out, c) in enumerate(zip(outs, compiled)):
         pat, repl = _onepass_pattern(c, anchored)
         earlier = " AND ".join(f"{_q(o)} IS NULL" for o in outs[:i])

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from vrl_spark.functions.parse import grok_chain
 from vrl_spark.grok import compile_grok
-from vrl_spark.pipeline import route_sql
+from vrl_spark.pipeline import route_column
 from vrl_spark.sources.pages import derive_pages, derive_pages_sql
 from vrl_spark.sources import literal_table, read_table
 
@@ -160,9 +160,10 @@ ROUTES = [
 
 
 def route_stage(df: DataFrame) -> DataFrame:
-    """First-match-wins CASE cascade as SQL text (VRL if/else chain ->
-    Return semantics, reference src/compiler/expression/return.rs:42-48)."""
-    return df.selectExpr("*", f"{route_sql(ROUTES, 'app_logs')} AS route")
+    """First-match-wins CASE cascade over the SQL predicates in
+    ``ROUTES`` (VRL if/else chain -> Return semantics, reference
+    src/compiler/expression/return.rs:42-48)."""
+    return df.withColumn("route", route_column(ROUTES, "app_logs"))
 
 
 def aggregate_stage(df: DataFrame) -> DataFrame:

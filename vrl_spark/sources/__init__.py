@@ -52,11 +52,26 @@ def read_table(
 
 
 def _sql_literal(v) -> str:
+    """``v`` as a Spark SQL literal. A string is backslash-escaped, so
+    it reads back exactly only while the session parses escapes (see
+    ``_require_literal_escapes``)."""
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, int) and not isinstance(v, bool):
         return f"{v}L"
     raise TypeError(f"literal_table supports str and int values, got {v!r}")
+
+
+def _require_literal_escapes(spark: SparkSession) -> None:
+    """Raise unless ``spark`` reads backslash escapes in SQL string
+    literals, as ``_sql_literal`` writes them. With
+    ``spark.sql.parser.escapedStringLiterals`` on, Spark keeps them
+    verbatim and every ``\\d`` in a regex would silently change."""
+    if spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").lower() == "true":
+        raise ValueError(
+            "spark.sql.parser.escapedStringLiterals=true: SQL literals built "
+            "by vrl_spark would be misread; unset it for this session"
+        )
 
 
 def literal_table(
@@ -71,6 +86,7 @@ def literal_table(
     it runs a job on Python workers. Types follow
     ``createDataFrame``'s inference: ``str`` -> string, ``int`` ->
     bigint."""
+    _require_literal_escapes(spark)
     values = ", ".join(
         "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
     )
