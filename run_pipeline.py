@@ -17,12 +17,18 @@ through the checkpoint manager, one pass per phase:
   the same directory, and a static overwrite would delete it along
   with every committed hour;
 - ONE read-back aggregation over the landed hours commits a manifest
-  row (rows, payload bytes, content fingerprint, and ``wall_sec``, the
-  wall time of the pass that committed the row) per hour, each after
-  its data has landed; ``--resume`` re-runs only uncommitted hours and
-  ``--verify`` re-certifies every committed hour in one aggregation;
+  row (rows, payload bytes, content fingerprint, ``wall_sec``, the
+  wall time of the pass that committed the row, and the written
+  frame's schema) per hour, each after its data has landed;
+- the manifest is read on the driver, with no Spark job: ``--resume``
+  re-runs only the hours it does not hold, and ``--verify``
+  re-certifies every committed hour in one aggregation, reading the
+  sink with the schema its rows recorded;
 - the aggregates are computed from the landed sink, read back for this
-  input's hours, and land beside it.
+  input's hours with the routed frame's schema, and land beside it.
+
+Spark jobs run only over data: no read of the sink or the aggregates
+infers a schema from the files.
 
 Sink layout: ``part`` comes from the directory name (not a column in
 the files) and the files carry ``url_host`` for the aggregates. An
@@ -109,12 +115,13 @@ def main() -> int:
     )
 
     # per-sink aggregates over what landed (idempotent overwrite)
-    agg = weblog.aggregate_stage(read_output(spark, run.out_dir, hours))
-    agg.write.mode("overwrite").parquet(os.path.join(args.output, "aggregates"))
+    agg = weblog.aggregate_stage(
+        read_output(spark, run.out_dir, hours, schema=routed.schema)
+    )
+    agg_dir = os.path.join(args.output, "aggregates")
+    agg.write.mode("overwrite").parquet(agg_dir)
 
-    summary["aggregate_rows"] = spark.read.parquet(
-        os.path.join(args.output, "aggregates")
-    ).count()
+    summary["aggregate_rows"] = spark.read.schema(agg.schema).parquet(agg_dir).count()
     print(json.dumps(summary))
     return 0 if summary["partitions_ran"] + summary["partitions_skipped"] == summary["partitions_total"] else 1
 

@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from vrl_spark.operators import checkpoint
 from vrl_spark.operators.checkpoint import CheckpointedRun, read_output
 
 
@@ -49,13 +53,13 @@ def test_crash_resume_reprocesses_only_missing(spark, tmp_path):
 def test_empty_manifest_dir_resumes_cleanly(spark, tmp_path):
     """Crash between makedirs and the first committed rename: manifest
     dir exists but holds zero *.json files (possibly a torn .tmp) —
-    committed_keys must return empty, not raise AnalysisException."""
+    committed_keys must return empty, not raise."""
     df = make_df(spark)
     run = CheckpointedRun(str(tmp_path / "out"))
     os.makedirs(run.manifest_dir, exist_ok=True)
     with open(os.path.join(run.manifest_dir, ".0.json.tmp"), "w") as f:
         f.write('{"part_key": "0"')  # torn write, not committed
-    assert run.committed_keys(spark) == set()
+    assert run.committed_keys() == set()
     summary = run.run(spark, df, [0, 1, 2, 3])
     assert summary["partitions_ran"] == 4
     assert read_output(spark, run.out_dir).count() == 100
@@ -66,7 +70,7 @@ def test_manifest_metrics(spark, tmp_path):
     run = CheckpointedRun(str(tmp_path / "out"))
     [m] = run.run_partition(spark, df, [0])
     assert m["rows"] == 25
-    committed = run.committed_keys(spark)
+    committed = run.committed_keys()
     assert committed == {"0"}
 
 
@@ -182,7 +186,7 @@ def test_one_pass_manifest_matches_per_key_lineage(spark, tmp_path, monkeypatch)
     lineage = dict(payload_col="txt", fp_cols=["id", "txt"])
     committed = {m["part_key"]: m for m in run.run_partition(spark, df, keys, **lineage)}
     assert sorted(os.listdir(run.manifest_dir)) == [f"{k}.json" for k in keys]
-    assert run.committed_keys(spark) == set(keys)
+    assert run.committed_keys() == set(keys)
     out = read_output(spark, run.out_dir)
     assert sorted(r["part"] for r in out.select("part").distinct().collect()) == keys[:3]
     for k in keys[:3]:
@@ -231,3 +235,118 @@ def test_resume_overwrites_only_pending_partitions(spark, tmp_path):
     assert {f: after[f] for f in manifest} == manifest
     assert spark.conf.get(conf_key) == conf_before
     assert read_output(spark, run.out_dir).count() == 100
+
+
+def _rewrite(path, edit):
+    with open(path) as f:
+        row = json.load(f)
+    edit(row)
+    with open(path, "w") as f:
+        json.dump(row, f)
+
+
+def test_manifest_read_on_driver(spark, tmp_path, jobs_of):
+    """committed_keys/pending read the manifest files on the driver: no
+    Spark job, and a torn ``.<key>.json.tmp`` beside committed rows is
+    not a commit."""
+    df = make_df(spark)
+    run = CheckpointedRun(str(tmp_path / "out"))
+    run.run_partition(spark, df, [0, 1])
+    with open(os.path.join(run.manifest_dir, ".2.json.tmp"), "w") as f:
+        f.write('{"part_key": "2"')
+    assert jobs_of(run.committed_keys) == ({"0", "1"}, 0)
+    assert jobs_of(lambda: run.pending([0, 1, 2, 3])) == ([2, 3], 0)
+
+
+@pytest.mark.parametrize("text, why", [
+    ('{"part_key": "2", "rows": 25', "is not JSON"),
+    ('{"rows": 25}', "has no part_key"),
+    ('["2"]', "has no part_key"),
+])
+def test_corrupt_manifest_row_raises_and_names_the_file(spark, tmp_path, text, why):
+    """A committed file that is not a manifest row is an error, not a
+    pending hour (read as a NULL key it would silently re-run)."""
+    run = CheckpointedRun(str(tmp_path / "out"))
+    run.run_partition(spark, make_df(spark), [0, 1])
+    with open(os.path.join(run.manifest_dir, "2.json"), "w") as f:
+        f.write(text)
+    for call in (run.committed_keys, lambda: run.pending([0, 1, 2, 3]),
+                 lambda: run.verify(spark)):
+        with pytest.raises(ValueError, match=rf"2\.json {why}"):
+            call()
+
+
+def test_read_output_with_recorded_schema(spark, tmp_path, jobs_of):
+    """The schema a manifest row records reads the sink back, with no
+    job before an action, to the same schema and row multiset as the
+    inferred read: zero-padded keys stay strings, timestamps stay
+    timestamps, and the partition column comes last as a string
+    whatever its type and place in the written frame."""
+    df = spark.range(60).select(
+        F.lpad((F.col("id") % 3 * 7).cast("string"), 3, "0").alias("part"),
+        F.col("id"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+    )
+    run = CheckpointedRun(str(tmp_path / "out"))
+    keys = ["000", "007", "014"]
+    rows = run.run_partition(spark, df, keys)
+    [recorded] = {m["schema"] for m in rows}
+    schema = StructType.fromJson(json.loads(recorded))
+    assert schema == df.schema
+    given, jobs = jobs_of(lambda: read_output(spark, run.out_dir, keys, schema=schema))
+    assert jobs == 0
+    inferred = read_output(spark, run.out_dir, keys)
+    assert given.schema == inferred.schema
+    assert [(f.name, f.dataType.simpleString()) for f in given.schema] == [
+        ("id", "bigint"), ("ts", "timestamp"), ("part", "string")]
+    assert sorted(given.collect()) == sorted(inferred.collect())
+    assert {r["part"] for r in given.select("part").distinct().collect()} == set(keys)
+    # an int partition column in the written frame reads back as string
+    ints = CheckpointedRun(str(tmp_path / "ints"))
+    ints.run_partition(spark, make_df(spark), [0, 1, 2, 3])
+    got = read_output(spark, ints.out_dir, schema=make_df(spark).schema)
+    assert got.schema == read_output(spark, ints.out_dir).schema
+    assert sorted(got.collect()) == sorted(read_output(spark, ints.out_dir).collect())
+
+
+def test_verify_infers_schema_without_an_agreed_one(spark, tmp_path, monkeypatch):
+    """verify reads the sink with the schema its rows agree on; a row
+    written without one (before rows carried it), or rows that
+    disagree, make it infer the schema, and the audit still passes."""
+    df = make_df(spark).withColumn("txt", F.concat(F.lit("row-"), F.col("id")))
+    lineage = dict(payload_col="txt", fp_cols=["id", "v", "txt"])
+    run = CheckpointedRun(str(tmp_path / "out"))
+    run.run(spark, df, [0, 1, 2], **lineage)
+    schemas = []
+    read = checkpoint.read_output
+
+    def spy(*args, **kwargs):
+        schemas.append(kwargs.get("schema"))
+        return read(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "read_output", spy)
+
+    def audit():
+        schemas.clear()
+        assert [r["ok"] for r in run.verify(spark, **lineage)] == [True] * 3
+        return schemas
+
+    assert audit() == [df.schema]
+    _rewrite(os.path.join(run.manifest_dir, "1.json"), lambda m: m.pop("schema"))
+    assert audit() == [None]
+    _rewrite(os.path.join(run.manifest_dir, "1.json"),
+             lambda m: m.update(schema=df.drop("txt").schema.json()))
+    assert audit() == [None]
+
+
+def test_verify_reports_misfiled_manifest_row(spark, tmp_path):
+    """A manifest file whose part_key is not its file name is reported
+    by verify (not a FileNotFoundError), and the other rows are still
+    audited."""
+    run = CheckpointedRun(str(tmp_path / "out"))
+    run.run_partition(spark, make_df(spark), [0, 1])
+    os.rename(os.path.join(run.manifest_dir, "1.json"),
+              os.path.join(run.manifest_dir, "5.json"))
+    res = run.verify(spark)
+    assert [(r["part_key"], r["ok"]) for r in res] == [("0", True), ("1", False)]
+    assert "5.json" in res[1]["error"]

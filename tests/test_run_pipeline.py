@@ -1,5 +1,6 @@
 """The production driver end to end: a crash between the data write and
-the manifest commit, then ``--resume`` and ``--verify``."""
+the manifest commit, then ``--resume`` and ``--verify``; and the Spark
+jobs each call launches."""
 
 from __future__ import annotations
 
@@ -13,6 +14,37 @@ from pyspark.sql import functions as F
 import run_pipeline
 from vrl_spark.operators.checkpoint import CheckpointedRun
 
+# Spark jobs of the fixture's fresh run and ``--resume`` (2 of 4 hours
+# pending) when the manifest was read by a Spark job and every read-back
+# inferred its schema from the files: the baseline the counts are held
+# below
+PARENT_JOBS = {"fresh": 15, "resume": 17}
+
+
+@pytest.fixture(scope="module")
+def pages(spark, sf_dir, tmp_path_factory):
+    """Four hours of the fixture's pages."""
+    from vrl_spark.plans import weblog
+
+    path = str(tmp_path_factory.mktemp("pages") / "pages")
+    weblog.load_pages(spark, sf_dir).where(F.hour("warc_ts") < 4).write.parquet(path)
+    return path
+
+
+@pytest.fixture
+def pipeline(sf_dir, pages, monkeypatch, capsys):
+    """``pipeline(out, *flags)`` -> (exit code, last JSON line printed)."""
+
+    def run(out: str, *flags: str):
+        monkeypatch.setattr(sys, "argv", [
+            "run_pipeline.py", "--input", sf_dir, "--pages", pages,
+            "--output", out, *flags,
+        ])
+        rc = run_pipeline.main()
+        return rc, json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    return run
+
 
 def _manifest(out: str) -> dict:
     mdir = os.path.join(out, "routed", "_manifest")
@@ -25,20 +57,9 @@ def _manifest(out: str) -> dict:
 
 
 def test_crash_before_manifest_then_resume_and_verify(
-    spark, sf_dir, tmp_path, monkeypatch, capsys
+    spark, pages, pipeline, tmp_path, monkeypatch, capsys
 ):
     from vrl_spark.plans import weblog
-
-    pages = str(tmp_path / "pages")
-    weblog.load_pages(spark, sf_dir).where(F.hour("warc_ts") < 4).write.parquet(pages)
-
-    def pipeline(out: str, *flags: str):
-        monkeypatch.setattr(sys, "argv", [
-            "run_pipeline.py", "--input", sf_dir, "--pages", pages,
-            "--output", out, *flags,
-        ])
-        rc = run_pipeline.main()
-        return rc, json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
     clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
     rc, summary = pipeline(clean)
@@ -96,3 +117,23 @@ def test_crash_before_manifest_then_resume_and_verify(
         weblog.routed_stage(spark, spark.read.parquet(pages)))
     want = sorted(map(tuple, direct.collect()))
     assert aggregates[clean] == aggregates[crashed] == want
+
+
+def test_driver_jobs_run_only_over_data(pipeline, jobs_of, tmp_path):
+    """The manifest is read on the driver and every read-back of the
+    sink or the aggregates uses a known schema, so ``--verify``
+    launches only its read-back aggregation's jobs and ``--resume`` at
+    least 4 fewer than before."""
+    out = str(tmp_path / "out")
+    (rc, summary), fresh = jobs_of(lambda: pipeline(out))
+    assert rc == 0 and summary["partitions_ran"] == 4
+    mdir = os.path.join(out, "routed", "_manifest")
+    for name in sorted(os.listdir(mdir))[:2]:
+        os.remove(os.path.join(mdir, name))
+    (rc, summary), resume = jobs_of(lambda: pipeline(out, "--resume"))
+    assert rc == 0 and summary["partitions_ran"] == 2
+    (rc, audit), verify = jobs_of(lambda: pipeline(out, "--verify"))
+    assert rc == 0 and audit["partitions_ok"] == 4
+    assert verify <= 2
+    assert resume <= PARENT_JOBS["resume"] - 4
+    assert fresh <= PARENT_JOBS["fresh"] - 3

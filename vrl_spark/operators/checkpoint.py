@@ -6,8 +6,11 @@ Model (Iceberg-shaped, parquet-backed here):
 - Work is chunked by a PARTITION KEY (for the weblog pipeline: the
   hour of warc_ts — the same key the sinks window on). A "run"
   processes a set of partitions.
-- Resume = anti-join pending partitions against committed manifest
-  keys: only unfinished partitions re-run.
+- The manifest is one ``<key>.json`` file per committed partition,
+  read on the driver with ``glob`` + ``json.load`` (no Spark job), the
+  way it is written. Resume = the driver-side set difference of the
+  wanted keys and the committed ones: only unfinished partitions
+  re-run.
 - All pending partitions land in ONE pass: the frame is filtered to
   the pending keys and written once with ``partitionBy(part)`` under
   ``out/part=<k>``. The write uses DYNAMIC partition overwrite, set
@@ -18,11 +21,13 @@ Model (Iceberg-shaped, parquet-backed here):
 - ONE read-back aggregation over the landed pending directories,
   grouped by ``part``, yields every MANIFEST row: partition key,
   row/byte counts, content fingerprint, and ``wall_sec``, the wall
-  time of the pass (write + read-back) that committed the row. Each
-  row commits by an atomic rename AFTER the data has landed — a
-  crashed run leaves data without a manifest row and the partition
-  simply re-runs (the dynamic overwrite makes that idempotent, the
-  analogue of Iceberg's overwrite-by-filter).
+  time of the pass (write + read-back) that committed the row, plus
+  ``schema``, the written frame's schema, so no read-back of the sink
+  infers it from the files (a job per read). Each row commits by an
+  atomic rename AFTER the data has landed — a crashed run leaves data
+  without a manifest row and the partition simply re-runs (the
+  dynamic overwrite makes that idempotent, the analogue of Iceberg's
+  overwrite-by-filter).
 - ``verify`` recomputes the same aggregation, in one pass, over the
   committed directories and diffs it against the manifest.
 
@@ -147,27 +152,34 @@ class CheckpointedRun:
     def manifest_dir(self) -> str:
         return os.path.join(self.out_dir, "_manifest")
 
-    def committed_keys(self, spark: SparkSession) -> set:
-        """Committed = has a ``<key>.json`` manifest row. The glob
-        filter keeps a torn ``.<key>.json.tmp`` from a crash between
-        write and rename out of the read (a tmp is NOT a commit)."""
-        if not os.path.isdir(self.manifest_dir):
-            return set()  # no manifest yet — first run
-        # a crash between makedirs and the first committed rename leaves
-        # the dir with zero *.json files; spark.read.json would raise
-        # "Unable to infer schema" — that state means "nothing committed"
-        if not glob.glob(os.path.join(self.manifest_dir, "*.json")):
-            return set()
-        rows = (
-            spark.read.option("pathGlobFilter", "*.json")
-            .json(self.manifest_dir)
-            .select("part_key")
-            .collect()
-        )
-        return {r["part_key"] for r in rows}
+    def _manifest(self) -> list[tuple[str, dict]]:
+        """Every committed manifest row as ``(key in its file name,
+        row)``, in file-name order, read on the driver the way
+        ``_commit`` writes them: no Spark job. The ``*.json`` glob keeps
+        a torn ``.<key>.json.tmp`` from a crash between write and
+        rename out of the read (a tmp is NOT a commit). A file that is
+        not a JSON object with a string ``part_key`` raises and names
+        the file: read as a NULL key it would silently re-run the
+        hour."""
+        rows = []
+        pattern = os.path.join(glob.escape(self.manifest_dir), "*.json")
+        for path in sorted(glob.glob(pattern)):
+            with open(path) as f:
+                try:
+                    row = json.load(f)
+                except ValueError as e:
+                    raise ValueError(f"manifest row {path} is not JSON: {e}") from e
+            if not isinstance(row, dict) or not isinstance(row.get("part_key"), str):
+                raise ValueError(f"manifest row {path} has no part_key")
+            rows.append((os.path.basename(path)[: -len(".json")], row))
+        return rows
 
-    def pending(self, all_keys: list, spark: SparkSession) -> list:
-        done = self.committed_keys(spark)
+    def committed_keys(self) -> set:
+        """Committed = has a ``<key>.json`` manifest row."""
+        return {row["part_key"] for _, row in self._manifest()}
+
+    def pending(self, all_keys: list) -> list:
+        done = self.committed_keys()
         return [k for k in all_keys if str(k) not in done]
 
     def run_partition(
@@ -186,12 +198,15 @@ class CheckpointedRun:
         order-independent content fingerprint. The manifest is
         computed from what landed on disk, not from what the plan
         intended — that is the point: the manifest certifies the
-        output. A key with no rows commits ``rows: 0``."""
+        output. A key with no rows commits ``rows: 0``. Each row also
+        records ``schema``, the written frame's schema, so the read-back
+        here and in ``verify`` needs no schema inference."""
         if not isinstance(keys, (list, tuple)):
             keys = [keys]
         if not keys:
             return []
         t0 = time.time()
+        schema = df.schema
         (
             df.where(F.col(self.partition_col).isin(list(keys)))
             .write.mode("overwrite")
@@ -200,7 +215,8 @@ class CheckpointedRun:
             .parquet(self.out_dir)
         )
         landed = self._landed_stats(
-            spark, [str(k) for k in keys], payload_col, fp_cols, fp_engine
+            spark, [str(k) for k in keys], schema, payload_col, fp_cols,
+            fp_engine,
         )
         wall_sec = round(time.time() - t0, 3)
         results = []
@@ -218,6 +234,7 @@ class CheckpointedRun:
                 metrics["bytes"] = stats["n_bytes"]
             if fp_cols:
                 metrics["fingerprint"] = stats["fingerprint"]
+            metrics["schema"] = schema.json()
             self._commit(metrics)
             results.append(metrics)
         return results
@@ -229,8 +246,8 @@ class CheckpointedRun:
         os.makedirs(self.manifest_dir, exist_ok=True)
         key = metrics["part_key"]
         path = os.path.join(self.manifest_dir, f"{key}.json")
-        # dot-prefixed tmp: Spark's file index ignores hidden files, so
-        # a crash between write and rename can never read as committed
+        # dot-prefixed tmp, not ending in .json: the manifest glob skips
+        # it, so a crash between write and rename never reads as committed
         tmp = os.path.join(self.manifest_dir, f".{key}.json.tmp")
         with open(tmp, "w") as f:
             json.dump(metrics, f)
@@ -240,17 +257,19 @@ class CheckpointedRun:
         return os.path.join(self.out_dir, f"{self.partition_col}={key}")
 
     def _landed_stats(
-        self, spark: SparkSession, keys: list[str],
+        self, spark: SparkSession, keys: list[str], schema: StructType | None,
         payload_col: str | None, fp_cols: list[str] | None, fp_engine: str,
     ) -> dict[str, dict]:
         """The manifest metrics of ``keys`` as they exist on disk NOW,
-        from one aggregation grouped by the partition column. Keys
-        whose directory is missing or holds no rows are absent."""
+        from one aggregation grouped by the partition column, read with
+        ``schema`` (inferred if None). Keys whose directory is missing
+        or holds no rows are absent."""
         present = [k for k in keys if os.path.isdir(self._data_dir(k))]
         if not present:
             return {}
         rows = (
-            read_output(spark, self.out_dir, present, self.partition_col)
+            read_output(spark, self.out_dir, present, self.partition_col,
+                        schema=schema)
             .groupBy(self.partition_col)
             .agg(*_manifest_aggs(payload_col, fp_cols, fp_engine))
             .collect()
@@ -265,7 +284,7 @@ class CheckpointedRun:
     ) -> dict:
         """Process all pending partitions in one pass; returns the run
         summary."""
-        todo = self.pending(all_keys, spark)
+        todo = self.pending(all_keys)
         results = self.run_partition(
             spark, df, todo, payload_col, fp_cols, fp_engine
         )
@@ -289,19 +308,32 @@ class CheckpointedRun:
         partition with ``ok`` plus the expected/actual values — the
         audit a resumed run (or a suspicious operator) uses to prove
         untouched partitions still hold the exact row multiset their
-        manifest certified."""
-        committed = {}
-        for key in sorted(self.committed_keys(spark)):
-            with open(os.path.join(self.manifest_dir, f"{key}.json")) as f:
-                committed[key] = json.load(f)
+        manifest certified. A manifest file whose ``part_key`` is not
+        its file name is reported, not audited. The read uses the schema
+        the audited rows all recorded; rows written without one, or
+        that disagree, make the read infer it."""
+        manifest = self._manifest()
+        committed = {key: m for key, m in manifest if m["part_key"] == key}
+        schemas = {m.get("schema") for m in committed.values()}
+        schema = (
+            StructType.fromJson(json.loads(next(iter(schemas))))
+            if len(schemas) == 1 and None not in schemas else None
+        )
         landed = self._landed_stats(
-            spark, list(committed), payload_col, fp_cols, fp_engine
+            spark, list(committed), schema, payload_col, fp_cols, fp_engine
         )
         results = []
-        for key, manifest in committed.items():
-            row = {"part_key": key, "rows_expected": manifest["rows"]}
+        for name, m in manifest:
+            key = m["part_key"]
+            row = {"part_key": key, "rows_expected": m.get("rows")}
+            if key != name:
+                row.update({"ok": False,
+                            "error": f"manifest row {name}.json holds "
+                                     f"part_key {key!r}"})
+                results.append(row)
+                continue
             stats = landed.get(key, _NO_ROWS)
-            if stats is _NO_ROWS and manifest["rows"]:
+            if stats is _NO_ROWS and m["rows"]:
                 # a committed partition whose rows are gone IS the
                 # tamper verify() exists to catch — report it, keep
                 # auditing the rest
@@ -310,15 +342,15 @@ class CheckpointedRun:
                 results.append(row)
                 continue
             row["rows_actual"] = stats["n_rows"]
-            ok = stats["n_rows"] == manifest["rows"]
-            if payload_col is not None and "bytes" in manifest:
-                row["bytes_expected"] = manifest["bytes"]
+            ok = stats["n_rows"] == m["rows"]
+            if payload_col is not None and "bytes" in m:
+                row["bytes_expected"] = m["bytes"]
                 row["bytes_actual"] = stats["n_bytes"]
-                ok = ok and stats["n_bytes"] == manifest["bytes"]
-            if fp_cols and "fingerprint" in manifest:
-                row["fingerprint_expected"] = manifest["fingerprint"]
+                ok = ok and stats["n_bytes"] == m["bytes"]
+            if fp_cols and "fingerprint" in m:
+                row["fingerprint_expected"] = m["fingerprint"]
                 row["fingerprint_actual"] = stats["fingerprint"]
-                ok = ok and stats["fingerprint"] == manifest["fingerprint"]
+                ok = ok and stats["fingerprint"] == m["fingerprint"]
             row["ok"] = ok
             results.append(row)
         return results
@@ -326,20 +358,26 @@ class CheckpointedRun:
 
 def read_output(
     spark: SparkSession, out_dir: str, keys: list | None = None,
-    partition_col: str = "part",
+    partition_col: str = "part", schema: StructType | None = None,
 ) -> DataFrame:
     """The landed sink: every ``<partition_col>=<k>`` directory under
     ``out_dir``, or only those of ``keys`` (which must exist). The
     partition column is read back as the exact directory string —
     a user-given type bypasses partition type inference, which would
-    turn key ``"007"`` into the integer 7."""
+    turn key ``"007"`` into the integer 7.
+
+    ``schema`` is the schema of the frame that was written (the
+    manifest records it; the partition column may have any type and
+    place). Given, the read launches no job; without it Spark infers
+    the schema from the files, which is one job."""
     if keys is None:
         paths = [os.path.join(out_dir, f"{partition_col}=*")]
     else:
         paths = [os.path.join(out_dir, f"{partition_col}={k}") for k in keys]
     reader = spark.read.option("basePath", out_dir)
-    schema = StructType([
-        StructField(f.name, StringType()) if f.name == partition_col else f
-        for f in reader.parquet(*paths).schema.fields
-    ])
-    return reader.schema(schema).parquet(*paths)
+    if schema is None:
+        schema = reader.parquet(*paths).schema
+    return reader.schema(StructType([
+        *(f for f in schema.fields if f.name != partition_col),
+        StructField(partition_col, StringType()),
+    ])).parquet(*paths)

@@ -31,8 +31,10 @@ Scale notes (100 TB design point):
 - The parse stage is pure column expressions -> whole-stage codegen;
   no shuffle until the aggregate.
 - The enrichment join is broadcast (15-row dim) — no shuffle.
-- The only shuffle is the final groupBy(route, hour): ~routes x 24
-  groups/day, trivially small after map-side partial aggregation.
+- The only shuffled aggregation is the final groupBy(route, hour):
+  ~routes x 24 groups/day, trivially small after map-side partial
+  aggregation. Its two count(DISTINCT)s plan as an Expand, so the
+  executed plan has 2 Exchanges.
 - Host skew (40% of rows on one host) never becomes a shuffle key
   here; sinks partition by route. Where host IS a key (per-host
   rollups), use vrl_spark.operators.skew salting.
