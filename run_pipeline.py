@@ -47,6 +47,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+# The manifest lineage of every hour: payload bytes of ``url`` and the
+# content fingerprint over these columns. A run and its --verify audit
+# must use the same pair, so it is stated once.
+LINEAGE = dict(
+    payload_col="url",
+    fp_cols=["doc_id", "url", "route", "status_int", "bytes_int", "error"],
+)
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -72,11 +80,7 @@ def main() -> int:
     run = CheckpointedRun(os.path.join(args.output, "routed"))
     if args.verify:
         # reads only the landed sink and its manifest: no input, no plan
-        results = run.verify(
-            spark, payload_col="url",
-            fp_cols=["doc_id", "url", "route", "status_int",
-                     "bytes_int", "error"],
-        )
+        results = run.verify(spark, **LINEAGE)
         bad = [r for r in results if not r["ok"]]
         print(json.dumps({
             "partitions_audited": len(results),
@@ -107,12 +111,7 @@ def main() -> int:
     )
     # manifest rows carry bytes + the order-independent xxh64 content
     # fingerprint: a resumed run re-certifies identical partitions
-    summary = run.run(
-        spark, routed, hours,
-        payload_col="url",
-        fp_cols=["doc_id", "url", "route", "status_int", "bytes_int",
-                 "error"],
-    )
+    summary = run.run(spark, routed, hours, **LINEAGE)
 
     # per-sink aggregates over what landed (idempotent overwrite)
     agg = weblog.aggregate_stage(

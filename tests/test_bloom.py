@@ -129,24 +129,6 @@ def test_positions_validate_params(spark):
         bloom.bloom_positions(F.col("k"), 1 << 14, 3, engine="sha9")
 
 
-def test_bloom_merge_equals_combined_build(spark):
-    a = spark.createDataFrame([(f"a-{i}",) for i in range(40)], ["k"])
-    b = spark.createDataFrame([(f"b-{i}",) for i in range(40)], ["k"])
-    both = a.unionByName(b)
-    merged = bloom.bloom_merge(
-        bloom.bloom_build(a, "k", n_bits=2048, k=3, engine="md5"),
-        bloom.bloom_build(b, "k", n_bits=2048, k=3, engine="md5"),
-    )
-    combined = bloom.bloom_build(both, "k", n_bits=2048, k=3, engine="md5")
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, combined.collect())
-    )
-    import pytest
-
-    with pytest.raises(ValueError):
-        bloom.bloom_merge()
-
-
 def test_null_keys_dropped_everywhere(spark):
     base = spark.createDataFrame(
         [("a",), (None,)], "k string"

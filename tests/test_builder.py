@@ -107,8 +107,6 @@ def test_multimodal_plumbing(spark):
     assert {r["doc_id"]: r["meta"]["content_sha"] for r in feats2} == {
         r["doc_id"]: r["meta"]["content_sha"] for r in feats
     }
-    frames = multimodal.frame_sample(df, every_n=1).collect()
-    assert len(frames) == sum(max(1, (100 + i) // 64) for i in range(20))
 
 
 def _make_bmp(w, h, rgb_rows):
@@ -154,69 +152,6 @@ def test_multimodal_real_image_kernels(spark):
     px = multimodal.decode_bmp_pixels(bmp)
     assert px.shape == (2, 2, 3)
     assert tuple(px[0, 0]) == (255, 0, 0) and tuple(px[1, 0]) == (0, 0, 255)
-
-
-def test_multimodal_real_audio_kernel(spark):
-    import io
-    import math
-    import struct
-    import wave
-
-    from vrl_spark.operators import multimodal
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        # 1 kHz sine, 0.5 amplitude, 800 samples (100 ms)
-        frames = b"".join(
-            struct.pack("<h", int(0.5 * 32767 * math.sin(2 * math.pi * 1000 * i / 8000)))
-            for i in range(800)
-        )
-        w.writeframes(frames)
-    wav = buf.getvalue()
-    df = spark.createDataFrame(
-        [(1, bytearray(wav)), (2, bytearray(b"not audio at all"))],
-        ["doc_id", "media"],
-    )
-    by = {r["doc_id"]: r for r in multimodal.decode_audio(df).collect()}
-    m, f = by[1]["meta"], by[1]["features"]
-    assert (m["channels"], m["sample_rate"], m["n_frames"], m["duration_ms"]) == (1, 8000, 800, 100)
-    assert abs(f["rms"] - 0.5 / math.sqrt(2)) < 0.01       # sine RMS = A/sqrt(2)
-    assert abs(f["peak"] - 0.5) < 0.01
-    assert 0.2 < f["zero_cross_rate"] < 0.3                # 1kHz at 8kHz ~ 0.25
-    assert by[2]["meta"] is None and by[2]["features"] is None
-
-
-def test_multimodal_audio_8bit_unsigned(spark):
-    """8-bit PCM WAV is UNSIGNED centered at 128: digital silence
-    (all-128 bytes) must read as rms≈0/peak≈0, and a full-scale
-    square wave as peak≈1."""
-    import io
-    import wave
-
-    from vrl_spark.operators import multimodal
-
-    def wav8(samples: bytes) -> bytearray:
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(1)
-            w.setframerate(8000)
-            w.writeframes(samples)
-        return bytearray(buf.getvalue())
-
-    silence = wav8(bytes([128] * 400))
-    square = wav8(bytes(([0] * 4 + [255] * 4) * 50))
-    df = spark.createDataFrame(
-        [(1, silence), (2, square)], ["doc_id", "media"]
-    )
-    by = {r["doc_id"]: r for r in multimodal.decode_audio(df).collect()}
-    assert by[1]["meta"]["sample_width"] == 1
-    assert by[1]["features"]["rms"] < 1e-9          # silence, not full-scale
-    assert by[1]["features"]["peak"] < 1e-9
-    assert abs(by[2]["features"]["peak"] - 1.0) < 0.01
 
 
 def test_builder_parse_groks_rule_list(spark):
@@ -345,70 +280,6 @@ def test_png_embedding_real_pixels(spark):
     assert abs(emb[1] - 0.587) < 1e-4      # green
     assert abs(emb[2] - 0.114) < 1e-4      # blue
     assert abs(emb[3] - 1.0) < 1e-4        # white
-
-
-def test_video_keyframes_scene_cuts(spark):
-    """Three flat-color scenes with tiny in-scene jitter: the cut
-    detector must flag exactly frame 0 and the two scene starts, with
-    the right mean colors; a fourth doc with a non-RVID payload is
-    skipped, and a single-frame video yields just frame 0."""
-    import numpy as np
-
-    from vrl_spark.operators import multimodal
-
-    rng = np.random.RandomState(3)
-
-    def scene(color, n, h=8, w=8):
-        base = np.full((n, h, w, 3), color, dtype=np.int16)
-        jitter = rng.randint(-2, 3, size=base.shape)
-        return np.clip(base + jitter, 0, 255).astype(np.uint8)
-
-    frames = np.concatenate([
-        scene((200, 10, 10), 5),   # scene A: frames 0-4
-        scene((10, 200, 10), 4),   # scene B: frames 5-8
-        scene((10, 10, 200), 6),   # scene C: frames 9-14
-    ])
-    vid = multimodal.encode_rvid(frames)
-    single = multimodal.encode_rvid(frames[:1])
-    rows = [(1, vid), (2, b"not a video"), (3, single)]
-    df = spark.createDataFrame(rows, ["doc_id", "media"])
-    out = multimodal.video_keyframes(df).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert set(by_doc) == {1, 3}
-    keys = sorted(r["frame_idx"] for r in by_doc[1])
-    assert keys == [0, 5, 9]
-    by_idx = {r["frame_idx"]: r for r in by_doc[1]}
-    assert by_idx[0]["diff_energy"] == 0.0
-    assert by_idx[5]["diff_energy"] > 50  # scene jump, not jitter
-    assert by_idx[5]["mean_rgb"][1] > 150  # scene B is green
-    assert by_idx[9]["mean_rgb"][2] > 150  # scene C is blue
-    # determinism: same bytes -> same shas
-    again = {(r["doc_id"], r["frame_idx"]): r["frame_sha"]
-             for r in multimodal.video_keyframes(df).collect()}
-    assert again == {(r["doc_id"], r["frame_idx"]): r["frame_sha"]
-                     for r in out}
-    assert [r["frame_idx"] for r in by_doc[3]] == [0]
-
-
-def test_rvid_roundtrip_and_guards():
-    import numpy as np
-    import pytest
-
-    from vrl_spark.operators.multimodal import (
-        _decode_rvid, encode_rvid,
-    )
-
-    frames = np.arange(2 * 4 * 5 * 3, dtype=np.uint8).reshape(2, 4, 5, 3)
-    data = encode_rvid(frames)
-    back = _decode_rvid(data)
-    assert back.shape == (2, 4, 5, 3) and (back == frames).all()
-    assert _decode_rvid(data[:-1]) is None      # truncated raster
-    assert _decode_rvid(b"RVID") is None        # truncated header
-    assert _decode_rvid(b"\x00" * 40) is None   # wrong magic
-    with pytest.raises(ValueError):
-        encode_rvid(np.zeros((1, 2, 2, 4), dtype=np.uint8))  # RGBA
 
 
 def test_grok_nested_source_and_quoted_prefix(spark):

@@ -309,6 +309,34 @@ def test_read_output_with_recorded_schema(spark, tmp_path, jobs_of):
     assert sorted(got.collect()) == sorted(read_output(spark, ints.out_dir).collect())
 
 
+def test_read_output_without_keys_lists_partitions(spark, tmp_path, monkeypatch):
+    """Without keys the read names every ``part=`` directory found on the
+    driver, the same keyed path a read with keys takes. A ``part=*``
+    glob path made Spark log a FileNotFoundException for the glob on
+    every such read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    df = make_df(spark)
+    run = CheckpointedRun(str(tmp_path / "out"))
+    run.run(spark, df, [0, 1, 2])
+    read_paths = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        read_paths.append(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    want = tuple(os.path.join(run.out_dir, f"part={k}") for k in "012")
+    for schema in (None, df.schema):
+        read_paths.clear()
+        out = read_output(spark, run.out_dir, schema=schema)
+        assert read_paths and set(read_paths) == {want}
+        assert sorted(out.collect()) == sorted(
+            read_output(spark, run.out_dir, ["0", "1", "2"]).collect())
+        assert out.count() == 75
+
+
 def test_verify_infers_schema_without_an_agreed_one(spark, tmp_path, monkeypatch):
     """verify reads the sink with the schema its rows agree on; a row
     written without one (before rows carried it), or rows that

@@ -124,55 +124,3 @@ def test_spherical_kmeans_unit_centroids(spark):
     for r in stats["centroids"].collect():
         n = math.sqrt(sum(x * x for x in r["centroid_vec"]))
         assert n == pytest.approx(1.0, abs=1e-5)
-
-
-def test_cluster_topics_separates_vocabularies(spark):
-    """Two disjoint-vocabulary topic groups: k=2 recovers them and
-    each cluster's top terms come from its own vocabulary."""
-    cook = "bread flour oven yeast dough salt"
-    code = "spark shuffle partition executor driver stage"
-    # vary docs WITHIN their topic vocabulary (a unique per-doc token
-    # would carry the highest idf and dominate the vector, making
-    # every document near-orthogonal to every other)
-    cook_w, code_w = cook.split(), code.split()
-    rows = [
-        (i, " ".join(cook_w + cook_w[i % 3 : i % 3 + 2])) for i in range(6)
-    ] + [
-        (10 + i, " ".join(code_w + code_w[i % 3 : i % 3 + 2]))
-        for i in range(6)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    from vrl_spark.operators.clustering import cluster_topics
-
-    assigned, topics = cluster_topics(df, k=2, vocab_size=32, top_terms=4)
-    lab = {r["doc_id"]: r["cluster_id"] for r in assigned.collect()}
-    assert len({lab[i] for i in range(6)}) == 1
-    assert len({lab[10 + i] for i in range(6)}) == 1
-    assert lab[0] != lab[10]
-    tp = {r["cluster_id"]: (set(r["terms"]), r["n_docs"]) for r in topics.collect()}
-    cook_terms, code_terms = set(cook.split()), set(code.split())
-    t_cook, n_cook = tp[lab[0]]
-    t_code, n_code = tp[lab[10]]
-    assert n_cook == 6 and n_code == 6
-    assert t_cook <= cook_terms and t_code <= code_terms
-
-
-def test_cluster_topics_keeps_out_of_vocab_docs(spark):
-    """A doc with no in-vocabulary terms appears in the assignments
-    with cluster_id NULL — never silently dropped."""
-    rows = [
-        (1, "alpha beta alpha beta gamma"),
-        (2, "alpha beta gamma gamma"),
-        (3, "alpha gamma beta beta"),
-        (4, "zzz"),  # below the vocab cutoff with vocab_size=3? no —
-    ]
-    # force doc 4 out of vocab: vocab_size=3 keeps the 3 frequent
-    # terms; 'zzz' (df=1) falls outside
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    from vrl_spark.operators.clustering import cluster_topics
-
-    assigned, _ = cluster_topics(df, k=2, vocab_size=3, top_terms=2)
-    got = {r["doc_id"]: r["cluster_id"] for r in assigned.collect()}
-    assert set(got) == {1, 2, 3, 4}
-    assert got[4] is None
-    assert all(got[i] is not None for i in (1, 2, 3))

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from vrl_spark.operators import extract, skew
@@ -74,15 +73,3 @@ def test_salted_agg_equals_plain_agg(spark, sf_dir):
         ).collect()
     }
     assert plain == salted
-
-
-def test_top_keys_sees_skew(spark, sf_dir):
-    from vrl_spark.plans.weblog import load_pages
-
-    pages = load_pages(spark, sf_dir).withColumn(
-        "host", F.regexp_extract("url", r"^https://([^/]+)/", 1)
-    )
-    top = skew.top_keys(pages, "host", n=2).collect()
-    # pages derivation plants 40% of rows on host0
-    assert top[0]["host"] == "host0.example.com"
-    assert top[0]["share"] == pytest.approx(0.4, abs=0.05)

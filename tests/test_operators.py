@@ -31,11 +31,6 @@ def test_exact_dedup(docs):
     assert dup_group["keep_id"] == 1
 
 
-def test_exact_dedup_rows(docs):
-    kept = {r["doc_id"] for r in dedup.exact_dedup_rows(docs).collect()}
-    assert kept == {1, 3, 4, 5}
-
-
 def test_word_shingles(spark):
     row = spark.range(1).select(
         dedup.word_shingles(F.lit("a b c d"), 3).alias("s"),
@@ -263,7 +258,7 @@ def test_sessionize(spark):
 def test_find_table_row_semantics(spark):
     from datetime import datetime as dt
 
-    from vrl_spark.operators.enrichment import find_table_row, find_table_rows
+    from vrl_spark.operators.enrichment import find_table_row
 
     facts = spark.createDataFrame(
         [(1, "ALPHA", dt(2024, 1, 15)), (2, "beta", dt(2024, 3, 1)),
@@ -288,11 +283,6 @@ def test_find_table_row_semantics(spark):
         facts, dim, on=[("key", "k")], case_insensitive=False,
         fact_id="fid").collect()}
     assert out_cs[1] is None
-    # find_table_rows keeps both alpha matches
-    n = find_table_rows(
-        facts.where(F.col("fid") == 1), dim, on=[("key", "k")],
-        case_insensitive=True).count()
-    assert n == 2
 
 
 def test_simhash_fast_equals_string_path(spark):

@@ -195,3 +195,175 @@ def test_every_engine_module_is_reachable():
     assert not dead, f"unreachable engine modules (delete them): {dead}"
     stale = sorted(reached & set(_KEPT_UNREACHABLE))
     assert not stale, f"kept-list modules are now reached (unlist): {stale}"
+
+
+# Function-level reachability. Top-level defs, classes and constants of
+# vrl_spark that nothing live names are deleted, not maintained; the
+# few kept anyway are listed with their reason.
+_KEPT_UNREACHABLE_FUNCTIONS = {
+    "vrl_spark.operators.similarity.dequantize_embedding":
+        "the checker tests use for quantize_embedding's error bound",
+    "vrl_spark.plans.weblog.write_sinks":
+        "the north rule's per-route fan-out write, which run_pipeline.py "
+        "does not do",
+}
+
+# callers outside vrl_spark whose whole text is live: the driver entry
+# points and the frozen benchmark harnesses
+_LIVE_CALLERS = ("run_pipeline.py", "__spark_entry__.py", "bench.py",
+                 "bench_worker.py", "perfbench/**/*.py")
+
+
+def _defined_names(stmt):
+    """The top-level names a module statement binds (dunders left out:
+    module metadata, not code)."""
+    import ast
+
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        return [n.id for t in targets for n in ast.walk(t)
+                if isinstance(n, ast.Name) and not n.id.startswith("__")]
+    return []
+
+
+def _is_seed(module, stmt):
+    """A statement that is live whatever else is: the kept modules, a
+    registry query, a ported VRL function (a public def of
+    vrl_spark.functions) and module code that binds no name. Imports
+    and docstrings name things without running them."""
+    import ast
+
+    if module in _KEPT_UNREACHABLE:
+        return True
+    if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+        return False
+    if isinstance(stmt, ast.Expr) and isinstance(stmt.value, ast.Constant):
+        return False
+    if not _defined_names(stmt):
+        return True
+    if any(isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+           for d in getattr(stmt, "decorator_list", [])):
+        return True
+    return (module.startswith("vrl_spark.functions.")
+            and isinstance(stmt, ast.FunctionDef)
+            and not stmt.name.startswith("_"))
+
+
+def _reach(units, words):
+    """Grow ``words`` (identifiers named by live text) to a fixpoint: a
+    unit is live once its name is among them, and its text then adds
+    its own. Returns the live units."""
+    live, grew = set(), True
+    while grew:
+        grew = False
+        for name, text in units.items():
+            if name not in live and name.rpartition(".")[2] in words:
+                live.add(name)
+                words |= text
+                grew = True
+    return live
+
+
+def test_every_engine_function_is_reachable():
+    """Static walk over source text (ast only, no Spark): every
+    top-level def, class and constant of vrl_spark must be named by
+    live text, or be on the kept list; a kept name that live text
+    reaches fails too (the list cannot go stale).
+
+    A name is matched as an identifier anywhere in a live statement,
+    comments and docstrings included, and in any module: the walk errs
+    toward keeping code, never toward deleting it."""
+    import ast
+    import glob
+    import os
+    import re
+
+    word = re.compile(r"[A-Za-z_]\w*")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    words, units = set(), {}
+    for pattern in _LIVE_CALLERS:
+        for path in glob.glob(os.path.join(root, pattern), recursive=True):
+            with open(path) as fh:
+                words |= set(word.findall(fh.read()))
+    for module, path in _module_files(root).items():
+        with open(path) as fh:
+            lines = fh.read().splitlines()
+        for stmt in ast.parse("\n".join(lines), path).body:
+            first = min([d.lineno for d in getattr(stmt, "decorator_list", [])]
+                        + [stmt.lineno])
+            text = set(word.findall("\n".join(lines[first - 1:stmt.end_lineno])))
+            if _is_seed(module, stmt):
+                words |= text
+            for name in _defined_names(stmt):
+                units.setdefault(f"{module}.{name}", set()).update(text)
+
+    missing = sorted(set(_KEPT_UNREACHABLE_FUNCTIONS) - set(units))
+    assert not missing, f"kept-list names no longer exist (unlist): {missing}"
+    live = _reach(units, words)
+    stale = sorted(live & set(_KEPT_UNREACHABLE_FUNCTIONS))
+    assert not stale, f"kept-list names are now reached (unlist): {stale}"
+    for name in _KEPT_UNREACHABLE_FUNCTIONS:
+        words |= units[name]
+    live = set(_KEPT_UNREACHABLE_FUNCTIONS) | _reach(units, words)
+    dead = sorted(set(units) - live)
+    assert not dead, f"unreachable engine names (delete them): {dead}"
+
+
+def test_examples_resolve():
+    """Every vrl_spark module, imported name and ``module.attr`` the
+    runnable examples use still exists. Examples are not reachability
+    seeds, so nothing else notices when a deletion breaks them. The
+    engine modules are imported; no Spark session starts."""
+    import ast
+    import glob
+    import importlib
+    import os
+
+    def resolve(module, name):
+        try:
+            return getattr(importlib.import_module(module), name)
+        except AttributeError:
+            return importlib.import_module(f"{module}.{name}")
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    examples = sorted(glob.glob(os.path.join(root, "examples", "*.py")))
+    assert examples
+    problems = []
+    for path in examples:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        where = os.path.basename(path)
+        modules = {}  # local name -> the vrl_spark module it binds
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] != "vrl_spark":
+                        continue
+                    try:
+                        mod = importlib.import_module(a.name)
+                    except ImportError:
+                        problems.append(f"{where}:{node.lineno} {a.name}")
+                        continue
+                    if a.asname:
+                        modules[a.asname] = mod
+            elif (isinstance(node, ast.ImportFrom)
+                  and (node.module or "").split(".")[0] == "vrl_spark"):
+                for a in node.names:
+                    try:
+                        value = resolve(node.module, a.name)
+                    except ImportError:
+                        problems.append(
+                            f"{where}:{node.lineno} {node.module}.{a.name}")
+                        continue
+                    if isinstance(value, type(os)):
+                        modules[a.asname or a.name] = value
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in modules
+                    and not hasattr(modules[node.value.id], node.attr)):
+                problems.append(f"{where}:{node.lineno} "
+                                f"{modules[node.value.id].__name__}.{node.attr}")
+    assert not problems, f"examples use names that are gone: {problems}"

@@ -1,11 +1,13 @@
 """The production driver end to end: a crash between the data write and
-the manifest commit, then ``--resume`` and ``--verify``; and the Spark
-jobs each call launches."""
+the manifest commit, then ``--resume`` and ``--verify``; a tamper that
+only ``--verify``'s fingerprint catches; and the Spark jobs each call
+launches."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 
 import pytest
@@ -137,3 +139,31 @@ def test_driver_jobs_run_only_over_data(pipeline, jobs_of, tmp_path):
     assert verify <= 2
     assert resume <= PARENT_JOBS["resume"] - 4
     assert fresh <= PARENT_JOBS["fresh"] - 3
+
+
+def test_verify_catches_a_same_size_tamper(spark, pipeline, tmp_path):
+    """One landed hour rewritten with one row's ``status_int`` changed
+    keeps its row count and ``url`` bytes: only the content fingerprint
+    can catch it, and ``--verify`` fails exactly that hour on it."""
+    out = str(tmp_path / "out")
+    rc, _ = pipeline(out)
+    assert rc == 0
+    hour = sorted(_manifest(out))[1]
+    landed = os.path.join(out, "routed", f"part={hour}")
+    df = spark.read.parquet(landed)
+    victim = df.where(F.col("status_int").isNotNull()).first()["doc_id"]
+    tampered = str(tmp_path / "tampered")
+    df.withColumn("status_int", F.when(
+        F.col("doc_id") == victim, F.col("status_int") + 1,
+    ).otherwise(F.col("status_int"))).write.parquet(tampered)
+    shutil.rmtree(landed)
+    shutil.move(tampered, landed)
+
+    rc, audit = pipeline(out, "--verify")
+    assert rc == 1
+    assert (audit["partitions_audited"], audit["partitions_ok"]) == (4, 3)
+    [bad] = audit["failures"]
+    assert bad["part_key"] == hour
+    assert bad["rows_actual"] == bad["rows_expected"]
+    assert bad["bytes_actual"] == bad["bytes_expected"]
+    assert bad["fingerprint_actual"] != bad["fingerprint_expected"]

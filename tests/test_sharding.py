@@ -10,9 +10,7 @@ is the tiny per-bucket offsets window.
 
 from __future__ import annotations
 
-import glob
 import hashlib
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -108,22 +106,6 @@ def test_shard_plan_shape(spark):
     import re
     assert len(re.findall(
         r"windowspecdefinition\(_bucket#\d+L?, perm_key", plan)) == 1, plan
-
-
-def test_write_shards_one_file_per_shard_in_order(spark, tmp_path):
-    docs = _mkdocs(spark, 200).repartition(7)
-    placed = sharding.shard_assign(docs, budget=900, seed="w")
-    path = str(tmp_path / "shards")
-    sharding.write_shards(placed, path)
-    dirs = sorted(glob.glob(os.path.join(path, "shard_id=*")))
-    assert len(dirs) == placed.select("shard_id").distinct().count()
-    for d in dirs:
-        files = [f for f in glob.glob(os.path.join(d, "*"))
-                 if f.endswith(".parquet")]
-        assert len(files) == 1, d  # one file per shard
-        pdf = spark.read.parquet(files[0]).toPandas()
-        keys = list(zip(pdf["perm_key"], pdf["doc_id"]))
-        assert keys == sorted(keys)  # in-file permutation order
 
 
 # -------------------------------------------------------------------

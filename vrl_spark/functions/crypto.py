@@ -478,16 +478,6 @@ def _fmt16(b: bytes, as_ipv4: bool) -> str:
     return str(a6)
 
 
-def _ipcrypt_det(ip: str, op, forward: bool) -> str:
-    """ipcrypt-deterministic: one AES-128 block over the address.
-    ``op`` is a shared streaming ECB context (stateless per block, so
-    one context serves the whole Arrow batch)."""
-    b, _ = _ip16(ip)
-    out = op.update(b)
-    # output format follows the resulting bytes (v4 iff ipv4-mapped)
-    return _fmt16(out, as_ipv4=True)
-
-
 def _ipcrypt_pfx(ip: str, e1, e2, forward: bool) -> str:
     """ipcrypt-pfx: bit-by-bit prefix-preserving walk. At each prefix
     length L the padded prefix block is (1 << L) | int(first L

@@ -206,18 +206,3 @@ def incremental_dedup(
             .alias("incr_fate"),
         )
     )
-
-
-def bloom_merge(*word_tables: DataFrame) -> DataFrame:
-    """Union Bloom filters built with the SAME (n_bits, k, engine):
-    bit_or of their word tables. This is how the stored filter stays
-    current across ingests without ever rebuilding from the base —
-    after committing an ingest, merge the filter built from its NEW
-    keys into the stored one (a tiny word-keyed aggregation).
-    """
-    if not word_tables:
-        raise ValueError("bloom_merge needs at least one word table")
-    acc = word_tables[0]
-    for t in word_tables[1:]:
-        acc = acc.unionByName(t)
-    return acc.groupBy("word_idx").agg(F.bit_or("word").alias("word"))

@@ -83,7 +83,9 @@ _NO_ROWS = {"n_rows": 0, "n_bytes": None, "fingerprint": None}
 _FP_PRIME = 9223372036854775783
 
 
-def _lineage_aggs(payload: Column, fp_cols: list[Column], engine: str):
+def _lineage_aggs(
+    payload: Column, fp_cols: list[Column], engine: str = "xxh64"
+):
     """The ONE definition of the manifest metrics (shared by
     ``lineage_metrics`` and ``CheckpointedRun.run_partition`` — keep
     them from drifting).
@@ -109,15 +111,12 @@ def _lineage_aggs(payload: Column, fp_cols: list[Column], engine: str):
     ]
 
 
-def _manifest_aggs(
-    payload_col: str | None, fp_cols: list[str] | None, engine: str
-):
+def _manifest_aggs(payload_col: str | None, fp_cols: list[str] | None):
     """Column-level agg assembly shared by run_partition and verify —
     ONE definition of which expressions feed the manifest."""
     full = _lineage_aggs(
         F.col(payload_col) if payload_col else F.lit(""),
         [F.col(c) for c in (fp_cols or [])] or [F.lit(0)],
-        engine,
     )
     aggs = [full[0]]
     if payload_col is not None:
@@ -143,10 +142,13 @@ def lineage_metrics(
     return df.groupBy(*keys).agg(*_lineage_aggs(payload, fp_cols, engine))
 
 
+# the sink's partition column: the ``part=<key>`` directory name
+_PART = "part"
+
+
 @dataclass
 class CheckpointedRun:
     out_dir: str
-    partition_col: str = "part"
 
     @property
     def manifest_dir(self) -> str:
@@ -186,7 +188,6 @@ class CheckpointedRun:
         self, spark: SparkSession, df: DataFrame, keys: list,
         payload_col: str | None = None,
         fp_cols: list[str] | None = None,
-        fp_engine: str = "xxh64",
     ) -> list[dict]:
         """Process the partitions ``keys`` idempotently in one pass:
         one partitioned write of their rows, then one read-back
@@ -208,15 +209,14 @@ class CheckpointedRun:
         t0 = time.time()
         schema = df.schema
         (
-            df.where(F.col(self.partition_col).isin(list(keys)))
+            df.where(F.col(_PART).isin(list(keys)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(self.partition_col)
+            .partitionBy(_PART)
             .parquet(self.out_dir)
         )
         landed = self._landed_stats(
-            spark, [str(k) for k in keys], schema, payload_col, fp_cols,
-            fp_engine,
+            spark, [str(k) for k in keys], schema, payload_col, fp_cols
         )
         wall_sec = round(time.time() - t0, 3)
         results = []
@@ -254,11 +254,11 @@ class CheckpointedRun:
         os.replace(tmp, path)
 
     def _data_dir(self, key) -> str:
-        return os.path.join(self.out_dir, f"{self.partition_col}={key}")
+        return os.path.join(self.out_dir, f"{_PART}={key}")
 
     def _landed_stats(
         self, spark: SparkSession, keys: list[str], schema: StructType | None,
-        payload_col: str | None, fp_cols: list[str] | None, fp_engine: str,
+        payload_col: str | None, fp_cols: list[str] | None,
     ) -> dict[str, dict]:
         """The manifest metrics of ``keys`` as they exist on disk NOW,
         from one aggregation grouped by the partition column, read with
@@ -268,26 +268,22 @@ class CheckpointedRun:
         if not present:
             return {}
         rows = (
-            read_output(spark, self.out_dir, present, self.partition_col,
-                        schema=schema)
-            .groupBy(self.partition_col)
-            .agg(*_manifest_aggs(payload_col, fp_cols, fp_engine))
+            read_output(spark, self.out_dir, present, schema=schema)
+            .groupBy(_PART)
+            .agg(*_manifest_aggs(payload_col, fp_cols))
             .collect()
         )
-        return {r[self.partition_col]: r.asDict() for r in rows}
+        return {r[_PART]: r.asDict() for r in rows}
 
     def run(
         self, spark: SparkSession, df: DataFrame, all_keys: list,
         payload_col: str | None = None,
         fp_cols: list[str] | None = None,
-        fp_engine: str = "xxh64",
     ) -> dict:
         """Process all pending partitions in one pass; returns the run
         summary."""
         todo = self.pending(all_keys)
-        results = self.run_partition(
-            spark, df, todo, payload_col, fp_cols, fp_engine
-        )
+        results = self.run_partition(spark, df, todo, payload_col, fp_cols)
         return {
             "partitions_total": len(all_keys),
             "partitions_ran": len(todo),
@@ -299,7 +295,6 @@ class CheckpointedRun:
         self, spark: SparkSession,
         payload_col: str | None = None,
         fp_cols: list[str] | None = None,
-        fp_engine: str = "xxh64",
     ) -> list[dict]:
         """Re-certify every committed partition: recompute the lineage
         metrics from the data directories as they exist NOW (one
@@ -320,7 +315,7 @@ class CheckpointedRun:
             if len(schemas) == 1 and None not in schemas else None
         )
         landed = self._landed_stats(
-            spark, list(committed), schema, payload_col, fp_cols, fp_engine
+            spark, list(committed), schema, payload_col, fp_cols
         )
         results = []
         for name, m in manifest:
@@ -358,26 +353,30 @@ class CheckpointedRun:
 
 def read_output(
     spark: SparkSession, out_dir: str, keys: list | None = None,
-    partition_col: str = "part", schema: StructType | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
-    """The landed sink: every ``<partition_col>=<k>`` directory under
-    ``out_dir``, or only those of ``keys`` (which must exist). The
-    partition column is read back as the exact directory string —
-    a user-given type bypasses partition type inference, which would
-    turn key ``"007"`` into the integer 7.
+    """The landed sink: the ``part=<k>`` directories of ``keys`` under
+    ``out_dir`` (which must exist), or, without keys, every one listed
+    on the driver. The partition column is read back as the exact
+    directory string — a user-given type bypasses partition type
+    inference, which would turn key ``"007"`` into the integer 7.
 
     ``schema`` is the schema of the frame that was written (the
     manifest records it; the partition column may have any type and
     place). Given, the read launches no job; without it Spark infers
     the schema from the files, which is one job."""
     if keys is None:
-        paths = [os.path.join(out_dir, f"{partition_col}=*")]
-    else:
-        paths = [os.path.join(out_dir, f"{partition_col}={k}") for k in keys]
+        prefix = f"{_PART}="
+        keys = sorted(
+            d[len(prefix):] for d in os.listdir(out_dir)
+            if d.startswith(prefix)
+            and os.path.isdir(os.path.join(out_dir, d))
+        )
+    paths = [os.path.join(out_dir, f"{_PART}={k}") for k in keys]
     reader = spark.read.option("basePath", out_dir)
     if schema is None:
         schema = reader.parquet(*paths).schema
     return reader.schema(StructType([
-        *(f for f in schema.fields if f.name != partition_col),
-        StructField(partition_col, StringType()),
+        *(f for f in schema.fields if f.name != _PART),
+        StructField(_PART, StringType()),
     ])).parquet(*paths)

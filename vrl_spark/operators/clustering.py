@@ -4,7 +4,7 @@ columns.
 The training-data-pipeline companion to the IVF index
 (operators/similarity.py): the same sampled-centroid start, but the
 centroids then ITERATE to the data's actual structure — used for
-corpus bucketing, topic discovery, and as a trained coarse quantizer
+corpus bucketing and as a trained coarse quantizer
 for IVF (FAISS trains its inverted lists exactly this way).
 
 Scale shape per iteration (the 100 TB contract):
@@ -195,101 +195,3 @@ def kmeans(
         stats["max_shift"] = max_shift
         stats["centroids"] = centroids.select("centroid_id", "centroid_vec")
     return final
-
-
-def cluster_topics(
-    df: DataFrame,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_size: int = 128,
-    iterations: int = 8,
-    top_terms: int = 5,
-):
-    """Topic discovery by composition: dense TF-IDF document vectors
-    over the corpus's top-``vocab_size`` terms (by document frequency,
-    term-ordered ties), SPHERICAL k-means over them, and the top
-    ``top_terms`` vocabulary terms of each centroid as the cluster's
-    topic label. Returns (assignments, topics):
-
-    - assignments: (id_col, cluster_id) for EVERY input document;
-      a document with no in-vocabulary terms (all terms below the
-      vocab_size df cutoff, or zero idf) gets cluster_id NULL —
-      unclusterable, not silently dropped
-    - topics: (cluster_id, n_docs, terms array<string> — centroid's
-      heaviest vocab dimensions, weight desc then term asc)
-
-    Scale shape: the TF-IDF pipeline is relational
-    (operators/retrieval.py); the dense projection is a broadcast of
-    the tiny vocab + one map-side map_from_entries assembly per doc
-    (vector width = vocab_size, a constant); k-means iterates as in
-    ``kmeans``; topic extraction works on k centroids — driver-scale
-    data."""
-    from pyspark.sql import Window
-
-    from vrl_spark.operators.retrieval import _tfidf_weights
-
-    if top_terms < 1 or vocab_size < 1:
-        raise ValueError("vocab_size and top_terms must be >= 1")
-    w = _tfidf_weights(df, text_col, id_col).where(F.col("w") > 0)
-    # top-vocab_size terms by df: orderBy().limit() lowers to a
-    # parallel TakeOrderedAndProject; the row_number runs on the
-    # RESULTING vocab_size-row frame only (a global Window over the
-    # full corpus vocabulary would funnel every distinct term through
-    # one task). _tfidf_weights is distinct per (doc, term), so a
-    # plain count is the document frequency.
-    top = (
-        w.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .orderBy(F.col("_df").desc(), F.col("term"))
-        .limit(vocab_size)
-    )
-    vocab = top.withColumn(
-        "_vix",
-        F.row_number().over(
-            Window.orderBy(F.col("_df").desc(), F.col("term"))
-        ) - 1,
-    ).select("term", "_vix")
-    entries = w.join(F.broadcast(vocab), "term").groupBy(id_col).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("_vix"), F.col("w_hat")))
-        ).alias("_m")
-    )
-    dense = entries.select(
-        F.col(id_col),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(vocab_size - 1)),
-            lambda i: F.coalesce(
-                F.try_element_at(F.col("_m"), i), F.lit(0.0)
-            ).cast("float"),
-        ).alias("_vec"),
-    )
-    stats: dict = {}
-    assigned = kmeans(
-        dense, k, iterations=iterations, id_col=id_col, vec_col="_vec",
-        spherical=True, stats=stats,
-    ).select(id_col, "cluster_id")
-    # every input doc appears in the output; no-vocab docs get NULL
-    assigned = df.select(id_col).join(assigned, id_col, "left")
-    sizes = assigned.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    cdims = stats["centroids"].select(
-        F.col("centroid_id").alias("cluster_id"),
-        F.posexplode(F.col("centroid_vec")).alias("_vix", "_wt"),
-    ).where(F.col("_wt") > 0)
-    ranked = cdims.join(F.broadcast(vocab), "_vix").withColumn(
-        "_rk",
-        F.row_number().over(
-            Window.partitionBy("cluster_id").orderBy(
-                F.col("_wt").desc(), F.col("term")
-            )
-        ),
-    ).where(F.col("_rk") <= top_terms)
-    topics = ranked.groupBy("cluster_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_rk", "term"))),
-            lambda s: s.getField("term"),
-        ).alias("terms")
-    ).join(sizes, "cluster_id")
-    return assigned, topics

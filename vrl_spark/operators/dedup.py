@@ -21,7 +21,7 @@ Determinism: every hash used for ORACLE-checked paths is md5-based
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------
@@ -42,16 +42,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
             F.min(id_col).alias("keep_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
-    )
-
-
-def exact_dedup_rows(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """The surviving rows themselves (min id per hash)."""
-    w = Window.partitionBy(F.md5(F.col(text_col).cast("binary"))).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 
@@ -568,16 +558,6 @@ def simhash64_batched(col: Column, engine: str = "xxh") -> Column:
 
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def hamming_bits(a: Column, b: Column) -> Column:
-    """Hamming distance between two equal-length '0'/'1' strings."""
-    return F.size(
-        F.filter(
-            F.zip_with(F.split(a, ""), F.split(b, ""), lambda x, y: x != y),
-            lambda d: d,
-        )
-    )
 
 
 def simhash_dedup_pairs(

@@ -9,8 +9,6 @@ and date-range conditions). Spark lowering:
 - `find_table_row`  -> broadcast LEFT join, FIRST match wins
   (deterministic: lowest dim order), optional case-insensitive keys,
   optional ``between`` date-range condition.
-- `find_table_rows` -> broadcast left join keeping all matches
-  (collect_list when a single row is wanted).
 
 Scale contract: the fact stream is NEVER shuffled, windowed, or
 sorted. First-match-wins is resolved INSIDE the (small) broadcast
@@ -98,20 +96,3 @@ def find_table_row(
     return step.select(
         "*", *[F.col("_hit").getField(c).alias(c) for c in dim_cols]
     ).drop("_hit")
-
-
-def find_table_rows(
-    facts: DataFrame,
-    table: DataFrame,
-    on: list[tuple[str, str]],
-    case_insensitive: bool = False,
-) -> DataFrame:
-    """All matching dim rows per fact row (left join, may duplicate)."""
-    cond = None
-    for fc, dc in on:
-        lhs, rhs = F.col(f"f.{fc}"), F.col(f"d.{dc}")
-        if case_insensitive:
-            lhs, rhs = F.lower(lhs), F.lower(rhs)
-        c = lhs == rhs
-        cond = c if cond is None else cond & c
-    return facts.alias("f").join(F.broadcast(table).alias("d"), cond, "left")

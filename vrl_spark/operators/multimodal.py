@@ -1,21 +1,15 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` with
-typed metadata structs.
+"""Multimodal columns: images as opaque ``binary`` with typed metadata
+structs.
 
 The Spark-side plumbing — schemas, Arrow batch shapes, mapInPandas
 partitioning — is real and tested. Kernels are real wherever the
 stdlib suffices: image metadata (PNG/GIF/BMP/JPEG header parsing),
 full raster decode + nearest-neighbor resize + visual features for
 uncompressed 24-bit BMP, 8-bit RGB/RGBA PNG (IDAT is zlib-deflate:
-inflate + scanline unfilter, stdlib+numpy), AND baseline JPEG (a
-from-scratch T.81 sequential decoder — Huffman, dequant, IDCT,
-4:2:0/4:2:2 upsampling, restart markers; operators/jpeg.py), plus
-complete PCM WAV audio decode + signal features (``wave`` + numpy),
-progressive JPEG (T.81 Annex G — spectral selection + successive
-approximation), and video keyframing via real scene-cut detection
-over the uncompressed RVID container (difference-energy
-thresholding). Only ffmpeg-demuxed video containers remain
-env-blocked — swapping a demuxer in replaces ONE function body
-(_decode_rvid), not the cut detector or the Spark plumbing.
+inflate + scanline unfilter, stdlib+numpy), AND baseline and
+progressive JPEG (a from-scratch T.81 decoder — Huffman, dequant,
+IDCT, 4:2:0/4:2:2 upsampling, restart markers, Annex G spectral
+selection + successive approximation; operators/jpeg.py).
 
 Design points for 100 TB of media:
 - binary payloads never pass through JVM String (binary -> Arrow ->
@@ -35,7 +29,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 IMAGE_META_SCHEMA = T.StructType([
@@ -277,217 +270,3 @@ def decode_images(
             )
 
     return df.select(id_col, binary_col).mapInPandas(run, out_schema)
-
-
-RVID_MAGIC = b"RVID"
-
-
-def encode_rvid(frames) -> bytes:
-    """Minimal uncompressed video container: ``RVID`` + u16 width +
-    u16 height + u32 n_frames, then n_frames rasters of raw RGB24
-    (h*w*3 bytes each, row-major). The demuxable-without-ffmpeg dual
-    of the BMP/WAV paths — ``frames`` is an (n, h, w, 3) uint8
-    array."""
-    import struct
-
-    import numpy as np
-
-    a = np.asarray(frames, dtype=np.uint8)
-    n, h, w, c = a.shape
-    if c != 3:
-        raise ValueError("frames must be (n, h, w, 3) RGB24")
-    return (RVID_MAGIC + struct.pack("<HHI", w, h, n)
-            + a.tobytes(order="C"))
-
-
-def _decode_rvid(data: bytes):
-    """(n, h, w, 3) uint8 array, or None if not RVID / truncated."""
-    import struct
-
-    import numpy as np
-
-    if data[:4] != RVID_MAGIC or len(data) < 12:
-        return None
-    w, h, n = struct.unpack("<HHI", data[4:12])
-    need = n * h * w * 3
-    if w == 0 or h == 0 or n == 0 or len(data) < 12 + need:
-        return None
-    return np.frombuffer(data, np.uint8, need, 12).reshape(n, h, w, 3)
-
-
-VIDEO_KEYFRAMES_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("frame_idx", T.IntegerType()),
-    T.StructField("diff_energy", T.DoubleType()),
-    T.StructField("mean_rgb", T.ArrayType(T.DoubleType())),
-    T.StructField("frame_sha", T.StringType()),
-])
-
-
-def video_keyframes(
-    df: DataFrame, binary_col: str = "media", id_col: str = "doc_id",
-    threshold: float = 2.0,
-) -> DataFrame:
-    """Video -> keyframe rows via REAL scene-cut detection over the
-    RVID container: per-frame difference energy (mean |RGB delta| vs
-    the previous frame), a frame is a keyframe when its energy
-    exceeds ``threshold`` x the video's mean difference energy (frame
-    0 always is). Emits the frame's energy, mean color, and content
-    sha — fixed-size features, the raster dies inside the task.
-
-    ffmpeg-demuxed containers stay env-blocked; swapping a demuxer in
-    replaces _decode_rvid only, the cut detector and the Spark
-    plumbing (mapInPandas, Arrow batching, explode shape) are real
-    and container-agnostic. Non-RVID payloads are skipped."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, idxs, energies, rgbs, shas = [], [], [], [], []
-            for i, data in zip(pdf[id_col], pdf[binary_col]):
-                if data is None:
-                    continue
-                frames = _decode_rvid(bytes(data))
-                if frames is None:
-                    continue
-                f = frames.astype(np.float64)
-                # diff energy per frame (frame 0: vs itself = 0)
-                d = np.abs(np.diff(f, axis=0)).mean(axis=(1, 2, 3))
-                d = np.concatenate([[0.0], d])
-                cut = d > threshold * d.mean() if d.mean() > 0 \
-                    else np.zeros(len(d), dtype=bool)
-                cut[0] = True
-                for k in np.flatnonzero(cut):
-                    ids.append(i)
-                    idxs.append(int(k))
-                    energies.append(float(d[k]))
-                    rgbs.append(f[k].mean(axis=(0, 1)).tolist())
-                    shas.append(hashlib.sha256(
-                        frames[k].tobytes()).hexdigest()[:16])
-            if not ids:
-                continue  # empty float64 frames break Arrow list cols
-            yield pd.DataFrame({
-                "doc_id": ids, "frame_idx": idxs, "diff_energy": energies,
-                "mean_rgb": pd.Series(rgbs, dtype=object),
-                "frame_sha": shas,
-            })
-
-    return df.select(id_col, binary_col).mapInPandas(
-        run, VIDEO_KEYFRAMES_SCHEMA
-    )
-
-
-def frame_sample(
-    df: DataFrame, binary_col: str = "media", id_col: str = "doc_id",
-    every_n: int = 10,
-) -> DataFrame:
-    """Video -> sampled frame rows (explode pattern) for UNKNOWN
-    containers: the fallback cuts the byte stream into fixed
-    'frames'; for the RVID container use video_keyframes (real cut
-    detection). Output is one row per sampled frame — the relational
-    shape downstream vision stages want."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_sha", T.StringType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, shas = [], [], []
-            for i, data in zip(pdf[id_col], pdf[binary_col]):
-                if data is None:
-                    continue
-                b = bytes(data)
-                n_frames = max(1, len(b) // 64)
-                for f_idx in range(0, n_frames, every_n):
-                    chunk = b[f_idx * 64 : (f_idx + 1) * 64]
-                    ids.append(i)
-                    idxs.append(f_idx)
-                    shas.append(hashlib.sha256(chunk).hexdigest()[:16])
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame_sha": shas})
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema)
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("meta", T.StructType([
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("sample_width", T.IntegerType()),
-    ])),
-    T.StructField("features", T.StructType([
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("peak", T.DoubleType()),
-        T.StructField("zero_cross_rate", T.DoubleType()),
-    ])),
-])
-
-
-def decode_audio(
-    df: DataFrame, binary_col: str = "media", id_col: str = "doc_id"
-) -> DataFrame:
-    """binary WAV column -> (id, meta, signal features) via
-    mapInPandas. FULLY REAL for PCM WAV (stdlib ``wave`` + numpy):
-    channels/rate/frames from the container, RMS / peak /
-    zero-crossing-rate from the decoded samples. Non-WAV (or
-    non-PCM) rows -> NULL meta+features, the error branch — exactly
-    the fallible-parse contract of the text functions."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        def one(data: bytes):
-            try:
-                with wave.open(io.BytesIO(data)) as w:
-                    ch, sw, rate, nf = (
-                        w.getnchannels(), w.getsampwidth(),
-                        w.getframerate(), w.getnframes(),
-                    )
-                    raw = w.readframes(nf)
-            except Exception:
-                return None, None
-            meta = {
-                "channels": ch, "sample_rate": rate, "n_frames": nf,
-                "duration_ms": (nf * 1000) // rate if rate else 0,
-                "sample_width": sw,
-            }
-            dtype = {1: np.uint8, 2: np.int16, 4: np.int32}.get(sw)
-            if dtype is None or nf == 0:
-                return meta, None
-            x = np.frombuffer(raw, dtype=dtype).astype(np.float64)
-            if sw == 1:
-                # 8-bit PCM WAV is UNSIGNED, centered at 128 (digital
-                # silence = 128, not 0) — recenter before scaling
-                x = x - 128.0
-            scale = float(2 ** (8 * sw - 1))
-            x = x / scale
-            feats = {
-                "rms": float(np.sqrt(np.mean(x * x))),
-                "peak": float(np.max(np.abs(x))),
-                "zero_cross_rate": float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))),
-            }
-            return meta, feats
-
-        for pdf in batches:
-            metas, featss = [], []
-            for data in pdf[binary_col]:
-                if data is None:
-                    metas.append(None)
-                    featss.append(None)
-                else:
-                    m, f = one(bytes(data))
-                    metas.append(m)
-                    featss.append(f)
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "meta": metas, "features": featss}
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(run, AUDIO_FEATURES_SCHEMA)

@@ -1,4 +1,4 @@
-"""Seeded global shuffle + fixed-size shard assignment/writer — the
+"""Seeded global shuffle + fixed-size shard assignment — the
 last step of a training-data pipeline (reference: vector's sharded
 file sink semantics; the permutation itself is standard LLM-pretraining
 corpus assembly, not a reference operator).
@@ -158,45 +158,3 @@ def shard_assign(
             "shard_pos", F.row_number().over(w_shard).cast("long")
         )
     return placed.drop("_bucket", "_tok", "_off_tok", "_start")
-
-
-def write_shards(
-    df: DataFrame,
-    path: str,
-    shard_col: str = "shard_id",
-    order_cols: tuple[str, ...] | None = None,
-    format: str = "parquet",
-    *,
-    id_col: str | None = None,
-) -> None:
-    """Write one file per shard under ``path`` (dirs ``shard_id=N``).
-
-    ``repartition(shard_col)`` puts each shard wholly in one task, so
-    the partitioned write emits exactly one file per shard;
-    ``sortWithinPartitions`` fixes the in-file row order to the
-    permutation — (perm_key, id) by default, the SAME tie-break as
-    shard_pos, so file offset == shard_pos - 1 even when two docs
-    collide on perm_key (expected for xxh64 around 2^32 docs). Shard
-    count scales the write width — at 100 TB the shards ARE the
-    parallelism, no further tuning needed.
-    """
-    if order_cols is None:
-        if id_col is not None:
-            # explicit id: missing column is a LOUD analysis error
-            order_cols = ("perm_key", id_col)
-        else:
-            # default probes the conventional doc_id; a frame sharded
-            # under a different id should pass id_col (or order_cols)
-            # so the in-file tie-break matches its shard_pos ranking
-            order_cols = (
-                ("perm_key", "doc_id") if "doc_id" in df.columns
-                else ("perm_key",)
-            )
-    (
-        df.repartition(F.col(shard_col))
-        .sortWithinPartitions(shard_col, *order_cols)
-        .write.mode("overwrite")
-        .partitionBy(shard_col)
-        .format(format)
-        .save(path)
-    )

@@ -1,16 +1,13 @@
 """Explicit skew handling (north_rule: "partitioning / shuffle / skew
 handled explicitly").
 
-Two levers, composable with AQE's runtime skew splitting:
-
-- ``salted_agg``: two-phase aggregation for skewed group keys. Phase 1
-  aggregates on (key, salt) — the hot key fans out over ``salt_buckets``
-  reducers; phase 2 merges the partials on key alone. Phase 2 moves
-  only ``buckets`` rows per key, so the hot key can no longer pin a
-  single reducer. Works for any algebraic aggregate (sum/count/min/
-  max; avg via sum+count).
-- ``salted_repartition``: spread a skewed write/join key over
-  key+salt partitions.
+``salted_agg``, composable with AQE's runtime skew splitting, is
+two-phase aggregation for skewed group keys. Phase 1 aggregates on
+(key, salt) — the hot key fans out over ``salt_buckets`` reducers;
+phase 2 merges the partials on key alone. Phase 2 moves only
+``buckets`` rows per key, so the hot key can no longer pin a single
+reducer. Works for any algebraic aggregate (sum/count/min/max; avg via
+sum+count).
 
 The pages host distribution is the test skew: 40% of rows share one
 host (sources/pages.py)."""
@@ -19,16 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def with_salt(df: DataFrame, buckets: int, salt_col: str = "_salt") -> DataFrame:
-    """Deterministic row salt in [0, buckets) — hash of the whole row's
-    monotonically increasing id is NOT deterministic across runs, so we
-    salt from a stable column hash when available; callers needing
-    strict determinism pass their own salt expression."""
-    return df.withColumn(
-        salt_col, (F.spark_partition_id() * 1000 + F.monotonically_increasing_id()) % buckets
-    )
 
 
 def salted_agg(
@@ -69,23 +56,3 @@ def salted_agg(
             raise ValueError(f"non-algebraic aggregate {fn!r} can't be salted")
     phase1 = df.withColumn("_salt", salt).groupBy(*key_cols, "_salt").agg(*partial_aggs)
     return phase1.groupBy(*key_cols).agg(*final_aggs)
-
-
-def salted_repartition(df: DataFrame, key_col: str, buckets: int = 16) -> DataFrame:
-    """Repartition a skewed key over (key, salt) — downstream
-    per-partition work sees bounded partition sizes."""
-    salt = F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(buckets))
-    return df.withColumn("_salt", salt).repartition(F.col(key_col), F.col("_salt"))
-
-
-def top_keys(df: DataFrame, key_col: str, n: int = 10) -> DataFrame:
-    """Diagnostic: the hottest keys and their share (drives the choice
-    of bucket count)."""
-    total = df.count()
-    return (
-        df.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .withColumn("share", F.round(F.col("rows") / total, 4))
-        .orderBy(F.col("rows").desc())
-        .limit(n)
-    )
