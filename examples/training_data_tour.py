@@ -26,11 +26,8 @@ def main() -> None:
         ["doc_id", "text"],
     )
 
-    # --- exact + near dedup -------------------------------------------
+    # --- near dedup ---------------------------------------------------
     from vrl_spark.operators import dedup
-
-    print("== exact dedup (hash-groupBy) ==")
-    dedup.exact_dedup(docs).show(truncate=False)
 
     print("== minhash-LSH near-dup pairs (engine xxhash64 path) ==")
     dedup.minhash_dedup_pairs(docs, threshold=0.5, engine="xxh").show()
@@ -125,10 +122,6 @@ def main() -> None:
     ).show(truncate=False)
 
     # --- round-4 additions ----------------------------------------------
-    from vrl_spark.operators.clustering import kmeans
-    from vrl_spark.operators.similarity import (
-        quantize_embedding, quantized_cosine,
-    )
     from vrl_spark.operators.textstats import span_dedup
 
     print("== cross-doc duplicated-span removal (ngram=3) ==")
@@ -139,22 +132,6 @@ def main() -> None:
         ["doc_id", "text"],
     )
     span_dedup(span_docs, ngram=3).show(truncate=False)
-
-    print("== k-means over embeddings (k=2, spherical) ==")
-    emb = spark.createDataFrame(
-        [(1, [9.0, 0.5]), (2, [5.0, 0.1]), (3, [0.2, 7.0]), (4, [0.0, 2.0])],
-        "vec_id bigint, embedding array<float>",
-    )
-    kmeans(emb, k=2, iterations=5, spherical=True).show()
-
-    print("== int8 quantization + scale-free cosine ==")
-    q = emb.select("vec_id", quantize_embedding(F.col("embedding")).alias("qe"))
-    q.alias("a").join(q.alias("b"), F.col("a.vec_id") < F.col("b.vec_id")).select(
-        F.col("a.vec_id").alias("a"), F.col("b.vec_id").alias("b"),
-        F.round(quantized_cosine(
-            F.col("a.qe").getField("q"), F.col("b.qe").getField("q")
-        ), 4).alias("cos_int8"),
-    ).show()
 
     spark.stop()
 

@@ -77,10 +77,10 @@ def main() -> int:
 
     spark = get_spark("vrl_spark_pipeline", master=args.master)
 
-    run = CheckpointedRun(os.path.join(args.output, "routed"))
+    run = CheckpointedRun(os.path.join(args.output, "routed"), **LINEAGE)
     if args.verify:
         # reads only the landed sink and its manifest: no input, no plan
-        results = run.verify(spark, **LINEAGE)
+        results = run.verify(spark)
         bad = [r for r in results if not r["ok"]]
         print(json.dumps({
             "partitions_audited": len(results),
@@ -111,7 +111,7 @@ def main() -> int:
     )
     # manifest rows carry bytes + the order-independent xxh64 content
     # fingerprint: a resumed run re-certifies identical partitions
-    summary = run.run(spark, routed, hours, **LINEAGE)
+    summary = run.run(spark, routed, hours)
 
     # per-sink aggregates over what landed (idempotent overwrite)
     agg = weblog.aggregate_stage(

@@ -90,19 +90,12 @@ def test_bucket_labels_match_quantile_cont(tiny):
 
 
 def test_partitioning_invariance(spark):
-    rows = [(i, f"tok{i % 7} tok{(i * 3) % 7} tok{i % 5} end") for i in range(60)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    a = bigram_perplexity(df).collect()
-    b = bigram_perplexity(df.repartition(13, "doc_id")).collect()
+    rows = [(i, f"tok{i % 7} tok{(i * 3) % 7} tok{i % 5} end", True)
+            for i in range(60)]
+    df = spark.createDataFrame(rows, ["doc_id", "text", "tr"])
+    a = bigram_perplexity(df, "tr").collect()
+    b = bigram_perplexity(df.repartition(13, "doc_id"), "tr").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_train_none_means_all_docs(spark):
-    df = spark.createDataFrame(
-        [(1, "x y", True), (2, "y x", False)], ["doc_id", "text", "tr"]
-    )
-    out = bigram_perplexity(df).collect()
-    assert all(r.lm_is_train for r in out)
 
 
 def test_empty_train_subset_raises(spark):
@@ -114,21 +107,13 @@ def test_empty_train_subset_raises(spark):
 
 
 def test_param_validation(spark):
-    df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
+    df = spark.createDataFrame([(1, "a", True)], ["doc_id", "text", "tr"])
     with pytest.raises(ValueError):
-        bigram_perplexity(df, discount=0.0)
+        bigram_perplexity(df, "tr", discount=0.0)
     with pytest.raises(ValueError):
-        bigram_perplexity(df, bucket_quantiles=(0.0, 0.7))
+        bigram_perplexity(df, "tr", bucket_quantiles=(0.0, 0.7))
     with pytest.raises(ValueError):
-        bigram_perplexity(df, bucket_quantiles=(0.8, 0.2))
-
-
-def test_approx_thresholds_path_runs(spark):
-    rows = [(i, f"w{i % 4} w{(i + 1) % 4}") for i in range(40)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = bigram_perplexity(df, exact_thresholds=False).collect()
-    assert len(out) == 40
-    assert {r.lm_bucket for r in out} <= {"head", "middle", "tail"}
+        bigram_perplexity(df, "tr", bucket_quantiles=(0.8, 0.2))
 
 
 def _py_bigram_lm(rows, train_ids, D=0.75):

@@ -1,6 +1,6 @@
 """Bloom-filter incremental dedup: the no-false-negative property,
-forced false positives, engine parity, and a brute-force python
-reference for the bit layout."""
+forced false positives, and a brute-force python reference for the
+bit layout."""
 
 from __future__ import annotations
 
@@ -33,7 +33,7 @@ def test_bloom_build_matches_python_reference(spark):
     got = {
         r.word_idx: r.word
         for r in bloom.bloom_build(
-            df, "k", n_bits=1024, k=3, engine="md5"
+            df, "k", n_bits=1024, k=3
         ).collect()
     }
     assert got == _py_bloom_words(keys, 1024, 3)
@@ -50,7 +50,7 @@ def test_no_false_negatives_and_fp_resolution(spark):
         ["k"],
     )
     out = bloom.incremental_dedup(
-        base, incoming, "k", n_bits=1 << 14, k=5, engine="xxh"
+        base, incoming, "k", n_bits=1 << 14, k=5
     ).collect()
     fates = {r.k: (r.bloom_hit, r.incr_fate) for r in out}
     assert len(fates) == 100
@@ -76,7 +76,7 @@ def test_forced_false_positives_with_tiny_filter(spark):
     out = {
         r.k: (r.bloom_hit, r.incr_fate)
         for r in bloom.incremental_dedup(
-            base, incoming, "k", n_bits=64, k=2, engine="md5"
+            base, incoming, "k", n_bits=64, k=2
         ).collect()
     }
     assert out["b-0"] == (True, "dup")
@@ -84,34 +84,16 @@ def test_forced_false_positives_with_tiny_filter(spark):
     assert out["nope-2"] == (True, "fp")
 
 
-def test_prebuilt_filter_reuse_matches_inline_build(spark):
-    base = spark.createDataFrame([(f"b-{i}",) for i in range(80)], ["k"])
-    incoming = spark.createDataFrame(
-        [("b-3",), ("x-1",), ("b-7",)], ["k"]
-    )
-    words = bloom.bloom_build(
-        base.select("k").distinct(), "k", n_bits=4096, k=4, engine="xxh"
-    ).localCheckpoint()  # a stored, reused filter
-    a = bloom.incremental_dedup(
-        base, incoming, "k", n_bits=4096, k=4, engine="xxh"
-    )
-    b = bloom.incremental_dedup(
-        base, incoming, "k", n_bits=4096, k=4, engine="xxh",
-        bloom_words=words,
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_membership_treats_missing_words_as_zero(spark):
     words = bloom.bloom_build(
         spark.createDataFrame([("only",)], ["k"]), "k",
-        n_bits=1 << 14, k=5, engine="xxh",
+        n_bits=1 << 14, k=5,
     )
     keys = spark.createDataFrame([("only",), ("absent",)], ["k"])
     got = {
         r.k: r.bloom_hit
         for r in bloom.bloom_membership(
-            keys, words, "k", n_bits=1 << 14, k=5, engine="xxh"
+            keys, words, "k", n_bits=1 << 14, k=5
         ).collect()
     }
     assert got["only"] is True
@@ -125,8 +107,6 @@ def test_positions_validate_params(spark):
         bloom.bloom_positions(F.col("k"), 1 << 14, 0)
     with pytest.raises(ValueError):
         bloom.bloom_positions(F.col("k"), 16, 3)
-    with pytest.raises(ValueError):
-        bloom.bloom_positions(F.col("k"), 1 << 14, 3, engine="sha9")
 
 
 def test_null_keys_dropped_everywhere(spark):
@@ -136,7 +116,7 @@ def test_null_keys_dropped_everywhere(spark):
     inc = spark.createDataFrame(
         [("a",), ("b",), (None,)], "k string"
     )
-    words = bloom.bloom_build(base, "k", n_bits=1024, k=3, engine="md5")
+    words = bloom.bloom_build(base, "k", n_bits=1024, k=3)
     # NULL contributes no bits (order-insensitive compare: groupBy
     # output order is not guaranteed)
     assert sorted(map(tuple, words.collect())) == sorted(
@@ -144,15 +124,15 @@ def test_null_keys_dropped_everywhere(spark):
             tuple,
             bloom.bloom_build(
                 base.where("k is not null"), "k",
-                n_bits=1024, k=3, engine="md5",
+                n_bits=1024, k=3,
             ).collect(),
         )
     )
     # membership and incremental_dedup emit no row for NULL keys
-    m = bloom.bloom_membership(inc, words, "k", 1024, 3, "md5")
+    m = bloom.bloom_membership(inc, words, "k", 1024, 3)
     assert {r.k for r in m.collect()} == {"a", "b"}
     fates = bloom.incremental_dedup(
-        base, inc, "k", n_bits=1024, k=3, engine="md5"
+        base, inc, "k", n_bits=1024, k=3
     )
     assert {r.k: r.incr_fate for r in fates.collect()}.get("a") == "dup"
     assert None not in {r.k for r in fates.collect()}

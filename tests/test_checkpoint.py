@@ -15,13 +15,18 @@ from vrl_spark.operators.checkpoint import CheckpointedRun, read_output
 
 def make_df(spark):
     return spark.range(100).select(
-        F.col("id"), (F.col("id") % 4).alias("part"), (F.col("id") * 2).alias("v")
+        F.col("id"), (F.col("id") % 4).alias("part"), (F.col("id") * 2).alias("v"),
+        F.concat(F.lit("row-"), F.col("id")).alias("txt"),
     )
+
+
+def new_run(path, payload_col="txt", fp_cols=("id", "v", "txt")):
+    return CheckpointedRun(str(path), payload_col, list(fp_cols))
 
 
 def test_full_run_then_resume_noop(spark, tmp_path):
     df = make_df(spark)
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out")
     summary = run.run(spark, df, [0, 1, 2, 3])
     assert summary["partitions_ran"] == 4
     assert summary["rows_written"] == 100
@@ -35,7 +40,7 @@ def test_full_run_then_resume_noop(spark, tmp_path):
 
 def test_crash_resume_reprocesses_only_missing(spark, tmp_path):
     df = make_df(spark)
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out")
     # simulate a run that died after 2 partitions
     run.run_partition(spark, df, [0, 1])
     # a crashed partition: data written but manifest missing
@@ -55,7 +60,7 @@ def test_empty_manifest_dir_resumes_cleanly(spark, tmp_path):
     dir exists but holds zero *.json files (possibly a torn .tmp) —
     committed_keys must return empty, not raise."""
     df = make_df(spark)
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out")
     os.makedirs(run.manifest_dir, exist_ok=True)
     with open(os.path.join(run.manifest_dir, ".0.json.tmp"), "w") as f:
         f.write('{"part_key": "0"')  # torn write, not committed
@@ -67,7 +72,7 @@ def test_empty_manifest_dir_resumes_cleanly(spark, tmp_path):
 
 def test_manifest_metrics(spark, tmp_path):
     df = make_df(spark)
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out")
     [m] = run.run_partition(spark, df, [0])
     assert m["rows"] == 25
     committed = run.committed_keys()
@@ -75,15 +80,15 @@ def test_manifest_metrics(spark, tmp_path):
 
 
 def test_manifest_lineage_fingerprint(spark, tmp_path):
-    """Opt-in bytes + fingerprint land in the manifest; the
+    """Payload bytes + fingerprint land in the manifest; the
     fingerprint is order-independent and re-run-stable, and matches
     an independent lineage_metrics() recompute over the output."""
     from vrl_spark.operators.checkpoint import lineage_metrics
 
-    df = make_df(spark).withColumn("txt", F.concat(F.lit("row-"), F.col("id")))
-    run = CheckpointedRun(str(tmp_path / "out"))
+    df = make_df(spark)
+    run = new_run(tmp_path / "out")
     [m] = run.run_partition(
-        spark, df, [0], payload_col="txt", fp_cols=["id", "v", "txt"]
+        spark, df, [0]
     )
     assert m["rows"] == 25
     # payload bytes: ids 0,4,...,96 → 'row-0'..'row-96' (5 or 6 chars)
@@ -98,17 +103,17 @@ def test_manifest_lineage_fingerprint(spark, tmp_path):
     assert lm["fingerprint"] == m["fingerprint"]
     assert lm["n_bytes"] == m["bytes"]
     # order-independence: shuffled input, same partition content
-    [m2] = CheckpointedRun(str(tmp_path / "out2")).run_partition(
+    [m2] = new_run(tmp_path / "out2").run_partition(
         spark, df.repartition(7).sortWithinPartitions(F.col("v").desc()),
-        [0], payload_col="txt", fp_cols=["id", "v", "txt"],
+        [0],
     )
     assert m2["fingerprint"] == m["fingerprint"]
     # sensitivity: a single changed row flips the fingerprint
     df3 = df.withColumn(
         "v", F.when(F.col("id") == 4, F.lit(999)).otherwise(F.col("v"))
     )
-    [m3] = CheckpointedRun(str(tmp_path / "out3")).run_partition(
-        spark, df3, [0], payload_col="txt", fp_cols=["id", "v", "txt"]
+    [m3] = new_run(tmp_path / "out3").run_partition(
+        spark, df3, [0]
     )
     assert m3["fingerprint"] != m["fingerprint"]
     # duplicate-pair sensitivity (the reason the fold is a modular
@@ -116,8 +121,8 @@ def test_manifest_lineage_fingerprint(spark, tmp_path):
     # identical copies of a row must change the fingerprint
     dup_rows = df.where(F.col("id") == 4)
     df4 = df.union(dup_rows).union(dup_rows)
-    [m4] = CheckpointedRun(str(tmp_path / "out4")).run_partition(
-        spark, df4, [0], payload_col="txt", fp_cols=["id", "v", "txt"]
+    [m4] = new_run(tmp_path / "out4").run_partition(
+        spark, df4, [0]
     )
     assert m4["rows"] == 27
     assert m4["fingerprint"] != m["fingerprint"]
@@ -128,10 +133,10 @@ def test_verify_recertifies_partitions(spark, tmp_path):
     whose data was tampered with after its manifest committed."""
     import shutil
 
-    df = make_df(spark).withColumn("txt", F.concat(F.lit("row-"), F.col("id")))
-    run = CheckpointedRun(str(tmp_path / "out"))
-    run.run(spark, df, [0, 1], payload_col="txt", fp_cols=["id", "v", "txt"])
-    ok = run.verify(spark, payload_col="txt", fp_cols=["id", "v", "txt"])
+    df = make_df(spark)
+    run = new_run(tmp_path / "out")
+    run.run(spark, df, [0, 1])
+    ok = run.verify(spark)
     assert [r["ok"] for r in ok] == [True, True]
     # tamper: swap partition 1's data for partition 0's rows
     p0 = os.path.join(run.out_dir, "part=0")
@@ -139,21 +144,21 @@ def test_verify_recertifies_partitions(spark, tmp_path):
     shutil.rmtree(p1)
     shutil.copytree(p0, p1)
     res = {r["part_key"]: r["ok"] for r in run.verify(
-        spark, payload_col="txt", fp_cols=["id", "v", "txt"]
+        spark
     )}
     assert res == {"0": True, "1": False}
     # deletion (the most basic tamper): the audit reports it and
     # still certifies the intact partition instead of crashing
     shutil.rmtree(p1)
     res2 = {r["part_key"]: r for r in run.verify(
-        spark, payload_col="txt", fp_cols=["id", "v", "txt"]
+        spark
     )}
     assert res2["0"]["ok"] is True
     assert res2["1"]["ok"] is False and "error" in res2["1"]
     # payload tampering alone (fingerprint cols unchanged) is caught
     # by the byte comparison
-    run3 = CheckpointedRun(str(tmp_path / "out5"))
-    run3.run_partition(spark, df, 0, payload_col="txt", fp_cols=["id"])
+    run3 = new_run(tmp_path / "out5", fp_cols=["id"])
+    run3.run_partition(spark, df, [0])
     df_t = df.withColumn(
         "txt", F.when(F.col("id") == 4, F.lit("TAMPERED-LONGER"))
         .otherwise(F.col("txt"))
@@ -161,7 +166,7 @@ def test_verify_recertifies_partitions(spark, tmp_path):
     df_t.where(F.col("part") == 0).write.mode("overwrite").parquet(
         os.path.join(run3.out_dir, "part=0")
     )
-    v3 = run3.verify(spark, payload_col="txt", fp_cols=["id"])[0]
+    v3 = run3.verify(spark)[0]
     assert v3["ok"] is False
     assert v3["bytes_actual"] != v3["bytes_expected"]
 
@@ -182,9 +187,8 @@ def test_one_pass_manifest_matches_per_key_lineage(spark, tmp_path, monkeypatch)
         F.concat(F.lit("row-"), F.col("id")).alias("txt"),
     )
     keys = ["000", "001", "002", "007"]
-    run = CheckpointedRun(str(tmp_path / "out"))
-    lineage = dict(payload_col="txt", fp_cols=["id", "txt"])
-    committed = {m["part_key"]: m for m in run.run_partition(spark, df, keys, **lineage)}
+    run = new_run(tmp_path / "out", fp_cols=["id", "txt"])
+    committed = {m["part_key"]: m for m in run.run_partition(spark, df, keys)}
     assert sorted(os.listdir(run.manifest_dir)) == [f"{k}.json" for k in keys]
     assert run.committed_keys() == set(keys)
     out = read_output(spark, run.out_dir)
@@ -200,13 +204,13 @@ def test_one_pass_manifest_matches_per_key_lineage(spark, tmp_path, monkeypatch)
             lm["n_rows"], lm["n_bytes"], lm["fingerprint"])
         assert m["rows"] == 30
     assert committed["007"]["rows"] == 0
-    assert all(r["ok"] for r in run.verify(spark, **lineage))
+    assert all(r["ok"] for r in run.verify(spark))
 
     def no_write(*args, **kwargs):
         raise AssertionError("a resume with nothing pending wrote data")
 
     monkeypatch.setattr(DataFrameWriter, "parquet", no_write)
-    summary = run.run(spark, df, keys, **lineage)
+    summary = run.run(spark, df, keys)
     assert summary["partitions_ran"] == 0 and summary["partitions_skipped"] == 4
 
 
@@ -217,7 +221,7 @@ def test_resume_overwrites_only_pending_partitions(spark, tmp_path):
     conf_key = "spark.sql.sources.partitionOverwriteMode"
     conf_before = spark.conf.get(conf_key)
     df = make_df(spark)
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out")
     run.run(spark, df, [0, 1, 2, 3])
     os.remove(os.path.join(run.manifest_dir, "2.json"))  # crashed partition
 
@@ -250,7 +254,7 @@ def test_manifest_read_on_driver(spark, tmp_path, jobs_of):
     Spark job, and a torn ``.<key>.json.tmp`` beside committed rows is
     not a commit."""
     df = make_df(spark)
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out")
     run.run_partition(spark, df, [0, 1])
     with open(os.path.join(run.manifest_dir, ".2.json.tmp"), "w") as f:
         f.write('{"part_key": "2"')
@@ -266,7 +270,7 @@ def test_manifest_read_on_driver(spark, tmp_path, jobs_of):
 def test_corrupt_manifest_row_raises_and_names_the_file(spark, tmp_path, text, why):
     """A committed file that is not a manifest row is an error, not a
     pending hour (read as a NULL key it would silently re-run)."""
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out")
     run.run_partition(spark, make_df(spark), [0, 1])
     with open(os.path.join(run.manifest_dir, "2.json"), "w") as f:
         f.write(text)
@@ -287,7 +291,7 @@ def test_read_output_with_recorded_schema(spark, tmp_path, jobs_of):
         F.col("id"),
         F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
     )
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out", payload_col="part", fp_cols=["id"])
     keys = ["000", "007", "014"]
     rows = run.run_partition(spark, df, keys)
     [recorded] = {m["schema"] for m in rows}
@@ -302,7 +306,7 @@ def test_read_output_with_recorded_schema(spark, tmp_path, jobs_of):
     assert sorted(given.collect()) == sorted(inferred.collect())
     assert {r["part"] for r in given.select("part").distinct().collect()} == set(keys)
     # an int partition column in the written frame reads back as string
-    ints = CheckpointedRun(str(tmp_path / "ints"))
+    ints = new_run(tmp_path / "ints")
     ints.run_partition(spark, make_df(spark), [0, 1, 2, 3])
     got = read_output(spark, ints.out_dir, schema=make_df(spark).schema)
     assert got.schema == read_output(spark, ints.out_dir).schema
@@ -317,7 +321,7 @@ def test_read_output_without_keys_lists_partitions(spark, tmp_path, monkeypatch)
     from pyspark.sql.readwriter import DataFrameReader
 
     df = make_df(spark)
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out")
     run.run(spark, df, [0, 1, 2])
     read_paths = []
     parquet = DataFrameReader.parquet
@@ -341,10 +345,9 @@ def test_verify_infers_schema_without_an_agreed_one(spark, tmp_path, monkeypatch
     """verify reads the sink with the schema its rows agree on; a row
     written without one (before rows carried it), or rows that
     disagree, make it infer the schema, and the audit still passes."""
-    df = make_df(spark).withColumn("txt", F.concat(F.lit("row-"), F.col("id")))
-    lineage = dict(payload_col="txt", fp_cols=["id", "v", "txt"])
-    run = CheckpointedRun(str(tmp_path / "out"))
-    run.run(spark, df, [0, 1, 2], **lineage)
+    df = make_df(spark)
+    run = new_run(tmp_path / "out")
+    run.run(spark, df, [0, 1, 2])
     schemas = []
     read = checkpoint.read_output
 
@@ -356,7 +359,7 @@ def test_verify_infers_schema_without_an_agreed_one(spark, tmp_path, monkeypatch
 
     def audit():
         schemas.clear()
-        assert [r["ok"] for r in run.verify(spark, **lineage)] == [True] * 3
+        assert [r["ok"] for r in run.verify(spark)] == [True] * 3
         return schemas
 
     assert audit() == [df.schema]
@@ -371,7 +374,7 @@ def test_verify_reports_misfiled_manifest_row(spark, tmp_path):
     """A manifest file whose part_key is not its file name is reported
     by verify (not a FileNotFoundError), and the other rows are still
     audited."""
-    run = CheckpointedRun(str(tmp_path / "out"))
+    run = new_run(tmp_path / "out")
     run.run_partition(spark, make_df(spark), [0, 1])
     os.rename(os.path.join(run.manifest_dir, "1.json"),
               os.path.join(run.manifest_dir, "5.json"))

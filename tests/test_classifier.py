@@ -14,7 +14,7 @@ from vrl_spark.operators import classifier
 
 
 # ---------------------------------------------------------------------
-# NumPy mirror (md5 engine, the oracle-portable hash)
+# NumPy mirror (the md5 bucket hash, oracle-portable)
 # ---------------------------------------------------------------------
 
 def _bucket_md5(g: str, d: int) -> int:
@@ -32,14 +32,14 @@ def _featurize_np(texts, d):
     return x
 
 
-def _train_np(x, y, epochs, lr, l2=0.0):
+def _train_np(x, y, epochs, lr):
     n, d = x.shape
     w = np.zeros(d)
     b = 0.0
     for _ in range(epochs):
         p = 1.0 / (1.0 + np.exp(-(x @ w + b)))
         r = p - y
-        w -= lr * ((x.T @ r) / n + l2 * w)
+        w -= lr * ((x.T @ r) / n)
         b -= lr * r.mean()
     return w, b
 
@@ -74,14 +74,14 @@ def test_training_matches_numpy(spark):
         [(i, t, y) for i, (t, y) in enumerate(zip(texts, labels))],
         "doc_id long, text string, label int",
     )
-    d, epochs, lr, l2 = 64, 5, 8.0, 0.01
+    d, epochs, lr = 64, 5, 8.0
 
-    feats = classifier.featurize(df, label_col="label", num_buckets=d, engine="md5")
-    weights = classifier.train_logistic(feats, num_buckets=d, epochs=epochs, lr=lr, l2=l2)
+    feats = classifier.featurize(df, label_col="label", num_buckets=d)
+    weights = classifier.train_logistic(feats, num_buckets=d, epochs=epochs, lr=lr)
     got = {r.bucket: r.weight for r in weights.collect()}
 
     x = _featurize_np(texts, d)
-    w_ref, b_ref = _train_np(x, np.array(labels, dtype=float), epochs, lr, l2)
+    w_ref, b_ref = _train_np(x, np.array(labels, dtype=float), epochs, lr)
     for b in range(d):
         assert got[b] == pytest.approx(w_ref[b], abs=1e-12)
     assert got[d] == pytest.approx(b_ref, abs=1e-12)
@@ -109,25 +109,6 @@ def test_learns_planted_separation(spark):
     assert acc == 1.0
 
 
-def test_engines_agree_on_ranking(spark):
-    # xxh and md5 hash differently, but both must learn the plant
-    texts, labels = _planted_corpus(60)
-    df = spark.createDataFrame(
-        [(i, t, int(y)) for i, (t, y) in enumerate(zip(texts, labels))],
-        "doc_id long, text string, label int",
-    )
-    labeled = df.where(F.col("doc_id") % 5 == 0)
-    for engine in ("xxh", "md5"):
-        out = classifier.quality_classifier(
-            df, labeled, num_buckets=256, epochs=10, lr=8.0, engine=engine
-        )
-        rows = {r.doc_id: r.prob for r in out.collect()}
-        acc = sum(
-            (rows[i] > 0.5) == bool(labels[i]) for i in range(60) if i % 5 != 0
-        ) / sum(1 for i in range(60) if i % 5 != 0)
-        assert acc == 1.0, engine
-
-
 def test_scoring_is_map_only(spark):
     texts, labels = _planted_corpus(20)
     df = spark.createDataFrame(
@@ -136,7 +117,7 @@ def test_scoring_is_map_only(spark):
     weights = spark.range(65).select(
         F.col("id").alias("bucket"), (F.col("id") * 0.01).alias("weight")
     )
-    feats = classifier.featurize(df, num_buckets=64, engine="md5")
+    feats = classifier.featurize(df, num_buckets=64)
     plan = classifier.score(feats, weights)._jdf.queryExecution().executedPlan().toString()
     # the weight-array fold aggregates the 65-row frame; the per-doc
     # scoring side must stay shuffle-free (broadcast only)
@@ -146,18 +127,12 @@ def test_scoring_is_map_only(spark):
 
 def test_validation_errors(spark):
     df = spark.createDataFrame([(0, "a b", 1)], "doc_id long, text string, label int")
-    feats = classifier.featurize(df, label_col="label", num_buckets=8, engine="md5")
+    feats = classifier.featurize(df, label_col="label", num_buckets=8)
     with pytest.raises(ValueError, match="epochs"):
         classifier.train_logistic(feats, num_buckets=8, epochs=0)
     empty = feats.where(F.lit(False))
     with pytest.raises(ValueError, match="non-empty"):
         classifier.train_logistic(empty, num_buckets=8, epochs=1)
-    # md5 lane is oracle-pinned seedless: an explicit seed must raise,
-    # not silently produce a seed-independent model
-    with pytest.raises(ValueError, match="seedless"):
-        classifier.featurize(
-            df, label_col="label", num_buckets=8, engine="md5", seed="s1"
-        )
 
 
 def test_score_sparse_weight_frame(spark):
@@ -169,8 +144,7 @@ def test_score_sparse_weight_frame(spark):
         [(0, "alpha beta", 1), (1, "gamma delta", 0)],
         "doc_id long, text string, label int",
     )
-    feats = classifier.featurize(df, label_col="label", num_buckets=16,
-                                 engine="md5")
+    feats = classifier.featurize(df, label_col="label", num_buckets=16)
     weights = classifier.train_logistic(feats, num_buckets=16, epochs=2)
     dense = {r["doc_id"]: r["prob"]
              for r in classifier.score(feats, weights).collect()}
@@ -195,14 +169,14 @@ def test_featurize_null_text(spark):
         [(0, None), (1, "real words here")], "doc_id long, text string"
     )
     rows = {r["doc_id"]: r for r in
-            classifier.featurize(df, num_buckets=8, engine="md5").collect()}
+            classifier.featurize(df, num_buckets=8).collect()}
     assert set(rows) == {1}
 
 
 def test_empty_text_features(spark):
     # empty text yields one '' unigram: total == 1, never divide-by-zero
     df = spark.createDataFrame([(0, ""), (1, "   ")], "doc_id long, text string")
-    feats = classifier.featurize(df, num_buckets=8, engine="md5").collect()
+    feats = classifier.featurize(df, num_buckets=8).collect()
     for r in feats:
         assert r.total == 1.0
         assert len(r.bks) == 1

@@ -19,7 +19,7 @@ B = 64  # bucket space for the tests
 
 
 def _ref_buckets(text: str) -> list[int]:
-    """Independent featurize reference: md5-engine hashed word
+    """Independent featurize reference: md5-hashed word
     unigrams + adjacent bigrams (classifier.ngram_buckets contract)."""
     toks = text.strip().lower().split() or [""]
     grams = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
@@ -72,13 +72,13 @@ def corpora(spark):
 
 def test_log_weights_match_reference(corpora, spark):
     target, raw, tgt_texts, raw_texts = corpora
-    w = dsir.dsir_fit(target, raw, num_buckets=B, engine="md5")
+    w = dsir.dsir_fit(target, raw, num_buckets=B)
     got_w = {r.bucket: r.weight for r in w.collect()}
     ref_w = _ref_weights(tgt_texts.values(), raw_texts.values())
     assert got_w[B] == 0.0  # bias row
     for b in range(B):
         assert got_w[b] == pytest.approx(ref_w[b], abs=1e-12)
-    scored = dsir.dsir_score(raw, w, num_buckets=B, engine="md5")
+    scored = dsir.dsir_score(raw, w, num_buckets=B)
     for r in scored.collect():
         want = sum(ref_w[b] for b in _ref_buckets(raw_texts[r.doc_id]))
         assert r.log_weight == pytest.approx(want, abs=1e-9)
@@ -86,15 +86,15 @@ def test_log_weights_match_reference(corpora, spark):
 
 def test_planted_separation_and_sample(corpora):
     target, raw, _, raw_texts = corpora
-    w = dsir.dsir_fit(target, raw, num_buckets=B, engine="md5")
+    w = dsir.dsir_fit(target, raw, num_buckets=B)
     scored = {
         r.doc_id: r.log_weight
-        for r in dsir.dsir_score(raw, w, num_buckets=B, engine="md5").collect()
+        for r in dsir.dsir_score(raw, w, num_buckets=B).collect()
     }
     ml = [v for k, v in scored.items() if (k - 100) % 5 == 0]
     web = [v for k, v in scored.items() if (k - 100) % 5 != 0]
     assert min(ml) > max(web)  # clean separation on the plant
-    picked = dsir.dsir_sample(raw, w, n=10, num_buckets=B, engine="md5")
+    picked = dsir.dsir_sample(raw, w, n=10, num_buckets=B)
     rows = picked.collect()
     assert len(rows) == 10
     assert len({r.doc_id for r in rows}) == 10  # without replacement
@@ -103,7 +103,7 @@ def test_planted_separation_and_sample(corpora):
     got_ml = sum(1 for r in rows if (r.doc_id - 100) % 5 == 0)
     assert got_ml >= 8
     # determinism: a second build is identical
-    again = dsir.dsir_sample(raw, w, n=10, num_buckets=B, engine="md5")
+    again = dsir.dsir_sample(raw, w, n=10, num_buckets=B)
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again.collect()))
     # rank follows key = log_weight + gumbel, recomputed locally
     def key(doc_id):
@@ -120,45 +120,43 @@ def test_planted_separation_and_sample(corpora):
 
 def test_n_overflow_returns_pool(corpora):
     target, raw, _, _ = corpora
-    w = dsir.dsir_fit(target, raw, num_buckets=B, engine="md5")
-    assert dsir.dsir_sample(raw, w, n=1000, num_buckets=B,
-                            engine="md5").count() == raw.count()
+    w = dsir.dsir_fit(target, raw, num_buckets=B)
+    assert dsir.dsir_sample(raw, w, n=1000,
+                            num_buckets=B).count() == raw.count()
 
 
 def test_precomputed_feats_identical_and_guarded(corpora, spark):
-    """The raw_feats/target_feats/feats escape hatches produce
+    """The raw_feats/feats escape hatches produce
     byte-identical results to the internal featurize path, and a
     frame hashed into a WIDER bucket space raises in-plan instead of
     silently dropping counts (fit) or reading 0.0 holes (score)."""
     from vrl_spark.operators.classifier import featurize
 
     target, raw, _, _ = corpora
-    rfeats = featurize(raw, num_buckets=B, engine="md5").localCheckpoint()
-    tfeats = featurize(target, num_buckets=B, engine="md5").localCheckpoint()
+    rfeats = featurize(raw, num_buckets=B).localCheckpoint()
     w_pre = dsir.dsir_fit(
-        target, raw, num_buckets=B, engine="md5",
-        raw_feats=rfeats, target_feats=tfeats,
+        target, raw, num_buckets=B, raw_feats=rfeats,
     )
-    w_int = dsir.dsir_fit(target, raw, num_buckets=B, engine="md5")
+    w_int = dsir.dsir_fit(target, raw, num_buckets=B)
     assert sorted(map(tuple, w_pre.collect())) == sorted(
         map(tuple, w_int.collect())
     )
     s_pre = dsir.dsir_sample(
-        raw, w_pre, n=10, num_buckets=B, engine="md5", feats=rfeats
+        raw, w_pre, n=10, num_buckets=B, feats=rfeats
     )
-    s_int = dsir.dsir_sample(raw, w_int, n=10, num_buckets=B, engine="md5")
+    s_int = dsir.dsir_sample(raw, w_int, n=10, num_buckets=B)
     assert sorted(map(tuple, s_pre.collect())) == sorted(
         map(tuple, s_int.collect())
     )
     # wider-space frame: both consumers fail loudly
-    wide = featurize(raw, num_buckets=B * 4, engine="md5").localCheckpoint()
+    wide = featurize(raw, num_buckets=B * 4).localCheckpoint()
     with pytest.raises(Exception, match="raw feature bucket.*outside"):
         dsir.dsir_fit(
-            target, raw, num_buckets=B, engine="md5", raw_feats=wide
+            target, raw, num_buckets=B, raw_feats=wide
         ).collect()
     with pytest.raises(Exception, match="outside"):
         dsir.dsir_score(
-            raw, w_int, num_buckets=B, engine="md5", feats=wide
+            raw, w_int, num_buckets=B, feats=wide
         ).collect()
     # NULL bucket ids in a hand-built frame: loud on both sides too
     # (a NULL comparison silently takes the otherwise branch unless
@@ -171,11 +169,11 @@ def test_precomputed_feats_identical_and_guarded(corpora, spark):
     ).localCheckpoint()
     with pytest.raises(Exception, match="NULL"):
         dsir.dsir_fit(
-            target, raw, num_buckets=B, engine="md5", raw_feats=nullish
+            target, raw, num_buckets=B, raw_feats=nullish
         ).collect()
     with pytest.raises(Exception, match="NULL or out-of-range"):
         dsir.dsir_score(
-            raw, w_int, num_buckets=B, engine="md5", feats=nullish
+            raw, w_int, num_buckets=B, feats=nullish
         ).collect()
 
 
@@ -185,14 +183,14 @@ def test_validation(corpora, spark):
         dsir.dsir_fit(target, raw, alpha=0.0)
     with pytest.raises(ValueError, match="num_buckets"):
         dsir.dsir_fit(target, raw, num_buckets=0)
-    w = dsir.dsir_fit(target, raw, num_buckets=B, engine="md5")
+    w = dsir.dsir_fit(target, raw, num_buckets=B)
     with pytest.raises(ValueError, match="n must be positive"):
-        dsir.dsir_sample(raw, w, n=0, num_buckets=B, engine="md5")
+        dsir.dsir_sample(raw, w, n=0, num_buckets=B)
     # empty target raises IN-PLAN at first action, not silently NULL
     empty = spark.createDataFrame([], "doc_id long, text string")
-    lazy = dsir.dsir_fit(empty, raw, num_buckets=B, engine="md5")
+    lazy = dsir.dsir_fit(empty, raw, num_buckets=B)
     with pytest.raises(Exception, match="empty target or raw"):
         lazy.collect()
     # bucket-space mismatch fails loudly in the scoring fold
     with pytest.raises(Exception, match="bucket"):
-        dsir.dsir_score(raw, w, num_buckets=B * 2, engine="md5").collect()
+        dsir.dsir_score(raw, w, num_buckets=B * 2).collect()

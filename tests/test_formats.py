@@ -373,37 +373,3 @@ def test_zstd_truncated_rle_literals_raise_not_crash():
     frame_raw = frame[:-1] + b"\x18"
     with pytest.raises(ZstdError):
         zstd_decompress(frame_raw)
-
-
-def test_zstd_jvm_engine_parity(spark):
-    """engine="jvm" (zstd-jni via the captured driver gateway) is
-    semantically identical to the pure-Python engine: both round-trip,
-    each engine's frames decode under the OTHER engine, and malformed
-    input still routes to NULL."""
-    payload = "jvm-lowered zstd lane " * 50
-    df = spark.range(4).select(
-        "id",
-        F.when(F.col("id") < 3, F.lit(payload)).otherwise(F.lit(None))
-        .cast("string").alias("t"),
-    )
-    got = df.select(
-        "id",
-        FM.decode_zstd(FM.encode_zstd(F.col("t"), engine="jvm"),
-                       engine="jvm").cast("string").alias("jj"),
-        FM.decode_zstd(FM.encode_zstd(F.col("t"), engine="jvm"))
-        .cast("string").alias("jp"),
-        FM.decode_zstd(FM.encode_zstd(F.col("t")), engine="jvm")
-        .cast("string").alias("pj"),
-    ).orderBy("id").collect()
-    for r in got[:3]:
-        assert r["jj"] == r["jp"] == r["pj"] == payload
-    assert got[3]["jj"] is None and got[3]["pj"] is None
-    # malformed frame -> NULL on the jvm lane too (falls through both)
-    bad = spark.sql("SELECT X'28b52ffd00ff' AS c")
-    assert bad.select(
-        FM.decode_zstd(F.col("c"), engine="jvm").alias("p")
-    ).collect()[0]["p"] is None
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown zstd engine"):
-        FM.encode_zstd(F.col("c"), engine="rust")

@@ -198,11 +198,16 @@ def test_every_engine_module_is_reachable():
 
 
 # Function-level reachability. Top-level defs, classes and constants of
-# vrl_spark that nothing live names are deleted, not maintained; the
-# few kept anyway are listed with their reason.
+# vrl_spark that no live code refers to are deleted, not maintained;
+# the few kept anyway are listed with their reason.
 _KEPT_UNREACHABLE_FUNCTIONS = {
-    "vrl_spark.operators.similarity.dequantize_embedding":
-        "the checker tests use for quantize_embedding's error bound",
+    "vrl_spark.operators.dedup.minhash_signature":
+        "the JVM-fold reference minhash_signature_md5_batched is tested "
+        "against",
+    "vrl_spark.operators.dedup.simhash_bits_md5":
+        "the string-vote reference simhash64_batched is tested against",
+    "vrl_spark.operators.similarity.brute_force_topk":
+        "the exact top-k the ANN recall tests compare against",
     "vrl_spark.plans.weblog.write_sinks":
         "the north rule's per-route fan-out write, which run_pipeline.py "
         "does not do",
@@ -251,74 +256,358 @@ def _is_seed(module, stmt):
             and not stmt.name.startswith("_"))
 
 
-def _reach(units, words):
-    """Grow ``words`` (identifiers named by live text) to a fixpoint: a
-    unit is live once its name is among them, and its text then adds
-    its own. Returns the live units."""
-    live, grew = set(), True
-    while grew:
-        grew = False
-        for name, text in units.items():
-            if name not in live and name.rpartition(".")[2] in words:
-                live.add(name)
-                words |= text
-                grew = True
+def _source_trees(root):
+    """Dotted name -> parsed ast for every vrl_spark module and every
+    live caller."""
+    import ast
+    import glob
+    import os
+
+    files = _module_files(root)
+    for pattern in _LIVE_CALLERS:
+        for path in glob.glob(os.path.join(root, pattern), recursive=True):
+            parts = os.path.relpath(path, root)[:-3].split(os.sep)
+            if parts[-1] == "__init__":
+                parts.pop()
+            files[".".join(parts)] = path
+    trees = {}
+    for module, path in files.items():
+        with open(path) as fh:
+            trees[module] = ast.parse(fh.read(), path)
+    return trees
+
+
+def _resolver(trees):
+    """``resolve(module, expr)``: the dotted name that a Name or
+    ``a.b`` expression of ``module`` refers to, followed through
+    imports and re-exports; None for a local or a builtin. Imports at
+    any depth bind module-wide, so a function-level import counts too."""
+    import ast
+
+    binds = {}
+    for module, tree in trees.items():
+        b = binds[module] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    b[a.asname or a.name.partition(".")[0]] = (
+                        a.name if a.asname else a.name.partition(".")[0])
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                for a in node.names:
+                    b[a.asname or a.name] = f"{node.module}.{a.name}"
+        for stmt in tree.body:
+            for name in _defined_names(stmt):
+                b[name] = f"{module}.{name}"
+
+    def canon(dotted):
+        seen = set()
+        while dotted not in seen:
+            seen.add(dotted)
+            module, _, name = dotted.rpartition(".")
+            target = binds.get(module, {}).get(name)
+            if target is None:
+                break
+            dotted = target
+        return dotted
+
+    def resolve(module, expr):
+        if isinstance(expr, ast.Name):
+            target = binds[module].get(expr.id)
+            return target and canon(target)
+        if isinstance(expr, ast.Attribute):
+            base = resolve(module, expr.value)
+            return base and canon(f"{base}.{expr.attr}")
+        return None
+
+    return resolve
+
+
+def _reach(units, roots):
+    """The units reached from ``roots``: a unit is live once a live
+    unit (or a root) refers to it."""
+    live, todo = set(), list(roots)
+    while todo:
+        unit = todo.pop()
+        if unit in units and unit not in live:
+            live.add(unit)
+            todo += units[unit]
     return live
 
 
 def test_every_engine_function_is_reachable():
-    """Static walk over source text (ast only, no Spark): every
-    top-level def, class and constant of vrl_spark must be named by
-    live text, or be on the kept list; a kept name that live text
-    reaches fails too (the list cannot go stale).
+    """Static walk (ast only, no Spark): every top-level def, class
+    and constant of vrl_spark must be referred to from live code, or
+    be on the kept list; a kept name that live code reaches fails too
+    (the list cannot go stale).
 
-    A name is matched as an identifier anywhere in a live statement,
-    comments and docstrings included, and in any module: the walk errs
-    toward keeping code, never toward deleting it."""
+    A reference is a name or ``module.attr`` that resolves through
+    the referring module's imports; a docstring or a comment that
+    mentions a name does not keep it."""
     import ast
-    import glob
     import os
-    import re
 
-    word = re.compile(r"[A-Za-z_]\w*")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    words, units = set(), {}
-    for pattern in _LIVE_CALLERS:
-        for path in glob.glob(os.path.join(root, pattern), recursive=True):
-            with open(path) as fh:
-                words |= set(word.findall(fh.read()))
-    for module, path in _module_files(root).items():
-        with open(path) as fh:
-            lines = fh.read().splitlines()
-        for stmt in ast.parse("\n".join(lines), path).body:
-            first = min([d.lineno for d in getattr(stmt, "decorator_list", [])]
-                        + [stmt.lineno])
-            text = set(word.findall("\n".join(lines[first - 1:stmt.end_lineno])))
-            if _is_seed(module, stmt):
-                words |= text
-            for name in _defined_names(stmt):
-                units.setdefault(f"{module}.{name}", set()).update(text)
+    trees = _source_trees(root)
+    engine = _module_files(root)
+    resolve = _resolver(trees)
 
-    missing = sorted(set(_KEPT_UNREACHABLE_FUNCTIONS) - set(units))
+    def refs(module, node):
+        return {resolve(module, n) for n in ast.walk(node)
+                if isinstance(n, (ast.Name, ast.Attribute))}
+
+    roots, units = set(), {}
+    for module, tree in trees.items():
+        if module not in engine:
+            roots |= refs(module, tree)
+            continue
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            names = {f"{module}.{n}" for n in _defined_names(stmt)}
+            if _is_seed(module, stmt):
+                roots |= refs(module, stmt) | names
+            for name in names:
+                units.setdefault(name, set()).update(refs(module, stmt))
+
+    kept = set(_KEPT_UNREACHABLE_FUNCTIONS)
+    missing = sorted(kept - set(units))
     assert not missing, f"kept-list names no longer exist (unlist): {missing}"
-    live = _reach(units, words)
-    stale = sorted(live & set(_KEPT_UNREACHABLE_FUNCTIONS))
+    stale = sorted(_reach(units, roots) & kept)
     assert not stale, f"kept-list names are now reached (unlist): {stale}"
-    for name in _KEPT_UNREACHABLE_FUNCTIONS:
-        words |= units[name]
-    live = set(_KEPT_UNREACHABLE_FUNCTIONS) | _reach(units, words)
-    dead = sorted(set(units) - live)
+    dead = sorted(set(units) - _reach(units, roots | kept))
     assert not dead, f"unreachable engine names (delete them): {dead}"
+
+
+# Per-parameter use: an optional parameter of an operator, plan or
+# source def that every live call sets to one value, and that picks a
+# branch, is a constant with dead code behind it. The few kept anyway
+# are listed with their reason.
+_OPTION_SCOPE = ("vrl_spark.operators.", "vrl_spark.plans.",
+                 "vrl_spark.sources")
+_KEPT_SINGLE_VALUED_OPTIONS = {
+    "vrl_spark.operators.enrichment.find_table_row.case_insensitive":
+        "SURVEY.md names case-insensitive lookup as semantics the "
+        "engine must provide (VRL find_enrichment_table_records)",
+    "vrl_spark.operators.enrichment.find_table_row.date_range":
+        "SURVEY.md names the date-range condition as semantics the "
+        "engine must provide (VRL find_enrichment_table_records)",
+}
+_MANY = object()  # a value the walk cannot pin down
+
+
+def _options(fn):
+    """Parameter name -> default expression, for the optional
+    parameters of a def."""
+    args = fn.args
+    pos = args.posonlyargs + args.args
+    out = dict(zip([p.arg for p in pos[len(pos) - len(args.defaults):]],
+                   args.defaults))
+    out.update((p.arg, d) for p, d in zip(args.kwonlyargs, args.kw_defaults)
+               if d is not None)
+    return out
+
+
+def _guarded_params(fn):
+    """The parameters of ``fn`` that appear in the test of an ``if``,
+    a conditional expression or a ``while`` anywhere in its body,
+    directly or through a local assigned from parameters alone. An
+    ``if`` whose body only raises is input validation and is left out."""
+    import ast
+
+    params = {p.arg for p in fn.args.posonlyargs + fn.args.args
+              + fn.args.kwonlyargs}
+    alias, grew = {}, True  # local -> the parameters it is built from
+    while grew:
+        grew = False
+        for node in ast.walk(fn):
+            if not (isinstance(node, ast.Assign) and len(node.targets) == 1
+                    and isinstance(node.targets[0], ast.Name)):
+                continue
+            target = node.targets[0].id
+            names = {n.id for n in ast.walk(node.value)
+                     if isinstance(n, ast.Name)}
+            if (target not in params and target not in alias and names
+                    and names <= params | set(alias)):
+                alias[target] = set().union(*(alias.get(n, {n})
+                                              for n in names))
+                grew = True
+    out = set()
+    for node in ast.walk(fn):
+        if isinstance(node, ast.If) and all(
+                isinstance(s, ast.Raise) for s in node.body):
+            continue
+        if isinstance(node, (ast.If, ast.IfExp, ast.While)):
+            for n in ast.walk(node.test):
+                if isinstance(n, ast.Name):
+                    out |= alias.get(n.id, {n.id}) & params
+    return out
+
+
+def _option_values(trees, resolve, defs):
+    """(def, parameter) -> the set of values live calls pass it.
+
+    A literal is its value and an omitted argument the default; a
+    name that is a parameter of the calling def stands for that
+    parameter's own live values (to a fixpoint); anything else is
+    ``_MANY``. A def that live code uses other than by calling it, or
+    calls with ``*args``/``**kwargs``, gets ``_MANY`` everywhere. A
+    call ``x.name(...)`` whose receiver does not resolve counts as a
+    call of every in-scope method called ``name``."""
+    import ast
+
+    methods = {}
+    for q in defs:
+        owner = q.rpartition(".")[0]
+        if owner not in trees:
+            methods.setdefault(q.rpartition(".")[2], []).append(q)
+
+    def callee(module, func):
+        target = resolve(module, func)
+        if target in defs:
+            return [target], False
+        if target and f"{target}.__init__" in defs:
+            return [f"{target}.__init__"], True
+        if target is None and isinstance(func, ast.Attribute):
+            return methods.get(func.attr, []), True
+        return [], False
+
+    calls, escaped = [], set()
+
+    def visit(module, node, encl, cls):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for d in node.decorator_list + node.args.defaults:
+                visit(module, d, encl, cls)
+            qual = None
+            if encl is None:
+                qual = f"{module}.{cls + '.' if cls else ''}{node.name}"
+            for stmt in node.body:
+                visit(module, stmt, (qual, node), None)
+            return
+        if isinstance(node, ast.ClassDef):
+            for stmt in node.body:
+                visit(module, stmt, encl, node.name if encl is None else None)
+            return
+        if isinstance(node, ast.Call):
+            targets, is_method = callee(module, node.func)
+            calls.extend((q, node, encl, is_method) for q in targets)
+            children = node.args + [k.value for k in node.keywords]
+            if isinstance(node.func, ast.Attribute):
+                children.append(node.func.value)
+            elif not isinstance(node.func, ast.Name):
+                children.append(node.func)
+            for child in children:
+                visit(module, child, encl, cls)
+            return
+        if isinstance(node, (ast.Name, ast.Attribute)):
+            escaped.update(callee(module, node)[0])
+        for child in ast.iter_child_nodes(node):
+            visit(module, child, encl, cls)
+
+    for module, tree in trees.items():
+        for stmt in tree.body:
+            visit(module, stmt, None, None)
+
+    def literal(node):
+        try:
+            return repr(ast.literal_eval(node))
+        except ValueError:
+            return None
+
+    values = {(q, p): set() for q, fn in defs.items() for p in _options(fn)}
+    flows = []  # (def, parameter) <- value or (calling def, parameter)
+    for q, node, encl, is_method in calls:
+        if (any(isinstance(a, ast.Starred) for a in node.args)
+                or any(k.arg is None for k in node.keywords)):
+            escaped.add(q)
+    for q, node, encl, is_method in calls:
+        if q in escaped:
+            continue
+        fn = defs[q]
+        names = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+        if is_method and names[:1] in (["self"], ["cls"]):
+            names = names[1:]
+        given = dict(zip(names, node.args))
+        given.update((k.arg, k.value) for k in node.keywords)
+        for p, default in _options(fn).items():
+            arg = given.get(p, default)
+            if literal(arg) is not None:
+                flows.append(((q, p), literal(arg)))
+            elif arg is default:
+                flows.append(((q, p), ast.dump(default)))
+            elif (isinstance(arg, ast.Name) and encl and encl[0] in defs
+                    and arg.id in _options(encl[1])):
+                flows.append(((q, p), (encl[0], arg.id)))
+            else:
+                flows.append(((q, p), _MANY))
+    for q in escaped:
+        for p in _options(defs[q]):
+            values[(q, p)].add(_MANY)
+    grew = True
+    while grew:
+        grew = False
+        for key, v in flows:
+            new = values[v] if isinstance(v, tuple) else {v}
+            if not new <= values[key]:
+                values[key] |= new
+                grew = True
+    return values
+
+
+def test_every_engine_option_is_used():
+    """Static walk (ast only, no Spark) over the optional parameters of
+    every def and method in vrl_spark's operators, plans and sources
+    (the ported VRL functions and the Pipeline builder API are out of
+    scope: their signatures are the API). A parameter fails when every
+    live call (vrl_spark itself and the driver and benchmark scripts;
+    tests, examples and tools do not count) passes it one value and it
+    steers a branch: the value belongs in the code and the other
+    branch is dead. A kept entry that is no longer single-valued, or
+    no longer exists, fails too."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    trees = _source_trees(root)
+    defs = {}
+    for module, tree in trees.items():
+        if not module.startswith(_OPTION_SCOPE):
+            continue
+        for stmt in tree.body:
+            owner, members = module, [stmt]
+            if isinstance(stmt, ast.ClassDef):
+                owner, members = f"{module}.{stmt.name}", stmt.body
+            defs.update((f"{owner}.{fn.name}", fn) for fn in members
+                        if isinstance(fn, (ast.FunctionDef,
+                                           ast.AsyncFunctionDef))
+                        and _options(fn))
+    values = _option_values(trees, _resolver(trees), defs)
+    single = set()
+    for q, fn in defs.items():
+        guarded = _guarded_params(fn)
+        single |= {f"{q}.{p}" for p in _options(fn)
+                   if p in guarded and len(values[(q, p)]) == 1
+                   and _MANY not in values[(q, p)]}
+    stale = sorted(set(_KEPT_SINGLE_VALUED_OPTIONS) - single)
+    assert not stale, (
+        f"kept-list options are gone or take several values (unlist): "
+        f"{stale}")
+    flagged = sorted(single - set(_KEPT_SINGLE_VALUED_OPTIONS))
+    assert not flagged, (
+        f"options every live call sets to one value (make each a "
+        f"constant and delete the branch it guards): {flagged}")
 
 
 def test_examples_resolve():
     """Every vrl_spark module, imported name and ``module.attr`` the
-    runnable examples use still exists. Examples are not reachability
-    seeds, so nothing else notices when a deletion breaks them. The
-    engine modules are imported; no Spark session starts."""
+    runnable examples and tools use still exists, and every keyword
+    argument they pass a vrl_spark callable is one of its parameters.
+    Examples and tools are not live callers, so nothing else notices
+    when a deletion breaks them. The engine modules are imported; no
+    Spark session starts."""
     import ast
     import glob
     import importlib
+    import inspect
     import os
 
     def resolve(module, name):
@@ -328,14 +617,15 @@ def test_examples_resolve():
             return importlib.import_module(f"{module}.{name}")
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    examples = sorted(glob.glob(os.path.join(root, "examples", "*.py")))
-    assert examples
+    scripts = sorted(glob.glob(os.path.join(root, "examples", "*.py"))
+                     + glob.glob(os.path.join(root, "tools", "*.py")))
+    assert scripts
     problems = []
-    for path in examples:
+    for path in scripts:
         with open(path) as fh:
             tree = ast.parse(fh.read(), path)
-        where = os.path.basename(path)
-        modules = {}  # local name -> the vrl_spark module it binds
+        where = os.path.relpath(path, root)
+        names = {}  # local name -> the vrl_spark module or object it binds
         for node in ast.walk(tree):
             if isinstance(node, ast.Import):
                 for a in node.names:
@@ -347,23 +637,42 @@ def test_examples_resolve():
                         problems.append(f"{where}:{node.lineno} {a.name}")
                         continue
                     if a.asname:
-                        modules[a.asname] = mod
+                        names[a.asname] = mod
             elif (isinstance(node, ast.ImportFrom)
                   and (node.module or "").split(".")[0] == "vrl_spark"):
                 for a in node.names:
                     try:
-                        value = resolve(node.module, a.name)
+                        names[a.asname or a.name] = resolve(node.module,
+                                                            a.name)
                     except ImportError:
                         problems.append(
                             f"{where}:{node.lineno} {node.module}.{a.name}")
-                        continue
-                    if isinstance(value, type(os)):
-                        modules[a.asname or a.name] = value
+
+        def target(expr):
+            if isinstance(expr, ast.Name):
+                return names.get(expr.id)
+            if (isinstance(expr, ast.Attribute)
+                    and isinstance(expr.value, ast.Name)
+                    and isinstance(names.get(expr.value.id), type(os))):
+                return getattr(names[expr.value.id], expr.attr, None)
+            return None
+
         for node in ast.walk(tree):
             if (isinstance(node, ast.Attribute)
                     and isinstance(node.value, ast.Name)
-                    and node.value.id in modules
-                    and not hasattr(modules[node.value.id], node.attr)):
+                    and isinstance(names.get(node.value.id), type(os))
+                    and not hasattr(names[node.value.id], node.attr)):
                 problems.append(f"{where}:{node.lineno} "
-                                f"{modules[node.value.id].__name__}.{node.attr}")
-    assert not problems, f"examples use names that are gone: {problems}"
+                                f"{names[node.value.id].__name__}.{node.attr}")
+            if not isinstance(node, ast.Call) or not callable(
+                    target(node.func)):
+                continue
+            params = inspect.signature(target(node.func)).parameters
+            if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+                continue
+            problems += [f"{where}:{node.lineno} {ast.unparse(node.func)}"
+                         f"({k.arg}=...)" for k in node.keywords
+                         if k.arg is not None and k.arg not in params]
+    assert not problems, (
+        f"examples and tools use names or keywords that are gone: "
+        f"{problems}")

@@ -127,24 +127,8 @@ def test_sample_per_stratum_small_stratum_keeps_all(spark):
     )
     got = sampling.sample_per_stratum(df, ["g"], n=10).collect()
     assert len(got) == 3  # strata smaller than n keep everything
-
-
-def test_sample_per_stratum_prefilter_equivalence(spark):
-    from vrl_spark.operators import sampling
-
-    rows = [(i, f"g{i % 4}") for i in range(2000)]
-    df = spark.createDataFrame(rows, ["doc_id", "g"])
-    exact = {(r["g"], r["doc_id"]) for r in
-             sampling.sample_per_stratum(df, ["g"], n=25).collect()}
-    fast = {(r["g"], r["doc_id"]) for r in
-            sampling.sample_per_stratum(df, ["g"], n=25, prefilter=3.0).collect()}
-    assert fast == exact
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         sampling.sample_per_stratum(df, ["g"], n=0)
-    with _pytest.raises(ValueError):
-        sampling.sample_per_stratum(df, ["g"], n=5, prefilter=0.5)
 
 
 def test_weighted_sample_deterministic_and_biased(spark):

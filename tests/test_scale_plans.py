@@ -449,14 +449,13 @@ def test_bloom_incremental_plan_shape(spark):
 
     base = spark.range(1000).selectExpr("cast(id as string) as k")
     inc = spark.range(500, 1500).selectExpr("cast(id as string) as k")
-    words = bloom.bloom_build(base.select("k").distinct(), "k")
-    plan = plan_of(
-        bloom.incremental_dedup(base, inc, "k", bloom_words=words)
-    )
+    plan = plan_of(bloom.incremental_dedup(base, inc, "k"))
     assert "EvalPython" not in plan
-    # stored-filter ingest shape: incoming distinct (1), bit_or build
-    # agg feeding the join (1), bool_and membership agg (1), base
-    # distinct for the exact join (1) -> no hidden extra shuffles
+    # inline-build ingest shape: incoming distinct (1), base distinct
+    # for the filter build (1), bit_or build agg (1) + its broadcast
+    # (1), base distinct for the exact join (1) + its broadcast (1);
+    # the membership agg reuses the incoming distinct's partitioning
+    # -> no hidden extra shuffles
     assert plan.count("Exchange") <= 6
     # the incoming Range must appear at most twice (probe source +
     # exact-join probe), not three times (the old re-join shape)
@@ -470,10 +469,10 @@ def test_bigram_lm_final_plan_shape(spark, sf_dir):
     checkpointed doc frame — no recomputation of the token joins."""
     from vrl_spark.operators.retrieval import bigram_perplexity
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+        "doc_id", "text", "true AS tr"
     )
-    out = bigram_perplexity(docs)
+    out = bigram_perplexity(docs, "tr")
     plan = plan_of(out)
     assert "EvalPython" not in plan
     # post-checkpoint: the token-join chain is gone from this plan

@@ -1,8 +1,7 @@
 """SemDeDup (Abbas et al. 2023): cluster-bucketed semantic dedup.
 Pins: within-cluster pair recall vs a brute-force numpy reference on
-a planted corpus, the paper's centroid-far keep rule, the min_id
-baseline's equivalence to dedup_clusters, singleton pass-through,
-and parameter validation."""
+a planted corpus, the paper's centroid-far keep rule, singleton
+pass-through, and parameter validation."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from vrl_spark.operators import similarity
-from vrl_spark.operators.dedup import dedup_clusters
 
 DIM = 16
 CENTERS = 4
@@ -72,14 +70,15 @@ def test_pairs_match_brute_force(planted, spark):
         [(int(i), [float(x) for x in b[i]]) for i in range(CENTERS)],
         ["centroid_id", "centroid_vec"],
     )
-    got = {
-        (r.id_a, r.id_b)
-        for r in similarity.semantic_dedup_pairs(
-            df, threshold=THRESH, centroids=cents
-        ).collect()
-    }
+    rows = similarity.semantic_dedup_pairs(
+        df, threshold=THRESH, centroids=cents
+    ).collect()
+    got = {(r.id_a, r.id_b) for r in rows}
     assert got == want, want ^ got
-    # sampled centroids (the untrained default): bucketing can only
+    for r in rows:
+        assert r.id_a < r.id_b
+        assert r.cos == round(float(mat[r.id_a] @ mat[r.id_b]), 6)
+    # sampled centroids (the default): bucketing can only
     # MISS pairs (a dup group split when two samples land inside one
     # planted cluster) — never invent them
     sampled = {
@@ -92,32 +91,15 @@ def test_pairs_match_brute_force(planted, spark):
     assert len(sampled) >= len(want) * 0.5  # still finds real groups
 
 
-def test_trained_clusters_and_cos_values(planted):
-    df, mat = planted
-    stats = {}
-    pairs = similarity.semantic_dedup_pairs(
-        df, n_clusters=CENTERS, threshold=THRESH,
-        train_iterations=3, stats=stats,
-    )
-    rows = pairs.collect()
-    assert {(r.id_a, r.id_b) for r in rows} == _brute_pairs(mat, THRESH)
-    for r in rows:
-        assert r.id_a < r.id_b
-        assert r.cos == round(float(mat[r.id_a] @ mat[r.id_b]), 6)
-    assert stats["centroids"].count() == CENTERS
-
-
 def test_centroid_far_keep_rule(planted):
     df, mat = planted
-    stats = {}
     got = similarity.semantic_dedup(
         df, n_clusters=CENTERS * 2, threshold=THRESH,
-        keep_policy="centroid_far", stats=stats,
     ).collect()
     assert len(got) == len(mat)  # every doc gets a verdict
     cents = {
         r.centroid_id: np.array(r.centroid_vec)
-        for r in stats["centroids"].collect()
+        for r in similarity.ivf_centroids(df, CENTERS * 2).collect()
     }
 
     def cos_to_own_centroid(i):
@@ -159,37 +141,12 @@ def test_centroid_far_keep_rule(planted):
             assert g[0].keep and g[0].group_id == g[0].vec_id
 
 
-def test_min_id_policy_matches_dedup_clusters(planted):
-    df, _ = planted
-    pairs = similarity.semantic_dedup_pairs(
-        df, n_clusters=CENTERS * 2, threshold=THRESH
-    )
-    want = sorted(
-        (r.doc_id, r.cluster_id, r.keep)
-        for r in dedup_clusters(
-            pairs.select("id_a", "id_b"),
-            ids=df.select(F.col("vec_id").alias("doc_id")),
-            id_col="doc_id",
-        ).collect()
-    )
-    got = sorted(
-        (r.vec_id, r.group_id, r.keep)
-        for r in similarity.semantic_dedup(
-            df, n_clusters=CENTERS * 2, threshold=THRESH,
-            keep_policy="min_id",
-        ).collect()
-    )
-    assert got == want
-
-
 def test_validation(planted):
     df, _ = planted
     with pytest.raises(ValueError, match="threshold"):
         similarity.semantic_dedup_pairs(df, threshold=0.0)
     with pytest.raises(ValueError, match="n_clusters"):
         similarity.semantic_dedup_pairs(df, n_clusters=0)
-    with pytest.raises(ValueError, match="keep_policy"):
-        similarity.semantic_dedup(df, keep_policy="best")
 
 
 def test_empty_centroids_raise_not_vanish(planted, spark):
@@ -213,8 +170,7 @@ def test_empty_centroids_raise_not_vanish(planted, spark):
     assert pairs.count() > 0
     with pytest.raises(ValueError, match="centroids frame is empty"):
         similarity.semantic_dedup(
-            df, threshold=THRESH, keep_policy="centroid_far",
-            pairs=pairs, centroids=empty,
+            df, threshold=THRESH, pairs=pairs, centroids=empty,
         )
 
 
@@ -233,16 +189,6 @@ def test_pairs_corpus_mismatch_raises_in_plan(planted, spark):
     hole = df.where(F.col("vec_id") != some_paired)
     with pytest.raises(Exception, match="missing from the corpus"):
         similarity.semantic_dedup(
-            hole, threshold=THRESH, keep_policy="centroid_far",
-            pairs=pairs, centroids=stats["centroids"],
+            hole, threshold=THRESH, pairs=pairs,
+            centroids=stats["centroids"],
         ).collect()
-    # min_id is indifferent to centroids: an empty frame passes
-    # through (it is never consumed) and every doc gets a verdict
-    got = similarity.semantic_dedup(
-        df, threshold=THRESH, keep_policy="min_id",
-        pairs=pairs,
-        centroids=spark.createDataFrame(
-            [], "centroid_id long, centroid_vec array<double>"
-        ),
-    )
-    assert got.count() == df.count()

@@ -39,10 +39,9 @@ def _sequential_reference(rows, budget):
     return expect
 
 
-@pytest.mark.parametrize("hash", ["xxh64", "md5"])
-def test_shard_assign_matches_sequential_scan(spark, hash):
+def test_shard_assign_matches_sequential_scan(spark):
     out = sharding.shard_assign(
-        _mkdocs(spark), budget=1000, seed="s1", hash=hash, n_buckets=8
+        _mkdocs(spark), budget=1000, seed="s1", n_buckets=8
     ).collect()
     expect = _sequential_reference(out, budget=1000)
     for r in out:
@@ -57,16 +56,16 @@ def test_shard_assign_bucket_count_invariant(spark):
     docs = _mkdocs(spark, 300)
     a = {r["doc_id"]: (r["shard_id"], r["shard_pos"])
          for r in sharding.shard_assign(
-             docs, budget=700, seed="x", hash="md5", n_buckets=2).collect()}
+             docs, budget=700, seed="x", n_buckets=2).collect()}
     b = {r["doc_id"]: (r["shard_id"], r["shard_pos"])
          for r in sharding.shard_assign(
-             docs, budget=700, seed="x", hash="md5", n_buckets=64).collect()}
+             docs, budget=700, seed="x", n_buckets=64).collect()}
     assert a == b
 
 
 def test_md5_lane_matches_hashlib(spark):
     out = sharding.shard_assign(
-        _mkdocs(spark, 50), budget=500, seed="oracle", hash="md5"
+        _mkdocs(spark, 50), budget=500, seed="oracle"
     ).collect()
     for r in out:
         hx = hashlib.md5(f"oracle|{r['doc_id']}".encode()).hexdigest()[:15]
@@ -84,8 +83,6 @@ def test_shard_assign_null_tokens_and_validation(spark):
         sharding.shard_assign(df, budget=0)
     with pytest.raises(ValueError):
         sharding.shard_assign(df, budget=8, n_buckets=3)
-    with pytest.raises(ValueError):
-        sharding.shard_assign(df, budget=8, hash="sha1")
 
 
 def test_shard_plan_shape(spark):
@@ -168,6 +165,8 @@ def test_mixture_resample_small_class_keeps_all(spark):
     from collections import Counter
     per = Counter(r["klass"] for r in out)
     assert per == {"big": 20, "tiny": 5}  # tiny < quota: best effort
+    with pytest.raises(ValueError):
+        sampling.mixture_resample(df, "klass", {"big": 0.5, "tiny": 0.5}, 0)
 
 
 def test_mixture_upsample_epochs(spark):
@@ -200,24 +199,6 @@ def test_mixture_upsample_epochs(spark):
     assert all(r["epoch"] == 0 for r in out2)
     with pytest.raises(ValueError):
         sampling.mixture_upsample(df, "klass", {"a": -1.0})
-
-
-def test_mixture_resample_prefilter_equivalence(spark):
-    from vrl_spark.operators import sampling
-
-    rows = [(i, f"c{i % 3}") for i in range(3000)]
-    df = spark.createDataFrame(rows, ["doc_id", "klass"])
-    ratios = {"c0": 0.4, "c1": 0.4, "c2": 0.2}
-    exact = {(r["klass"], r["doc_id"], r["mix_rank"]) for r in
-             sampling.mixture_resample(df, "klass", ratios, 60).collect()}
-    fast = {(r["klass"], r["doc_id"], r["mix_rank"]) for r in
-            sampling.mixture_resample(
-                df, "klass", ratios, 60, prefilter=3.0).collect()}
-    assert fast == exact
-    with pytest.raises(ValueError):
-        sampling.mixture_resample(df, "klass", ratios, 60, prefilter=0.9)
-    with pytest.raises(ValueError):
-        sampling.mixture_resample(df, "klass", ratios, 0)
 
 
 def test_shard_and_pack_budgets_in_bpe_units(spark):

@@ -32,12 +32,10 @@ def asof_join(
     on: list[str],
     left_ts: str = "ts",
     right_ts: str = "ts",
-    tolerance_sec: int | float | None = None,
 ) -> DataFrame:
     """Left as-of join (backward, inclusive): every left row, plus the
     payload of the latest right row with ``right_ts <= left_ts`` for
-    the same key — or nulls when no predecessor exists (or the match
-    is older than ``tolerance_sec``).
+    the same key — or nulls when no predecessor exists.
 
     Right payload = every right column that is neither a key nor its
     timestamp; names must not collide with left columns. ``matched_ts``
@@ -97,21 +95,6 @@ def asof_join(
                 carried.getField("_mts").alias("matched_ts"),
                 *[carried.getField(c).alias(c) for c in payload])
         .where(F.col("_is_left") == 1)
+        .select(*on, "_ts", *left_extra, "matched_ts", *payload)
     )
-    if tolerance_sec is not None:
-        stale = (
-            F.col("matched_ts").isNull()
-            | (F.col("_ts").cast("double") - F.col("matched_ts").cast("double")
-               > F.lit(float(tolerance_sec)))
-        )
-        out = out.select(
-            *on, "_ts", *left_extra,
-            F.when(stale, F.lit(None)).otherwise(F.col("matched_ts")).alias(
-                "matched_ts"
-            ),
-            *[F.when(stale, F.lit(None)).otherwise(F.col(c)).alias(c)
-              for c in payload],
-        )
-    else:
-        out = out.select(*on, "_ts", *left_extra, "matched_ts", *payload)
     return out.withColumnRenamed("_ts", left_ts)

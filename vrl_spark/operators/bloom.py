@@ -4,9 +4,9 @@ The canonical 100 TB ingest pattern: a crawl snapshot arrives, and
 the question "which of these keys already exist in the corpus?" must
 not cost a full corpus-sized join per ingest. Build a Bloom filter
 over the BASE corpus keys ONCE (a pure aggregation — k hash positions
-per key, ``bit_or``-folded into 32-bit words keyed by word index),
-store the word table (m/32 rows — orders of magnitude smaller than
-the key set, reusable across ingests), then prefilter each incoming
+per key, ``bit_or``-folded into 32-bit words keyed by word index;
+m/32 rows — orders of magnitude smaller than the key set), then
+prefilter each incoming
 snapshot with an equi-join against it; the exact containment check
 (anti/semi join on the key itself) only runs over the bloom-POSITIVE
 subset, which is ~|true dups| + fp_rate * |new keys|.
@@ -22,11 +22,9 @@ word_idx — at 1e12 keys (m ~ 1.25 TB of bits) the word table is
 ~4e10 rows and still flows as an ordinary shuffle join; at test
 scales AQE broadcasts it for free.
 
-Hash family: position_i(key) = H(i, key) mod m for i in 0..k-1.
-engine="xxh" (default) uses the JVM xxhash64; engine="md5" derives
-positions from the first 15 hex chars of md5(f"{i}|{key}") so a SQL
-oracle can replicate every bit (same family the minhash/md5 oracles
-pin).
+Hash family: position_i(key) = H(i, key) mod m for i in 0..k-1, with
+H the first 15 hex chars of md5(f"{i}|{key}") so a SQL oracle can
+replicate every bit (same family the minhash/md5 oracles pin).
 """
 
 from __future__ import annotations
@@ -37,35 +35,25 @@ from pyspark.sql import functions as F
 _WORD_BITS = 32
 
 
-def bloom_positions(
-    key: Column, n_bits: int, k: int, engine: str = "xxh"
-) -> Column:
+def bloom_positions(key: Column, n_bits: int, k: int) -> Column:
     """Array of the k bit positions (longs in [0, n_bits)) for a key."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if n_bits < _WORD_BITS:
         raise ValueError("n_bits must be >= 32")
-    if engine == "xxh":
-        cols = [
-            F.pmod(F.xxhash64(F.lit(i), key), F.lit(n_bits)) for i in range(k)
-        ]
-    elif engine == "md5":
-        cols = [
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"{i}|"), key.cast("string"))),
-                        1, 15,
-                    ),
-                    16, 10,
-                ).cast("long"),
-                F.lit(n_bits),
-            )
-            for i in range(k)
-        ]
-    else:
-        raise ValueError(f"unknown engine {engine!r}")
-    return F.array(*cols)
+    return F.array(*[
+        F.pmod(
+            F.conv(
+                F.substring(
+                    F.md5(F.concat(F.lit(f"{i}|"), key.cast("string"))),
+                    1, 15,
+                ),
+                16, 10,
+            ).cast("long"),
+            F.lit(n_bits),
+        )
+        for i in range(k)
+    ])
 
 
 def bloom_build(
@@ -73,7 +61,6 @@ def bloom_build(
     key_col: str,
     n_bits: int = 1 << 14,
     k: int = 5,
-    engine: str = "xxh",
 ) -> DataFrame:
     """(word_idx long, word long) — the filter's set 32-bit words.
 
@@ -85,7 +72,7 @@ def bloom_build(
     df = df.where(F.col(key_col).isNotNull())
     pos = df.select(
         F.explode(
-            bloom_positions(F.col(key_col), n_bits, k, engine)
+            bloom_positions(F.col(key_col), n_bits, k)
         ).alias("_p")
     )
     return (
@@ -108,12 +95,11 @@ def bloom_membership(
     key_col: str,
     n_bits: int = 1 << 14,
     k: int = 5,
-    engine: str = "xxh",
 ) -> DataFrame:
     """(key_col, bloom_hit) — one row per input row; bloom_hit true =
     possibly present, false = DEFINITELY absent. `keys` should be
-    distinct on key_col (pass .distinct() if not); n_bits/k/engine
-    must match the build.
+    distinct on key_col (pass .distinct() if not); n_bits/k must
+    match the build.
 
     Returns only the key + flag (derived from the probe rows, which
     already carry every key) — joining back onto `keys` here would
@@ -126,7 +112,7 @@ def bloom_membership(
     probes = keys.select(
         key_col,
         F.posexplode(
-            bloom_positions(F.col(key_col), n_bits, k, engine)
+            bloom_positions(F.col(key_col), n_bits, k)
         ).alias("_i", "_p"),
     ).select(
         key_col,
@@ -154,8 +140,6 @@ def incremental_dedup(
     key_col: str,
     n_bits: int = 1 << 14,
     k: int = 5,
-    engine: str = "xxh",
-    bloom_words: DataFrame | None = None,
 ) -> DataFrame:
     """Classify each DISTINCT incoming key against the base snapshot:
 
@@ -165,28 +149,17 @@ def incremental_dedup(
 
     Returns (key_col, bloom_hit, incr_fate); NULL incoming keys get
     no output row (unrepresentable in the filter — see
-    bloom_membership). Pass a precomputed
-    `bloom_words` table (from bloom_build, same params) to reuse a
-    stored filter across ingests — the 100 TB deployment shape; when
-    None it is built here from `base`.
+    bloom_membership). The filter is built here from `base`.
 
     The exact join is a LEFT join against base keys restricted to the
     bloom-positive subset, so its build side is ~|dups| + eps, not
-    |incoming|.
-
-    Note on the inline-build path: base_keys feeds BOTH the filter
-    build and the exact join, so Catalyst computes the base distinct
-    twice. That is the throwaway shape — at scale the filter is built
-    once, stored, and passed in via `bloom_words`, which touches the
-    base exactly once per ingest (the exact join).
+    |incoming|. base_keys feeds BOTH the filter build and the exact
+    join, so Catalyst computes the base distinct twice.
     """
     base_keys = base.select(key_col).distinct()
-    if bloom_words is None:
-        bloom_words = bloom_build(base_keys, key_col, n_bits, k, engine)
+    bloom_words = bloom_build(base_keys, key_col, n_bits, k)
     inc_keys = incoming.select(key_col).distinct()
-    flagged = bloom_membership(
-        inc_keys, bloom_words, key_col, n_bits, k, engine
-    )
+    flagged = bloom_membership(inc_keys, bloom_words, key_col, n_bits, k)
     in_base = base_keys.select(
         F.col(key_col), F.lit(True).alias("_in_base")
     )

@@ -111,21 +111,6 @@ def _lineage_aggs(
     ]
 
 
-def _manifest_aggs(payload_col: str | None, fp_cols: list[str] | None):
-    """Column-level agg assembly shared by run_partition and verify —
-    ONE definition of which expressions feed the manifest."""
-    full = _lineage_aggs(
-        F.col(payload_col) if payload_col else F.lit(""),
-        [F.col(c) for c in (fp_cols or [])] or [F.lit(0)],
-    )
-    aggs = [full[0]]
-    if payload_col is not None:
-        aggs.append(full[1])
-    if fp_cols:
-        aggs.append(full[2])
-    return aggs
-
-
 def lineage_metrics(
     df: DataFrame,
     keys: list[str | Column],
@@ -148,7 +133,15 @@ _PART = "part"
 
 @dataclass
 class CheckpointedRun:
+    """A resumable partitioned write to ``out_dir`` with a committed
+    manifest row per partition. Every row certifies the partition's
+    row count, the bytes of ``payload_col`` and the order-independent
+    content fingerprint over ``fp_cols``; a run and its ``verify``
+    audit use the same pair by construction."""
+
     out_dir: str
+    payload_col: str
+    fp_cols: list[str]
 
     @property
     def manifest_dir(self) -> str:
@@ -186,24 +179,18 @@ class CheckpointedRun:
 
     def run_partition(
         self, spark: SparkSession, df: DataFrame, keys: list,
-        payload_col: str | None = None,
-        fp_cols: list[str] | None = None,
     ) -> list[dict]:
         """Process the partitions ``keys`` idempotently in one pass:
         one partitioned write of their rows, then one read-back
-        aggregation that commits a manifest row per key. A single
-        non-list key is taken as a one-key list. Returns the committed
-        manifest rows.
+        aggregation that commits a manifest row per key. Returns the
+        committed manifest rows.
 
-        ``payload_col``/``fp_cols`` opt into byte counts and the
-        order-independent content fingerprint. The manifest is
-        computed from what landed on disk, not from what the plan
-        intended — that is the point: the manifest certifies the
-        output. A key with no rows commits ``rows: 0``. Each row also
-        records ``schema``, the written frame's schema, so the read-back
-        here and in ``verify`` needs no schema inference."""
-        if not isinstance(keys, (list, tuple)):
-            keys = [keys]
+        The manifest is computed from what landed on disk, not from
+        what the plan intended — that is the point: the manifest
+        certifies the output. A key with no rows commits ``rows: 0``.
+        Each row also records ``schema``, the written frame's schema,
+        so the read-back here and in ``verify`` needs no schema
+        inference."""
         if not keys:
             return []
         t0 = time.time()
@@ -215,9 +202,7 @@ class CheckpointedRun:
             .partitionBy(_PART)
             .parquet(self.out_dir)
         )
-        landed = self._landed_stats(
-            spark, [str(k) for k in keys], schema, payload_col, fp_cols
-        )
+        landed = self._landed_stats(spark, [str(k) for k in keys], schema)
         wall_sec = round(time.time() - t0, 3)
         results = []
         for key in keys:
@@ -229,12 +214,10 @@ class CheckpointedRun:
                 "committed_at": time.strftime(
                     "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
                 ),
+                "bytes": stats["n_bytes"],
+                "fingerprint": stats["fingerprint"],
+                "schema": schema.json(),
             }
-            if payload_col is not None:
-                metrics["bytes"] = stats["n_bytes"]
-            if fp_cols:
-                metrics["fingerprint"] = stats["fingerprint"]
-            metrics["schema"] = schema.json()
             self._commit(metrics)
             results.append(metrics)
         return results
@@ -258,7 +241,6 @@ class CheckpointedRun:
 
     def _landed_stats(
         self, spark: SparkSession, keys: list[str], schema: StructType | None,
-        payload_col: str | None, fp_cols: list[str] | None,
     ) -> dict[str, dict]:
         """The manifest metrics of ``keys`` as they exist on disk NOW,
         from one aggregation grouped by the partition column, read with
@@ -270,20 +252,17 @@ class CheckpointedRun:
         rows = (
             read_output(spark, self.out_dir, present, schema=schema)
             .groupBy(_PART)
-            .agg(*_manifest_aggs(payload_col, fp_cols))
+            .agg(*_lineage_aggs(F.col(self.payload_col),
+                                [F.col(c) for c in self.fp_cols]))
             .collect()
         )
         return {r[_PART]: r.asDict() for r in rows}
 
-    def run(
-        self, spark: SparkSession, df: DataFrame, all_keys: list,
-        payload_col: str | None = None,
-        fp_cols: list[str] | None = None,
-    ) -> dict:
+    def run(self, spark: SparkSession, df: DataFrame, all_keys: list) -> dict:
         """Process all pending partitions in one pass; returns the run
         summary."""
         todo = self.pending(all_keys)
-        results = self.run_partition(spark, df, todo, payload_col, fp_cols)
+        results = self.run_partition(spark, df, todo)
         return {
             "partitions_total": len(all_keys),
             "partitions_ran": len(todo),
@@ -291,11 +270,7 @@ class CheckpointedRun:
             "rows_written": sum(r["rows"] for r in results),
         }
 
-    def verify(
-        self, spark: SparkSession,
-        payload_col: str | None = None,
-        fp_cols: list[str] | None = None,
-    ) -> list[dict]:
+    def verify(self, spark: SparkSession) -> list[dict]:
         """Re-certify every committed partition: recompute the lineage
         metrics from the data directories as they exist NOW (one
         aggregation over all of them) and diff them against the
@@ -314,9 +289,7 @@ class CheckpointedRun:
             StructType.fromJson(json.loads(next(iter(schemas))))
             if len(schemas) == 1 and None not in schemas else None
         )
-        landed = self._landed_stats(
-            spark, list(committed), schema, payload_col, fp_cols
-        )
+        landed = self._landed_stats(spark, list(committed), schema)
         results = []
         for name, m in manifest:
             key = m["part_key"]
@@ -336,17 +309,18 @@ class CheckpointedRun:
                             "error": f"no rows under {self._data_dir(key)}"})
                 results.append(row)
                 continue
-            row["rows_actual"] = stats["n_rows"]
-            ok = stats["n_rows"] == m["rows"]
-            if payload_col is not None and "bytes" in m:
-                row["bytes_expected"] = m["bytes"]
-                row["bytes_actual"] = stats["n_bytes"]
-                ok = ok and stats["n_bytes"] == m["bytes"]
-            if fp_cols and "fingerprint" in m:
-                row["fingerprint_expected"] = m["fingerprint"]
-                row["fingerprint_actual"] = stats["fingerprint"]
-                ok = ok and stats["fingerprint"] == m["fingerprint"]
-            row["ok"] = ok
+            row.update({
+                "rows_actual": stats["n_rows"],
+                "bytes_expected": m.get("bytes"),
+                "bytes_actual": stats["n_bytes"],
+                "fingerprint_expected": m.get("fingerprint"),
+                "fingerprint_actual": stats["fingerprint"],
+            })
+            row["ok"] = (
+                stats["n_rows"] == m["rows"]
+                and stats["n_bytes"] == m.get("bytes")
+                and stats["fingerprint"] == m.get("fingerprint")
+            )
             results.append(row)
         return results
 

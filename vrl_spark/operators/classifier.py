@@ -5,25 +5,23 @@ quality gate next to the hand-rule ``textstats.gopher_rules``).
 VRL itself ships no trainable model — this belongs to the LLM
 training-data operator family the engine adds on top of the
 reference's transform semantics. The design follows the published
-fastText/CCNet recipe (hashed bag-of-ngrams -> linear model) with the
-repo's loop discipline from ``clustering.kmeans``:
+fastText/CCNet recipe (hashed bag-of-ngrams -> linear model):
 
 - Features are HASHED: each word unigram/bigram maps to one of
   ``num_buckets`` ids, so the model is a fixed-width weight vector and
-  the feature space never needs a vocabulary shuffle. Engines mirror
-  the minhash family: 'xxh' (seeded ``F.xxhash64``, JVM-fast, the
-  default) and 'md5' (DuckDB-portable, what oracles pin).
+  the feature space never needs a vocabulary shuffle. The hash is
+  md5-derived (DuckDB-portable, what oracles pin), like the minhash
+  family.
 - Feature VALUES are gram counts normalized by the doc's gram total.
   Linearity makes scoring a pure map-side fold: margin =
   sum_grams w[bucket(g)] / total + bias — NO per-doc bucket-count
   shuffle exists anywhere in scoring.
 - Training is deterministic full-batch gradient descent on logistic
   loss (+L2): no sampling, no row-order dependence beyond float-sum
-  reordering (rounded away by callers at 1e-6). One Spark job per
-  epoch; the (D+1)-row weight frame is localCheckpoint'ed each epoch
-  exactly like the kmeans centroid frame, and the per-doc margins ride
-  a 1-row broadcast crossJoin of the weight array (the collect-free
-  scalar pattern from ``operators/graph.py``).
+  reordering (rounded away by callers at 1e-6). A seed-sized labeled
+  set trains on the driver; a larger one runs one Spark job per
+  epoch, and the per-doc margins ride a 1-row broadcast crossJoin of
+  the weight array.
 
 Scale shape (the 100 TB contract): the labeled training set is
 seed-sized by nature (you label thousands, not billions) — each epoch
@@ -41,27 +39,8 @@ from pyspark.sql import functions as F
 
 from vrl_spark.functions.parse import bind
 
-
-def _bucket(g: Column, num_buckets: int, engine: str, seed: str | None) -> Column:
-    """Hash a gram string to a bucket id in [0, num_buckets)."""
-    if engine == "md5":
-        if seed is not None:
-            # the md5 lane's hash is oracle-pinned (no seed slot in
-            # the DuckDB replica below); silently ignoring the seed
-            # would hand identical models to a caller sweeping seeds
-            raise ValueError(
-                "engine='md5' is seedless (oracle-pinned); "
-                "use engine='xxh' for seeded feature hashing"
-            )
-        # 15 hex chars < 2^60: always positive, % is pmod.
-        # DuckDB replica: CAST(concat('0x', substr(md5(g),1,15)) AS
-        # BIGINT) % D  (lineage-fingerprint convention)
-        h = F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-        return h % num_buckets
-    if engine == "xxh":
-        return F.pmod(F.xxhash64(F.lit(seed if seed is not None else "qc"), g),
-                      F.lit(num_buckets))
-    raise ValueError(f"unknown hash engine {engine!r}")
+# labeled sets up to this many rows train on the driver
+DRIVER_ROWS_MAX = 100_000
 
 
 def _grams(text: Column) -> Column:
@@ -84,13 +63,13 @@ def _grams(text: Column) -> Column:
 
 
 def _md5_buckets_udf(num_buckets: int):
-    """Arrow-batched md5 bucket hashing over a gram array —
-    value-identical to the JVM expression lane
-    (``conv(substring(md5(g), 1, 15), 16, 10) % D``: the first 15 hex
-    chars are the digest's first 60 bits, i.e. bytes[0:8] as a
-    big-endian int shifted right 4). The interpreted per-gram
-    md5+conv transform was the dominant cost of every md5-lane
-    featurize pass (guide §4.2)."""
+    """Arrow-batched md5 bucket hashing over a gram array: a gram's
+    bucket is ``conv(substring(md5(g), 1, 15), 16, 10) % D`` (the
+    first 15 hex chars are the digest's first 60 bits, i.e. bytes[0:8]
+    as a big-endian int shifted right 4; DuckDB replica:
+    ``CAST(concat('0x', substr(md5(g),1,15)) AS BIGINT) % D``). The
+    interpreted per-gram md5+conv JVM transform was the dominant cost
+    of every featurize pass (guide §4.2)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
@@ -113,28 +92,12 @@ def _md5_buckets_udf(num_buckets: int):
     return bks
 
 
-def ngram_buckets(
-    text: Column,
-    num_buckets: int = 128,
-    engine: str = "xxh",
-    seed: str | None = None,
-) -> Column:
-    """array<long> of hashed feature ids for a text column (see
-    :func:`_grams`). Strings never leave the expression — only long
-    bucket ids reach any downstream shuffle."""
-    return F.transform(
-        _grams(text), lambda g: _bucket(g, num_buckets, engine, seed)
-    )
-
-
 def featurize(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     label_col: str | None = None,
     num_buckets: int = 128,
-    engine: str = "xxh",
-    seed: str | None = None,
 ) -> DataFrame:
     """(id, [y], bks array<long>, total double) — the compact per-doc
     feature form both training and scoring fold over. ``total`` is the
@@ -146,19 +109,14 @@ def featurize(
     determined probability that can pass quality gates, and the
     DuckDB oracle lane (unnest over a NULL token list) emits no row
     for them either."""
-    df = df.where(F.col(text_col).isNotNull())
-    if engine == "md5" and seed is None:
-        # Arrow-batched md5 lane (bit-identical bucket ids — see
-        # _md5_buckets_udf); the gram array crosses a materialize
-        # barrier so the UDF receives a plain attribute and the
-        # tokenization runs once per row
-        from vrl_spark.functions.parse import materialize
+    from vrl_spark.functions.parse import materialize
 
-        base = materialize(df, _grams=_grams(F.col(text_col)))
-        bks = _md5_buckets_udf(num_buckets)(F.col("_grams"))
-    else:
-        base = df
-        bks = ngram_buckets(F.col(text_col), num_buckets, engine, seed)
+    # the gram array crosses a materialize barrier so the UDF receives
+    # a plain attribute and the tokenization runs once per row
+    base = materialize(
+        df.where(F.col(text_col).isNotNull()), _grams=_grams(F.col(text_col))
+    )
+    bks = _md5_buckets_udf(num_buckets)(F.col("_grams"))
     cols = [F.col(id_col), bks.alias("bks")]
     if label_col is not None:
         cols.insert(1, F.col(label_col).cast("double").alias("y"))
@@ -242,15 +200,12 @@ def train_logistic(
     num_buckets: int = 128,
     epochs: int = 3,
     lr: float = 5.0,
-    l2: float = 0.0,
-    stats: dict | None = None,
-    driver_rows_max: int = 100_000,
 ) -> DataFrame:
     """Full-batch logistic GD over a featurized frame (must carry
     ``y``). Returns the (bucket, weight) frame — ``num_buckets`` + 1
     rows, bias at bucket id ``num_buckets``.
 
-    w <- w - lr * (sum_docs (sigmoid(margin) - y) * x / n  +  l2 * w)
+    w <- w - lr * sum_docs (sigmoid(margin) - y) * x / n
 
     with x_b = cnt_b / total. Deterministic: zero init, no sampling;
     the only cross-run wobble is float-sum ordering (~1e-15), which
@@ -273,7 +228,7 @@ def train_logistic(
     n_train = feats.count()
     if n_train == 0:
         raise ValueError("train_logistic needs a non-empty training set")
-    if n_train <= driver_rows_max:
+    if n_train <= DRIVER_ROWS_MAX:
         # fastText-sized fast path: the labeled set is seed-sized by
         # the module contract (thousands of rows regardless of corpus
         # size), so pull the featurized frame ONCE and run every GD
@@ -284,10 +239,10 @@ def train_logistic(
         # strictly in-order (not pairwise), so margins match the JVM
         # per-doc fold double-for-double and the gradient sums stay
         # inside the same 1e-15 reorder wobble class as before.
-        # Corpora labeled beyond ``driver_rows_max`` take the
+        # Corpora labeled beyond ``DRIVER_ROWS_MAX`` take the
         # distributed epoch loop below.
         return _train_logistic_driver(
-            spark, feats, n_train, num_buckets, epochs, lr, l2, stats
+            spark, feats, n_train, num_buckets, epochs, lr
         )
     w = [0.0] * (num_buckets + 1)
     for _ in range(epochs):
@@ -329,18 +284,7 @@ def train_logistic(
         ).groupBy("bucket").agg((F.sum("g") / n_train).alias("g")).collect()
         for row in grad_rows:
             b = int(row["bucket"])
-            # L2 shrinks feature weights only — never the bias row
-            decay = 0.0 if b == num_buckets else l2 * w[b]
-            w[b] = w[b] - lr * (row["g"] + decay)
-        # buckets with zero gram mass this epoch still decay under L2
-        if l2:
-            seen = {int(row["bucket"]) for row in grad_rows}
-            for b in range(num_buckets):
-                if b not in seen:
-                    w[b] = w[b] - lr * (l2 * w[b])
-    if stats is not None:
-        stats["epochs"] = epochs
-        stats["n_train"] = n_train
+            w[b] = w[b] - lr * row["g"]
     return spark.createDataFrame(
         [(b, wv) for b, wv in enumerate(w)], "bucket long, weight double"
     )
@@ -348,7 +292,7 @@ def train_logistic(
 
 def _train_logistic_driver(
     spark, feats, n_train: int, num_buckets: int, epochs: int,
-    lr: float, l2: float, stats: dict | None,
+    lr: float,
 ) -> DataFrame:
     """Driver-side vectorized epochs over the collected seed-sized
     feature frame (see train_logistic's fast-path note)."""
@@ -386,11 +330,7 @@ def _train_logistic_driver(
                   np.repeat(r / totals, lens)[valid])
         np.add.at(grad, bias_idx, r)
         g = grad / n_train
-        w[:num_buckets] -= lr * (g[:num_buckets] + l2 * w[:num_buckets])
-        w[num_buckets] -= lr * g[num_buckets]
-    if stats is not None:
-        stats["epochs"] = epochs
-        stats["n_train"] = n_train
+        w -= lr * g
     return spark.createDataFrame(
         [(b, float(wv)) for b, wv in enumerate(w)],
         "bucket long, weight double",
@@ -425,17 +365,10 @@ def quality_classifier(
     num_buckets: int = 128,
     epochs: int = 3,
     lr: float = 5.0,
-    l2: float = 0.0,
-    engine: str = "xxh",
-    seed: str | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Train on ``labeled`` (text + 0/1 label), score every row of
-    ``df``. Returns (id_col, prob). The trained (bucket, weight) frame
-    is exposed through ``stats['weights']``."""
-    tr = featurize(labeled, text_col, id_col, label_col, num_buckets, engine, seed)
-    weights = train_logistic(tr, num_buckets, epochs, lr, l2, stats)
-    if stats is not None:
-        stats["weights"] = weights
-    sc = featurize(df, text_col, id_col, None, num_buckets, engine, seed)
+    ``df``. Returns (id_col, prob)."""
+    tr = featurize(labeled, text_col, id_col, label_col, num_buckets)
+    weights = train_logistic(tr, num_buckets, epochs, lr)
+    sc = featurize(df, text_col, id_col, None, num_buckets)
     return score(sc, weights, num_buckets=num_buckets).select(id_col, "prob")

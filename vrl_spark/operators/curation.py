@@ -3,14 +3,12 @@ dedup / quality / assembly operators into the pass a 100 TB pipeline
 actually runs —
 
     raw docs
-      -> [optional] corpus-wide duplicated-line removal (boilerplate)
-      -> [optional] PII scrubbing                  (redaction)
-      -> [optional] Gopher rule gate               (quality)
       -> token-count bounds + repetition filter   (quality)
       -> minhash-LSH pairs -> connected components
          -> one survivor per near-dup cluster      (dedup)
       -> stable hash split (train/val/test)        (assignment)
       -> greedy token-budget packing per split     (assembly)
+      -> per-document fate: the stage that dropped it, or 'kept'
 
 Every stage is an already-oracle-verified operator; the composition
 itself is oracle-checked end-to-end by the ``dataset_curation``
@@ -22,7 +20,7 @@ and per-split packing groups.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -42,179 +40,32 @@ def curate_corpus(
     split_salt: str = "split",
     pack_budget: int = 512,
     minhash_kwargs: dict | None = None,
-    strip_boilerplate_min_docs: int | None = None,
-    strip_spans_ngram: int | None = None,
-    scrub_pii: bool = False,
-    gopher_filter: bool = False,
-    classifier_labeled: DataFrame | None = None,
-    classifier_weights: DataFrame | None = None,
-    classifier_threshold: float = 0.5,
-    classifier_kwargs: dict | None = None,
-    lm_drop_bucket: str | None = None,
-    with_fates: bool = False,
 ) -> DataFrame:
-    """Returns (id, n_tokens, split, pack_id) for every KEPT document.
+    """Returns (id, n_tokens, fate, split, pack_id) for EVERY input
+    document (delta attribution): ``fate`` names the pipeline stage
+    that dropped it ('token_bounds', 'repetition', 'near_dup' — the
+    FIRST stage to drop it, in pipeline order) or 'kept'; kept rows
+    carry split/pack_id, dropped rows NULL.
 
     ``engine`` selects the minhash hash family ('xxh' engine default;
     'md5' is what the oracle pins). Repetition thresholds beyond
-    top-2gram use the repetition_filter defaults.
-
-    ``classifier_labeled`` / ``classifier_weights`` enable the
-    fastText/CCNet-style trained quality-model gate
-    (``operators/classifier.py``), ordered right after the Gopher
-    rules: pass a labeled frame (text + 0/1 ``label``) to train
-    in-call, or a pre-trained (bucket, weight) frame to reuse a model
-    across corpora (exactly one of the two). Documents scoring below
-    ``classifier_threshold`` are dropped; ``classifier_kwargs``
-    forwards num_buckets/engine/seed/epochs/lr/l2/label_col. NULL-text
-    documents have no features and are dropped by this gate (featurize
-    contract). Scoring is map-only (broadcast weight array), so the
-    gate adds zero shuffles to the pipeline.
-
-    ``lm_drop_bucket`` enables the CCNet-style trained-LM gate: fit
-    the interpolated bigram LM on the repetition-filter survivors and
-    drop documents whose perplexity bucket ('head'/'middle'/'tail')
-    matches — pass "tail" for the classic keep-head+middle policy.
-
-    ``with_fates`` switches the output to delta ATTRIBUTION mode:
-    EVERY input document comes back with a ``fate`` column naming the
-    pipeline stage that dropped it ('gopher', 'quality_model',
-    'token_bounds', 'repetition', 'lm_perplexity', 'near_dup' — the
-    FIRST stage to drop it, in pipeline order) or 'kept'; kept rows carry
-    split/pack_id, dropped rows NULL. Token counts are measured after the optional text-rewriting
-    stages, so boilerplate/PII/span stripping shows up as token delta
-    within a fate, not as a fate. Feed the result to
-    :func:`curation_report` for the per-stage docs/tokens summary."""
-    if lm_drop_bucket is not None and lm_drop_bucket not in (
-        "head", "middle", "tail",
-    ):
-        raise ValueError(
-            f"lm_drop_bucket must be head/middle/tail, got "
-            f"{lm_drop_bucket!r}"
-        )
-    if classifier_labeled is not None and classifier_weights is not None:
-        raise ValueError(
-            "pass classifier_labeled (train in-call) OR "
-            "classifier_weights (pre-trained), not both"
-        )
-    use_classifier = (
-        classifier_labeled is not None or classifier_weights is not None
-    )
+    top-2gram use the repetition_filter defaults."""
     weights = split_weights or {"train": 0.8, "val": 0.1, "test": 0.1}
     mh = dict(num_hashes=16, bands=4, shingle_n=3)
     mh.update(minhash_kwargs or {})
 
-    # 0) optional text-rewriting passes, BEFORE any scoring so token
-    # counts / repetition / dedup all see the cleaned text
-    if strip_boilerplate_min_docs is not None:
-        df = textstats.line_dedup(
-            df, text_col, id_col, min_docs=strip_boilerplate_min_docs,
-            out_col="_cleaned",
-        ).withColumnRenamed("_cleaned", text_col)
-    if strip_spans_ngram is not None:
-        # cross-doc duplicated-span removal AFTER line stripping (the
-        # line pass catches whole-line boilerplate cheaply; the span
-        # pass catches inline duplication the line pass can't see)
-        df = textstats.span_dedup(
-            df, text_col, id_col, ngram=strip_spans_ngram,
-            out_col="_spanned",
-        ).withColumnRenamed("_spanned", text_col)
-    if scrub_pii:
-        from vrl_spark.operators import pii as _pii
-
-        df = _pii.pii_scrub(
-            df, text_col, out_col="_scrubbed", with_counts=False
-        ).drop(text_col).withColumnRenamed("_scrubbed", text_col)
-
-    # token counts on the (possibly rewritten) text, BEFORE any gate,
-    # so attribution mode can report dropped documents' token mass
+    # token counts BEFORE any gate, so the fates can report dropped
+    # documents' token mass
     with_tok = df.select(
         F.col(id_col), F.col(text_col),
         textstats.token_count(F.col(text_col)).alias("n_tokens"),
     )
-    # when a text-REWRITING stage ran, with_tok embeds the full regex-
-    # rewrite chain; with multiple DAG consumers (the gopher scan, the
-    # classifier featurize, the fates attribution frame) that chain
-    # would otherwise execute once per consumer — persist it. Without
-    # rewriting the recompute is a narrow map-side projection and the
-    # cache would cost more than it saves.
-    rewrote = (
-        strip_boilerplate_min_docs is not None
-        or strip_spans_ngram is not None
-        or scrub_pii
-    )
-    wt_persisted = False
-    if rewrote and (with_fates or gopher_filter or use_classifier):
-        with_tok = with_tok.persist(StorageLevel.MEMORY_AND_DISK)
-        wt_persisted = True
-
-    # 0b) optional Gopher rule gate (full published family) before
-    # the cheaper token-bound/repetition checks
-    gopher_keep = None
-    if gopher_filter:
-        gopher_keep = textstats.gopher_rules(
-            with_tok, text_col, id_col
-        ).where("keep").select(id_col)
-        if with_fates or use_classifier:
-            # multiple DAG consumers of the gated frame (the fates
-            # attribution join, and/or the classifier's featurize +
-            # main-pipeline branches): cache the tiny id set or the
-            # full gopher_rules corpus scan executes once per branch
-            gopher_keep = gopher_keep.persist(StorageLevel.MEMORY_AND_DISK)
-        gated = with_tok.join(gopher_keep, id_col, "left_semi")
-    else:
-        gated = with_tok
-
-    # 0c) optional trained quality-model gate (fastText/CCNet family),
-    # right after the rule gate: train on the seed-sized labeled frame
-    # (or reuse a pre-trained weight frame), then a MAP-ONLY scoring
-    # pass — broadcast (D+1)-row weight array, zero shuffles — and a
-    # left-semi keep on probability >= threshold.
-    clf_keep = None
-    if use_classifier:
-        from vrl_spark.operators import classifier as _clf
-
-        ck = dict(num_buckets=128, engine="xxh", seed=None,
-                  label_col="label", epochs=3, lr=5.0, l2=0.0)
-        unknown = set(classifier_kwargs or {}) - set(ck)
-        if unknown:
-            # a typo'd key (num_bucket=512) would otherwise silently
-            # train in the default bucket space — the sibling
-            # minhash_kwargs fails loudly via **-splat, match it
-            raise ValueError(
-                f"unknown classifier_kwargs {sorted(unknown)}; "
-                f"valid keys: {sorted(ck)}"
-            )
-        ck.update(classifier_kwargs or {})
-        nb = ck["num_buckets"]
-        wframe = classifier_weights
-        if wframe is None:
-            tr = _clf.featurize(
-                classifier_labeled, text_col, id_col, ck["label_col"],
-                nb, ck["engine"], ck["seed"],
-            )
-            wframe = _clf.train_logistic(
-                tr, nb, ck["epochs"], ck["lr"], ck["l2"]
-            )
-        sc = _clf.featurize(
-            gated.select(id_col, text_col), text_col, id_col, None,
-            nb, ck["engine"], ck["seed"],
-        )
-        clf_keep = _clf.score(sc, wframe, num_buckets=nb).where(
-            F.col("prob") >= classifier_threshold
-        ).select(id_col)
-        if with_fates:
-            # two DAG consumers in fates mode (gate + attribution
-            # join): cache the tiny id set like gopher_keep
-            clf_keep = clf_keep.persist(StorageLevel.MEMORY_AND_DISK)
-        gated = gated.join(clf_keep, id_col, "left_semi")
 
     # 1) quality: token bounds, then repetition thresholds
-    bounded = gated.where(
-        F.col("n_tokens").between(min_tokens, max_tokens)
-    )
+    in_bounds = F.col("n_tokens").between(min_tokens, max_tokens)
     quality = textstats.repetition_filter(
-        bounded, text_col, id_col, max_top2gram_frac=max_top2gram_frac
+        with_tok.where(in_bounds), text_col, id_col,
+        max_top2gram_frac=max_top2gram_frac,
     )
     # the quality set feeds FIVE consumers (shingles, two verify-join
     # sides, the survivor join, split/pack): persist it or the n-gram
@@ -223,30 +74,13 @@ def curate_corpus(
     # storage; MEMORY_AND_DISK spills instead of OOMing either way.
     quality = quality.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # 1b) optional trained-LM perplexity gate (CCNet-style), fit on
-    # the persisted quality set. bigram_perplexity checkpoints its
-    # doc-grain result internally, so lm_keep is a materialized tiny
-    # id set and the semi-join below stays cheap for every consumer.
-    lm_keep = None
-    kept_q = quality
-    if lm_drop_bucket is not None:
-        from vrl_spark.operators.retrieval import bigram_perplexity
-
-        lm = bigram_perplexity(
-            quality.select(id_col, text_col), text_col, id_col
-        )
-        lm_keep = lm.where(
-            F.col("lm_bucket") != F.lit(lm_drop_bucket)
-        ).select(id_col)
-        kept_q = quality.join(lm_keep, id_col, "left_semi")
-
     # 2) near-dup dedup: pairs -> clusters -> survivors
     pairs = dedup.minhash_dedup_pairs(
-        kept_q, text_col, id_col, threshold=dedup_threshold,
+        quality, text_col, id_col, threshold=dedup_threshold,
         engine=engine, **mh,
     )
     survivors = dedup.dedup_survivor_rows(
-        kept_q, pairs.select("id_a", "id_b"), id_col
+        quality, pairs.select("id_a", "id_b"), id_col
     )
 
     # 3) stable split assignment
@@ -260,91 +94,32 @@ def curate_corpus(
         budget=pack_budget, token_col="n_tokens", id_col=id_col,
         part_col=F.col("split"),
     )
-    out = packed.select(id_col, "n_tokens", "split", "pack_id")
-    if with_fates:
-        # per-doc attribution: left-join stage-membership markers onto
-        # the full corpus; the first NULL marker in pipeline order is
-        # the dropping stage. quality (and gopher_keep, when gated)
-        # are persisted, and the with_tok recompute is a narrow
-        # map-side projection, so no expensive subtree runs twice.
-        full = with_tok.select(id_col, "n_tokens")
-        fate = F.when(F.lit(False), "never")
-        if gopher_keep is not None:
-            full = full.join(
-                gopher_keep.withColumn("_gk", F.lit(True)), id_col, "left"
-            )
-            fate = fate.when(F.col("_gk").isNull(), "gopher")
-        if clf_keep is not None:
-            full = full.join(
-                clf_keep.withColumn("_ck", F.lit(True)), id_col, "left"
-            )
-            # _gk is tested first, so gopher-dropped rows keep their
-            # gopher fate even though they never reached the model
-            fate = fate.when(F.col("_ck").isNull(), "quality_model")
-        # bounds membership needs NO join: it's a predicate on the
-        # row's own token count (gate-independent; the fate chain
-        # tests _gk first, so gopher-dropped rows never reach it)
-        fate = (
-            fate.when(
-                ~F.col("n_tokens").between(min_tokens, max_tokens),
-                "token_bounds",
-            )
-            .when(F.col("_q").isNull(), "repetition")
-        )
-        if lm_keep is not None:
-            fate = fate.when(F.col("_lm").isNull(), "lm_perplexity")
-        fate = (
-            fate.when(F.col("pack_id").isNull(), "near_dup")
-            .otherwise("kept")
-        )
-        out = full.join(
+
+    # 5) per-doc attribution: left-join stage-membership markers onto
+    # the full corpus; the first NULL marker in pipeline order is the
+    # dropping stage. quality is persisted, and the with_tok recompute
+    # is a narrow map-side projection, so no expensive subtree runs
+    # twice. Bounds membership needs NO join: it's a predicate on the
+    # row's own token count.
+    fate = (
+        F.when(~in_bounds, "token_bounds")
+        .when(F.col("_q").isNull(), "repetition")
+        .when(F.col("pack_id").isNull(), "near_dup")
+        .otherwise("kept")
+    )
+    out = (
+        with_tok.select(id_col, "n_tokens")
+        .join(
             quality.select(id_col).withColumn("_q", F.lit(True)),
             id_col, "left",
         )
-        if lm_keep is not None:
-            out = out.join(
-                lm_keep.withColumn("_lm", F.lit(True)), id_col, "left"
-            )
-        out = (
-            out.join(
-                packed.select(id_col, "split", "pack_id"), id_col, "left"
-            )
-            .select(id_col, "n_tokens", fate.alias("fate"),
-                    "split", "pack_id")
-        )
+        .join(packed.select(id_col, "split", "pack_id"), id_col, "left")
+        .select(id_col, "n_tokens", fate.alias("fate"), "split", "pack_id")
+    )
     # Materialize eagerly (the dedup-cluster stage above already runs
     # actions inside this call) so the quality cache can be released
     # here instead of leaking for the session's lifetime; the result is
     # a few narrow columns, so the checkpoint is small.
     out = out.localCheckpoint(eager=True)
     quality.unpersist()
-    if gopher_keep is not None and (with_fates or use_classifier):
-        gopher_keep.unpersist()
-    if clf_keep is not None and with_fates:
-        clf_keep.unpersist()
-    if wt_persisted:
-        with_tok.unpersist()
     return out
-
-
-def curation_report(fates: DataFrame) -> DataFrame:
-    """Aggregate a ``with_fates`` result into the per-stage delta
-    table a pipeline report wants: documents and token mass attributed
-    to each drop stage (plus the kept remainder), with corpus-wide
-    fractions. One map-side-combined aggregation over at most five
-    fate groups — nothing here shuffles more than a handful of rows.
-    """
-    tot = Window.partitionBy()
-    per = fates.groupBy("fate").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-    )
-    return per.select(
-        "fate", "n_docs", "n_tokens",
-        F.round(F.col("n_docs") / F.sum("n_docs").over(tot), 6).alias(
-            "doc_frac"
-        ),
-        F.round(F.col("n_tokens") / F.sum("n_tokens").over(tot), 6).alias(
-            "token_frac"
-        ),
-    )

@@ -2,14 +2,12 @@
 
 Scale design (the 100 TB story):
 
-- exact       one shuffle on a 128-bit content hash (not the content!)
-              — group keys are 16 bytes regardless of document size.
 - minhash LSH shingle -> K minhashes -> B bands; candidate pairs come
               from an equi-join on (band_id, band_signature) — a plain
               shuffle-hash join on short strings, never an O(n^2)
               cross join. Verification re-computes true jaccard only
               on candidates.
-- simhash     64-bit signature via xxhash64 (JVM) per token; near-dup
+- simhash     64-bit signature over md5-derived token hashes; near-dup
               = hamming distance <= r; banding on bit-chunks gives the
               same join-not-crossjoin property.
 - ngram       exact jaccard on word n-grams within cheap blocks.
@@ -23,27 +21,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# ---------------------------------------------------------------------
-# exact dedup
-# ---------------------------------------------------------------------
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id row per distinct content hash.
-
-    Shuffles 16-byte md5 keys, not documents; the winner is resolved
-    with a min_by aggregation (single shuffle, no window sort)."""
-    h = F.md5(F.col(text_col).cast("binary")).alias("content_hash")
-    return (
-        df.select(F.col(id_col), h)
-        .groupBy("content_hash")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
-    )
-
 
 # ---------------------------------------------------------------------
 # shingling + minhash
@@ -194,27 +171,20 @@ def minhash_signature_xxh(shingles: Column, num_hashes: int = 16) -> Column:
 
 def shingle_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    shingle_n: int = 3, persist: bool = False,
+    shingle_n: int = 3,
 ) -> DataFrame:
     """(id, shingles) for the LSH pipeline's three consumers (signature
     + two verify sides).
 
-    persist defaults to FALSE: after the ``bind`` fix shingling costs
-    ~0.4 s/260 k shingles, while caching the blown-up array<string>
-    intermediate costs ~4 s of columnar serialization — recomputing
-    from the (compressed, column-pruned) source scan is cheaper, and
-    at cluster scale a pipelined re-scan beats materializing an
-    intermediate larger than its input. Opt back in
-    (MEMORY_AND_DISK, spills) when the upstream is expensive —
-    e.g. the corpus is itself a join."""
-    out = df.select(
+    Not persisted: after the ``bind`` fix shingling costs ~0.4 s/260 k
+    shingles, while caching the blown-up array<string> intermediate
+    costs ~4 s of columnar serialization — recomputing from the
+    (compressed, column-pruned) source scan is cheaper, and at cluster
+    scale a pipelined re-scan beats materializing an intermediate
+    larger than its input."""
+    return df.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("shingles")
     )
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    return out
 
 
 def minhash_lsh_pairs(
@@ -388,8 +358,7 @@ def ngram_jaccard_pairs(
 
 
 def _simhash_vote_fold(bitstrs: Column) -> Column:
-    """Fold 64-char bit strings into the sign-of-vote signature string
-    (shared by the xxhash64 and md5 signature families)."""
+    """Fold 64-char bit strings into the sign-of-vote signature string."""
     # ONE pass over the tokens: fold a 64-wide vote counter
     counts = F.aggregate(
         bitstrs,
@@ -405,17 +374,6 @@ def _simhash_vote_fold(bitstrs: Column) -> Column:
     )
 
 
-def simhash_bits(col: Column) -> Column:
-    """64-char '0'/'1' SimHash signature over whitespace tokens.
-
-    Each token hashes once (xxhash64 -> two's-complement bit string
-    via bin+lpad); bit j of the signature is the sign of the +/-1
-    vote sum across tokens. Pure JVM expressions."""
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    bitstrs = F.transform(toks, lambda t: F.lpad(F.bin(F.xxhash64(t)), 64, "0"))
-    return _simhash_vote_fold(bitstrs)
-
-
 def simhash_bits_md5(col: Column) -> Column:
     """DuckDB-PORTABLE SimHash signature: the per-token 64-bit hash is
     the first 16 hex chars of md5(token) (conv hex->binary, one conv
@@ -429,62 +387,8 @@ def simhash_bits_md5(col: Column) -> Column:
     return _simhash_vote_fold(bitstrs)
 
 
-def simhash64(col: Column) -> Column:
-    """SimHash as a signed 64-bit long (two's complement of the bit
-    signature). MSB handled by subtraction to stay ANSI-overflow-safe."""
-    bits = simhash_bits(col)
-    low63 = F.conv(F.substring(bits, 2, 63), 2, 10).cast("long")
-    msb = F.substring(bits, 1, 1) == "1"
-    return F.when(msb, F.lit(-9223372036854775808) + low63).otherwise(low63)
-
-
-# bit masks for the fast path; 1<<63 is the sign bit in two's complement
-_BIT_MASKS = [1 << b for b in range(63)] + [-(1 << 63)]
-
-
-def simhash64_fast(col: Column) -> Column:
-    """Engine-default SimHash: pure bit arithmetic on the xxhash64
-    long — no bin/lpad strings, no char splits (the round-1 path spent
-    11.6 s/5 k docs on 64-wide character zip_withs).
-
-    Each token hashes ONCE (xxhash64 inside a transform, so the fold
-    below reads a lambda variable, never re-hashes); votes are ±1 per
-    bit via mask tests; the signature long is rebuilt by summing the
-    masks of positive-vote bits (all masks distinct -> no overflow).
-    Bit-for-bit equal to ``simhash64`` (pytest equivalence)."""
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(h.bitwiseAND(F.lit(m)) != 0, 1).otherwise(-1)
-                    for m in _BIT_MASKS
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    terms = F.zip_with(
-        counts,
-        F.array(*[F.lit(m) for m in _BIT_MASKS]),
-        lambda c, m: F.when(c > 0, m).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(terms, F.lit(0).cast("long"), lambda a, x: a + x)
-
-
-def _token_hashes_xxh(col: Column) -> Column:
-    """Per-token 64-bit hashes (engine family): array<long> of
-    xxhash64 over whitespace tokens — JVM-side, one hash per token."""
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    return F.transform(toks, lambda t: F.xxhash64(t))
-
-
 def _token_hashes_md5(col: Column) -> Column:
-    """Per-token 64-bit hashes (portable family): the first 16 hex
+    """Per-token 64-bit hashes: the first 16 hex
     chars of md5(token) as a two's-complement long. conv gives the
     unsigned decimal string; the decimal(21,0) subtract maps values
     >= 2^63 into negative long range without overflow."""
@@ -547,13 +451,11 @@ def _simhash_fold_udf():
     return fold
 
 
-def simhash64_batched(col: Column, engine: str = "xxh") -> Column:
-    """Vectorized SimHash: token hashes stay JVM-side (xxhash64 or
-    portable md5-derived longs), the vote fold runs as ONE numpy
-    pandas UDF per Arrow batch. Bit-exact vs simhash64_fast (xxh) /
-    simhash_bits_md5 (md5) — pytest equivalence on both."""
-    hashes = _token_hashes_xxh(col) if engine == "xxh" else _token_hashes_md5(col)
-    return _simhash_fold_udf()(hashes)
+def simhash64_batched(col: Column) -> Column:
+    """Vectorized SimHash: token hashes stay JVM-side (DuckDB-portable
+    md5-derived longs), the vote fold runs as ONE numpy pandas UDF per
+    Arrow batch. Bit-exact vs simhash_bits_md5 (pytest equivalence)."""
+    return _simhash_fold_udf()(_token_hashes_md5(col))
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -566,7 +468,6 @@ def simhash_dedup_pairs(
     id_col: str = "doc_id",
     max_distance: int = 3,
     chunks: int = 4,
-    engine: str = "xxh",
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_distance.
 
@@ -575,13 +476,12 @@ def simhash_dedup_pairs(
     (pigeonhole), so candidates come from an equi-join on
     (chunk_id, chunk_value) — same join-not-crossjoin shape as LSH.
 
-    engine='xxh' (default): xxhash64 token hashes. engine='md5':
-    DuckDB-portable md5-derived hashes (the oracle replicates the
-    signature from the SAME hex math; its substring chunk keys are a
-    bijection of these shift/mask chunk ints, so the candidate sets
-    are identical). Both families share one downstream: the numpy
-    vote-fold UDF (simhash64_batched), 16-bit chunk ints via
-    shift+mask, XOR + bit_count distance.
+    Token hashes are DuckDB-portable md5-derived longs (the oracle
+    replicates the signature from the SAME hex math; its substring
+    chunk keys are a bijection of these shift/mask chunk ints, so the
+    candidate sets are identical), folded by the numpy vote-fold UDF
+    (simhash64_batched); 16-bit chunk ints via shift+mask, XOR +
+    bit_count distance.
     """
     from vrl_spark.functions.parse import materialize
 
@@ -589,7 +489,7 @@ def simhash_dedup_pairs(
     # per chunk projection
     sig = materialize(
         df.select(F.col(id_col), F.col(text_col)),
-        sim=simhash64_batched(F.col(text_col), engine=engine),
+        sim=simhash64_batched(F.col(text_col)),
     ).select(id_col, "sim")
     width = 64 // chunks
     pieces = sig.select(
@@ -628,14 +528,15 @@ def simhash_dedup_pairs(
 # cluster resolution: pairs -> connected components -> keep/drop
 # ---------------------------------------------------------------------
 
+# edge lists up to this many rows resolve with a driver union-find
+DRIVER_EDGES_MAX = 1_000_000
+
 
 def dedup_clusters(
     pairs: DataFrame,
     ids: DataFrame | None = None,
     id_col: str = "doc_id",
     max_iterations: int = 30,
-    stats: dict | None = None,
-    driver_edges_max: int = 1_000_000,
 ) -> DataFrame:
     """Near-dup PAIRS -> (id, cluster_id, keep): the decision stage
     that turns any of the pair-producing operators (minhash / simhash /
@@ -646,7 +547,7 @@ def dedup_clusters(
     ``ids`` (optional, any DataFrame with ``id_col``) adds singleton
     docs that appear in no pair: their own cluster, keep = true.
 
-    Algorithm: edge lists up to ``driver_edges_max`` rows resolve with
+    Algorithm: edge lists up to ``DRIVER_EDGES_MAX`` rows resolve with
     a driver-side union-find (the duplicate-pair graph is normally a
     tiny fraction of the corpus, and each distributed round costs
     several serial stages of scheduler latency; the union-find labels
@@ -658,12 +559,14 @@ def dedup_clusters(
     label(label), a self-join on the label table) halves remaining
     path lengths, so convergence is O(log diameter) rounds, not
     O(diameter) — a chain of 1000 near-identical docs resolves in ~10
-    rounds. ``stats['iterations']`` reports the distributed round
-    count (0 on the driver path).
+    rounds.
 
     Scale notes (100 TB story):
     - per-round cost: 3 shuffles on (long, long) rows — the edge list,
       never documents. Edges are persisted once and reused each round.
+      The shuffles use the session's ``spark.sql.shuffle.partitions``
+      (never set here: the setting is session-global), and AQE
+      coalesces their reduce side.
     - labels are ``localCheckpoint``-ed each round: iterative loops
       otherwise stack lineage exponentially and re-execute the whole
       history every action (on a cluster: ``checkpoint()`` to reliable
@@ -683,12 +586,12 @@ def dedup_clusters(
     )
     n_edges = edges.count()  # also materializes the persist
     spark = pairs.sparkSession
-    if n_edges <= driver_edges_max:
+    if n_edges <= DRIVER_EDGES_MAX:
         # SMALL-GRAPH FAST PATH: the duplicate-pair graph is usually a
         # tiny fraction of the corpus, and each distributed round
         # costs several serial 1-partition stages of pure scheduler
         # latency. Pull the edge list once (bounded by
-        # ``driver_edges_max`` rows of two ids) and resolve components
+        # ``DRIVER_EDGES_MAX`` rows of two ids) and resolve components
         # with a driver union-find — the labels are BY DEFINITION the
         # same min-id-per-component fixpoint the loop converges to.
         # Bigger graphs take the distributed O(log d) loop below.
@@ -726,30 +629,13 @@ def dedup_clusters(
             ]),
         )
         edges.unpersist()
-        if stats is not None:
-            stats["iterations"] = 0  # resolved driver-side
         return _cc_finish(labels, ids, id_col)
-    # Size the loop's shuffles to the EDGE LIST, not the session's
-    # corpus-sized shuffle setting: the label frame is O(nodes) longs,
-    # and a 5k-node graph shuffled across 32 partitions pays ~10x more
-    # scheduler overhead per round than compute. ~2M edges/partition
-    # (~64 MB of long pairs); grows with the graph at 100 TB.
-    parts = int(max(1, min(2048, n_edges // 2_000_000 + 1)))
-    # spark.sql.shuffle.partitions is session-global: the override is
-    # visible to concurrent queries on this session until the finally
-    # restores it. Multi-threaded callers should isolate iterative ops
-    # in spark.newSession() (shared context, separate SQL conf).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        return _cc_loop(edges, ids, id_col, max_iterations, stats)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    return _cc_loop(edges, ids, id_col, max_iterations)
 
 
 def _cc_loop(
     edges: DataFrame, ids: DataFrame | None, id_col: str,
-    max_iterations: int, stats: dict | None = None,
+    max_iterations: int,
 ) -> DataFrame:
     labels = (
         edges.select(F.col("src").alias("id"))
@@ -757,9 +643,7 @@ def _cc_loop(
         .select("id", F.col("id").alias("label"))
         .localCheckpoint(eager=False)
     )
-    rounds = 0
     for _ in range(max_iterations):
-        rounds += 1
         # 1) neighbor-min: pull the min label across the edge. The
         # round's PREVIOUS label rides along as ``_old`` on the
         # self-rows (one non-null per id, recovered by min), so the
@@ -803,8 +687,6 @@ def _cc_loop(
         labels = new.select("id", "label")
         if not changed:
             break
-    if stats is not None:
-        stats["iterations"] = rounds
     edges.unpersist()
     return _cc_finish(labels, ids, id_col)
 

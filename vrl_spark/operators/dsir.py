@@ -24,9 +24,8 @@ The whole recipe is three relational jobs, each 100 TB-shaped:
   rank window runs on n rows (same shape as
   sampling.weighted_sample).
 
-Feature space = classifier.ngram_buckets (hashed word unigrams +
-adjacent bigrams), so a DuckDB oracle replicates every bucket id
-with the md5 family and the fitted models with two GROUP BYs — see
+Feature space = classifier.featurize (md5-hashed word unigrams +
+adjacent bigrams), so a DuckDB oracle replicates every bucket id and the fitted models with two GROUP BYs — see
 the dataset_weighted_sample registry vehicle.
 """
 
@@ -50,10 +49,7 @@ def dsir_fit(
     id_col: str = "doc_id",
     num_buckets: int = 128,
     alpha: float = 1.0,
-    engine: str = "xxh",
-    seed: str | None = None,
     raw_feats: DataFrame | None = None,
-    target_feats: DataFrame | None = None,
 ) -> DataFrame:
     """(bucket, weight) log-likelihood-ratio frame:
     ``weight[b] = ln p_target[b] - ln p_raw[b]`` with add-``alpha``
@@ -62,8 +58,8 @@ def dsir_fit(
     the bias row at bucket ``num_buckets`` with weight 0.0 that sizes
     the dense scoring array (classifier.weight_array contract).
 
-    ``raw_feats`` / ``target_feats``: precomputed ``featurize(...)``
-    frames — callers that also SCORE the raw pool should featurize it
+    ``raw_feats``: a precomputed ``featurize(...)`` frame of the raw
+    pool — callers that also SCORE the raw pool should featurize it
     once, persist/checkpoint it, and pass it to both fit and score;
     otherwise the raw corpus pays the md5 split+hash pass per
     consumer (Spark performs no cross-consumer common-subplan
@@ -73,8 +69,8 @@ def dsir_fit(
     the total is exact regardless of summation order), not a second
     agg pass. A precomputed frame hashed into a WIDER bucket space
     raises in-plan (the count frame carries a range guard); a frame
-    from a different engine/seed at the SAME width is undetectable —
-    matching featurize parameters are the caller's contract.
+    hashed some other way at the SAME width is undetectable —
+    featurize's output is the caller's contract.
 
     An empty target or raw corpus raises IN-PLAN at first action
     (p would be undefined; a NULL-weight frame would silently score
@@ -117,11 +113,8 @@ def dsir_fit(
         )
 
     if raw_feats is None:
-        raw_feats = featurize(raw, text_col, id_col, None, num_buckets, engine, seed)
-    if target_feats is None:
-        target_feats = featurize(
-            target, text_col, id_col, None, num_buckets, engine, seed
-        )
+        raw_feats = featurize(raw, text_col, id_col, None, num_buckets)
+    target_feats = featurize(target, text_col, id_col, None, num_buckets)
     tc = counts(target_feats, "_tc", "target")
     rc = counts(raw_feats, "_rc", "raw")
     spark = target.sparkSession
@@ -163,8 +156,6 @@ def dsir_score(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_buckets: int = 128,
-    engine: str = "xxh",
-    seed: str | None = None,
     feats: DataFrame | None = None,
 ) -> DataFrame:
     """(id, log_weight) — per-doc importance log-weight
@@ -177,11 +168,11 @@ def dsir_score(
     ``feats``: a precomputed featurize frame (see dsir_fit) —
     validated in-plan against the bucket range (bucket_sum's bounded
     lookup would otherwise silently read 0.0 for every out-of-range
-    feature of a wider-space frame); a same-width different-engine
-    frame is undetectable and the caller's contract."""
+    feature of a wider-space frame); a same-width frame hashed some
+    other way is undetectable and the caller's contract."""
     provided = feats is not None
     if feats is None:
-        feats = featurize(corpus, text_col, id_col, None, num_buckets, engine, seed)
+        feats = featurize(corpus, text_col, id_col, None, num_buckets)
     warr = weight_array(weights, num_buckets)
     bks = F.col("bks")
     if provided:
@@ -235,8 +226,6 @@ def dsir_sample(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_buckets: int = 128,
-    engine: str = "xxh",
-    seed: str | None = None,
     salt: str = "dsir",
     feats: DataFrame | None = None,
 ) -> DataFrame:
@@ -254,7 +243,7 @@ def dsir_sample(
     if n <= 0:
         raise ValueError(f"n must be positive, got {n}")
     scored = dsir_score(
-        corpus, weights, text_col, id_col, num_buckets, engine, seed, feats
+        corpus, weights, text_col, id_col, num_buckets, feats
     )
     keyed = scored.withColumn(
         "_key", F.col("log_weight") + _gumbel(F.col(id_col), salt)

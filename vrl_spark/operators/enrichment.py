@@ -30,27 +30,21 @@ def find_table_row(
     facts: DataFrame,
     table: DataFrame,
     on: list[tuple[str, str]],
+    order_col: str,
     case_insensitive: bool = False,
     date_range: tuple[str, str, str] | None = None,
-    fact_id: str | None = None,
-    order_col: str | None = None,
 ) -> DataFrame:
     """Left-join ``table`` onto ``facts`` with first-match-wins.
 
     on: [(fact_col, dim_col), ...] equality conditions (non-empty).
+    order_col: dim column defining "first" (table order in Vector).
     date_range: (fact_ts_col, dim_from_col, dim_to_col) inclusive.
-    fact_id: accepted for API compatibility; unused (no per-fact
-    window is needed — first-match resolves inside the dim).
-    order_col: dim column defining "first" (table order in Vector);
-    pass one for cross-run determinism — monotonically_increasing_id
-    is only stable within a plan.
 
     Output schema: all fact columns, then all dim columns (NULL on
     miss), exactly like a deduplicated broadcast left join.
     """
     dim_cols = table.columns
-    order = F.col(order_col) if order_col is not None else F.monotonically_increasing_id()
-    dim = table.withColumn("_dim_order", order)
+    dim = table.withColumn("_dim_order", F.col(order_col))
 
     # Group the dim per (normalized) key into an ordered candidate
     # array. sort_array on structs compares field-by-field, so putting

@@ -7,6 +7,12 @@ DataFrame-loop discipline established by dedup.dedup_clusters:
 
 - per-iteration cost: one equi-join (edges x ranks) + one groupBy(dst)
   — both shuffles on node ids, never on payloads
+- shuffles are sized to the edge list (~2M edges per partition) by
+  explicit hash repartitions on the join/group keys, so every join
+  side is co-partitioned and no exchange falls back to the session's
+  corpus-sized ``spark.sql.shuffle.partitions`` (which the loops never
+  set: the setting is session-global and would leak into concurrent
+  queries)
 - ranks are localCheckpoint-ed per iteration (lineage would otherwise
   grow exponentially; on a real cluster use checkpoint() to reliable
   storage)
@@ -14,8 +20,11 @@ DataFrame-loop discipline established by dedup.dedup_clusters:
   are folded INTO the plan as 1-row broadcast crossJoins — zero
   driver collects inside the loops; the only per-round action is the
   localCheckpoint materialization itself
-- shuffle partitions are sized to the edge list, not the session's
-  corpus-sized setting
+- every checkpoint is EAGER: a broadcast build must never be the
+  first job to materialize a lazily checkpointed frame. When it is,
+  the broadcast-exchange thread and the DAG scheduler take the RDD's
+  lock and its checkpoint-data lock in opposite orders, and the JVM
+  can deadlock (seen under PageRank's dangling-mass broadcast)
 """
 
 from __future__ import annotations
@@ -24,32 +33,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _with_edge_sized_shuffle(edges, src_col, dst_col, loop_fn) -> DataFrame:
-    """Shared iterative-loop harness: persist the normalized edge
-    list, size shuffle partitions to IT (not the session's
-    corpus-sized setting), run the loop, restore the conf.
+def _on_edges(edges, src_col, dst_col, loop_fn) -> DataFrame:
+    """Shared iterative-loop harness: the normalized edge list, hash-
+    partitioned by ``src`` into a partition count sized to it and
+    checkpointed once, is what the loop reads every round."""
+    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    parts = int(max(1, min(2048, e.count() // 2_000_000 + 1)))
+    return loop_fn(e.repartition(parts, "src").localCheckpoint(), parts)
 
-    NOTE: ``spark.sql.shuffle.partitions`` is session-global, so the
-    override is visible to anything else planning queries on this
-    SparkSession while the loop runs. Callers that share one session
-    across threads / concurrent streaming batches should run iterative
-    operators from a dedicated session (``spark.newSession()`` shares
-    the context but isolates SQL conf). Single-threaded drivers — the
-    normal batch-pipeline case — are unaffected; the conf is restored
-    in ``finally``."""
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).persist()
-    n_edges = e.count()
-    parts = int(max(1, min(2048, n_edges // 2_000_000 + 1)))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        return loop_fn(e)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        e.unpersist()
+
+def _nodes(e: DataFrame, parts: int) -> DataFrame:
+    """Every node of the edge list once, hash-partitioned by node."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionAll(e.select(F.col("dst").alias("node")))
+        .repartition(parts, "node")
+        .distinct()
+        .localCheckpoint()
+    )
 
 
 def pagerank(
@@ -68,30 +69,21 @@ def pagerank(
     be deduped by the caller if they are not intended as weights
     (each copy contributes).
     """
-    return _with_edge_sized_shuffle(
-        edges, src_col, dst_col, lambda e: _pr_loop(e, damping, iterations)
+    return _on_edges(
+        edges, src_col, dst_col,
+        lambda e, parts: _pr_loop(e, damping, iterations, parts),
     )
 
 
-def _pr_loop(e: DataFrame, d: float, iterations: int) -> DataFrame:
-    # checkpoints are LAZY throughout the loop: the next action to
-    # touch each frame (the count here, an iteration's dangling-mass
-    # broadcast build, the final consumer) materializes it, so no
-    # round pays a separate eager-checkpoint job. Lineage still
-    # truncates at materialization — plan growth stays bounded.
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+def _pr_loop(e: DataFrame, d: float, iterations: int, parts: int) -> DataFrame:
+    # eager checkpoints (see the module docstring): each round's
+    # dangling-mass broadcast reads only materialized frames
+    nodes = _nodes(e, parts)
     n = nodes.count()
     out_deg = e.groupBy("src").agg(
         F.count(F.lit(1)).cast("double").alias("out")
-    ).localCheckpoint(eager=False)
-    ranks = nodes.select(
-        "node", F.lit(1.0 / n).alias("rank")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
+    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     for _ in range(iterations):
         # dangling mass as a 1-row broadcast, not a driver collect:
         # the scalar folds into the SAME job the checkpoint runs, so
@@ -105,6 +97,7 @@ def _pr_loop(e: DataFrame, d: float, iterations: int) -> DataFrame:
             e.join(ranks, e["src"] == ranks["node"])
             .join(out_deg, "src")
             .select(F.col("dst").alias("node"), (F.col("rank") / F.col("out")).alias("c"))
+            .repartition(parts, "node")
             .groupBy("node")
             .agg(F.sum("c").alias("inflow"))
         )
@@ -119,7 +112,7 @@ def _pr_loop(e: DataFrame, d: float, iterations: int) -> DataFrame:
                            + F.col("_dang") / n)
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return ranks
 
@@ -138,27 +131,24 @@ def hits(
         authority'(v) = sum over u->v of hub(u)     (then / L1 sum)
         hub'(v)       = sum over v->u of authority'(u)  (then / L1 sum)
 
-    Same loop discipline as pagerank: edge-sized shuffles, two
-    equi-join+groupBy steps per iteration, localCheckpoint per round;
+    Same loop discipline as pagerank: two equi-join+groupBy steps per
+    iteration, an eager localCheckpoint per round;
     each L1 normalization total rides as a 1-row broadcast crossJoin
     inside the round's single action — no driver collects.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    return _with_edge_sized_shuffle(
-        edges, src_col, dst_col, lambda e: _hits_loop(e, iterations)
+    return _on_edges(
+        edges, src_col, dst_col,
+        lambda e, parts: _hits_loop(e, iterations, parts),
     )
 
 
-def _hits_loop(e: DataFrame, iterations: int) -> DataFrame:
-    # same lazy-checkpoint discipline as _pr_loop: the next round's
-    # L1-total broadcast build materializes each frame
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+def _hits_loop(e: DataFrame, iterations: int, parts: int) -> DataFrame:
+    # eager checkpoints, as in _pr_loop: each L1-total broadcast
+    # reads only materialized frames
+    nodes = _nodes(e, parts)
+    by_dst = e.repartition(parts, "dst").localCheckpoint()
 
     def normalized(scores: DataFrame, col: str) -> DataFrame:
         # L1 total as a 1-row broadcast folded into the round's job
@@ -171,7 +161,7 @@ def _hits_loop(e: DataFrame, iterations: int) -> DataFrame:
         )
         return scores.crossJoin(F.broadcast(total)).select(
             "node", (F.col(col) / F.col("_l1")).alias(col)
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint()
 
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
     hub = normalized(hub, "hub")
@@ -180,6 +170,7 @@ def _hits_loop(e: DataFrame, iterations: int) -> DataFrame:
         auth = normalized(
             nodes.join(
                 e.join(hub, e["src"] == hub["node"])
+                .repartition(parts, "dst")
                 .groupBy("dst")
                 .agg(F.sum("hub").alias("authority"))
                 .withColumnRenamed("dst", "node"),
@@ -191,7 +182,8 @@ def _hits_loop(e: DataFrame, iterations: int) -> DataFrame:
         )
         hub = normalized(
             nodes.join(
-                e.join(auth, e["dst"] == auth["node"])
+                by_dst.join(auth, by_dst["dst"] == auth["node"])
+                .repartition(parts, "src")
                 .groupBy("src")
                 .agg(F.sum("authority").alias("hub"))
                 .withColumnRenamed("src", "node"),

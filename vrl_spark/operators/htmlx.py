@@ -328,7 +328,7 @@ def html_main_text(
             # filter+isin (array_intersect DEDUPLICATES — it would cap
             # the ratio at n_distinct_stopwords/len and reject every
             # long prose block; isin over the plain list is the
-            # textstats.stopword_hits idiom and InSet-optimizable).
+            # the stopword-count idiom of textstats.gopher_rules, InSet-optimizable).
             lowered = [w.lower() for w in stopwords]
             words = F.filter(
                 F.split(F.lower(b.getField("text")), r"(?U)\W+"),

@@ -91,23 +91,20 @@ def pii_scrub(
     text_col: str = "text",
     filters: list[str] | None = None,
     out_col: str = "scrubbed",
-    with_counts: bool = True,
 ) -> DataFrame:
-    """Adds ``out_col`` (scrubbed text) and, when ``with_counts``, one
+    """Adds ``out_col`` (scrubbed text), one
     ``n_<filter>`` detection-count column per category plus
     ``pii_total``. Counts are measured on the ORIGINAL text, before
     any replacement, so categories are independent."""
     names = _resolve(filters)
     t = F.col(text_col)
     out = df.withColumn(out_col, pii_scrub_col(t, names))
-    if with_counts:
-        total = None
-        for name in names:
-            c = pii_count(t, name)
-            out = out.withColumn(f"n_{name}", c)
-            total = c if total is None else total + c
-        out = out.withColumn("pii_total", total.cast("long"))
-    return out
+    total = None
+    for name in names:
+        c = pii_count(t, name)
+        out = out.withColumn(f"n_{name}", c)
+        total = c if total is None else total + c
+    return out.withColumn("pii_total", total.cast("long"))
 
 
 def extract_entities(

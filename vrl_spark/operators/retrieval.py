@@ -130,7 +130,6 @@ def tfidf_doc_vectors(
     text_col: str = "text",
     id_col: str = "doc_id",
     top_k: int = 5,
-    quantize: int | None = None,
 ) -> DataFrame:
     """L2-normalized sparse tf-idf document vectors: (id, terms) with
     ``terms`` an array<struct<term, weight>> of the document's top_k
@@ -138,9 +137,8 @@ def tfidf_doc_vectors(
     every document) are dropped; documents left with no terms get an
     empty array.
 
-    ``quantize`` (e.g. 1_000_000) ranks by round(w_hat*quantize)
-    instead of the raw double — cross-engine-deterministic top-k for
-    oracle comparison; production callers can leave it None.
+    Terms rank by round(w_hat * 1e6), not the raw double: a
+    cross-engine-deterministic top-k for oracle comparison.
 
     Scale shape: _tfidf_weights' relational pipeline + one per-doc
     window limited to top_k (WindowGroupLimit pushes the limit below
@@ -149,10 +147,7 @@ def tfidf_doc_vectors(
     from pyspark.sql import Window
 
     hat = _tfidf_weights(df, text_col, id_col).where(F.col("w") > 0)
-    key = (
-        F.round(F.col("w_hat") * quantize) if quantize is not None
-        else F.col("w_hat")
-    )
+    key = F.round(F.col("w_hat") * 1_000_000)
     ranked = hat.withColumn(
         "_rk",
         F.row_number().over(
@@ -277,16 +272,15 @@ def unigram_nll(
 
 def bigram_perplexity(
     df: DataFrame,
+    train_col: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    train_col: str | None = None,
     discount: float = 0.75,
     bucket_quantiles: tuple[float, float] = (0.3, 0.7),
-    exact_thresholds: bool = True,
 ) -> DataFrame:
     """CCNet-style trained-LM quality signal: fit an interpolated
     absolute-discounting bigram language model on the TRAIN subset
-    (rows where `train_col` is true; the whole corpus when None) and
+    (rows where `train_col` is true) and
     score EVERY document's perplexity under it, bucketing the corpus
     into head/middle/tail at the `bucket_quantiles` perplexity
     percentiles — the model-based filter CCNet/KenLM pipelines run
@@ -315,11 +309,8 @@ def bigram_perplexity(
     aggregations; scoring is three equi-joins on token keys (the
     LM tables shuffle, never broadcast — a billion-type vocab still
     flows) + one groupBy(doc). The only non-relational step is the
-    two bucket thresholds over the doc-grain frame:
-    exact_thresholds=True uses exact percentile (memory-bound in one
-    reducer — fine to ~1e8 docs); at the 1e12-doc scale pass False
-    for approx_percentile(1e-4) — CCNet itself fits thresholds on a
-    sample.
+    two bucket thresholds over the doc-grain frame, an exact
+    percentile (memory-bound in one reducer — fine to ~1e8 docs).
     """
     lo_q, hi_q = bucket_quantiles
     if not (0.0 < lo_q <= hi_q < 1.0):
@@ -330,10 +321,7 @@ def bigram_perplexity(
 
     t = F.trim(F.col(text_col))
     toks = F.filter(F.split(F.lower(t), r"\s+"), lambda x: x != "")
-    is_train = (
-        F.col(train_col).cast("boolean") if train_col is not None
-        else F.lit(True)
-    )
+    is_train = F.col(train_col).cast("boolean")
     n = F.size(F.col("_w"))
     base = df.select(
         F.col(id_col), toks.alias("_w"), is_train.alias("_train")
@@ -436,13 +424,9 @@ def bigram_perplexity(
     # repo's #1 perf trap). One eager checkpoint = one scoring pass;
     # the threshold agg needs a full pass over docs anyway.
     docs = docs.localCheckpoint(eager=True)
-    if exact_thresholds:
-        th_expr = F.percentile("_ppl", F.lit([lo_q, hi_q]))
-    else:
-        th_expr = F.percentile_approx(
-            "_ppl", F.lit([lo_q, hi_q]), F.lit(10000)
-        )
-    th = docs.agg(th_expr.alias("_th")).select(
+    th = docs.agg(
+        F.percentile("_ppl", F.lit([lo_q, hi_q])).alias("_th")
+    ).select(
         F.round(F.col("_th")[0] * 1e6).cast("long").alias("_lo"),
         F.round(F.col("_th")[1] * 1e6).cast("long").alias("_hi"),
     )

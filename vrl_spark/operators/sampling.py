@@ -190,7 +190,6 @@ def sample_per_stratum(
     n: int,
     id_col: str = "doc_id",
     salt: str = "sample",
-    prefilter: float | None = None,
 ) -> DataFrame:
     """Deterministic exact-n-per-stratum sample (eval-set construction:
     "100 docs per (lang, source)"). Each stratum keeps its n rows with
@@ -202,37 +201,18 @@ def sample_per_stratum(
     stratum, in hash order).
 
     Scale path: the exact semantics need a per-stratum rank — one hash
-    shuffle on strata_cols plus a sort within each stratum. At 100 TB
-    with huge strata, pass ``prefilter`` (e.g. 3.0): stratum sizes are
-    counted first (map-side-combined agg, broadcast back) and only rows
-    with hash fraction < prefilter*n/count rank at all, shrinking the
-    sort input ~count/(prefilter*n)-fold. prefilter trades a second
-    scan for a bounded sort; the kept set is identical whenever the
-    nth-smallest hash lands under the cut (P(miss) ~ e^-n at 3x,
-    negligible for n >= 20 — and a stratum smaller than n always
-    keeps every row regardless, because the cut clamps to 1).
+    shuffle on strata_cols plus a sort within each stratum.
     """
     from pyspark.sql import Window
 
     if n <= 0:
         raise ValueError(f"n must be positive, got {n}")
     frac = hash_frac(F.col(id_col), salt)
-    base = df
-    if prefilter is not None:
-        if prefilter <= 1.0:
-            raise ValueError(f"prefilter must be > 1.0, got {prefilter}")
-        counts = df.groupBy(*strata_cols).agg(F.count(F.lit(1)).alias("_cnt"))
-        cut = F.least(F.lit(1.0), F.lit(prefilter * n) / F.col("_cnt"))
-        base = (
-            df.join(F.broadcast(counts), strata_cols, "left")
-            .where(frac < cut)
-            .drop("_cnt")
-        )
     w = Window.partitionBy(*[F.col(c) for c in strata_cols]).orderBy(
         frac.asc(), F.col(id_col).asc()
     )
     return (
-        base.withColumn("sample_rank", F.row_number().over(w))
+        df.withColumn("sample_rank", F.row_number().over(w))
         .where(F.col("sample_rank") <= n)
     )
 
@@ -274,7 +254,6 @@ def mixture_resample(
     total: int,
     id_col: str = "doc_id",
     salt: str = "mix",
-    prefilter: float | None = None,
     out_col: str = "mix_rank",
 ) -> DataFrame:
     """Resample a corpus to TARGET domain-mixture ratios (e.g. 40%
@@ -292,11 +271,7 @@ def mixture_resample(
 
     Scale path: class cardinality is tiny (a handful of domains), so
     the per-class rank window is a FEW-TASK funnel over the whole
-    corpus unless bounded. Pass ``prefilter`` (e.g. 3.0) at scale:
-    per-class counts (map-side-combined agg, broadcast back) cut the
-    rank input to ~prefilter*quota rows per class — the sort cost
-    then depends on the BUDGET, not the corpus. Same miss analysis
-    as sample_per_stratum (P ~ e^-quota at 3x, negligible).
+    corpus.
     """
     from pyspark.sql import Window
 
@@ -307,18 +282,6 @@ def mixture_resample(
     )
     frac = hash_frac(F.col(id_col), salt)
     base = df.join(F.broadcast(qdf), class_col, "inner")
-    if prefilter is not None:
-        if prefilter <= 1.0:
-            raise ValueError(f"prefilter must be > 1.0, got {prefilter}")
-        counts = df.groupBy(class_col).agg(F.count(F.lit(1)).alias("_cnt"))
-        cut = F.least(
-            F.lit(1.0), F.lit(float(prefilter)) * F.col("_quota") / F.col("_cnt")
-        )
-        base = (
-            base.join(F.broadcast(counts), class_col, "left")
-            .where(frac < cut)
-            .drop("_cnt")
-        )
     w = Window.partitionBy(class_col).orderBy(frac.asc(), F.col(id_col).asc())
     return (
         base.withColumn(out_col, F.row_number().over(w).cast("long"))

@@ -46,42 +46,28 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_HASHES = ("xxh64", "md5")
-
-
-def permutation_key(col: Column, seed: str, hash: str = "xxh64") -> Column:
-    """Deterministic permutation sort key for a seeded global shuffle.
-
-    ``xxh64`` (default): F.xxhash64(seed, id) — JVM-side, full signed
-    64-bit range; production lane. ``md5``: first 15 hex chars of
-    md5(seed|id) as a bigint in [0, 2^60) — slower, but byte-for-byte
-    replicable in DuckDB/any engine (the oracle lane, same split as
-    the minhash family).
+def permutation_key(col: Column, seed: str) -> Column:
+    """Deterministic permutation sort key for a seeded global shuffle:
+    the first 15 hex chars of md5(seed|id) as a bigint in [0, 2^60) —
+    byte-for-byte replicable in DuckDB/any engine (the same portability
+    trick as the minhash family).
     """
-    if hash == "xxh64":
-        return F.xxhash64(F.lit(seed), col)
-    if hash == "md5":
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(seed + "|"), col.cast("string"))), 1, 15
-            ),
-            16, 10,
-        ).cast("long")
-    raise ValueError(f"hash must be one of {_HASHES}, got {hash!r}")
+    return F.conv(
+        F.substring(
+            F.md5(F.concat(F.lit(seed + "|"), col.cast("string"))), 1, 15
+        ),
+        16, 10,
+    ).cast("long")
 
 
-def _bucket_of(perm: Column, hash: str, n_buckets: int) -> Column:
-    """Range bucket from the permutation key's top bits.
-
-    Arithmetic shift keeps the map monotone in the SIGNED key for
-    xxh64 (buckets run negative..positive, matching ascending sort
-    order); md5 keys are 60-bit non-negative so the top bits of 60
-    are used. Monotonicity is what makes bucket-then-within-bucket
+def _bucket_of(perm: Column, n_buckets: int) -> Column:
+    """Range bucket from the permutation key's top bits. Keys are
+    60-bit non-negative, so the top bits of 60 are used; the map is
+    monotone in the key, which is what makes bucket-then-within-bucket
     ordering equal to the global ordering.
     """
     bits = n_buckets.bit_length() - 1
-    width = 64 if hash == "xxh64" else 60
-    return F.shiftright(perm, width - bits).cast("long")
+    return F.shiftright(perm, 60 - bits).cast("long")
 
 
 def shard_assign(
@@ -90,16 +76,14 @@ def shard_assign(
     token_col: str = "n_tokens",
     seed: str = "shuffle",
     id_col: str = "doc_id",
-    hash: str = "xxh64",
     n_buckets: int = 64,
-    with_pos: bool = True,
 ) -> DataFrame:
     """Seeded global shuffle + fixed-token-budget shard assignment.
 
     Returns ``df`` plus ``perm_key`` (the permutation sort key),
-    ``shard_id`` (0-based, ~``budget`` tokens per shard) and — when
-    ``with_pos`` — ``shard_pos`` (1-based rank within the shard in
-    permutation order). Deterministic: a pure function of
+    ``shard_id`` (0-based, ~``budget`` tokens per shard) and
+    ``shard_pos`` (1-based rank within the shard in permutation
+    order). Deterministic: a pure function of
     (seed, id, token counts), so the oracle can pin the exact
     permutation and assignment.
 
@@ -112,13 +96,11 @@ def shard_assign(
         raise ValueError(f"budget must be positive, got {budget}")
     if n_buckets < 2 or n_buckets & (n_buckets - 1):
         raise ValueError(f"n_buckets must be a power of two >= 2, got {n_buckets}")
-    if hash not in _HASHES:
-        raise ValueError(f"hash must be one of {_HASHES}, got {hash!r}")
 
-    perm = permutation_key(F.col(id_col), seed, hash)
+    perm = permutation_key(F.col(id_col), seed)
     tok = F.coalesce(F.col(token_col).cast("long"), F.lit(0))
     base = df.withColumn("perm_key", perm).withColumn(
-        "_bucket", _bucket_of(F.col("perm_key"), hash, n_buckets)
+        "_bucket", _bucket_of(F.col("perm_key"), n_buckets)
     ).withColumn("_tok", tok)
 
     # pass A: bucket totals -> cumulative offsets (tiny frame: the
@@ -148,13 +130,12 @@ def shard_assign(
         )
         .withColumn("shard_id", F.floor(F.col("_start") / budget).cast("long"))
     )
-    if with_pos:
-        # linear chain, NOT a tiny-agg branch: a branch would recompute
-        # the whole pass-B subtree (see module docstring)
-        w_shard = Window.partitionBy("shard_id").orderBy(
-            F.col("perm_key").asc(), F.col(id_col).asc()
-        )
-        placed = placed.withColumn(
-            "shard_pos", F.row_number().over(w_shard).cast("long")
-        )
+    # linear chain, NOT a tiny-agg branch: a branch would recompute
+    # the whole pass-B subtree (see module docstring)
+    w_shard = Window.partitionBy("shard_id").orderBy(
+        F.col("perm_key").asc(), F.col(id_col).asc()
+    )
+    placed = placed.withColumn(
+        "shard_pos", F.row_number().over(w_shard).cast("long")
+    )
     return placed.drop("_bucket", "_tok", "_off_tok", "_start")

@@ -190,27 +190,23 @@ def lsh_topk(
     dim: int,
     k: int = 5,
     num_planes: int = 6,
-    multiprobe: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: probe the query's LSH bucket (plus, with
-    ``multiprobe``, every bucket at hamming distance 1 — the standard
-    recall lever that costs probes, not corpus passes).
+    """Approximate top-k: probe the query's LSH bucket plus every
+    bucket at hamming distance 1 (multiprobe — the standard recall
+    lever that costs probes, not corpus passes).
 
     At scale the corpus is written bucketed-by(bucket) once; probes
     become partition-pruned scans. Recall tunes via num_planes
-    (fewer planes -> bigger buckets) and multiprobe."""
+    (fewer planes -> bigger buckets)."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cvec"),
         lsh_bucket(F.col(vec_col), dim, num_planes).alias("bucket"),
     )
     qb = lsh_bucket(F.col(vec_col), dim, num_planes)
-    if multiprobe:
-        probes = F.array(qb, *[qb.bitwiseXOR(F.lit(1 << p)) for p in range(num_planes)])
-    else:
-        probes = F.array(qb)
+    probes = F.array(qb, *[qb.bitwiseXOR(F.lit(1 << p)) for p in range(num_planes)])
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
@@ -298,8 +294,6 @@ def cosine_dedup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.99,
     block_bits: int = 4,
-    quantized: bool = False,
-    quant_margin: float = 0.05,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked-exact.
 
@@ -311,140 +305,14 @@ def cosine_dedup_pairs(
     size exactly like LSH band count. Exact cosine verifies inside
     blocks; the self-join is shuffle_hash-hinted so Spark never tries
     to broadcast the (expensive) bucketed subplan.
-
-    ``quantized=True`` is the 100 TB shuffle-width lever: the
-    self-join ships int8 arrays (4x narrower than float32) and scores
-    candidates with the scale-free int cosine at ``threshold -
-    quant_margin``, then the surviving candidate ids join their float
-    vectors back for an EXACT verify at ``threshold``. The exact
-    verify means NO false pairs ever; a true pair can only be missed
-    if its int8-cosine drift exceeds ``quant_margin`` — drift measures
-    well under 0.02 on typical dense embeddings (see
-    test_embedding_quantization_roundtrip) but the worst case grows
-    ~sqrt(dim)/127 for outlier-heavy vectors, so raise the margin (at
-    the cost of more candidates to verify) when dimensions are large
-    or magnitudes are spiky. The sign bucket always comes from the
-    float vector (a near-zero negative dimension quantizes to 0,
-    which would flip its sign bit). The verify joins are shuffle-
-    hinted so Spark never broadcasts the (possibly expensive) input
-    subplan; persist ``df`` first if it is not a cheap scan — the
-    quantized path scans it four times (join sides + two id fetches).
     """
-    from vrl_spark.functions.parse import materialize
-
-    if not quantized:
-        sig = df.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_vec"),
-            sign_bucket(F.col(vec_col), block_bits).alias("_bucket"),
-            norm(F.col(vec_col)).alias("_nm"),
-        )
-        return _blocked_exact_pairs(sig, threshold)
-
-    from vrl_spark.functions.parse import bind
-
-    # materialize + bind: _vec and _nm both read the quantized array
-    # through ONE evaluation — plain projections (even chained
-    # selects) CollapseProject-inline quantize_embedding once per
-    # downstream reference, and a bare norm(quantize(...)) would
-    # re-quantize per row a second time
-    qsig = materialize(
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_fv"),
-        ),
-        _qn=bind(
-            quantize_embedding(F.col("_fv")).getField("q"),
-            lambda q: F.struct(q.alias("v"), norm(q).alias("n")),
-        ),
-    ).select(
-        "_id",
-        F.col("_qn").getField("v").alias("_vec"),
-        F.col("_qn").getField("n").alias("_nm"),
-        sign_bucket(F.col("_fv"), block_bits).alias("_bucket"),
+    sig = df.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_vec"),
+        sign_bucket(F.col(vec_col), block_bits).alias("_bucket"),
+        norm(F.col(vec_col)).alias("_nm"),
     )
-    cand = _blocked_exact_pairs(qsig, threshold - quant_margin).select(
-        "id_a", "id_b"
-    )
-    # exact verify: only candidate ids pull their float vectors.
-    # Per-PAIR cosine deliberately: candidates are sparse at dedup
-    # thresholds (|pairs| << N), so folding norms per surviving pair
-    # (3 folds x |pairs|) beats precomputing them per ROW below the
-    # join (2N folds the anti-joined majority never uses) — the
-    # opposite trade from the candidate stage, where every in-bucket
-    # pair is scored.
-    vecs = df.select(F.col(id_col), F.col(vec_col))
-    va = vecs.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")
-    )
-    vb = vecs.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")
-    )
-    verified = materialize(
-        cand.join(va.hint("shuffle_hash"), "id_a")
-        .join(vb.hint("shuffle_hash"), "id_b"),
-        cos=cosine(F.col("_va"), F.col("_vb")),
-    ).select("id_a", "id_b", "cos")
-    return verified.where(F.col("cos") >= threshold)
-
-
-# ---------------------------------------------------------------------
-# int8 embedding quantization
-# ---------------------------------------------------------------------
-
-
-def quantize_embedding(vec: Column) -> Column:
-    """Symmetric per-vector int8 quantization: returns
-    struct(q: array<tinyint>, scale: float) with
-    ``value ~= q * scale`` and scale = max|v| / 127.
-
-    The 100 TB lever for embedding columns: 4x less parquet IO and
-    shuffle width than float32, and cosine is SCALE-INVARIANT, so
-    similarity search runs directly on the int8 arrays with no
-    dequantization (see ``quantized_cosine``). Pure JVM expressions;
-    ``bind`` keeps the max|v| subexpression from re-evaluating per
-    element inside the transform lambda."""
-    from vrl_spark.functions.parse import bind
-
-    def body(v: Column) -> Column:
-        mx = F.array_max(F.transform(v, F.abs))
-        scale = bind(
-            F.when(mx > 0, mx / F.lit(127.0)).otherwise(F.lit(1.0)),
-            lambda s: F.struct(
-                F.transform(
-                    v, lambda x: F.round(x / s).cast("tinyint")
-                ).alias("q"),
-                s.cast("float").alias("scale"),
-            ),
-        )
-        return scale
-
-    return bind(vec, body)
-
-
-def dequantize_embedding(qstruct: Column) -> Column:
-    """Inverse of ``quantize_embedding`` (lossy): q * scale as
-    array<float>."""
-    from vrl_spark.functions.parse import bind
-
-    return bind(
-        qstruct,
-        lambda qs: F.transform(
-            qs.getField("q"),
-            lambda x: (x.cast("float") * qs.getField("scale")),
-        ),
-    )
-
-
-def quantized_cosine(qa: Column, qb: Column) -> Column:
-    """Cosine over two int8 arrays (the ``q`` field of quantized
-    embeddings). Scales cancel: cos(s_a*qa, s_b*qb) = cos(qa, qb) —
-    integer dot products, no dequantization, no float arrays.
-    ``cosine`` already widens elements to double and guards the
-    zero-norm case (an all-zero embedding quantizes to q = 0s, and a
-    bare division would throw DIVIDE_BY_ZERO under ANSI mode)."""
-    return cosine(qa, qb)
-
+    return _blocked_exact_pairs(sig, threshold)
 
 
 # ---------------------------------------------------------------------
@@ -559,7 +427,6 @@ def ivf_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train_iterations: int = 0,
 ) -> DataFrame:
     """IVF-Flat approximate top-k cosine neighbors: corpus vectors are
     bucketed into ``n_lists`` inverted lists by nearest sampled
@@ -574,30 +441,11 @@ def ivf_topk(
     Inverted lists are disjoint, so probed candidates need no dedup.
     Skewed lists (a hot centroid) bound per-task work at
     corpus/n_lists x skew — raise n_lists with corpus size exactly
-    like LSH band count.
-
-    ``train_iterations > 0`` refines the sampled centroids with that
-    many Lloyd k-means rounds before building the lists (FAISS trains
-    its coarse quantizer exactly this way) — lists get balanced and
-    recall at a given nprobe improves; the oracle path keeps the
-    training-free sample (0) which DuckDB can replicate."""
+    like LSH band count. The centroids are the training-free sample of
+    :func:`ivf_centroids`, which DuckDB can replicate."""
     if not 1 <= nprobe <= n_lists:
         raise ValueError(f"need 1 <= nprobe <= n_lists, got {nprobe}")
-    if train_iterations > 0:
-        from vrl_spark.operators.clustering import kmeans
-
-        # SPHERICAL training: the lists are probed by cosine, so the
-        # training objective must be cosine too (plain L2 k-means on
-        # unnormalized embeddings would balance Voronoi cells the
-        # cosine assignment never uses)
-        stats: dict = {}
-        kmeans(
-            corpus, n_lists, iterations=train_iterations,
-            id_col=id_col, vec_col=vec_col, spherical=True, stats=stats,
-        )
-        cents = stats["centroids"]
-    else:
-        cents = ivf_centroids(corpus, n_lists, id_col, vec_col)
+    cents = ivf_centroids(corpus, n_lists, id_col, vec_col)
     assigned = ivf_assign(corpus, cents, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cvec"),
@@ -646,7 +494,6 @@ def semantic_dedup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train_iterations: int = 0,
     centroids: DataFrame | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -676,11 +523,10 @@ def semantic_dedup_pairs(
     clusters at web scale; a hot cluster bounds a task at
     (corpus/n_clusters * skew)^2).
 
-    ``train_iterations > 0`` refines the deterministic smallest-md5
-    sampled centroids with spherical k-means (cosine-correct, same as
-    ivf_topk's trained path); the default 0 keeps the sampled coarse
-    quantizer an oracle can replicate analytically. ``centroids``
-    overrides both (any (centroid_id, centroid_vec) frame).
+    The clusters come from the deterministic smallest-md5 sampled
+    centroids (:func:`ivf_centroids`), which an oracle can replicate
+    analytically; ``centroids`` overrides them (any (centroid_id,
+    centroid_vec) frame).
 
     Returns (id_a, id_b, cos, cluster_id) with id_a < id_b, cos
     rounded 1e-6 — feed straight into dedup.dedup_clusters, or into
@@ -688,7 +534,7 @@ def semantic_dedup_pairs(
     (out-param) records {"centroids": DataFrame}.
 
     CALLER-UNPERSIST CONTRACT: when centroids are sampled internally
-    (``centroids is None`` and ``train_iterations == 0``) the returned
+    (``centroids is None``) the returned
     ``stats["centroids"]`` frame is persisted MEMORY_AND_DISK so its
     corpus-sized TakeOrdered lineage runs once across the assign fold
     and any keep rule. The persist is NOT released here (this is a
@@ -711,30 +557,18 @@ def semantic_dedup_pairs(
     if centroids is None:
         if n_clusters < 1:
             raise ValueError(f"n_clusters must be >= 1, got {n_clusters}")
-        if train_iterations > 0:
-            from vrl_spark.operators.clustering import kmeans
+        # persist (lazy): the sampled-centroid lineage is a full
+        # corpus TakeOrdered — downstream consumers (the assign fold
+        # here, semantic_dedup's isEmpty + keep rule via
+        # stats["centroids"]) would each re-execute it otherwise.
+        # Deliberately NOT an eager localCheckpoint: this is a plan
+        # builder and must stay action-free at call time. The frame
+        # is n_clusters rows.
+        from pyspark import StorageLevel
 
-            kstats: dict = {}
-            kmeans(
-                corpus, n_clusters, iterations=train_iterations,
-                id_col=id_col, vec_col=vec_col, spherical=True,
-                stats=kstats,
-            )
-            centroids = kstats["centroids"]
-        else:
-            # persist (lazy): the sampled-centroid lineage is a full
-            # corpus TakeOrdered — downstream consumers (the assign
-            # fold here, semantic_dedup's isEmpty + keep rule via
-            # stats["centroids"]) would each re-execute it otherwise.
-            # Deliberately NOT an eager localCheckpoint: this is a
-            # plan builder and must stay action-free at call time.
-            # The frame is n_clusters rows; kmeans materializes its
-            # own centroids already.
-            from pyspark import StorageLevel
-
-            centroids = ivf_centroids(
-                corpus, n_clusters, id_col, vec_col
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+        centroids = ivf_centroids(
+            corpus, n_clusters, id_col, vec_col
+        ).persist(StorageLevel.MEMORY_AND_DISK)
     if stats is not None:
         stats["centroids"] = centroids
     sig = ivf_assign(corpus, centroids, id_col, vec_col).select(
@@ -754,12 +588,9 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train_iterations: int = 0,
     centroids: DataFrame | None = None,
-    keep_policy: str = "centroid_far",
     max_iterations: int = 30,
     pairs: DataFrame | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """(id, group_id, keep) — the full SemDeDup decision: pairs from
     :func:`semantic_dedup_pairs`, duplicate GROUPS as connected
@@ -767,16 +598,13 @@ def semantic_dedup(
     pointer jumping; every component stays inside one cluster because
     edges never cross clusters), one survivor per group.
 
-    ``keep_policy``:
-    - ``"centroid_far"`` (the paper's rule): keep the member with the
-      LOWEST cosine to its cluster centroid — duplicates concentrate
-      near cluster cores, and keeping the outer example preserves the
-      most diversity per retained token (SemDeDup §3). Ties break to
-      the smallest id. One extra map-side broadcast gather (centroid
-      map) + one group-min — both on the component-member slice, not
-      the corpus.
-    - ``"min_id"``: dedup_clusters' canonical smallest-id survivor
-      (cheaper; deterministic baseline).
+    The keep rule is the paper's: keep the member with the LOWEST
+    cosine to its cluster centroid — duplicates concentrate near
+    cluster cores, and keeping the outer example preserves the most
+    diversity per retained token (SemDeDup §3). Ties break to the
+    smallest id. One extra map-side broadcast gather (centroid map) +
+    one group-min — both on the component-member slice, not the
+    corpus.
 
     Docs in no pair are their own group with keep = true (singleton
     pass-through, same contract as dedup_clusters).
@@ -784,66 +612,49 @@ def semantic_dedup(
     ``pairs`` (optional): a precomputed / materialized
     semantic_dedup_pairs frame — callers that also consume the pair
     set directly should checkpoint it once and pass it here rather
-    than paying the within-cluster scoring twice. With
-    ``keep_policy='centroid_far'`` the ``centroids`` that PRODUCED the
-    pairs must ride along: the keep rule re-assigns against them, and
-    a NON-EMPTY foreign frame is UNDETECTABLE (every vector happily
-    assigns to its nearest foreign centroid) — the verdict would be
-    scored against the wrong geometry. Under ``centroid_far``, empty
+    than paying the within-cluster scoring twice. The ``centroids``
+    that PRODUCED the pairs must ride along: the keep rule re-assigns
+    against them, and a NON-EMPTY foreign frame is UNDETECTABLE
+    (every vector happily assigns to its nearest foreign centroid) —
+    the verdict would be scored against the wrong geometry. Empty
     frames and pairs/corpus mismatches DO fail loudly (eager check +
-    in-plan raise); ``min_id`` never reads vectors and TRUSTS the
-    caller — a pair endpoint missing from ``corpus`` silently labels
-    its group with an id that is never emitted (a zero-survivor
-    group), so validate pair provenance externally on that path."""
-    if keep_policy not in ("centroid_far", "min_id"):
-        raise ValueError(
-            f"keep_policy must be 'centroid_far' or 'min_id', "
-            f"got {keep_policy!r}"
-        )
+    in-plan raise)."""
     from vrl_spark.operators.dedup import dedup_clusters
 
-    pstats: dict = {}
     if pairs is None:
+        pstats: dict = {}
         pairs = semantic_dedup_pairs(
-            corpus, n_clusters, threshold, id_col, vec_col,
-            train_iterations, centroids, stats=pstats,
+            corpus, n_clusters, threshold, id_col, vec_col, centroids,
+            stats=pstats,
         )
-        if keep_policy == "centroid_far":
-            # the keep rule reads the pair frame three more times
-            # (multi_ids feeds the singles anti-join, the assignment
-            # corpus semi-join, and the member join) on top of
-            # dedup_clusters' consumption; uncheckpointed, each read
-            # re-executes the whole within-cluster scoring join — the
-            # operator's dominant cost. The frame is tiny (duplicate
-            # pairs only).
-            pairs = pairs.localCheckpoint()
+        centroids = pstats["centroids"]
+        # the keep rule reads the pair frame three more times
+        # (multi_ids feeds the singles anti-join, the assignment
+        # corpus semi-join, and the member join) on top of
+        # dedup_clusters' consumption; uncheckpointed, each read
+        # re-executes the whole within-cluster scoring join — the
+        # operator's dominant cost. The frame is tiny (duplicate
+        # pairs only).
+        pairs = pairs.localCheckpoint()
     else:
-        if centroids is None and keep_policy == "centroid_far":
+        if centroids is None:
             raise ValueError(
-                "semantic_dedup: precomputed pairs with "
-                "keep_policy='centroid_far' need the centroids that "
-                "produced them"
+                "semantic_dedup: precomputed pairs need the centroids "
+                "that produced them"
             )
-        if keep_policy == "centroid_far" and centroids.isEmpty():
-            # only the centroid_far keep rule consumes centroids —
-            # min_id with a (useless) empty frame stays valid. The
-            # check runs the frame's lineage once: stats["centroids"]
+        if centroids.isEmpty():
+            # the check runs the frame's lineage once: stats["centroids"]
             # from semantic_dedup_pairs is persisted, so this first
             # action warms the cache the keep rule then reuses.
             raise ValueError(
                 "semantic_dedup: centroids frame is empty — the "
                 "keep rule could not assign any paired doc"
             )
-        pstats["centroids"] = centroids
     ids = corpus.select(F.col(id_col))
     clusters = dedup_clusters(
         pairs.select("id_a", "id_b"), ids=ids, id_col=id_col,
-        max_iterations=max_iterations, stats=stats,
+        max_iterations=max_iterations,
     ).withColumnRenamed("cluster_id", "group_id")
-    if stats is not None and pstats["centroids"] is not None:
-        stats["centroids"] = pstats["centroids"]
-    if keep_policy == "min_id":
-        return clusters.select(id_col, "group_id", "keep")
     # paper rule: within each multi-member group keep the member
     # farthest from its cluster centroid (min cosine, ties -> min id).
     # Scored on the PAIR-GRAPH SLICE only: an id in no pair is a
@@ -861,9 +672,9 @@ def semantic_dedup(
     )
     assigned = ivf_assign(
         corpus.join(multi_ids, id_col, "left_semi"),
-        pstats["centroids"], id_col, vec_col,
+        centroids, id_col, vec_col,
     )
-    cmap = pstats["centroids"].agg(
+    cmap = centroids.agg(
         F.map_from_arrays(
             F.collect_list("centroid_id"),
             F.collect_list("centroid_vec"),

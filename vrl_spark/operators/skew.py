@@ -14,7 +14,7 @@ host (sources/pages.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -23,7 +23,6 @@ def salted_agg(
     key_cols: list[str],
     aggs: dict[str, tuple[str, str]],
     buckets: int = 16,
-    salt_expr: Column | None = None,
 ) -> DataFrame:
     """Two-phase skew-safe aggregation.
 
@@ -31,11 +30,7 @@ def salted_agg(
     The result is EXACTLY equal to the plain groupBy (checked by the
     dedicated oracle query) — salting changes the shuffle shape only.
     """
-    salt = (
-        salt_expr
-        if salt_expr is not None
-        else F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(buckets))
-    )
+    salt = F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(buckets))
     partial_aggs = []
     final_aggs = []
     for out, (fn, col) in aggs.items():

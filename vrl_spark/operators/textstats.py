@@ -29,7 +29,7 @@ def token_count(col: Column) -> Column:
     """Whitespace token count. NULL text counts as 0 (without the
     guard, size(split(NULL)) is -1 under the legacy sizeOfNull config
     and NULL under ANSI — either silently corrupts token sums for
-    consumers like curation_report that surface every row)."""
+    consumers like curate_corpus's fates that surface every row)."""
     t = F.trim(col)
     return (
         F.when(t.isNull() | (F.length(t) == 0), 0)
@@ -46,12 +46,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     )
     # whitespace runs don't count as tokens
     return F.size(F.filter(pieces, lambda p: ~p.rlike(r"^\s+$"))).cast("long")
-
-
-def stopword_hits(col: Column, lang: str) -> Column:
-    words = STOPWORDS[lang]
-    toks = tokens(col)
-    return F.size(F.filter(toks, lambda t: t.isin(words))).cast("long")
 
 
 def lang_id(col: Column) -> Column:
@@ -354,22 +348,6 @@ def contamination_flags(
     )
 
 
-def decontaminate(
-    df,
-    benchmark,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-    n: int = 13,
-):
-    """df minus every document flagged by contamination_flags."""
-    flags = contamination_flags(
-        df, benchmark, text_col, id_col, bench_text_col, n
-    )
-    keep = flags.where(~F.col("contaminated")).select(id_col)
-    return df.join(keep, id_col, "left_semi")
-
-
 def line_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -440,7 +418,6 @@ def span_dedup(
     ngram: int = 8,
     min_docs: int = 2,
     out_col: str = "span_text",
-    engine: str = "xxh",
     keep_cols: list[str] | None = None,
     n_col: str = "n_removed",
 ) -> DataFrame:
@@ -460,13 +437,12 @@ def span_dedup(
     passes does NOT need a self-join that would re-execute this
     operator's input plan twice.
 
-    ``engine``: gram identity for the corpus-wide count.
-    ``"xxh"`` (default) hashes each token slice with xxhash64 — an
-    8-byte shuffle key instead of a ~50-byte gram string; a 64-bit
-    collision falsely merging two grams is ~1e-7 at millions of
-    grams. ``"exact"`` uses the joined gram string — collision-free.
-    (Hashed grams + the map-side rebuild below measured the sf0.1
-    vehicle 4.87 -> 3.07 s vs string grams + token-grain anti-join.)
+    Gram identity for the corpus-wide count: each token slice hashes
+    with xxhash64 — an 8-byte shuffle key instead of a ~50-byte gram
+    string; a 64-bit collision falsely merging two grams is ~1e-7 at
+    millions of grams. (Hashed grams + the map-side rebuild below
+    measured the sf0.1 vehicle 4.87 -> 3.07 s vs string grams +
+    token-grain anti-join.)
 
     Scale shape (all relational; TOKENS NEVER SHUFFLE): tokenize once
     -> gram table via slice -> countDistinct docs per gram (8-byte
@@ -476,8 +452,6 @@ def span_dedup(
     O(1) per-token map lookup. The text/token columns stay where the
     scan put them; only gram hashes and covered positions cross the
     wire."""
-    if engine not in ("xxh", "exact"):
-        raise ValueError(f"unknown span_dedup engine {engine!r}")
     clash = set(keep_cols or []) & {
         id_col, out_col, n_col, "_toks", "_cov", "_total", "_r",
     }
@@ -501,9 +475,7 @@ def span_dedup(
         F.sequence(F.lit(0), F.size(F.col("_toks")) - ngram),
     ).otherwise(F.array().cast("array<int>"))
     sl = F.slice(F.col("_toks"), F.col("_start") + 1, ngram)
-    gram_key = (
-        F.xxhash64(sl) if engine == "xxh" else F.array_join(sl, " ")
-    )
+    gram_key = F.xxhash64(sl)
     grams = base.select(
         F.col(id_col), F.col("_toks"), F.explode(starts).alias("_start")
     ).select(

@@ -95,7 +95,7 @@ def url_dedup(
     df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
 ) -> DataFrame:
     """(canonical_url, keep_id, dup_count): one survivor (min id) per
-    canonical URL — same survivor convention as dedup.exact_dedup."""
+    canonical URL — the smallest id survives, as in dedup_clusters."""
     return (
         df.select(
             url_normalize(F.col(url_col)).alias("canonical_url"), F.col(id_col)

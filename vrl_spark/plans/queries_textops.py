@@ -148,7 +148,6 @@ def dedup_exact(spark, sf_dir):
         "content_hash",
         n_bits=16384,
         k=5,
-        engine="md5",
     )
     return (
         h.join(g, "content_hash")
@@ -404,11 +403,9 @@ FROM cand WHERE distance <= 3
 @register("dedup_simhash", _SIMHASH_ORACLE)
 def dedup_simhash(spark, sf_dir):
     """Chunk-banded simhash near-dup, oracle-checked end-to-end via the
-    md5-portable signature family (engine='md5' pinned; the operator
-    default is the xxhash64 long-arithmetic fast path, equivalence-
-    tested in pytest)."""
+    md5-portable signature family."""
     pairs = dedup.simhash_dedup_pairs(
-        _dup_corpus(spark, sf_dir), max_distance=3, chunks=4, engine="md5"
+        _dup_corpus(spark, sf_dir), max_distance=3, chunks=4
     )
     return pairs.select("id_a", "id_b", F.col("distance").cast("long").alias("distance"))
 
@@ -675,16 +672,15 @@ LEFT JOIN kept k ON k.doc_id = c.doc_id
 def dataset_curation(spark, sf_dir):
     """The capstone composition: quality -> near-dup clusters ->
     survivors -> stable splits -> per-split token packing, one call
-    (operators/curation.curate_corpus), oracle-checked end-to-end —
-    in delta-attribution mode, so every input document comes back
-    with the stage that dropped it (fate) or its split/pack placement."""
+    (operators/curation.curate_corpus), oracle-checked end-to-end:
+    every input document comes back with the stage that dropped it
+    (fate) or its split/pack placement."""
     from vrl_spark.operators.curation import curate_corpus
 
     corpus = _dup_corpus(spark, sf_dir)
     out = curate_corpus(
         corpus, min_tokens=5, max_tokens=5000, max_top2gram_frac=0.12,
         dedup_threshold=0.7, engine="md5", pack_budget=512,
-        with_fates=True,
     )
     return out.select(
         "doc_id", F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -745,20 +741,6 @@ SELECT doc_id,
   ) * 1000000) AS BIGINT) AS quality_x1m
 FROM t
 """
-
-
-def text_stats(spark, sf_dir):
-    docs = read_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        textstats.token_count(t).alias("n_tokens"),
-        textstats.bpe_ish_token_count(t).alias("n_bpe_ish"),
-        textstats.fingerprint(t).alias("fingerprint"),
-        F.round(textstats.quality_score(t) * 1000000).cast("long").alias(
-            "quality_x1m"
-        ),
-    )
 
 
 # repetition metrics: line duplication is per-row list math; n-gram
@@ -888,13 +870,6 @@ def text_decontaminate(spark, sf_dir):
     flags = textstats.contamination_flags(docs, bench, n=8)
     return flags.select(
         "doc_id", F.col("contaminated").cast("long").alias("contaminated_flag")
-    )
-
-
-def text_lang_id(spark, sf_dir):
-    docs = read_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", textstats.lang_id(F.col("text")).alias("lang_pred")
     )
 
 
@@ -1238,8 +1213,7 @@ def dedup_embedding_cosine(spark, sf_dir):
         F.round(F.col("cos") * 1000000).cast("long").alias("val"),
     )
     keeps = semantic_dedup(
-        corpus, threshold=0.99, id_col="vec_id",
-        vec_col="v", keep_policy="centroid_far",
+        corpus, threshold=0.99, id_col="vec_id", vec_col="v",
         pairs=sem, centroids=sstats["centroids"],
     ).select(
         F.lit("sem_keep").alias("variant"),
@@ -1325,18 +1299,6 @@ from vrl_spark.sources import read_table
 _PII_ORACLE = _PII_ORACLE_TEMPLATE.format(
     plant=_PII_PLANT_SQL, **_pii.PII_PATTERNS
 )
-
-
-def text_pii_scrub(spark, sf_dir):
-    """PII scrub over planted corpus: pure chained regexp_replace /
-    regexp_count, JVM codegen, map-only (reference src/stdlib/redact.rs
-    full-redactor semantics; us_ssn regex reference-exact)."""
-    planted = _pii_planted(spark, sf_dir)
-    return _pii.pii_scrub(planted, "text").select(
-        "doc_id", "scrubbed",
-        "n_email", "n_ipv4", "n_us_ssn", "n_credit_card", "n_phone",
-        "pii_total",
-    )
 
 
 # ---------------------------------------------------------------------
@@ -2116,13 +2078,12 @@ def dataset_weighted_sample(spark, sf_dir):
     # pass would run twice over the pool
     from vrl_spark.operators.classifier import featurize
 
-    rfeats = featurize(raw, num_buckets=128, engine="md5").localCheckpoint()
+    rfeats = featurize(raw, num_buckets=128).localCheckpoint()
     w = dsir.dsir_fit(
-        target, raw, num_buckets=128, alpha=1.0, engine="md5",
-        raw_feats=rfeats,
+        target, raw, num_buckets=128, alpha=1.0, raw_feats=rfeats,
     )
     picked = dsir.dsir_sample(
-        raw, w, n=50, num_buckets=128, engine="md5", salt="dsir",
+        raw, w, n=50, num_buckets=128, salt="dsir",
         feats=rfeats,
     ).select(
         F.lit("dsir").alias("variant"), "doc_id",
@@ -2243,13 +2204,6 @@ FROM planted
            ipv4=_pii.PII_PATTERNS["ipv4"])
 
 
-def text_extract_entities(spark, sf_dir):
-    planted = _pii_planted(spark, sf_dir)
-    return _pii.extract_entities(
-        planted, "text", filters=["email", "ipv4"]
-    ).select("doc_id", "email_list", "ipv4_list", "entity_total")
-
-
 # =====================================================================
 # Merged registry vehicles (round 4)
 # =====================================================================
@@ -2366,31 +2320,22 @@ def graph_link_analysis(spark, sf_dir):
     on node (merged r3 queries graph_pagerank + graph_hits).
 
     The two loops are INDEPENDENT until the final join, so their
-    construction (which runs each round's broadcast/materialization
-    jobs) is overlapped from two driver threads — guide §2.6: one
-    loop's straggler tail back-fills with the other loop's jobs. The
-    shuffle-partition override the loops would each apply is hoisted
-    around the pair (both derive parts=1 from this mod-97 planted
-    graph's edge count by the same edge-sized formula; hoisting makes
-    set/restore race-free), and each thread restores to the hoisted
-    value, the outer finally to the session's."""
+    construction (which runs each round's checkpoint jobs) is
+    overlapped from two driver threads — guide §2.6: one loop's
+    straggler tail back-fills with the other loop's jobs. Neither
+    loop touches session conf, so the threads share nothing."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.util import inheritable_thread_target
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_pr = pool.submit(
-                inheritable_thread_target(graph_pagerank), spark, sf_dir
-            )
-            f_hits = pool.submit(
-                inheritable_thread_target(graph_hits), spark, sf_dir
-            )
-            pr, ht = f_pr.result(), f_hits.result()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_pr = pool.submit(
+            inheritable_thread_target(graph_pagerank), spark, sf_dir
+        )
+        f_hits = pool.submit(
+            inheritable_thread_target(graph_hits), spark, sf_dir
+        )
+        pr, ht = f_pr.result(), f_hits.result()
     return pr.join(ht, "node")
 
 
@@ -2475,9 +2420,7 @@ def text_tfidf(spark, sf_dir):
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    vecs = retrieval.tfidf_doc_vectors(
-        docs, top_k=5, quantize=1_000_000
-    ).select(
+    vecs = retrieval.tfidf_doc_vectors(docs, top_k=5).select(
         "doc_id",
         F.array_join(
             F.transform(
@@ -2768,7 +2711,7 @@ def text_quality_classifier(spark, sf_dir):
     )
     out = classifier.quality_classifier(
         planted, labeled,
-        num_buckets=_QC_D, epochs=_QC_EPOCHS, lr=_QC_LR, engine="md5",
+        num_buckets=_QC_D, epochs=_QC_EPOCHS, lr=_QC_LR,
     )
     px = F.round(F.col("prob") * 1000000).cast("long")
     return out.select(
@@ -2886,7 +2829,7 @@ def dataset_mixture_shards(spark, sf_dir):
     )
     return sharding.shard_assign(
         toks, budget=1500, token_col="n_tok", seed="shard5",
-        hash="md5", n_buckets=8, id_col="copy_id",
+        n_buckets=8, id_col="copy_id",
     ).select(
         "doc_id", "mix_class", "mix_rank", "epoch", "n_tok", "perm_key",
         "shard_id", "shard_pos",

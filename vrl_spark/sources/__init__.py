@@ -22,15 +22,10 @@ def spread_scan(df: DataFrame) -> DataFrame:
     local sweet spot across both workload shapes (map-heavy queries
     saturate by ~cores/2; join/loop-heavy queries pay per-task
     scheduling overhead per stage, so full-cores fan-out loses what
-    the maps gain) — and is overridable via the
-    ``spark.vrl.spreadTarget`` conf for cluster profiles. When the
-    input is properly split — any real multi-row-group/multi-file
+    the maps gain). When the input is properly split — any real multi-row-group/multi-file
     table, i.e. the 100 TB case — this is a NO-OP costing only the
     getNumPartitions lookup, so nothing here is tuned to one box."""
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    target = int(spark.conf.get("spark.vrl.spreadTarget",
-                                str(max(1, cores // 2))))
+    target = max(1, df.sparkSession.sparkContext.defaultParallelism // 2)
     parts = df.rdd.getNumPartitions()
     if parts >= target:
         return df
