@@ -80,6 +80,26 @@ def test_enrich_and_timestamp(spark, logs):
     assert out[3]["ts_parsed"] is None  # src null -> no new error
 
 
+def test_enrich_duplicate_key_keeps_fact_rows(spark, logs):
+    """A lookup with a duplicated key enriches each fact row once
+    (first match wins), never multiplying it."""
+    dim = spark.createDataFrame(
+        [("GET", "read"), ("GET", "fetch"), ("POST", "write")], ["m", "kind"]
+    )
+    p = (
+        Pipeline("dup", on_error="keep")
+        .parse_grok("line", ACCESS, anchored=True)
+        .enrich(dim, left_on="method", right_on="m")
+    )
+    rows = p.apply(logs).collect()
+    assert sorted(r["id"] for r in rows) == [1, 2, 3]
+    out = {r["id"]: r for r in rows}
+    assert out[1]["kind"] in ("read", "fetch")
+    assert out[2]["kind"] == "write"
+    assert out[3]["kind"] is None
+    assert "m" not in p.apply(logs).columns
+
+
 def test_explain(logs):
     p = (
         Pipeline("x")
@@ -93,20 +113,27 @@ def test_explain(logs):
 
 
 def test_multimodal_plumbing(spark):
+    """Bytes that are no BMP get NULL for what only a decoder could
+    know (width, height, format, embedding); their length and hash
+    are real, and the same bytes give the same row."""
+    import hashlib
+
     from vrl_spark.operators import multimodal
 
     rows = [(i, bytes([i]) * (100 + i)) for i in range(20)]
-    df = spark.createDataFrame(rows, ["doc_id", "media"])
+    rows.append((20, b"\x89PNG\r\n\x1a\n" + b"\x00" * 40))  # undecoded format
+    df = spark.createDataFrame(rows + [(21, None)], "doc_id long, media binary")
     feats = multimodal.decode_images(df).collect()
-    assert len(feats) == 20
+    assert len(feats) == 22
     by_id = {r["doc_id"]: r for r in feats}
-    assert by_id[3]["meta"]["byte_len"] == 103
-    assert len(by_id[3]["embedding"]) == 8
-    # determinism: same bytes -> same features
-    feats2 = multimodal.decode_images(df).collect()
-    assert {r["doc_id"]: r["meta"]["content_sha"] for r in feats2} == {
-        r["doc_id"]: r["meta"]["content_sha"] for r in feats
-    }
+    for i, data in rows:
+        meta = by_id[i]["meta"]
+        assert (meta["width"], meta["height"], meta["format"]) == (None, None, None)
+        assert by_id[i]["embedding"] is None
+        assert meta["byte_len"] == len(data)
+        assert meta["content_sha"] == hashlib.sha256(data).hexdigest()[:16]
+    assert by_id[21]["meta"] is None and by_id[21]["embedding"] is None
+    assert multimodal.decode_images(df).collect() == feats
 
 
 def _make_bmp(w, h, rgb_rows):
@@ -125,22 +152,20 @@ def _make_bmp(w, h, rgb_rows):
 
 
 def test_multimodal_real_image_kernels(spark):
-    import struct
-
     from vrl_spark.operators import multimodal
 
     bmp = _make_bmp(2, 2, [[(255, 0, 0), (0, 255, 0)], [(0, 0, 255), (255, 255, 255)]])
-    png = (b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR"
-           + struct.pack(">IIBBBBB", 640, 480, 8, 6, 0, 0, 0) + b"\x00" * 8)
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 10
+    bmp8 = bmp[:28] + b"\x08" + bmp[29:]  # 8-bit header: metadata only
+    empty = _make_bmp(2, 0, [])  # no rows: metadata only, no crash
     df = spark.createDataFrame(
-        [(1, bytearray(bmp)), (2, bytearray(png)), (3, bytearray(gif))],
+        [(1, bytearray(bmp)), (2, bytearray(bmp8)), (3, bytearray(empty))],
         ["doc_id", "media"],
     )
     by = {r["doc_id"]: r for r in multimodal.decode_images(df).collect()}
     assert (by[1]["meta"]["format"], by[1]["meta"]["width"], by[1]["meta"]["height"]) == ("bmp", 2, 2)
-    assert (by[2]["meta"]["format"], by[2]["meta"]["width"], by[2]["meta"]["height"]) == ("png", 640, 480)
-    assert (by[3]["meta"]["format"], by[3]["meta"]["width"]) == ("gif", 320)
+    assert (by[2]["meta"]["format"], by[2]["meta"]["width"], by[2]["meta"]["height"]) == ("bmp", 2, 2)
+    assert (by[3]["meta"]["format"], by[3]["meta"]["width"], by[3]["meta"]["height"]) == ("bmp", 2, 0)
+    assert by[2]["embedding"] is None and by[3]["embedding"] is None
     # BMP raster really decoded: 2x2 resize == original pixels, so
     # cell luminances are the known values for pure R/G/B/white
     emb = by[1]["embedding"]
@@ -179,107 +204,6 @@ def test_builder_parse_groks_rule_list(spark):
     import pytest as _pt
     with _pt.raises(KeyError):
         P2("bad", on_error="keep").parse_groks("message", patterns=["%{NOPE:x}"])
-
-
-def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib as _z
-
-    return (struct.pack(">I", len(body)) + ctype + body
-            + struct.pack(">I", _z.crc32(ctype + body)))
-
-
-def _make_png(pixels, color_type=2, filters=None):
-    """Hand-assemble a PNG: pixels HxWxC list, explicit per-row filter
-    types with the filtering applied HERE (independent of the
-    decoder)."""
-    import struct
-    import zlib as _z
-
-    h, w, ch = len(pixels), len(pixels[0]), len(pixels[0][0])
-    raw = bytearray()
-    prev = [0] * (w * ch)
-    filters = filters or [0] * h
-    for y in range(h):
-        line = [c for px in pixels[y] for c in px]
-        ft = filters[y]
-        raw.append(ft)
-        if ft == 0:
-            out = line
-        elif ft == 1:    # Sub
-            out = [(line[x] - (line[x - ch] if x >= ch else 0)) & 0xFF
-                   for x in range(len(line))]
-        elif ft == 2:    # Up
-            out = [(line[x] - prev[x]) & 0xFF for x in range(len(line))]
-        elif ft == 3:    # Average
-            out = [(line[x] - (((line[x - ch] if x >= ch else 0) + prev[x]) >> 1)) & 0xFF
-                   for x in range(len(line))]
-        else:            # Paeth
-            out = []
-            for x in range(len(line)):
-                a = line[x - ch] if x >= ch else 0
-                b = prev[x]
-                c = prev[x - ch] if x >= ch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                out.append((line[x] - pred) & 0xFF)
-        raw.extend(out)
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", _z.compress(bytes(raw)))
-            + _png_chunk(b"IEND", b""))
-
-
-def test_png_raster_decode_golden():
-    """decode_png_pixels: exact pixels back through zlib inflate +
-    every filter type (None/Sub/Up/Average/Paeth), RGB and RGBA."""
-    import numpy as np
-
-    from vrl_spark.operators import multimodal
-
-    # 5 rows x 3 cols RGB, one row per filter type
-    pixels = [
-        [[255, 0, 0], [0, 255, 0], [0, 0, 255]],
-        [[10, 20, 30], [40, 50, 60], [70, 80, 90]],
-        [[200, 100, 50], [25, 75, 125], [0, 255, 128]],
-        [[1, 2, 3], [4, 5, 6], [7, 8, 9]],
-        [[128, 128, 128], [255, 255, 255], [0, 0, 0]],
-    ]
-    png = _make_png(pixels, color_type=2, filters=[0, 1, 2, 3, 4])
-    got = multimodal.decode_png_pixels(png)
-    assert got is not None and got.shape == (5, 3, 3)
-    assert np.array_equal(got, np.array(pixels, dtype=np.uint8))
-
-    # RGBA path
-    rgba = [[[255, 0, 0, 255], [0, 255, 0, 128]],
-            [[0, 0, 255, 64], [255, 255, 255, 0]]]
-    png4 = _make_png(rgba, color_type=6, filters=[0, 4])
-    got4 = multimodal.decode_png_pixels(png4)
-    assert got4.shape == (2, 2, 4)
-    assert np.array_equal(got4, np.array(rgba, dtype=np.uint8))
-
-    # non-PNG and unsupported flavors return None
-    assert multimodal.decode_png_pixels(b"not a png") is None
-
-
-def test_png_embedding_real_pixels(spark):
-    """decode_images: a 2x2 R/G/B/white PNG must produce the same REAL
-    luminance embedding the BMP path does (pixels, not hash stub)."""
-    from vrl_spark.operators import multimodal
-
-    pixels = [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [255, 255, 255]]]
-    png = _make_png(pixels, color_type=2, filters=[0, 2])
-    df = spark.createDataFrame([(1, bytearray(png))], ["doc_id", "media"])
-    row = multimodal.decode_images(df).collect()[0]
-    assert row["meta"]["format"] == "png"
-    assert (row["meta"]["width"], row["meta"]["height"]) == (2, 2)
-    emb = row["embedding"]
-    assert abs(emb[0] - 0.299) < 1e-4      # red cell luminance
-    assert abs(emb[1] - 0.587) < 1e-4      # green
-    assert abs(emb[2] - 0.114) < 1e-4      # blue
-    assert abs(emb[3] - 1.0) < 1e-4        # white
 
 
 def test_grok_nested_source_and_quoted_prefix(spark):

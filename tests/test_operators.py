@@ -119,6 +119,47 @@ def test_brute_force_topk(spark):
     assert sims[4] == -1.0
 
 
+def test_batched_cosine_matches_jvm_fold(spark):
+    """The Arrow kernels return exactly what the interpreted JVM
+    expressions return: NULL vectors, length mismatches (zero norm
+    product or not), empty and zero vectors, overflow, and NaN and
+    infinite components. NaN must stay NaN, not become NULL."""
+    inf, nan = float("inf"), float("nan")
+    cases = [
+        ([1.0, 2.0], [3.0, 4.0]), ([0.0, 0.0], [1.0, 2.0]), ([], []),
+        (None, [1.0]), ([1.0, 2.0], None), (None, None),
+        ([1.0, 2.0], [1.0]), ([0.0, 0.0], [0.0]),
+        ([nan, 1.0], [1.0, 1.0]), ([1.0, 1.0], [1.0, nan]),
+        ([inf, 1.0], [1.0, 1.0]), ([-inf, 1.0], [1.0, 1.0]),
+        ([inf, 0.0], [0.0, 0.0]), ([1.0, -inf], [1.0, 1.0]),
+        ([1e200, 1e200], [1.0, 1.0]), ([nan, 1.0], [1.0]),
+    ]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(cases)],
+        "i int, a array<double>, b array<double>",
+    )
+    a, b = F.col("a"), F.col("b")
+    rows = df.select(
+        "i",
+        similarity.cosine(a, b).alias("cos"),
+        similarity.batched_cosine(a, b).alias("batched_cos"),
+        similarity.dot(a, b).alias("dot"),
+        similarity.batched_dot(a, b).alias("batched_dot"),
+    ).collect()
+    assert len(rows) == len(cases)
+
+    def same(x, y):
+        if x is None or y is None:
+            return x is y
+        return (math.isnan(x) and math.isnan(y)) or x == y
+
+    for r in rows:
+        assert same(r["cos"], r["batched_cos"]), (cases[r["i"]], r)
+        assert same(r["dot"], r["batched_dot"]), (cases[r["i"]], r)
+    by_i = {r["i"]: r for r in rows}
+    assert math.isnan(by_i[8]["batched_cos"])  # NaN, not NULL
+    assert math.isnan(by_i[8]["batched_dot"])
+
 def test_lsh_topk_recall(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.where(F.col("vec_id") < 5)

@@ -384,14 +384,8 @@ def test_every_engine_function_is_reachable():
 # are listed with their reason.
 _OPTION_SCOPE = ("vrl_spark.operators.", "vrl_spark.plans.",
                  "vrl_spark.sources")
-_KEPT_SINGLE_VALUED_OPTIONS = {
-    "vrl_spark.operators.enrichment.find_table_row.case_insensitive":
-        "SURVEY.md names case-insensitive lookup as semantics the "
-        "engine must provide (VRL find_enrichment_table_records)",
-    "vrl_spark.operators.enrichment.find_table_row.date_range":
-        "SURVEY.md names the date-range condition as semantics the "
-        "engine must provide (VRL find_enrichment_table_records)",
-}
+# (empty: every option that steers a branch has several live values)
+_KEPT_SINGLE_VALUED_OPTIONS: dict[str, str] = {}
 _MANY = object()  # a value the walk cannot pin down
 
 
@@ -597,17 +591,37 @@ def test_every_engine_option_is_used():
         f"constant and delete the branch it guards): {flagged}")
 
 
+def _keyword_problems(where, call, fn):
+    """The keywords ``call`` passes that ``fn``'s signature lacks, when
+    ``fn`` is a def or a class (a constant's builtin method is not)."""
+    import ast
+    import inspect
+
+    if not (inspect.isfunction(fn) or inspect.isclass(fn)):
+        return []
+    try:
+        params = inspect.signature(fn).parameters
+    except ValueError:  # a class with a builtin __init__ (an exception)
+        return []
+    if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+        return []
+    return [f"{where} {ast.unparse(call.func)}({k.arg}=...)"
+            for k in call.keywords if k.arg is not None and k.arg not in params]
+
+
 def test_examples_resolve():
     """Every vrl_spark module, imported name and ``module.attr`` the
     runnable examples and tools use still exists, and every keyword
     argument they pass a vrl_spark callable is one of its parameters.
     Examples and tools are not live callers, so nothing else notices
-    when a deletion breaks them. The engine modules are imported; no
-    Spark session starts."""
+    when a deletion breaks them. The keyword check also covers every
+    call in vrl_spark and the live callers whose callee resolves
+    through imports to a vrl_spark def, so a stale keyword fails here,
+    not first when a registry query is built. The engine modules are
+    imported; no Spark session starts."""
     import ast
     import glob
     import importlib
-    import inspect
     import os
 
     def resolve(module, name):
@@ -664,15 +678,31 @@ def test_examples_resolve():
                     and not hasattr(names[node.value.id], node.attr)):
                 problems.append(f"{where}:{node.lineno} "
                                 f"{names[node.value.id].__name__}.{node.attr}")
-            if not isinstance(node, ast.Call) or not callable(
-                    target(node.func)):
+            if isinstance(node, ast.Call):
+                problems += _keyword_problems(f"{where}:{node.lineno}", node,
+                                              target(node.func))
+
+    def lookup(dotted):
+        """The object a resolved dotted vrl_spark name refers to."""
+        parts = dotted.split(".")
+        for k in range(len(parts), 0, -1):
+            try:
+                obj = importlib.import_module(".".join(parts[:k]))
+            except ImportError:
                 continue
-            params = inspect.signature(target(node.func)).parameters
-            if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+            for attr in parts[k:]:
+                obj = getattr(obj, attr, None)
+            return obj
+
+    trees = _source_trees(root)
+    resolve_static = _resolver(trees)
+    for module, tree in sorted(trees.items()):
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
                 continue
-            problems += [f"{where}:{node.lineno} {ast.unparse(node.func)}"
-                         f"({k.arg}=...)" for k in node.keywords
-                         if k.arg is not None and k.arg not in params]
+            dotted = resolve_static(module, node.func) or ""
+            if dotted.startswith("vrl_spark."):
+                problems += _keyword_problems(f"{module}:{node.lineno}", node,
+                                              lookup(dotted))
     assert not problems, (
-        f"examples and tools use names or keywords that are gone: "
-        f"{problems}")
+        f"calls use names or keywords that are gone: {problems}")

@@ -608,8 +608,8 @@ def dedup_clusters(
             return r
 
         all_ids = set()
-        for row in edges.collect():
-            a, b = row[0], row[1]
+        pdf = edges.toPandas()  # Arrow: two id columns, no Row objects
+        for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
             all_ids.add(a)
             ra, rb = find(a), find(b)
             if ra != rb:

@@ -2,14 +2,13 @@
 structs.
 
 The Spark-side plumbing — schemas, Arrow batch shapes, mapInPandas
-partitioning — is real and tested. Kernels are real wherever the
-stdlib suffices: image metadata (PNG/GIF/BMP/JPEG header parsing),
-full raster decode + nearest-neighbor resize + visual features for
-uncompressed 24-bit BMP, 8-bit RGB/RGBA PNG (IDAT is zlib-deflate:
-inflate + scanline unfilter, stdlib+numpy), AND baseline and
-progressive JPEG (a from-scratch T.81 decoder — Huffman, dequant,
-IDCT, 4:2:0/4:2:2 upsampling, restart markers, Annex G spectral
-selection + successive approximation; operators/jpeg.py).
+partitioning — is real and tested. The one format decoded is the one
+the ``multimodal_features`` registry query feeds: uncompressed 24-bit
+BMP, whose header gives the metadata and whose raster feeds a
+nearest-neighbor resize and a fixed 8-value visual descriptor
+(stdlib+numpy). Any other payload gets NULL for what only a decoder
+could know (width, height, format, embedding); ``byte_len`` and
+``content_sha`` hold for any bytes and are always filled.
 
 Design points for 100 TB of media:
 - binary payloads never pass through JVM String (binary -> Arrow ->
@@ -47,55 +46,26 @@ IMAGE_FEATURES_SCHEMA = T.StructType([
 
 
 def _sniff_image(data: bytes):
-    """REAL container-header parsing, stdlib-only: (format, w, h) for
-    PNG / GIF / BMP / JPEG, else None. No codec library needed —
-    dimensions live in the headers."""
+    """BMP container-header parsing, stdlib-only: ("bmp", w, h), else
+    None. The dimensions live in the header."""
     import struct
 
-    if data[:8] == b"\x89PNG\r\n\x1a\n" and len(data) >= 24:
-        w, h = struct.unpack(">II", data[16:24])
-        return "png", w, h
-    if data[:6] in (b"GIF87a", b"GIF89a") and len(data) >= 10:
-        w, h = struct.unpack("<HH", data[6:10])
-        return "gif", w, h
     if data[:2] == b"BM" and len(data) >= 26:
         w, h = struct.unpack("<ii", data[18:26])
         return "bmp", w, abs(h)
-    if data[:3] == b"\xff\xd8\xff":
-        # walk JPEG segments to the first SOF marker
-        i = 2
-        while i + 9 < len(data):
-            if data[i] != 0xFF:
-                break
-            marker = data[i + 1]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                h, w = struct.unpack(">HH", data[i + 5 : i + 9])
-                return "jpeg", w, h
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            i += 2 + seg_len
-        return "jpeg", None, None
     return None
 
 
 def _decode_image_meta(data: bytes) -> dict:
-    """Image metadata: REAL header decode for png/gif/bmp/jpeg;
-    unknown containers fall back to deterministic hash-derived values
-    (stable for tests; a full raster codec like PIL would slot in
-    here without touching the Spark plumbing)."""
-    h = hashlib.sha256(data).digest()
-    sniffed = _sniff_image(data)
-    if sniffed is not None:
-        fmt, w, hh = sniffed
-        return {
-            "width": w, "height": hh, "format": fmt,
-            "byte_len": len(data), "content_sha": h.hex()[:16],
-        }
+    """Image metadata: header decode for BMP. Other bytes get NULL
+    width, height and format (errors as data: no value made up for
+    what was not decoded); ``byte_len`` and ``content_sha`` hold for
+    any bytes."""
+    fmt, w, h = _sniff_image(data) or (None, None, None)
     return {
-        "width": 64 + h[0] % 192,
-        "height": 64 + h[1] % 192,
-        "format": ["jpeg", "png", "webp"][h[2] % 3],
+        "width": w, "height": h, "format": fmt,
         "byte_len": len(data),
-        "content_sha": h.hex()[:16],
+        "content_sha": hashlib.sha256(data).hexdigest()[:16],
     }
 
 
@@ -114,7 +84,7 @@ def decode_bmp_pixels(data: bytes):
     w, h = struct.unpack("<ii", data[18:26])
     bpp = struct.unpack("<H", data[28:30])[0]
     comp = struct.unpack("<I", data[30:34])[0]
-    if bpp != 24 or comp != 0 or w <= 0:
+    if bpp != 24 or comp != 0 or w <= 0 or h == 0:
         return None
     flip = h > 0
     h = abs(h)
@@ -128,82 +98,6 @@ def decode_bmp_pixels(data: bytes):
     return rgb[::-1] if flip else rgb  # bottom-up unless height < 0
 
 
-def decode_png_pixels(data: bytes):
-    """REAL raster decode for 8-bit RGB/RGBA non-interlaced PNG,
-    stdlib-only: IDAT is zlib-deflate, so ``zlib`` + per-scanline
-    unfiltering (PNG filters 0-4) recovers exact pixels. Returns an
-    HxWxC uint8 array (C = 3 or 4), or None for other PNG flavors
-    (palette/16-bit/interlaced) and non-PNGs.
-
-    Filters Up/None vectorize fully; Sub/Average/Paeth carry a
-    left-pixel dependency and scan bytes within the row — correct
-    first, and plenty for the feature path's thumbnails."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if data[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    pos, ihdr, idat = 8, None, []
-    while pos + 8 <= len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        ctype = data[pos + 4 : pos + 8]
-        body = data[pos + 8 : pos + 8 + length]
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", body[:13])
-        elif ctype == b"IDAT":
-            idat.append(body)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # len + type + crc
-    if ihdr is None or not idat:
-        return None
-    w, h, bit_depth, color_type, comp, filt, interlace = ihdr
-    if bit_depth != 8 or color_type not in (2, 6) or comp or filt or interlace:
-        return None
-    ch = 3 if color_type == 2 else 4
-    stride = w * ch
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error:
-        return None
-    if len(raw) < h * (stride + 1):
-        return None
-    out = np.zeros((h, stride), dtype=np.uint8)
-    p = 0
-    for y in range(h):
-        ft = raw[p]
-        p += 1
-        line = np.frombuffer(raw, np.uint8, stride, p).astype(np.int32)
-        p += stride
-        prev = out[y - 1].astype(np.int32) if y else np.zeros(stride, np.int32)
-        if ft == 0:
-            cur = line
-        elif ft == 2:  # Up
-            cur = (line + prev) & 0xFF
-        else:
-            cur = np.zeros(stride, np.int32)
-            for x in range(stride):
-                a = int(cur[x - ch]) if x >= ch else 0
-                b = int(prev[x])
-                if ft == 1:  # Sub
-                    v = line[x] + a
-                elif ft == 3:  # Average
-                    v = line[x] + ((a + b) >> 1)
-                elif ft == 4:  # Paeth
-                    c = int(prev[x - ch]) if x >= ch else 0
-                    pp = a + b - c
-                    pa, pb, pc = abs(pp - a), abs(pp - b), abs(pp - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    v = line[x] + pred
-                else:
-                    return None  # invalid filter byte
-                cur[x] = v & 0xFF
-        out[y] = cur.astype(np.uint8)
-    return out.reshape(h, w, ch)
-
-
 def resize_nearest(arr, out_w: int, out_h: int):
     """Nearest-neighbor resize on an HxWxC array (pure numpy index
     math — the real resize kernel for the feature path)."""
@@ -215,38 +109,25 @@ def resize_nearest(arr, out_w: int, out_h: int):
     return arr[ys][:, xs]
 
 
-def _image_embedding(data: bytes, dim: int = 8) -> list[float]:
-    """Image feature vector. For decodable rasters — 24-bit BMP,
-    8-bit RGB/RGBA PNG (stdlib zlib decode), and baseline JPEG
-    (operators/jpeg.py, from-scratch T.81) — this is REAL:
-    nearest-resize to 2x2 then per-cell mean luminance + global RGB
-    means/std, an honest tiny visual descriptor. Other containers get
-    the deterministic hash stub (a model embedding would slot in
-    here, initialized once per task)."""
+def _image_embedding(data: bytes) -> list[float] | None:
+    """Image feature vector for a decodable 24-bit BMP: nearest-resize
+    to 2x2, then per-cell mean luminance + global RGB means/std, an
+    honest tiny visual descriptor of 8 values. NULL for any other
+    payload."""
+    import numpy as np
+
     px = decode_bmp_pixels(data)
     if px is None:
-        px = decode_png_pixels(data)
-        if px is not None:
-            px = px[:, :, :3]  # drop alpha for the visual descriptor
-    if px is None:
-        from vrl_spark.operators.jpeg import decode_jpeg_pixels
-
-        px = decode_jpeg_pixels(data)
-    if px is not None:
-        import numpy as np
-
-        small = resize_nearest(px, 2, 2).astype(np.float64)
-        lum = (small @ np.array([0.299, 0.587, 0.114])) / 255.0
-        rgb = px.reshape(-1, 3).astype(np.float64) / 255.0
-        feats = list(lum.flatten()) + list(rgb.mean(axis=0)) + [float(rgb.std())]
-        return [round(float(v), 6) for v in feats[:dim]] + [0.0] * max(0, dim - 8)
-    h = hashlib.sha256(b"emb|" + data).digest()
-    return [round(b / 255.0, 6) for b in h[:dim]]
+        return None
+    small = resize_nearest(px, 2, 2).astype(np.float64)
+    lum = (small @ np.array([0.299, 0.587, 0.114])) / 255.0
+    rgb = px.reshape(-1, 3).astype(np.float64) / 255.0
+    feats = list(lum.flatten()) + list(rgb.mean(axis=0)) + [float(rgb.std())]
+    return [round(float(v), 6) for v in feats]
 
 
 def decode_images(
     df: DataFrame, binary_col: str = "media", id_col: str = "doc_id",
-    embed_dim: int = 8,
 ) -> DataFrame:
     """binary media column -> (id, meta struct, embedding) via
     mapInPandas. Iterator form: per-task one-time init (where a real
@@ -264,7 +145,7 @@ def decode_images(
                 else:
                     b = bytes(data)
                     metas.append(_decode_image_meta(b))
-                    embs.append(_image_embedding(b, embed_dim))
+                    embs.append(_image_embedding(b))
             yield pd.DataFrame(
                 {"doc_id": pdf[id_col], "meta": metas, "embedding": embs}
             )

@@ -61,7 +61,11 @@ def _pair_math_udf(with_norms: bool):
     (dot / (sqrt(ssq_a) * sqrt(ssq_b)), 0.0 on zero norms — sqrt is
     correctly rounded in both runtimes); otherwise the raw dot, for
     callers whose norms ride the rows. NULL vectors and length
-    mismatches return NULL, matching zip_with's null-padding fold.
+    mismatches give what the JVM expressions give: NULL from the dot
+    (zip_with's null-padding fold); from the cosine, 0.0 where a
+    vector is NULL or the norm product is 0, else NULL. A NaN or
+    infinite component gives the fold's NaN. A NULL element reaches
+    pandas as NaN and is scored as one, where the fold gives NULL.
     Rounding stays in the JVM on top of the returned double."""
     from pyspark.sql.functions import pandas_udf
 
@@ -72,27 +76,29 @@ def _pair_math_udf(with_norms: bool):
         av = a_ser.tolist()
         bv = b_ser.tolist()
         n = len(av)
-        out = np.full(n, np.nan)
-        ok = np.fromiter(
+        out = np.zeros(n)
+        same = np.fromiter(
             (
                 a is not None and b is not None and len(a) == len(b)
                 for a, b in zip(av, bv)
             ),
             dtype=bool, count=n,
         )
-        if ok.any():
-            idx = np.nonzero(ok)[0]
-            lens = {len(av[i]) for i in idx}
-            for d in lens:  # uniform-dim groups vectorize together
-                sub = [i for i in idx if len(av[i]) == d]
-                if d == 0:
-                    out[sub] = 0.0
-                    continue
-                A = np.stack([np.asarray(av[i], dtype=np.float64)
-                              for i in sub])
-                B = np.stack([np.asarray(bv[i], dtype=np.float64)
-                              for i in sub])
-                dot = np.zeros(len(sub))
+        ok = same.copy()
+        if with_norms:
+            # the guard reads a NULL norm product as not > 0, so a NULL
+            # vector scores 0.0; a length mismatch NULLs only the dot,
+            # which the guard skips when the norm product is 0
+            for i in np.nonzero(~same)[0]:
+                a, b = av[i], bv[i]
+                ok[i] = a is None or b is None or _norm(a) * _norm(b) == 0
+        idx = np.nonzero(same)[0]
+        for d in {len(av[i]) for i in idx}:  # uniform-dim groups vectorize together
+            sub = [i for i in idx if len(av[i]) == d]
+            A = np.stack([np.asarray(av[i], dtype=np.float64) for i in sub])
+            B = np.stack([np.asarray(bv[i], dtype=np.float64) for i in sub])
+            dot = np.zeros(len(sub))
+            with np.errstate(all="ignore"):  # inf * 0 and inf / inf are NaN
                 if with_norms:
                     na = np.zeros(len(sub))
                     nb = np.zeros(len(sub))
@@ -101,21 +107,30 @@ def _pair_math_udf(with_norms: bool):
                         na += A[:, j] * A[:, j]
                         nb += B[:, j] * B[:, j]
                     den = np.sqrt(na) * np.sqrt(nb)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        out[sub] = np.where(den > 0, dot / den, 0.0)
+                    # Spark orders NaN above every number, so the SQL
+                    # guard's ``d > 0`` holds for a NaN norm product
+                    out[sub] = np.where(~(den <= 0), dot / den, 0.0)
                 else:
                     for j in range(d):
                         dot += A[:, j] * B[:, j]
                     out[sub] = dot
-        # nullable Float64 so masked slots arrive as SQL NULL (a bare
-        # float NaN would cross Arrow as NaN, not NULL)
-        res = pd.array(out, dtype="Float64")
-        res[~ok] = pd.NA
-        return pd.Series(res)
+        # explicit mask: masked slots arrive as SQL NULL, while a NaN
+        # the fold computed stays NaN (pd.array would make it NULL)
+        return pd.Series(pd.arrays.FloatingArray(out, mask=~ok))
 
     # pure, but marked non-deterministic so threshold filters cannot
     # duplicate the Arrow eval below themselves (guide §4.4)
     return score.asNondeterministic()
+
+
+def _norm(v) -> float:
+    """``norm()``'s left fold, for a pair the Arrow kernel scores alone."""
+    import math
+
+    ssq = 0.0
+    for x in v:
+        ssq = ssq + x * x
+    return math.sqrt(ssq)
 
 
 def batched_dot(a: Column, b: Column) -> Column:

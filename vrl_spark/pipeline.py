@@ -53,12 +53,6 @@ class Pipeline:
         self.stages.append(_Stage(name, fn, fallible))
         return self
 
-    def derive(self, **cols: Column) -> "Pipeline":
-        """Infallible column derivations (VRL infallible assignment)."""
-        return self._add(
-            "derive", lambda df: df.select("*", *[c.alias(n) for n, c in cols.items()])
-        )
-
     def parse_grok(
         self, src: str, pattern: str, prefix: str = "", anchored: bool = True,
         error: str = "unable to parse input with grok pattern",
@@ -99,14 +93,6 @@ class Pipeline:
 
         return self._add(name, fn, fallible=True)
 
-    def parse_key_value(self, src: str, dest: str = "kv") -> "Pipeline":
-        from vrl_spark.functions.parse import parse_key_value_native
-
-        return self._add(
-            f"parse_kv({src})",
-            lambda df: df.withColumn(dest, parse_key_value_native(F.col(src))),
-        )
-
     def parse_timestamp(self, src: str, fmt: str, dest: str) -> "Pipeline":
         from vrl_spark.functions.parse import parse_timestamp
 
@@ -134,23 +120,22 @@ class Pipeline:
         return self._add(f"coerce({src}->{to})", fn, fallible=to != "string")
 
     def enrich(
-        self, lookup: DataFrame, left_on: str | Column, right_on: str,
+        self, lookup: DataFrame, left_on: str, right_on: str,
         case_insensitive: bool = False,
     ) -> "Pipeline":
-        """Broadcast-hash-join enrichment (VRL enrichment-table
-        find_table_row semantics: key equality, miss -> nulls)."""
+        """Enrichment-table lookup with VRL find_table_row semantics
+        (operators.enrichment.find_table_row): key equality, first
+        match wins, miss -> nulls. A duplicated lookup key never
+        multiplies fact rows. The key column ``right_on`` is dropped."""
+        from vrl_spark.operators.enrichment import find_table_row
 
         def fn(df: DataFrame) -> DataFrame:
-            lk = F.col(left_on) if isinstance(left_on, str) else left_on
-            rk = F.col(right_on)
-            if case_insensitive:
-                lk, rk = F.lower(lk), F.lower(rk)
-            return df.join(F.broadcast(lookup), lk == rk, "left").drop(right_on)
+            return find_table_row(
+                df, lookup, [(left_on, right_on)], order_col=right_on,
+                case_insensitive=case_insensitive,
+            ).drop(right_on)
 
         return self._add("enrich", fn)
-
-    def filter(self, pred: Column) -> "Pipeline":
-        return self._add("filter", lambda df: df.where(pred))
 
     def route(self, routes: list[tuple[str, Column]], otherwise: str = "ok") -> "Pipeline":
         """First-match-wins routing (Vector route transform / VRL
