@@ -123,7 +123,8 @@ def test_batched_cosine_matches_jvm_fold(spark):
     """The Arrow kernels return exactly what the interpreted JVM
     expressions return: NULL vectors, length mismatches (zero norm
     product or not), empty and zero vectors, overflow, and NaN and
-    infinite components. NaN must stay NaN, not become NULL."""
+    infinite components, and NULL elements. NaN must stay NaN, not
+    become NULL."""
     inf, nan = float("inf"), float("nan")
     cases = [
         ([1.0, 2.0], [3.0, 4.0]), ([0.0, 0.0], [1.0, 2.0]), ([], []),
@@ -133,6 +134,10 @@ def test_batched_cosine_matches_jvm_fold(spark):
         ([inf, 1.0], [1.0, 1.0]), ([-inf, 1.0], [1.0, 1.0]),
         ([inf, 0.0], [0.0, 0.0]), ([1.0, -inf], [1.0, 1.0]),
         ([1e200, 1e200], [1.0, 1.0]), ([nan, 1.0], [1.0]),
+        # NULL elements: Arrow hands them to pandas as NaN
+        ([1.0, None], [1.0, 1.0]), ([1.0, 1.0], [None, 1.0]),
+        ([None], [None]), ([nan, None], [1.0, 1.0]), ([0.0, None], [0.0, 0.0]),
+        ([1.0, None], [1.0]), ([None, 1.0], None),
     ]
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(cases)],
@@ -159,6 +164,7 @@ def test_batched_cosine_matches_jvm_fold(spark):
     by_i = {r["i"]: r for r in rows}
     assert math.isnan(by_i[8]["batched_cos"])  # NaN, not NULL
     assert math.isnan(by_i[8]["batched_dot"])
+    assert (by_i[16]["batched_cos"], by_i[16]["batched_dot"]) == (0.0, None)
 
 def test_lsh_topk_recall(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

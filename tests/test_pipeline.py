@@ -105,3 +105,31 @@ def test_literal_table_types_and_escaping(spark):
     assert [tuple(r) for r in df.collect()] == rows
     with pytest.raises(TypeError):
         literal_table(spark, [(1.5,)], ["x"])
+
+
+def test_literal_lookup_keys_types_and_escaping(spark):
+    """The literal lookup finds each key's values (quotes and
+    backslashes round-trip exactly), gives NULL for an absent key,
+    and refuses, on the driver, a duplicated key (naming it) and any
+    value that is not ``str`` or ``int``."""
+    from vrl_spark.sources import literal_lookup
+
+    rows = [("it's", "a'b", 1), ("back\\slash", "c\\d", -2), ("", "empty", 3)]
+    exprs = literal_lookup(spark, rows, "k", ["v", "n"])
+    df = spark.createDataFrame(
+        [(0, "it's"), (1, "back\\slash"), (2, ""), (3, "nope"), (4, None)],
+        "i int, k string",
+    ).selectExpr("i", *exprs)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema][1:] == [
+        ("v", "string"), ("n", "bigint")
+    ]
+    got = [tuple(r)[1:] for r in df.orderBy("i").collect()]
+    assert got == [r[1:] for r in rows] + [(None, None), (None, None)]
+
+    with pytest.raises(ValueError, match="duplicate key \"it's\""):
+        literal_lookup(spark, rows + [("it's", "x", 9)], "k", ["v", "n"])
+    with pytest.raises(ValueError, match="duplicate key 7"):
+        literal_lookup(spark, [(7, "a"), (8, "b"), (7, "c")], "k", ["v"])
+    for bad in [(1.5, "a"), ("a", 1.5), (None, "a"), (True, "a")]:
+        with pytest.raises(TypeError):
+            literal_lookup(spark, [bad], "k", ["v"])

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from vrl_spark.functions import codec, collections as C, misc, strings
 from vrl_spark.functions import parse as P
+from vrl_spark.plans.weblog import LANG_ROWS
 
 SETTINGS = dict(max_examples=15, deadline=None)
 
@@ -345,8 +346,10 @@ def test_sql_literal_round_trips_every_engine_pattern(spark):
 
 def test_literal_sql_refuses_verbatim_escape_session(spark):
     """A session that keeps backslashes in SQL literals verbatim would
-    misread every escaped regex, so the chain refuses to build there."""
+    misread every escaped regex or dim string, so the chain and the
+    literal lookup refuse to build there."""
     from vrl_spark.plans.weblog import ACCESS
+    from vrl_spark.sources import literal_lookup
 
     df = spark.createDataFrame([("x",)], ["line"])
     key = "spark.sql.parser.escapedStringLiterals"
@@ -354,6 +357,50 @@ def test_literal_sql_refuses_verbatim_escape_session(spark):
     try:
         with pytest.raises(ValueError, match="escapedStringLiterals"):
             P.grok_chain(df, ["_g"], "line", [ACCESS])
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            literal_lookup(spark, [("k", "v")], "line", ["v"])
     finally:
         spark.conf.unset(key)
     assert P.grok_chain(df, ["_g"], "line", [ACCESS]).columns == ["line", "_g"]
+
+
+# --- the flagship's lang lookup against the oracle's join -------------
+
+_dim_key = st.sampled_from([k for k, _, _ in LANG_ROWS])
+_lang = st.one_of(
+    _dim_key,
+    _dim_key.map(str.upper),
+    _dim_key.map(lambda k: f" {k}"),
+    st.none(),
+    st.sampled_from(["", "-", " ", "   ", " - ", "xx", "und ", "'", "\\", "e'n", "en\\"]),
+    st.text(alphabet=" -'\\enUND\t", max_size=5),
+    st.text(max_size=6),
+)
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(_lang, min_size=1, max_size=30))
+def test_enrich_lookup_matches_oracle_left_join(spark, langs):
+    """``weblog.enrich_stage`` (a map-literal lookup) equals a DuckDB
+    LEFT JOIN on the oracle's ``VALUES`` dim, row for row: every dim
+    key, unknown keys, NULL, '', '-', blanks, upper-case variants and
+    strings with quotes and backslashes. No row is dropped or added."""
+    import duckdb
+    import pandas as pd
+
+    from vrl_spark.plans import weblog
+
+    df = spark.createDataFrame(list(enumerate(langs)), "i long, lang string")
+    got = sorted(
+        tuple(r) for r in weblog.enrich_stage(spark, df)
+        .select("i", "lang_norm", "lang_name", "lang_family").collect()
+    )
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(langs)), "lang": langs}))
+    norm = "CASE WHEN lang IS NULL OR trim(lang) IN ('', '-') THEN 'und' ELSE lang END"
+    want = sorted(con.execute(f"""
+        SELECT i, {norm} AS lang_norm, lang_name, lang_family
+        FROM t LEFT JOIN {weblog._lang_values_sql()} ON {norm} = lang_key
+    """).fetchall())
+    assert len(got) == len(want) == len(langs)
+    assert got == want

@@ -1,8 +1,9 @@
 """Physical-plan assertions: the plans we'd want at 100 TB, checked
 mechanically so regressions fail CI.
 
-- enrichment join is BROADCAST (no fact-stream shuffle), its dim a
-  JVM literal relation (no Python worker)
+- the flagship's enrichment is an inline map lookup (no join, no
+  broadcast); a range-keyed dim is a broadcast JVM literal relation
+  (no Python worker)
 - flagship has exactly the aggregate exchanges (no accidental ones)
 - parquet scans PUSH filters and PRUNE columns
 - hour-partitioned layout prunes partitions on time predicates
@@ -60,20 +61,22 @@ def assert_dims_built_in_jvm(df) -> None:
     assert leaves and set(leaves) == {"LocalTableScan"}, (leaves, plan)
 
 
-def test_enrich_is_broadcast_and_single_agg_shuffle(spark, sf_dir):
+def test_enrich_is_inline_and_single_agg_shuffle(spark, sf_dir):
     from vrl_spark.plans import weblog
     from vrl_spark.plans.queries_functions import vrl_math_ip_enrich
 
-    df = weblog.full_pipeline(spark, sf_dir)
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # exchanges: broadcast (dim) + the two-phase distinct-agg pair; no more
+    plan = plan_of(weblog.full_pipeline(spark, sf_dir))
+    # the lang dim is a map literal in a projection: no join of any
+    # kind and nothing broadcast
+    assert "Join" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+    assert "ExistingRDD" not in plan and "EvalPython" not in plan, plan
+    # exchanges: the two-phase distinct-agg pair; no more
     shuffle_exchanges = plan.count("Exchange hashpartitioning")
     assert shuffle_exchanges <= 2, plan
-    # the dims are literal relations: building the broadcasts starts no
-    # Python worker (a Python-list createDataFrame is an ExistingRDD scan)
-    assert_dims_built_in_jvm(df)
+    # the range-keyed dim stays a literal relation: building its
+    # broadcast starts no Python worker (a Python-list createDataFrame
+    # is an ExistingRDD scan)
     assert_dims_built_in_jvm(vrl_math_ip_enrich(spark, sf_dir))
 
 
@@ -192,16 +195,18 @@ def test_onepass_parse_runs_regex_once(spark, sf_dir):
 
 # py4j commands that building the flagship aggregate over a pages
 # frame sends, leaving out py4j's releases of dropped JVM objects
-# (their timing depends on earlier work): 117 with SQL-text stages,
-# ~2,160 when every stage was a chain of Column constructors.
-_FLAGSHIP_BUILD_COMMANDS = 117
+# (their timing depends on earlier work): 99 with SQL-text stages and
+# the dim as a map literal, 117 when the dim was a broadcast-joined
+# VALUES relation, ~2,160 when every stage was a chain of Column
+# constructors.
+_FLAGSHIP_BUILD_COMMANDS = 99
 
 
 def test_flagship_build_cost_and_plan_shape(spark, sf_dir):
     """The flagship build stays a few py4j round trips (every stage is
     SQL text), and its executed plan keeps one Generate barrier pair
     and one regexp_replace per pattern, the two aggregate Exchanges
-    and the one broadcast join."""
+    and no broadcast join."""
     import gc
 
     from vrl_spark.plans import weblog
@@ -230,7 +235,24 @@ def test_flagship_build_cost_and_plan_shape(spark, sf_dir):
     assert nodes.count("Generate") == 4, plan
     assert plan.count("regexp_replace") == 2, plan
     assert nodes.count("Exchange") == 2, plan
-    assert nodes.count("BroadcastHashJoin") == 1, plan
+    assert nodes.count("BroadcastHashJoin") == 0, plan
+
+
+def test_flagship_call_jobs(spark, sf_dir, jobs_of, tmp_path):
+    """One flagship call over a pages table read from parquet (the
+    schema read, the two aggregate shuffle stages and the result) runs
+    4 Spark jobs; a broadcast-joined dim added a fifth, to build it."""
+    from vrl_spark.plans import weblog
+
+    path = str(tmp_path / "pages")
+    weblog.load_pages(spark, sf_dir).repartition(8).write.parquet(path)
+
+    def call():
+        pages = spark.read.parquet(path)
+        return weblog.aggregate_stage(weblog.routed_stage(spark, pages)).collect()
+
+    rows, jobs = jobs_of(call)
+    assert rows and jobs == 4, jobs
 
 
 def test_find_table_row_no_fact_shuffle(spark, sf_dir):
@@ -374,10 +396,10 @@ def test_lineage_metrics_plan_shape(spark, sf_dir):
 
     qs = registry.queries()
     plan = plan_of(qs["pipeline_lineage_metrics"](spark, sf_dir))
-    # one shuffle exchange; the second Exchange is the broadcast of
-    # the 15-row enrichment dim
-    assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1
-    assert plan.count("BroadcastExchange") == 1
+    # one shuffle exchange and nothing else: the 15-row enrichment dim
+    # is a map literal, not a broadcast
+    assert plan.count("Exchange") == 1
+    assert "BroadcastExchange" not in plan
     assert "EvalPython" not in plan
     # the multiset fingerprint (sum mod prime) must actually be in
     # the aggregate, not optimized away or moved driver-side (the
@@ -402,7 +424,7 @@ def test_lineage_metrics_plan_shape(spark, sf_dir):
     )
     pplan = plan_of(prod)
     assert "xxhash64" in pplan and "md5" not in pplan
-    assert pplan.count("Exchange") - pplan.count("BroadcastExchange") == 1
+    assert pplan.count("Exchange") == 1
     assert "EvalPython" not in pplan
 
 

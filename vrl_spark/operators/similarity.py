@@ -64,17 +64,19 @@ def _pair_math_udf(with_norms: bool):
     mismatches give what the JVM expressions give: NULL from the dot
     (zip_with's null-padding fold); from the cosine, 0.0 where a
     vector is NULL or the norm product is 0, else NULL. A NaN or
-    infinite component gives the fold's NaN. A NULL element reaches
-    pandas as NaN and is scored as one, where the fold gives NULL.
+    infinite component gives the fold's NaN. A NULL element gives the
+    fold's NULL dot and, through a NULL norm, a 0.0 cosine; Arrow
+    hands it to pandas as NaN, so the JVM flags it (``has_null``).
     Rounding stays in the JVM on top of the returned double."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
-    def score(a_ser: pd.Series, b_ser: pd.Series) -> pd.Series:
+    def score(a_ser: pd.Series, b_ser: pd.Series, has_null: pd.Series) -> pd.Series:
         import numpy as np
 
         av = a_ser.tolist()
         bv = b_ser.tolist()
+        nul = has_null.to_numpy(dtype=bool)
         n = len(av)
         out = np.zeros(n)
         same = np.fromiter(
@@ -83,15 +85,16 @@ def _pair_math_udf(with_norms: bool):
                 for a, b in zip(av, bv)
             ),
             dtype=bool, count=n,
-        )
+        ) & ~nul
         ok = same.copy()
         if with_norms:
             # the guard reads a NULL norm product as not > 0, so a NULL
-            # vector scores 0.0; a length mismatch NULLs only the dot,
-            # which the guard skips when the norm product is 0
+            # vector or element scores 0.0; a length mismatch NULLs
+            # only the dot, which the guard skips when the norm
+            # product is 0
             for i in np.nonzero(~same)[0]:
                 a, b = av[i], bv[i]
-                ok[i] = a is None or b is None or _norm(a) * _norm(b) == 0
+                ok[i] = nul[i] or a is None or b is None or _norm(a) * _norm(b) == 0
         idx = np.nonzero(same)[0]
         for d in {len(av[i]) for i in idx}:  # uniform-dim groups vectorize together
             sub = [i for i in idx if len(av[i]) == d]
@@ -133,14 +136,23 @@ def _norm(v) -> float:
     return math.sqrt(ssq)
 
 
+def _has_null_element(a: Column, b: Column) -> Column:
+    """True where either vector holds a NULL element (false for a NULL
+    vector)."""
+    def has(v: Column) -> Column:
+        return F.exists(v, lambda x: x.isNull())
+
+    return F.coalesce(has(a) | has(b), F.lit(False))
+
+
 def batched_dot(a: Column, b: Column) -> Column:
     """Order-exact Arrow dot product (see _pair_math_udf)."""
-    return _pair_math_udf(with_norms=False)(a, b)
+    return _pair_math_udf(with_norms=False)(a, b, _has_null_element(a, b))
 
 
 def batched_cosine(a: Column, b: Column) -> Column:
     """Order-exact Arrow guarded cosine (see _pair_math_udf)."""
-    return _pair_math_udf(with_norms=True)(a, b)
+    return _pair_math_udf(with_norms=True)(a, b, _has_null_element(a, b))
 
 
 def brute_force_topk(

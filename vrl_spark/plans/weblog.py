@@ -9,12 +9,10 @@ Spark-first:
             semantics; un-parseable rows carry an ``error`` column
             instead of throwing (fallibility-as-data, reference
             src/compiler/expression/assignment.rs:531-548).
-- enrich  : broadcast hash join against a small lang lookup table
-            (VRL enrichment-table semantics: first-match key equality,
-            miss -> nulls). The dim is an inline literal relation
-            (``LocalTableScan``, built in the JVM): a Python-list
-            ``createDataFrame`` dim would run a Python-worker job on
-            every broadcast build.
+- enrich  : key lookup in a small lang table (VRL enrichment-table
+            semantics: key equality, miss -> nulls). The dim is a
+            map literal inside the projection, so it costs no join,
+            no broadcast and no Spark job.
 - route   : one CASE cascade -> ``route`` column (VRL route/abort
             as filter + multi-sink: reference src/test/mod.rs:268-277
             abort semantics), then a SINGLE pass partitioned write.
@@ -30,7 +28,8 @@ read).
 Scale notes (100 TB design point):
 - The parse stage is pure column expressions -> whole-stage codegen;
   no shuffle until the aggregate.
-- The enrichment join is broadcast (15-row dim) — no shuffle.
+- The enrichment is a map lookup inside the projection (15-row
+  dim): no shuffle, and no broadcast to ship to every executor.
 - The only shuffled aggregation is the final groupBy(route, hour):
   ~routes x 24 groups/day, trivially small after map-side partial
   aggregation. Its two count(DISTINCT)s plan as an Expand, so the
@@ -49,7 +48,7 @@ from vrl_spark.functions.parse import grok_chain
 from vrl_spark.grok import compile_grok
 from vrl_spark.pipeline import route_column
 from vrl_spark.sources.pages import derive_pages, derive_pages_sql
-from vrl_spark.sources import literal_table, read_table
+from vrl_spark.sources import literal_lookup, read_table
 
 ACCESS_PATTERN = (
     '%{IPV4:client_ip} - %{USER:user} \\[%{HTTPDATE:ts}\\] '
@@ -128,26 +127,21 @@ def parse_stage(pages: DataFrame) -> DataFrame:
 
 
 def enrich_stage(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Broadcast-join the lang dim. Nullish lang ('', '-', all
-    spaces, null) is normalized to 'und' first (is_nullish semantics,
-    reference src/stdlib/is_nullish.rs); an unknown lang keeps its row
-    with NULL name and family. The normalization, join key and column
-    drop are SQL text.
+    """Look the lang up in the ``LANG_ROWS`` dim. Nullish lang ('',
+    '-', all spaces, null) is normalized to 'und' first (is_nullish
+    semantics, reference src/stdlib/is_nullish.rs); an unknown lang
+    keeps its row with NULL name and family. One SQL-text projection.
 
-    The dim is an inline literal relation over ``LANG_ROWS``, so the
-    broadcast is built from a ``LocalTableScan`` inside the JVM. A
-    Python-list ``createDataFrame`` dim is a PythonRDD scan: every
-    broadcast build (once per flagship call) ran a Python-worker job,
-    most of the enrich stage's CPU."""
-    dim = literal_table(spark, LANG_ROWS, ["lang_key", "lang_name", "lang_family"])
-    return (
-        df.selectExpr(
-            "*",
-            "CASE WHEN lang IS NULL OR trim(lang) IN ('', '-') THEN 'und' "
-            "ELSE lang END AS lang_norm",
-        )
-        .join(dim.hint("broadcast"), F.expr("lang_norm = lang_key"), "left")
-        .selectExpr("* EXCEPT (lang_key)")
+    The dim is a constant of the program, so it is compiled into the
+    expression as a map literal (``sources.literal_lookup``), as VRL
+    compiles constant arguments once: no join, and no broadcast to
+    build in a job of its own on every call."""
+    return df.selectExpr(
+        "*",
+        "CASE WHEN lang IS NULL OR trim(lang) IN ('', '-') THEN 'und' "
+        "ELSE lang END AS lang_norm",
+        # the lookups read lang_norm as a lateral column alias
+        *literal_lookup(spark, LANG_ROWS, "lang_norm", ["lang_name", "lang_family"]),
     )
 
 

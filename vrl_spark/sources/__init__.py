@@ -1,5 +1,5 @@
 """Sources: parquet/Iceberg-style readers, small in-plan literal
-tables, and deterministic synthetic pages generation
+tables and lookups, and deterministic synthetic pages generation
 (Common-Crawl-style input per BASELINE.json input_hint: url,
 warc_ts, html, text, lang)."""
 
@@ -54,7 +54,7 @@ def _sql_literal(v) -> str:
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, int) and not isinstance(v, bool):
         return f"{v}L"
-    raise TypeError(f"literal_table supports str and int values, got {v!r}")
+    raise TypeError(f"SQL literals support str and int values, got {v!r}")
 
 
 def _require_literal_escapes(spark: SparkSession) -> None:
@@ -72,15 +72,17 @@ def _require_literal_escapes(spark: SparkSession) -> None:
 def literal_table(
     spark: SparkSession, rows: list[tuple], columns: list[str]
 ) -> DataFrame:
-    """A small constant table (a lookup dim) as an inline ``VALUES``
-    relation, built entirely in the JVM.
+    """A small constant table (a dim a join cannot do without, such as
+    a range-keyed one) as an inline ``VALUES`` relation, built
+    entirely in the JVM.
 
     Spark plans it as a LocalRelation and runs it as a
     ``LocalTableScan``. ``spark.createDataFrame`` over a Python list
     instead goes through a PythonRDD: every build of a broadcast over
     it runs a job on Python workers. Types follow
     ``createDataFrame``'s inference: ``str`` -> string, ``int`` ->
-    bigint."""
+    bigint. A dim read by key equality alone is cheaper as a
+    ``literal_lookup``."""
     _require_literal_escapes(spark)
     values = ", ".join(
         "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
@@ -88,3 +90,33 @@ def literal_table(
     return spark.sql(
         f"SELECT * FROM (VALUES {values}) AS t({', '.join(columns)})"
     )
+
+
+def literal_lookup(
+    spark: SparkSession, rows: list[tuple], key: str, columns: list[str]
+) -> list[str]:
+    """A small constant dim keyed by each row's first field, as SQL
+    projections: one ``element_at(map(k1, v1, ...), key) AS col`` per
+    name in ``columns`` (the rows' other fields, in order). ``key`` is
+    SQL text; a key not in the dim, or NULL, gives NULL, as a left
+    join's miss does.
+
+    The map is a literal inside the expression, so the lookup needs
+    no join, no broadcast and no job to build either. Values follow
+    ``literal_table``'s types (``str`` -> string, ``int`` -> bigint).
+    A duplicated key raises here: a join would fan the fact row out,
+    and a map literal's answer would hang on
+    ``spark.sql.mapKeyDedupPolicy``."""
+    _require_literal_escapes(spark)
+    keys = {}
+    for r in rows:
+        k = _sql_literal(r[0])
+        if k in keys:
+            raise ValueError(f"literal_lookup: duplicate key {r[0]!r}")
+        keys[k] = r
+    return [
+        "element_at(map("
+        + ", ".join(f"{k}, {_sql_literal(r[i])}" for k, r in keys.items())
+        + f"), {key}) AS {col}"
+        for i, col in enumerate(columns, 1)
+    ]
