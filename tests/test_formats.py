@@ -1,9 +1,10 @@
 """formats module: regex_all, replace_with, xml/yaml/ruby-hash,
-json-schema validation, absent-codec stubs."""
+json-schema validation, the snappy/LZ4/zstd codecs, cbor."""
 
 from __future__ import annotations
 
 import json
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -72,15 +73,15 @@ def test_validate_json_schema(spark):
 
 
 def test_zstd_decoder_against_real_zstd(spark):
-    """The from-scratch RFC 8878 decoder must read frames produced by
-    the REAL zstd implementation (zstd-jni on Spark's classpath) —
-    levels 1/3/19 cover raw, RLE, Huffman (1- and 4-stream,
-    FSE-compressed weights), and FSE-coded sequence paths."""
-    import random
+    """decode_zstd's libzstd path must read frames produced by zstd-jni
+    (on Spark's classpath): one-shot frames at levels 1/3/19, which
+    cover raw, RLE, Huffman (1- and 4-stream, FSE-compressed weights)
+    and FSE-coded sequence paths, and streamed frames that carry no
+    content size."""
+    from vrl_spark.functions.formats import _zstd_decompress
 
-    from vrl_spark.functions.zstdcodec import zstd_decompress
-
-    Z = spark._jvm.com.github.luben.zstd.Zstd
+    jvm = spark._jvm
+    Z = jvm.com.github.luben.zstd.Zstd
     rng = random.Random(99)
     words = [b"alpha", b"beta", b"gamma", b"delta", b"zstd", b"spark"]
     cases = [
@@ -92,7 +93,15 @@ def test_zstd_decoder_against_real_zstd(spark):
     for data in cases:
         for lvl in (1, 3, 19):
             comp = bytes(Z.compress(data, lvl))
-            assert zstd_decompress(comp) == data, (len(data), lvl)
+            assert _zstd_decompress(comp) == data, (len(data), lvl)
+        sink = jvm.java.io.ByteArrayOutputStream()
+        stream = jvm.com.github.luben.zstd.ZstdOutputStream(sink)
+        stream.write(data)
+        stream.close()
+        streamed = bytes(sink.toByteArray())
+        if data:  # an empty stream still records size 0
+            assert Z.getFrameContentSize(streamed) < 0  # unknown
+        assert _zstd_decompress(streamed) == data, len(data)
 
 
 def test_zstd_column_path_and_cross_validation(spark):
@@ -147,13 +156,15 @@ def test_snappy_reference_vector_and_roundtrip(spark):
     )
     rep = b"repetitive " * 200
     df = spark.createDataFrame(
-        [(1, bytearray(vec)), (2, bytearray(b"\xff\xff\xff\xff\xff"))],
+        [(1, bytearray(vec)), (2, bytearray(b"\xff\xff\xff\xff\xff")),
+         (3, bytearray())],
         ["i", "c"],
     )
     got = {r["i"]: r["p"] for r in df.select(
         "i", FM.decode_snappy(F.col("c")).alias("p")).collect()}
     assert bytes(got[1]) == _FOX
     assert got[2] is None  # malformed -> error branch
+    assert got[3] is None  # empty: no length preamble
     enc = spark.createDataFrame([(bytearray(_FOX),), (bytearray(rep),)], ["t"])
     out = enc.select(
         FM.encode_snappy(F.col("t")).alias("c"),
@@ -199,6 +210,17 @@ def test_lz4_reference_vector_and_roundtrip(spark):
     bad = spark.createDataFrame([(bytearray(b"\x10"),)], ["c"])
     assert bad.select(
         FM.decode_lz4(F.col("c")).alias("p")).collect()[0]["p"] is None
+    # a prepended size that lies, and empty input (bare: '', prepended:
+    # no size -> NULL)
+    edge = spark.createDataFrame(
+        [(1, bytearray((45).to_bytes(4, "little") + vec[4:])),
+         (2, bytearray())], ["i", "c"])
+    got = {r["i"]: (r["bare"], r["pre"]) for r in edge.select(
+        "i", FM.decode_lz4(F.col("c")).alias("bare"),
+        FM.decode_lz4(F.col("c"), prepended_size=True).alias("pre"),
+    ).collect()}
+    assert got[1][1] is None
+    assert bytes(got[2][0]) == b"" and got[2][1] is None
 
 
 def test_seahash_reference_vectors(spark):
@@ -279,58 +301,102 @@ def test_parse_cbor_reference_shapes(spark):
     assert got[4] is None
 
 
+_TORTURE = [
+    b"", b"x", b"abcd", b"a" * 300000,  # 2-byte literal lengths
+    b"ab" * 40000, b"abc" * 11, (b"xy" * 3) + b"z",
+    bytes(random.Random(7).randrange(256) for _ in range(20000)),
+    bytes(random.Random(8).randrange(3) for _ in range(70000)),
+    (b"The quick brown fox. " * 100) + bytes(range(256)) * 4,
+]
+
+
 def test_lzcodec_kernels_roundtrip_torture():
-    """Kernel-level: adversarial inputs round-trip through both
-    codecs — overlapping runs (off < len), long literals (multi-byte
-    length encodings), incompressible bytes, binary-ish low-entropy
-    streams — and truncated/garbage streams raise, never misdecode."""
-    import random
+    """Kernel-level: adversarial inputs round-trip through the snappy
+    and LZ4 helpers — overlapping runs (off < len), long literals
+    (multi-byte length encodings), incompressible bytes, binary-ish
+    low-entropy streams — and truncated/garbage streams raise, never
+    misdecode."""
+    for i, c in enumerate(_TORTURE):
+        assert FM._snappy_decompress(FM._snappy_compress(c)) == c, i
+        assert FM._lz4_decompress(
+            FM._lz4_compress(c, False), len(c), False) == c, i
+        assert FM._lz4_decompress(FM._lz4_compress(c, True), 0, True) == c, i
+    for comp, fn in (
+        (FM._snappy_compress(_TORTURE[4]), FM._snappy_decompress),
+        (FM._lz4_compress(_TORTURE[4], False),
+         lambda v: FM._lz4_decompress(v, 10**6, False)),
+    ):
+        for cut in (1, len(comp) // 2, len(comp) - 1):
+            with pytest.raises(ValueError):
+                fn(comp[:cut])
+    with pytest.raises(ValueError):
+        FM._lz4_decompress(b"\xf0", 10**6, False)  # length ext truncated
+    with pytest.raises(ValueError):
+        FM._snappy_decompress(b"\x04\x09\x00")  # copy before any output
+    # a 1 MiB preamble on a 4-byte stream: refused before allocating
+    with pytest.raises(ValueError, match="beyond"):
+        FM._snappy_decompress(b"\x80\x80\x40\x00")
+    with pytest.raises(ValueError):
+        FM._lz4_decompress(FM._lz4_compress(b"a" * 5000, False), 100, False)
 
-    from vrl_spark.functions import lzcodecs as L
 
-    rng = random.Random(7)
-    cases = [
-        b"", b"x", b"abcd", b"a" * 300000,  # 2-byte literal lengths
-        b"ab" * 40000, b"abc" * 11, (b"xy" * 3) + b"z",
-        bytes(rng.randrange(256) for _ in range(20000)),
-        bytes(rng.randrange(3) for _ in range(70000)),
-        (b"The quick brown fox. " * 100) + bytes(range(256)) * 4,
-    ]
-    for i, c in enumerate(cases):
-        assert L.snappy_decompress(L.snappy_compress(c)) == c, i
-        assert L.lz4_decompress(L.lz4_compress(c)) == c, i
-        assert L.lz4_decompress_size_prepended(
-            L.lz4_compress_prepend_size(c)) == c, i
-    comp = L.snappy_compress(cases[4])
-    for cut in (1, len(comp) // 2, len(comp) - 1):
-        try:
-            out = L.snappy_decompress(comp[:cut])
-        except ValueError:
-            continue
-        assert out != cases[4]  # must not silently succeed
-    import pytest
+# 'abcd', a match at offset 0 (liblz4 copies unwritten output), 'vwxyz'
+_LZ4_ZERO_OFFSET = b"\x44abcd\x00\x00\x50vwxyz"
+# 'abcd', a match 9 bytes back when only 4 exist, no trailing literals
+_LZ4_PAST_OUTPUT = b"\x04abcd\x09\x00\x00"
 
+
+def test_lz4_bad_match_offsets_are_null(spark):
+    """A zero match offset and one before the first output byte are
+    rejected by the block walk, in the helper and at the Column level,
+    bare and size-prepended."""
+    for block in (_LZ4_ZERO_OFFSET, _LZ4_PAST_OUTPUT):
+        with pytest.raises(ValueError):
+            FM._lz4_decoded_len(block)
+        with pytest.raises(ValueError):
+            FM._lz4_decompress(block, 10**6, False)
+    rows = [(bytearray(b),) for b in (
+        _LZ4_ZERO_OFFSET, _LZ4_PAST_OUTPUT,
+        (17).to_bytes(4, "little") + _LZ4_ZERO_OFFSET,
+    )]
+    got = spark.createDataFrame(rows, ["c"]).select(
+        FM.decode_lz4(F.col("c")).alias("bare"),
+        FM.decode_lz4(F.col("c"), prepended_size=True).alias("pre"),
+    ).collect()
+    assert [r["bare"] for r in got] == [None] * 3
+    assert [r["pre"] for r in got] == [None] * 3
+
+
+def test_snappy_lz4_against_jvm_codecs(spark):
+    """Cross-validate with the reference codecs Spark ships
+    (snappy-java, lz4-java): our decoders read their output and they
+    read ours, over the torture shapes; both sides reject a bare LZ4
+    block longer than buf_size."""
+    jvm = spark._jvm
+    snappy = jvm.org.xerial.snappy.Snappy
+    lz4 = jvm.net.jpountz.lz4.LZ4Factory.safeInstance()
+    for i, c in enumerate(_TORTURE):
+        assert FM._snappy_decompress(bytes(snappy.compress(c))) == c, i
+        assert bytes(snappy.uncompress(FM._snappy_compress(c))) == c, i
+        theirs = bytes(lz4.fastCompressor().compress(c))
+        assert FM._lz4_decompress(theirs, len(c), False) == c, i
+        assert bytes(lz4.safeDecompressor().decompress(
+            FM._lz4_compress(c, False), len(c))) == c, i
+    block = FM._lz4_compress(b"a" * 5000, False)
     with pytest.raises(ValueError):
-        L.lz4_decompress(b"\xf0")  # literal length extension truncated
-    with pytest.raises(ValueError):
-        L.lz4_decompress(b"\x04abcd\x09\x00\x00")  # offset beyond output
-    with pytest.raises(ValueError):
-        L.snappy_decompress(b"\x04\x09\x00")  # copy before any output
-    with pytest.raises(ValueError):
-        L.lz4_decompress(L.lz4_compress(b"a" * 5000), max_out=100)
+        FM._lz4_decompress(block, 100, False)
+    with pytest.raises(Exception, match="LZ4Exception"):
+        lz4.safeDecompressor().decompress(block, 100)
 
 
 def test_zstd_compressed_block_encoder_cross_validated(spark):
     """The compressing encoder (LZ parse + predefined-FSE sequences)
-    must round-trip through BOTH our decoder and real zstd across
+    must round-trip through BOTH libzstd (pyarrow) and zstd-jni across
     shapes that stress the sequence machinery: many sequences,
     ll=0 runs, long matches, the nseq two-byte header form, and
     incompressible data falling back to store blocks."""
-    import random
-
-    from vrl_spark.functions.zstdcodec import (
-        zstd_compress, zstd_decompress,
-    )
+    from vrl_spark.functions.formats import _zstd_decompress
+    from vrl_spark.functions.zstdcodec import zstd_compress
 
     Z = spark._jvm.com.github.luben.zstd.Zstd
     rng = random.Random(77)
@@ -345,7 +411,7 @@ def test_zstd_compressed_block_encoder_cross_validated(spark):
     ]
     for data in cases:
         mine = zstd_compress(data)
-        assert zstd_decompress(mine) == data
+        assert _zstd_decompress(mine) == data
         if data:
             assert bytes(Z.decompress(mine, len(data))) == data
     # compressible text must actually shrink
@@ -353,13 +419,12 @@ def test_zstd_compressed_block_encoder_cross_validated(spark):
     assert len(zstd_compress(text)) < len(text) // 2
 
 
-def test_zstd_truncated_rle_literals_raise_not_crash():
+def test_zstd_truncated_rle_literals_raise_not_crash(spark):
     """A compressed block whose RLE-literals body is missing (block is
-    exactly the literals header) must raise ZstdError — and via the
-    Spark column path must route to NULL, not kill the task."""
-    import pytest
-
-    from vrl_spark.functions.zstdcodec import ZstdError, zstd_decompress
+    exactly the literals header) must raise the helper's ValueError —
+    and via the Spark column path must route to NULL, not kill the
+    task."""
+    from vrl_spark.functions.formats import _zstd_decompress
 
     frame = (
         b"\x28\xb5\x2f\xfd"  # magic
@@ -367,9 +432,22 @@ def test_zstd_truncated_rle_literals_raise_not_crash():
         + (1 | (2 << 1) | (1 << 3)).to_bytes(3, "little")  # last,comp,sz=1
         + b"\x19"            # literals hdr: RLE, sf=0, rs=3 — body absent
     )
-    with pytest.raises(ZstdError):
-        zstd_decompress(frame)
     # raw-literals variant: hdr says 3 bytes follow, none do
     frame_raw = frame[:-1] + b"\x18"
-    with pytest.raises(ZstdError):
-        zstd_decompress(frame_raw)
+    for f in (frame, frame_raw):
+        with pytest.raises(ValueError):
+            _zstd_decompress(f)
+    got = spark.createDataFrame(
+        [(bytearray(frame),), (bytearray(frame_raw),), (bytearray(),)], ["c"]
+    ).select(FM.decode_zstd(F.col("c")).alias("p")).collect()
+    assert [r["p"] for r in got] == [None, None, None]  # empty too
+
+
+def test_pyarrow_links_the_codecs():
+    """decode_zstd, the snappy codecs and the LZ4 codecs run on the
+    codecs pyarrow links: a build without them fails here, not inside
+    a Spark task."""
+    import pyarrow as pa
+
+    for name in ("zstd", "lz4_raw", "snappy"):
+        assert pa.Codec.is_available(name), name

@@ -1,18 +1,18 @@
 """Remaining format parsers: xml, yaml, ruby hash, regex_all,
-replace_with, json-schema validation, compression stubs.
+replace_with, json-schema validation, cbor, protobuf and the snappy,
+LZ4 and zstd codecs.
 
-All codecs here are implemented — none raise NotImplementedError.
-yaml + jsonschema exist in this container and are used directly;
-snappy and lz4 are from-scratch (the raw/block formats are public and
-small — vrl_spark.functions.lzcodecs); zstd has a full from-scratch
-RFC 8878 decoder AND a real compressing encoder (Huffman literals +
-predefined-FSE sequences — vrl_spark.functions.zstdcodec, validated
-against zstd-jni frames); cbor has its own minimal RFC 8949 decoder
-below; parse_proto/encode_proto ride the from-scratch wire codec in
+yaml + jsonschema are used directly. Snappy and LZ4 (both ways) and
+zstd decoding run on the libsnappy, liblz4 and libzstd that pyarrow
+links; the zstd encoder is the pure-Python one in
+vrl_spark.functions.zstdcodec, whose bytes a frozen oracle vector
+pins. cbor has its own minimal RFC 8949 decoder below;
+parse_proto/encode_proto ride the from-scratch wire codec in
 vrl_spark.functions.proto (FileDescriptorSet bootstrap included)."""
 
 from __future__ import annotations
 
+import functools
 from typing import Callable
 
 import pandas as pd
@@ -240,129 +240,178 @@ def validate_json_schema(col: Column, schema_json: str) -> Column:
 
 
 # ---------------------------------------------------------------------
-# snappy / lz4 (from-scratch kernels in vrl_spark.functions.lzcodecs)
+# snappy / lz4 / zstd (the libsnappy, liblz4 and libzstd pyarrow links)
 # ---------------------------------------------------------------------
 # Reference parity: encode_snappy.rs / decode_snappy.rs (snap::raw),
 # encode_lz4.rs / decode_lz4.rs (lz4_flex::block; prepended u32-LE
-# size defaults: true on encode, false on decode). Decode failures
-# -> NULL (the error branch), like every other fallible codec here.
+# size defaults: true on encode, false on decode), decode_zstd.rs /
+# encode_zstd.rs (zstd::decode_all / encode_all). The _*_decompress
+# helpers raise ValueError on malformed input; the Column wrappers map
+# it to NULL (the error branch), like every other fallible codec here.
+# The zstd encoder is the pure-Python one in zstdcodec: the frozen
+# vrl_hashes_encode vector pins its bytes, and libzstd writes others.
 
 
-def encode_snappy(col: Column) -> Column:
-    from vrl_spark.functions.lzcodecs import snappy_compress
+@functools.cache
+def _codec(name: str):
+    import pyarrow as pa
+
+    return pa.Codec(name)
+
+
+def _decompress(name: str, src: bytes, size: int) -> bytes:
+    """One-shot decode into exactly ``size`` bytes; a library error
+    becomes ValueError."""
+    try:
+        return _codec(name).decompress(src, decompressed_size=size,
+                                       asbytes=True)
+    except OSError as e:
+        raise ValueError(str(e)) from e
+
+
+def _snappy_compress(src: bytes) -> bytes:
+    return _codec("snappy").compress(src, asbytes=True)
+
+
+def _snappy_decompress(src: bytes) -> bytes:
+    """libsnappy wants the exact length the varint preamble states; a
+    preamble longer than any stream of this size could decode to is
+    rejected before its buffer is allocated (a copy op yields at most
+    64 bytes for 3)."""
+    ulen = shift = pos = 0
+    while True:
+        if pos >= len(src) or shift > 28:
+            raise ValueError("bad snappy length varint")
+        b = src[pos]
+        pos += 1
+        ulen |= (b & 0x7F) << shift
+        if not b & 0x80:
+            break
+        shift += 7
+    if ulen > 22 * len(src):
+        raise ValueError("snappy length beyond what the stream can hold")
+    return _decompress("snappy", src, ulen)
+
+
+def _lz4_compress(src: bytes, prepend_size: bool) -> bytes:
+    out = _codec("lz4_raw").compress(src, asbytes=True)
+    return len(src).to_bytes(4, "little") + out if prepend_size else out
+
+
+def _lz4_decoded_len(src: bytes) -> int:
+    """Walk an LZ4 block's sequences without copying bytes: the decoded
+    length, which liblz4 must be handed exactly (given more it returns
+    the whole buffer, tail and all). A zero match offset, which liblz4
+    would copy from unwritten output, or one reaching before the first
+    byte raises."""
+    n, pos, out = len(src), 0, 0
+
+    def length(nibble: int) -> int:
+        nonlocal pos
+        if nibble == 15:  # 255-runs extend it, the first other byte ends
+            while True:
+                if pos >= n:
+                    raise ValueError("truncated length")
+                pos += 1
+                nibble += src[pos - 1]
+                if src[pos - 1] != 255:
+                    break
+        return nibble
+
+    while pos < n:
+        token = src[pos]
+        pos += 1
+        lit = length(token >> 4)
+        pos += lit
+        out += lit
+        if pos >= n:  # the last sequence: literals only
+            if pos > n:
+                raise ValueError("truncated literals")
+            break
+        if pos + 2 > n:
+            raise ValueError("truncated offset")
+        off = src[pos] | src[pos + 1] << 8
+        pos += 2
+        if off == 0 or off > out:
+            raise ValueError("bad match offset")
+        out += length(token & 15) + 4
+    return out
+
+
+def _lz4_decompress(src: bytes, buf_size: int, prepended_size: bool) -> bytes:
+    if prepended_size:
+        if len(src) < 4:
+            raise ValueError("missing prepended size")
+        want, src = int.from_bytes(src[:4], "little"), src[4:]
+    n = _lz4_decoded_len(src)
+    if prepended_size and n != want:
+        raise ValueError("prepended size mismatch")
+    if not prepended_size and n > buf_size:
+        raise ValueError("decoded size exceeds buf_size")
+    return _decompress("lz4_raw", src, n) if n else b""
+
+
+def _zstd_decompress(src: bytes) -> bytes:
+    """Every frame of ``src`` (skippable frames skipped), streamed so a
+    frame without a content size decodes too."""
+    import pyarrow as pa
+
+    if not src:
+        raise ValueError("empty zstd input")
+    try:
+        return pa.input_stream(pa.py_buffer(src), compression="zstd").read()
+    except OSError as e:
+        raise ValueError(str(e)) from e
+
+
+def _bytes_udf(col: Column, fn: Callable[[bytes], bytes]) -> Column:
+    """Binary -> binary Arrow UDF of ``fn``; NULL stays NULL, and a
+    ValueError (a decoder's malformed input) is NULL."""
 
     @pandas_udf(T.BinaryType())
-    def _e(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda v: snappy_compress(bytes(v)) if v is not None else None
-        )
-
-    return _e(col.cast("binary"))
-
-
-def decode_snappy(col: Column) -> Column:
-    from vrl_spark.functions.lzcodecs import snappy_decompress
-
-    @pandas_udf(T.BinaryType())
-    def _d(s: pd.Series) -> pd.Series:
+    def _b(s: pd.Series) -> pd.Series:
         def one(v):
             if v is None:
                 return None
             try:
-                return snappy_decompress(bytes(v))
+                return fn(bytes(v))
             except ValueError:
                 return None
 
         return s.map(one)
 
-    return _d(col.cast("binary"))
+    return _b(col.cast("binary"))
+
+
+def encode_snappy(col: Column) -> Column:
+    return _bytes_udf(col, _snappy_compress)
+
+
+def decode_snappy(col: Column) -> Column:
+    return _bytes_udf(col, _snappy_decompress)
 
 
 def encode_lz4(col: Column, prepend_size: bool = True) -> Column:
-    from vrl_spark.functions.lzcodecs import (
-        lz4_compress, lz4_compress_prepend_size,
-    )
-
-    fn = lz4_compress_prepend_size if prepend_size else lz4_compress
-
-    @pandas_udf(T.BinaryType())
-    def _e(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: fn(bytes(v)) if v is not None else None)
-
-    return _e(col.cast("binary"))
+    return _bytes_udf(col, lambda v: _lz4_compress(v, prepend_size))
 
 
 def decode_lz4(
     col: Column, buf_size: int = 1_000_000, prepended_size: bool = False
 ) -> Column:
-    from vrl_spark.functions.lzcodecs import (
-        lz4_decompress, lz4_decompress_size_prepended,
-    )
-
-    @pandas_udf(T.BinaryType())
-    def _d(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            try:
-                if prepended_size:
-                    return lz4_decompress_size_prepended(bytes(v))
-                return lz4_decompress(bytes(v), max_out=buf_size)
-            except ValueError:
-                return None
-
-        return s.map(one)
-
-    return _d(col.cast("binary"))
-
-
-# ---------------------------------------------------------------------
-# zstd (from-scratch RFC 8878 codec in vrl_spark.functions.zstdcodec)
-# ---------------------------------------------------------------------
-# Reference parity: decode_zstd.rs / encode_zstd.rs (zstd::decode_all
-# / encode_all). The decoder handles the full format (validated
-# against real zstd-jni frames in tests); the encoder really
-# compresses (Huffman literals + predefined-FSE sequences, round-
-# tripped through real zstd in tests) — compression_level tunes the
-# match-finder, see zstdcodec docstring.
+    return _bytes_udf(
+        col, lambda v: _lz4_decompress(v, buf_size, prepended_size))
 
 
 def encode_zstd(col: Column, compression_level: int = 0) -> Column:
+    """``compression_level`` is accepted for VRL parity; the encoder
+    has one strategy (see zstdcodec)."""
     from vrl_spark.functions.zstdcodec import zstd_compress
 
-    @pandas_udf(T.BinaryType())
-    def _e(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            return zstd_compress(bytes(v), compression_level)
-
-        return s.map(one)
-
-    return _e(col.cast("binary"))
+    return _bytes_udf(col, lambda v: zstd_compress(v, compression_level))
 
 
 def decode_zstd(col: Column) -> Column:
-    from vrl_spark.functions.zstdcodec import zstd_decompress
-
-    @pandas_udf(T.BinaryType())
-    def _d(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            try:
-                return zstd_decompress(bytes(v))
-            except Exception:
-                # Malformed frames must route to the NULL error branch,
-                # never crash the task: the decoder raises ZstdError
-                # (a ValueError) on every anticipated corruption, but a
-                # pathological frame hitting an unanticipated IndexError
-                # deep in the bitstream walk should degrade identically.
-                return None
-
-        return s.map(one)
-
-    return _d(col.cast("binary"))
+    return _bytes_udf(col, _zstd_decompress)
 
 
 # --- CBOR (src/stdlib/parse_cbor.rs) ----------------------------------

@@ -1,41 +1,28 @@
-"""From-scratch Zstandard codec (reference parity:
-src/stdlib/decode_zstd.rs / encode_zstd.rs, which wrap
-zstd::decode_all / encode_all).
+"""Zstandard encoder (reference parity: src/stdlib/encode_zstd.rs,
+which wraps zstd::encode_all). Decoding runs on the libzstd pyarrow
+links (vrl_spark.functions.formats).
 
-The DECODER implements the full RFC 8878 frame format with no
-library: frame headers, raw/RLE/compressed blocks, Huffman-coded
-literals (direct and FSE-compressed weight descriptions, 1- and
-4-stream layouts, treeless repeats), sequence decoding with the three
-interleaved FSE states (predefined, RLE, FSE-compressed, and repeat
-table modes), repeat-offset history with the literals_length==0
-twist, multi-frame and skippable-frame input, and xxhash64 content
-checksums. It is validated in tests against frames produced by the
-real zstd implementation (zstd-jni, reachable through Spark's JVM) at
-several levels and data shapes.
-
-The ENCODER does real compression: a greedy LZ parse feeds
+The encoder stays pure Python because the frozen zstd_hex literal of
+the vrl_hashes_encode oracle pins its bytes: libzstd writes a
+different valid frame for the same input (no checksum flag, a 1-byte
+literals header). It does real compression: a greedy LZ parse feeds
 compressed blocks whose sequences are FSE-coded with the predefined
 tables (the official encoder's exact state-machine construction and
 interleave order) and whose literals are Huffman-coded (direct tree
 description, 1- or 4-stream) when that shrinks them, raw otherwise;
-blocks that would not shrink fall back to store. Output is spec-valid
-and cross-validated against real zstd in tests. The compression_level
-argument is accepted for API parity (one strategy); the remaining
-ratio gap to libzstd is FSE-described Huffman trees and optimal
-parsing, not format coverage.
+blocks that would not shrink fall back to store. Every frame carries
+an xxhash64 content checksum. Output is cross-validated against
+libzstd and zstd-jni in tests. The compression_level argument is
+accepted for API parity (one strategy).
 
-Bit-stream conventions (the part everyone gets wrong): FSE table
-descriptions read FORWARD, LSB-first; Huffman and sequence bitstreams
-read BACKWARD from a 1-bit sentinel at the top of the last byte.
+Bit-stream convention: Huffman and sequence bitstreams are written
+forward and read BACKWARD from a 1-bit sentinel at the top of the
+last byte.
 """
 
 from __future__ import annotations
 
-import struct
-
 ZSTD_MAGIC = 0xFD2FB528
-SKIPPABLE_MAGIC_MIN = 0x184D2A50
-SKIPPABLE_MAGIC_MAX = 0x184D2A5F
 
 # RFC 8878 predefined FSE distributions
 _LL_DEFAULTS = (
@@ -66,478 +53,6 @@ _ML_TABLE = [(_i + 3, 0) for _i in range(32)] + [
     (1027, 10), (2051, 11), (4099, 12), (8195, 13), (16387, 14),
     (32771, 15), (65539, 16),
 ]
-
-
-class ZstdError(ValueError):
-    pass
-
-
-# ---------------------------------------------------------------------
-# bit readers
-# ---------------------------------------------------------------------
-
-
-class _FwdBits:
-    """Forward LSB-first reader (FSE table descriptions)."""
-
-    def __init__(self, data: bytes):
-        self.val = int.from_bytes(data, "little")
-        self.pos = 0
-        self.total = 8 * len(data)
-
-    def read(self, n: int) -> int:
-        v = (self.val >> self.pos) & ((1 << n) - 1)
-        self.pos += n
-        return v
-
-    def bytes_consumed(self) -> int:
-        return (self.pos + 7) // 8
-
-
-class _BackBits:
-    """Backward reader: a 1-bit sentinel tops the last byte; reads
-    take the most-significant remaining bits. Reads past the start
-    return zero-padded values and drive ``pos`` negative — FSE
-    interleaved-weight decoding uses that as its stop signal."""
-
-    def __init__(self, data: bytes):
-        if not data or data[-1] == 0:
-            raise ZstdError("corrupt bitstream: no sentinel")
-        self.val = int.from_bytes(data, "little")
-        self.pos = self.val.bit_length() - 1  # strip sentinel
-
-    def read(self, n: int) -> int:
-        self.pos -= n
-        if self.pos >= 0:
-            return (self.val >> self.pos) & ((1 << n) - 1)
-        avail = n + self.pos  # bits actually present
-        if avail <= 0:
-            return 0
-        return (self.val & ((1 << avail) - 1)) << (-self.pos)
-
-
-# ---------------------------------------------------------------------
-# FSE
-# ---------------------------------------------------------------------
-
-
-def _fse_read_distribution(src: bytes, max_accuracy: int):
-    """FSE table description -> (probs, accuracy_log, bytes_used)."""
-    bits = _FwdBits(src)
-    al = bits.read(4) + 5
-    if al > max_accuracy:
-        raise ZstdError("FSE accuracy too large")
-    remaining = 1 << al
-    probs: list[int] = []
-    while remaining > 0:
-        # value in 0..remaining+1 coded in bit_length(remaining+1) bits
-        # with the small-value optimization
-        nbits = (remaining + 1).bit_length()
-        thresh = (1 << nbits) - 1 - (remaining + 1)
-        low = bits.read(nbits - 1)
-        if low < thresh:
-            value = low
-        else:
-            extra = bits.read(1)
-            value = low + (extra << (nbits - 1))
-            if value >= (1 << (nbits - 1)):
-                value -= thresh
-        prob = value - 1
-        probs.append(prob)
-        remaining -= abs(prob) if prob != 0 else 0
-        if prob == 0:
-            while True:  # 2-bit repeat flags for runs of zeros
-                rep = bits.read(2)
-                probs.extend([0] * rep)
-                if rep != 3:
-                    break
-        if len(probs) > 256:
-            raise ZstdError("too many FSE symbols")
-    if remaining < 0:
-        raise ZstdError("FSE distribution overshoot")
-    return probs, al, bits.bytes_consumed()
-
-
-def _fse_build_table(probs: list[int], al: int):
-    """-> (symbol, num_bits, baseline) arrays of size 1<<al."""
-    size = 1 << al
-    symbols = [0] * size
-    high = size
-    for s, p in enumerate(probs):
-        if p == -1:
-            high -= 1
-            symbols[high] = s
-    pos = 0
-    step = (size >> 1) + (size >> 3) + 3
-    mask = size - 1
-    for s, p in enumerate(probs):
-        for _ in range(max(p, 0)):
-            symbols[pos] = s
-            pos = (pos + step) & mask
-            while pos >= high:
-                pos = (pos + step) & mask
-    if pos != 0:
-        raise ZstdError("FSE spread did not close")
-    state_desc = [max(p, 1) if p != 0 else 0 for p in probs]
-    num_bits = [0] * size
-    baseline = [0] * size
-    for i in range(size):
-        s = symbols[i]
-        d = state_desc[s]
-        state_desc[s] += 1
-        nb = al - (d.bit_length() - 1)
-        num_bits[i] = nb
-        baseline[i] = (d << nb) - size
-    return symbols, num_bits, baseline
-
-
-class _FseState:
-    __slots__ = ("tab", "state")
-
-    def __init__(self, tab, bits: _BackBits):
-        self.tab = tab
-        al = (len(tab[0])).bit_length() - 1
-        self.state = bits.read(al)
-
-    def symbol(self) -> int:
-        return self.tab[0][self.state]
-
-    def update(self, bits: _BackBits):
-        nb = self.tab[1][self.state]
-        self.state = self.tab[2][self.state] + bits.read(nb)
-
-
-# ---------------------------------------------------------------------
-# Huffman literals
-# ---------------------------------------------------------------------
-
-
-def _huffman_from_weights(weights: list[int]):
-    """Explicit weights (the last symbol's weight is ALWAYS implicit:
-    tableLog = highbit(sum)+1 per the reference HUF_readStats, so the
-    implied weight exists even when the partial sum is already a
-    power of two) -> lookup table (size 2^max_bits) of (symbol,
-    nbits)."""
-    total = sum(1 << (w - 1) for w in weights if w > 0)
-    if total == 0:
-        raise ZstdError("empty huffman table")
-    p2 = 1 << total.bit_length()  # strictly greater power of two
-    missing = p2 - total
-    mw = missing.bit_length()
-    if (1 << (mw - 1)) != missing:  # must itself be a power of two
-        raise ZstdError("huffman weights don't sum to pow2 - pow")
-    weights = weights + [mw]
-    total = p2
-    max_bits = total.bit_length() - 1
-    table = [None] * (1 << max_bits)
-    cur = 0
-    for w in range(1, max_bits + 1):
-        nb = max_bits + 1 - w
-        for sym, ws in enumerate(weights):
-            if ws == w:
-                span = 1 << (w - 1)
-                for j in range(cur, cur + span):
-                    table[j] = (sym, nb)
-                cur += span
-    if cur != len(table):
-        raise ZstdError("huffman table not full")
-    return table, max_bits
-
-
-def _read_huffman_desc(src: bytes):
-    """Huffman tree description -> (table, max_bits, bytes_used)."""
-    if not src:
-        raise ZstdError("missing huffman description")
-    h = src[0]
-    if h >= 128:  # direct: 4-bit weights
-        n = h - 127
-        nb = (n + 1) // 2
-        if len(src) < 1 + nb:
-            raise ZstdError("truncated huffman weights")
-        weights = []
-        for i in range(n):
-            b = src[1 + i // 2]
-            weights.append((b >> 4) if i % 2 == 0 else (b & 0xF))
-        tab, mb = _huffman_from_weights(weights)
-        return tab, mb, 1 + nb
-    # FSE-compressed weights: h = compressed size
-    if len(src) < 1 + h:
-        raise ZstdError("truncated huffman FSE weights")
-    comp = src[1 : 1 + h]
-    probs, al, used = _fse_read_distribution(comp, 6)
-    tab = _fse_build_table(probs, al)
-    bits = _BackBits(comp[used:])
-    s1 = _FseState(tab, bits)
-    s2 = _FseState(tab, bits)
-    weights: list[int] = []
-    while True:
-        weights.append(s1.symbol())
-        s1.update(bits)
-        if bits.pos < 0:
-            weights.append(s2.symbol())
-            break
-        weights.append(s2.symbol())
-        s2.update(bits)
-        if bits.pos < 0:
-            weights.append(s1.symbol())
-            break
-        if len(weights) > 255:
-            raise ZstdError("too many huffman weights")
-    htab, mb = _huffman_from_weights(weights)
-    return htab, mb, 1 + h
-
-
-def _huffman_decode_stream(table, max_bits: int, data: bytes,
-                           n_out: int) -> bytes:
-    bits = _BackBits(data)
-    out = bytearray()
-    mask = (1 << max_bits) - 1
-    val, pos = bits.val, bits.pos
-    for _ in range(n_out):
-        if pos >= max_bits:
-            idx = (val >> (pos - max_bits)) & mask
-        else:
-            idx = (val << (max_bits - pos)) & mask if pos > 0 else 0
-        sym, nb = table[idx]
-        pos -= nb
-        out.append(sym)
-    if pos < 0:
-        raise ZstdError("huffman stream overrun")
-    return bytes(out)
-
-
-def _decode_literals(block: bytes, ctx: dict):
-    """-> (literals, bytes_used)."""
-    if not block:
-        raise ZstdError("empty compressed block")
-    b0 = block[0]
-    ltype = b0 & 3
-    sf = (b0 >> 2) & 3
-    if ltype in (0, 1):  # raw / RLE
-        hdr = 1 if sf in (0, 2) else 2 if sf == 1 else 3
-        if len(block) < hdr:
-            raise ZstdError("truncated literals header")
-        if sf in (0, 2):
-            rs = b0 >> 3
-        elif sf == 1:
-            rs = (b0 >> 4) | (block[1] << 4)
-        else:
-            rs = (b0 >> 4) | (block[1] << 4) | (block[2] << 12)
-        if ltype == 0:
-            if len(block) < hdr + rs:
-                raise ZstdError("truncated raw literals")
-            return bytes(block[hdr : hdr + rs]), hdr + rs
-        if len(block) < hdr + 1:
-            raise ZstdError("truncated RLE literal")
-        return bytes([block[hdr]]) * rs, hdr + 1
-    # compressed (2) / treeless (3)
-    if sf == 0:
-        n_streams, hdr = 1, 3
-        v = int.from_bytes(block[:3], "little")
-        rs = (v >> 4) & 0x3FF
-        cs = (v >> 14) & 0x3FF
-    elif sf == 1:
-        n_streams, hdr = 4, 3
-        v = int.from_bytes(block[:3], "little")
-        rs = (v >> 4) & 0x3FF
-        cs = (v >> 14) & 0x3FF
-    elif sf == 2:
-        n_streams, hdr = 4, 4
-        v = int.from_bytes(block[:4], "little")
-        rs = (v >> 4) & 0x3FFF
-        cs = (v >> 18) & 0x3FFF
-    else:
-        n_streams, hdr = 4, 5
-        v = int.from_bytes(block[:5], "little")
-        rs = (v >> 4) & 0x3FFFF
-        cs = (v >> 22) & 0x3FFFF
-    body = block[hdr : hdr + cs]
-    if len(body) < cs:
-        raise ZstdError("truncated literals")
-    used = 0
-    if ltype == 2:
-        table, mb, used = _read_huffman_desc(body)
-        ctx["huff"] = (table, mb)
-    else:
-        if "huff" not in ctx:
-            raise ZstdError("treeless literals with no previous table")
-        table, mb = ctx["huff"]
-    streams = body[used:]
-    if n_streams == 1:
-        return _huffman_decode_stream(table, mb, streams, rs), hdr + cs
-    if len(streams) < 6:
-        raise ZstdError("missing stream jump table")
-    s1, s2, s3 = struct.unpack("<HHH", streams[:6])
-    rest = streams[6:]
-    if s1 + s2 + s3 > len(rest):
-        raise ZstdError("bad stream jump table")
-    parts = [rest[:s1], rest[s1 : s1 + s2], rest[s1 + s2 : s1 + s2 + s3],
-             rest[s1 + s2 + s3 :]]
-    per = (rs + 3) // 4
-    out = bytearray()
-    for i, p in enumerate(parts):
-        want = per if i < 3 else rs - 3 * per
-        out += _huffman_decode_stream(table, mb, p, want)
-    return bytes(out), hdr + cs
-
-
-# ---------------------------------------------------------------------
-# sequences
-# ---------------------------------------------------------------------
-
-
-def _seq_table(mode: int, src: bytes, kind: str, ctx: dict):
-    """-> (fse_table_or_rle, bytes_used). RLE is ('rle', symbol)."""
-    defaults = {"ll": _LL_DEFAULTS, "of": _OF_DEFAULTS, "ml": _ML_DEFAULTS}
-    max_al = {"ll": 9, "of": 8, "ml": 9}
-    if mode == 0:
-        probs, al = defaults[kind]
-        tab = ctx.setdefault(
-            f"_pre_{kind}", _fse_build_table(probs, al)
-        )
-        ctx[f"tab_{kind}"] = tab
-        return tab, 0
-    if mode == 1:
-        if not src:
-            raise ZstdError("truncated RLE table byte")
-        tab = ("rle", src[0])
-        ctx[f"tab_{kind}"] = tab
-        return tab, 1
-    if mode == 2:
-        probs, al, used = _fse_read_distribution(src, max_al[kind])
-        tab = _fse_build_table(probs, al)
-        ctx[f"tab_{kind}"] = tab
-        return tab, used
-    if f"tab_{kind}" not in ctx:
-        raise ZstdError("repeat mode with no previous table")
-    return ctx[f"tab_{kind}"], 0
-
-
-class _SeqState:
-    """FSE state or RLE constant."""
-
-    __slots__ = ("tab", "state", "rle")
-
-    def __init__(self, tab, bits: _BackBits | None):
-        if isinstance(tab, tuple) and tab and tab[0] == "rle":
-            self.rle = tab[1]
-            self.tab = None
-        else:
-            self.rle = None
-            self.tab = tab
-            al = (len(tab[0])).bit_length() - 1
-            self.state = bits.read(al)
-
-    def symbol(self) -> int:
-        return self.rle if self.rle is not None else self.tab[0][self.state]
-
-    def update(self, bits: _BackBits):
-        if self.rle is None:
-            nb = self.tab[1][self.state]
-            self.state = self.tab[2][self.state] + bits.read(nb)
-
-
-def _decode_sequences(src: bytes, literals: bytes, out: bytearray,
-                      ctx: dict):
-    """Execute the sequences section against ``out`` (the window)."""
-    if not src:
-        raise ZstdError("missing sequences section")
-    b0 = src[0]
-    if b0 == 0:
-        out += literals
-        return
-    if b0 < 128:
-        nseq, pos = b0, 1
-    elif b0 < 255:
-        if len(src) < 2:
-            raise ZstdError("truncated sequence count")
-        nseq, pos = ((b0 - 128) << 8) + src[1], 2
-    else:
-        if len(src) < 3:
-            raise ZstdError("truncated sequence count")
-        nseq, pos = src[1] + (src[2] << 8) + 0x7F00, 3
-    if pos >= len(src):
-        raise ZstdError("missing sequence modes byte")
-    modes = src[pos]
-    pos += 1
-    if modes & 3:
-        raise ZstdError("reserved sequence mode bits set")
-    ll_tab, used = _seq_table((modes >> 6) & 3, src[pos:], "ll", ctx)
-    pos += used
-    of_tab, used = _seq_table((modes >> 4) & 3, src[pos:], "of", ctx)
-    pos += used
-    ml_tab, used = _seq_table((modes >> 2) & 3, src[pos:], "ml", ctx)
-    pos += used
-    bits = _BackBits(src[pos:])
-    ll_s = _SeqState(ll_tab, bits)
-    of_s = _SeqState(of_tab, bits)
-    ml_s = _SeqState(ml_tab, bits)
-    reps = ctx.setdefault("reps", [1, 4, 8])
-    lit_pos = 0
-    for i in range(nseq):
-        of_code = of_s.symbol()
-        ml_code = ml_s.symbol()
-        ll_code = ll_s.symbol()
-        if of_code > 31 or ml_code > 52 or ll_code > 35:
-            raise ZstdError("sequence code out of range")
-        offset_value = (1 << of_code) + bits.read(of_code)
-        ml_base, ml_extra = _ML_TABLE[ml_code]
-        ml = ml_base + bits.read(ml_extra)
-        ll_base, ll_extra = _LL_TABLE[ll_code]
-        ll = ll_base + bits.read(ll_extra)
-        # repeat-offset resolution
-        if offset_value > 3:
-            offset = offset_value - 3
-            reps[2] = reps[1]
-            reps[1] = reps[0]
-            reps[0] = offset
-        else:
-            idx = offset_value - 1 + (1 if ll == 0 else 0)
-            if idx == 0:
-                offset = reps[0]
-            elif idx == 1:
-                offset = reps[1]
-                reps[1] = reps[0]
-                reps[0] = offset
-            elif idx == 2:
-                offset = reps[2]
-                reps[2] = reps[1]
-                reps[1] = reps[0]
-                reps[0] = offset
-            else:
-                offset = reps[0] - 1
-                if offset == 0:
-                    raise ZstdError("repeat offset underflow")
-                reps[2] = reps[1]
-                reps[1] = reps[0]
-                reps[0] = offset
-        if lit_pos + ll > len(literals):
-            raise ZstdError("literals overrun")
-        out += literals[lit_pos : lit_pos + ll]
-        lit_pos += ll
-        if offset > len(out):
-            raise ZstdError("match offset beyond window")
-        if offset >= ml:
-            start = len(out) - offset
-            out += out[start : start + ml]
-        else:
-            rem = ml
-            while rem > 0:
-                chunk = out[-offset:][:rem]
-                out += chunk
-                rem -= len(chunk)
-        if i < nseq - 1:  # no state update after the last sequence
-            ll_s.update(bits)
-            ml_s.update(bits)
-            of_s.update(bits)
-    if bits.pos != 0:
-        raise ZstdError("sequence bitstream not fully consumed")
-    out += literals[lit_pos:]
-
-
-# ---------------------------------------------------------------------
-# frames
-# ---------------------------------------------------------------------
 
 
 def _xxh64(data: bytes, seed: int = 0) -> int:
@@ -603,97 +118,6 @@ def _xxh64(data: bytes, seed: int = 0) -> int:
     return h
 
 
-def zstd_decompress(src: bytes) -> bytes:
-    """Decode one or more concatenated zstd frames (skippable frames
-    skipped). Raises ZstdError on malformed input."""
-    out_all = bytearray()
-    pos = 0
-    n = len(src)
-    if n == 0:
-        raise ZstdError("empty input")
-    while pos < n:
-        if pos + 4 > n:
-            raise ZstdError("truncated magic")
-        magic = int.from_bytes(src[pos : pos + 4], "little")
-        pos += 4
-        if SKIPPABLE_MAGIC_MIN <= magic <= SKIPPABLE_MAGIC_MAX:
-            if pos + 4 > n:
-                raise ZstdError("truncated skippable frame")
-            sz = int.from_bytes(src[pos : pos + 4], "little")
-            pos += 4 + sz
-            continue
-        if magic != ZSTD_MAGIC:
-            raise ZstdError("bad magic")
-        # frame header
-        if pos >= n:
-            raise ZstdError("truncated frame header")
-        fhd = src[pos]
-        pos += 1
-        fcs_flag = fhd >> 6
-        single = (fhd >> 5) & 1
-        checksum = (fhd >> 2) & 1
-        did_flag = fhd & 3
-        if (fhd >> 3) & 1:
-            raise ZstdError("reserved frame header bit set")
-        if not single:
-            pos += 1  # window descriptor (we keep the whole output)
-        pos += (0, 1, 2, 4)[did_flag]
-        fcs_size = (1 if single else 0, 2, 4, 8)[fcs_flag]
-        content_size = None
-        if fcs_size:
-            if pos + fcs_size > n:
-                raise ZstdError("truncated frame content size")
-            content_size = int.from_bytes(src[pos : pos + fcs_size],
-                                          "little")
-            if fcs_size == 2:
-                content_size += 256
-            pos += fcs_size
-        if pos > n:
-            raise ZstdError("truncated frame header fields")
-        frame_out = bytearray()
-        ctx: dict = {}
-        while True:
-            if pos + 3 > n:
-                raise ZstdError("truncated block header")
-            bh = int.from_bytes(src[pos : pos + 3], "little")
-            pos += 3
-            last = bh & 1
-            btype = (bh >> 1) & 3
-            bsize = bh >> 3
-            if btype == 0:  # raw
-                if pos + bsize > n:
-                    raise ZstdError("truncated raw block")
-                frame_out += src[pos : pos + bsize]
-                pos += bsize
-            elif btype == 1:  # RLE
-                if pos >= n:
-                    raise ZstdError("truncated RLE block")
-                frame_out += src[pos : pos + 1] * bsize
-                pos += 1
-            elif btype == 2:  # compressed
-                block = src[pos : pos + bsize]
-                if len(block) < bsize:
-                    raise ZstdError("truncated block")
-                pos += bsize
-                literals, used = _decode_literals(block, ctx)
-                _decode_sequences(block[used:], literals, frame_out, ctx)
-            else:
-                raise ZstdError("reserved block type")
-            if last:
-                break
-        if content_size is not None and len(frame_out) != content_size:
-            raise ZstdError("frame content size mismatch")
-        if checksum:
-            if pos + 4 > n:
-                raise ZstdError("missing checksum")
-            want = int.from_bytes(src[pos : pos + 4], "little")
-            pos += 4
-            if _xxh64(bytes(frame_out)) & 0xFFFFFFFF != want:
-                raise ZstdError("checksum mismatch")
-        out_all += frame_out
-    return bytes(out_all)
-
-
 _RAW_BLOCK_MAX = (1 << 17) - 1  # store blocks carry a 21-bit size
 _COMP_CHUNK = 100_000  # per-block matching window for the encoder
 
@@ -703,7 +127,7 @@ _COMP_CHUNK = 100_000  # per-block matching window for the encoder
 
 class _BitWriter:
     """Forward little-endian bit accumulator; close() appends the
-    1-bit sentinel and pads — the exact dual of _BackBits."""
+    1-bit sentinel and pads (the decoder reads it backward)."""
 
     __slots__ = ("val", "nbits")
 
@@ -725,7 +149,7 @@ def _fse_build_ctable(probs: list[int], al: int):
     """Encoding table: (next_state[], symbol_tt) with symbol_tt[s] =
     (delta_nb_bits, delta_find_state), per FSE_buildCTable."""
     size = 1 << al
-    # spread identical to the decoder's
+    # the symbol spread of the format's FSE tables
     spread = [0] * size
     high = size
     for s, p in enumerate(probs):
@@ -845,7 +269,7 @@ def _huffman_build_weights(freqs: dict[int, int]) -> list[int] | None:
 
 def _huffman_encode_desc_and_table(weights: list[int]):
     """-> (description bytes [direct form], code table {sym: (code,
-    nbits)}, max_bits) matching the decoder's canonical layout."""
+    nbits)}, max_bits) in the format's canonical layout."""
     # direct description: 4-bit weights for symbols 0..last-1; the
     # last present symbol's weight is implied by the decoder
     last = max(s for s, w in enumerate(weights) if w > 0)
@@ -860,7 +284,7 @@ def _huffman_encode_desc_and_table(weights: list[int]):
     total = sum(1 << (w - 1) for w in weights if w > 0)
     max_bits = (total - 1).bit_length()
     # canonical assignment: ascending weight, then symbol order —
-    # identical to _huffman_from_weights
+    # the layout the decoder rebuilds from the weights
     table = {}
     cur = 0
     for w in range(1, max_bits + 1):

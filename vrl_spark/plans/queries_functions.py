@@ -282,14 +282,14 @@ def vrl_strings_collections(spark, sf_dir):
 # hashes & codecs over documents
 # ---------------------------------------------------------------------
 
-# Frozen compressed-literal vectors for the from-scratch codecs
-# (deterministic encoders; the plaintext is _LZ_PLAINTEXT). A
-# both-directions kernel bug cannot round-trip green past these.
+# Frozen compressed-literal vectors (the plaintext is _LZ_PLAINTEXT).
+# A both-directions codec bug cannot round-trip green past these.
 _LZ_PLAINTEXT = "vrl-spark codec oracle vector " * 4
 
-# The FROZEN zstd_hex literal pins the deterministic pure-Python
-# encoder's bytes (different compressors emit different, all-valid
-# bytes).
+# snappy_hex and lz4_hex are the bytes libsnappy and liblz4 (through
+# pyarrow) write for the plaintext. The FROZEN zstd_hex literal pins
+# the deterministic pure-Python zstd encoder's bytes: libzstd writes
+# a different valid frame, so that encoder stays.
 _LZ_VECTORS = {
     "snappy_hex": "787476726C2D737061726B20636F646563206F7261636C6520766563746F7220FE1E00661E00",
     "lz4_hex": "78000000FF0F76726C2D737061726B20636F646563206F7261636C6520766563746F72201E00425063746F7220",
@@ -321,9 +321,10 @@ def vrl_hashes_encode(spark, sf_dir):
     (sorted-key) field order (reference src/stdlib/encode_json.rs +
     value.rs:34), one map-only select over documents (merged r3
     queries vrl_hashes_codecs + vrl_encode_json), plus the
-    from-scratch snappy/lz4/zstd codecs: per-row round-trips and
-    frozen compressed-literal vectors (constants -> 1-row broadcast,
-    not per-row)."""
+    snappy/lz4/zstd codecs (libsnappy and liblz4 through pyarrow; zstd
+    decoded by libzstd, encoded by the pure-Python zstdcodec): per-row
+    round-trips and frozen compressed-literal vectors (constants ->
+    1-row broadcast, not per-row)."""
     from vrl_spark.functions import formats as FM
 
     docs = read_table(spark, sf_dir, "documents", spread=True)
